@@ -53,17 +53,15 @@ object Exchange {
     val key = "spark.sql.sources.partitionOverwriteMode"
     val prev = spark.conf.getOption(key)
     spark.conf.set(key, "dynamic")
-    // the dynamic overwrite mutates the dir non-atomically: invalidate
-    // first, reseed from the final dir contents only after it returns,
-    // so a crash mid-write leaves the next read on real inference
-    Versioned.invalidateDirSchema(path)
     try out.write.mode("overwrite").partitionBy(partitionCol).parquet(path)
     finally prev match {
       case Some(v) => spark.conf.set(key, v)
       case None => spark.conf.unset(key)
     }
-    VersionedPartitioned.reseedPartitionedDirSchema(spark, path,
-      df.schema, partitionCol)
+    val target = new HPath(path)
+    Versioned.writeSchema(
+      target.getFileSystem(spark.sparkContext.hadoopConfiguration), target,
+      VersionedPartitioned.partitionedSchema(df.schema, partitionCol))
   }
 
   // Schema-checked promotion lives in Schemas.conform + promote — the
@@ -71,11 +69,11 @@ object Exchange {
   // aligns columns by name AND casts to the declared types in one place.
 
   /** Read the promoted table back (partition-pruned scans on `date`).
-    * The schema rides the write-time-seeded mutable-dir cache when the
-    * last promote/swap could prove the read-back schema — one fewer
-    * footer-inference job per read-back; inference otherwise. */
+    * The schema comes from the `_schema` the last promote/swap recorded
+    * — no footer-inference job; inference for a dir without one, and
+    * Spark's AnalysisException for a missing dir. */
   def table(spark: SparkSession, path: String): DataFrame =
-    Versioned.readMutableDir(spark, path)
+    Versioned.readDir(spark, path)
 
   /**
    * Staging-dir + rename promotion — the commit-protocol hardening of
@@ -114,11 +112,10 @@ object Exchange {
     if (fs.exists(staging)) fs.delete(staging, true)
     out.write.mode("overwrite").partitionBy(partitionCol)
       .parquet(staging.toString)
-    // the per-partition renames mutate the dir: invalidate first,
-    // reseed from the final contents only after every swap landed
-    Versioned.invalidateDirSchema(path)
     try {
       if (!fs.exists(target)) fs.mkdirs(target)
+      Versioned.writeSchema(fs, target,
+        VersionedPartitioned.partitionedSchema(df.schema, partitionCol))
       val parts = fs.listStatus(staging)
         .filter(s => s.isDirectory &&
           s.getPath.getName.startsWith(partitionCol + "="))
@@ -134,8 +131,6 @@ object Exchange {
         if (existed) fs.delete(old, true)
       }
     } finally fs.delete(staging, true)
-    VersionedPartitioned.reseedPartitionedDirSchema(spark, path,
-      df.schema, partitionCol)
   }
 
   /**
@@ -157,7 +152,9 @@ object Exchange {
     * in the same atomic swap (the exactly-once cursor trick
     * materialized-view refresh rides: a crash anywhere leaves state
     * and cursor from the SAME refresh). Spark ignores `_`-prefixed
-    * files on read, so markers are invisible to scans. */
+    * files on read, so markers are invisible to scans. The recorded
+    * `_schema` is one more such marker, so a swap, and a `recoverSwap`
+    * of it, always pairs the data with its own schema. */
   def swapTableWith(df: DataFrame, path: String,
       markers: Map[String, String]): Unit = {
     val spark = df.sparkSession
@@ -173,13 +170,9 @@ object Exchange {
     // few partitions its plan happened to have. AQE's rebalance sizes
     // both ends to advisoryPartitionSizeInBytes — 1 file for tiny
     // replay frames, ~advisory-sized files at 100 TB. Row set is
-    // unchanged; conf-gated for layouts where the extra exchange is
-    // not worth it.
-    val sized =
-      if (spark.conf.getOption("spark.graft.write.rebalanceSwap")
-            .forall(_.toBoolean)) df.hint("rebalance")
-      else df
-    sized.write.mode("overwrite").parquet(staging.toString)
+    // unchanged.
+    df.hint("rebalance").write.mode("overwrite").parquet(staging.toString)
+    Versioned.writeSchema(fs, staging, df.schema)
     markers.foreach { case (name, content) =>
       require(name.startsWith("_"),
         s"marker $name must be underscore-prefixed (scan-invisible)")
@@ -193,16 +186,9 @@ object Exchange {
       val old = hiddenOld(target)
       if (fs.exists(old)) fs.delete(old, true)
       val existed = fs.exists(target)
-      // the entry describes the outgoing generation from here on:
-      // invalidate before the first rename, reseed only on success —
-      // a crash inside the window leaves the next read on inference
-      Versioned.invalidateDirSchema(path)
       if (existed) renameOrThrow(fs, target, old)
       renameOrThrow(fs, staging, target)
       if (existed) fs.delete(old, true)
-      // flat dir: read-back schema == written frame schema (no
-      // partition column to infer); exotic types bail inside
-      Versioned.reseedMutableDirSchema(path, df.schema)
     }
   }
 
@@ -229,9 +215,6 @@ object Exchange {
       val fs = target.getFileSystem(spark.sparkContext.hadoopConfiguration)
       val old = hiddenOld(target)
       if (!fs.exists(target) && fs.exists(old)) {
-        // the restored generation's provable schema is unknown here —
-        // drop any entry so the next read re-infers
-        Versioned.invalidateDirSchema(path)
         renameOrThrow(fs, old, target); true
       } else false
     }

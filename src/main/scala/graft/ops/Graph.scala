@@ -64,30 +64,22 @@ object Graph {
     require(iters >= 1, "at least one iteration")
     val wCol = weightCol.map(c => col(c).cast("long"))
       .getOrElse(lit(1L))
-    // Loop-invariant persist is a CONF OPTION, off by default: the
-    // final plan references `withDeg` per iteration and `nodes` per
-    // iteration + seed, but Spark's ReuseExchange already dedups the
-    // repeated shuffle subtrees, so the edge lineage (a lineitem
-    // self-join for the co-purchase graphs) is NOT re-executed per
-    // reference. Measured at sf0.1 local[32], interleaved A/B:
-    // persist=false 6.3 s / 90 tasks / 39 s task-time vs persist=true
-    // 7.7 s / 920 tasks / 125 s — caching materializes extra stages
-    // and blocks AQE coalescing of the cached exchanges. The knob
-    // stays for storage/recompute profiles where exchange reuse does
-    // not apply (e.g. an iteration count high enough that shuffle
-    // files age out).
-    def p(df: DataFrame): DataFrame =
-      if (df.sparkSession.conf.getOption("spark.graft.graph.persist")
-            .contains("true"))
-        df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      else df
-    val e = p(edges.select(col(srcCol).as("__src"), col(dstCol).as("__dst"),
-      wCol.as("__w")))
+    // No loop-invariant persist: the final plan references `withDeg`
+    // per iteration and `nodes` per iteration + seed, but Spark's
+    // ReuseExchange already dedups the repeated shuffle subtrees, so
+    // the edge lineage (a lineitem self-join for the co-purchase
+    // graphs) is NOT re-executed per reference. Measured at sf0.1
+    // local[32], interleaved A/B: no persist 6.3 s / 90 tasks / 39 s
+    // task-time vs persist 7.7 s / 920 tasks / 125 s — caching
+    // materializes extra stages and blocks AQE coalescing of the
+    // cached exchanges.
+    val e = edges.select(col(srcCol).as("__src"), col(dstCol).as("__dst"),
+      wCol.as("__w"))
     val deg = e.groupBy("__src").agg(sum(col("__w")).as("__wsum"))
     // out-weight attached ONCE; the loop never re-joins it
-    val withDeg = p(e.join(deg, "__src"))
-    val nodes = p(e.select(col("__src").as("__id"))
-      .union(e.select(col("__dst").as("__id"))).distinct())
+    val withDeg = e.join(deg, "__src")
+    val nodes = e.select(col("__src").as("__id"))
+      .union(e.select(col("__dst").as("__id"))).distinct()
     var ranks = nodes.withColumn("__pr", lit(Scale))
     for (_ <- 1 to iters) {
       val contrib = withDeg
@@ -135,18 +127,12 @@ object Graph {
     // `und` feeds the degree count twice, the orientation join and the
     // closing join; `deg` feeds both orientation sides and the node
     // list; `oriented` feeds both wedge sides. Same story as pageRank:
-    // ReuseExchange dedups the repeated subtrees, so the optional
-    // persist (same knob) measured a wash at sf0.1 (3.8 vs 4.0 s) with
-    // 7× the task count — off by default.
-    def p(df: DataFrame): DataFrame =
-      if (df.sparkSession.conf.getOption("spark.graft.graph.persist")
-            .contains("true"))
-        df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      else df
-    val und = p(pairs.select(col(aCol).as("__a"), col(bCol).as("__b")))
-    val deg = p(und.select(col("__a").as("__n"))
+    // ReuseExchange dedups the repeated subtrees, so persisting them
+    // measured a wash at sf0.1 (3.8 vs 4.0 s) with 7× the task count.
+    val und = pairs.select(col(aCol).as("__a"), col(bCol).as("__b"))
+    val deg = und.select(col("__a").as("__n"))
       .unionAll(und.select(col("__b").as("__n")))
-      .groupBy("__n").agg(count(lit(1)).as("__d")))
+      .groupBy("__n").agg(count(lit(1)).as("__d"))
     // orient by (degree, id): keep each edge once, low endpoint first
     val dA = deg.select(col("__n").as("__a"), col("__d").as("__da"))
     val dB = deg.select(col("__n").as("__b"), col("__d").as("__db"))
@@ -158,7 +144,6 @@ object Graph {
           .otherwise(struct(col("__b").as("src"), col("__a").as("dst")))
           .as("__e"))
       .select(col("__e.src").as("__src"), col("__e.dst").as("__dst"))
-      .transform(p)
     // wedges from each source's oriented neighbor list (the two
     // endpoints id-normalized v < w), closed against the CANONICAL
     // undirected pair list — the input is already (a < b) canonical, so

@@ -520,14 +520,13 @@ object Mview {
     }
   }
 
-  /** The raw (IncrementalAgg-shaped) state. The schema rides the
-    * swap-seeded mutable-dir cache (`Exchange.swapTableWith` reseeds it
-    * under the swap monitor on every state write), so the per-refresh /
-    * per-SELECT footer-inference job disappears; a miss — fresh
-    * session, post-recovery — falls back to inference. */
+  /** The raw (IncrementalAgg-shaped) state. The schema comes from the
+    * `_schema` every state write records (`Exchange.swapTableWith`
+    * swaps it in with the state and cursor), so a refresh or SELECT,
+    * in this process or another, runs no footer-inference job. */
   def rawState(spark: SparkSession, stateDir: String): DataFrame = {
     Exchange.recoverSwap(spark, stateDir)
-    Versioned.readMutableDir(spark, stateDir)
+    Versioned.readDir(spark, stateDir)
   }
 
   def readCursor(spark: SparkSession, stateDir: String): Long =

@@ -2679,9 +2679,11 @@ class SqlLifecycle(val spark: SparkSession, val root: String) {
         // the catalog knows the declared schema
         if (cur.isDefined &&
             VersionedPartitioned.partitions(spark, path).nonEmpty) {
-          // partition-value inference can type a dir value more
-          // eagerly than the declaration (a date-parseable STRING key
-          // reads back DATE); the CATALOG is the contract, so
+          // a snapshot without a recorded `_schema` (written before
+          // schemas were recorded) falls back to partition-value
+          // inference, which can type a dir value more eagerly than
+          // the declaration (a date-parseable STRING key reads back
+          // DATE); the CATALOG is the contract, so
           // mismatched columns conform by cast. Matching columns —
           // every table in the gates — select untouched, so plans
           // (and the metadata-fold/prune walks) are unchanged there;

@@ -5,6 +5,7 @@ import java.util.UUID
 
 import org.apache.hadoop.fs.{FileSystem, Path => HPath}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types._
 
 /**
  * Minimal versioned table format — the snapshot-isolation layer the
@@ -278,134 +279,90 @@ object Versioned {
     val snapName = SnapPrefix + UUID.randomUUID().toString
     val snapPath = new HPath(rootPath, snapName)
     df.write.mode("overwrite").parquet(snapPath.toString)
-    // flat snapshot dir: read-back schema == written frame schema (no
-    // partition column to infer), so the first read skips the footer job
-    seedDirSchema(snapPath.toString, df.schema)
+    writeSchema(fs, snapPath, df.schema)
     if (statsCols.nonEmpty) {
       import org.apache.spark.sql.functions.{col, count, element_at, input_file_name, lit, max, min, split}
       val aggs = count(lit(1)).as("__rows") +: statsCols.flatMap(c =>
         Seq(min(col(c)).as(s"min_$c"), max(col(c)).as(s"max_$c")))
-      spark.read.parquet(snapPath.toString)
+      val stats = readDir(spark, snapPath.toString)
         .groupBy(element_at(split(input_file_name(), "/"), -1).as("__file"))
         .agg(aggs.head, aggs.tail: _*)
-        .coalesce(1)
-        .write.parquet(new HPath(snapPath, StatsDirName).toString)
+      val statsPath = new HPath(snapPath, StatsDirName)
+      stats.coalesce(1).write.parquet(statsPath.toString)
+      writeSchema(fs, statsPath, stats.schema)
     }
     snapName
   }
 
   private[ops] val StatsDirName = "_stats"
 
-  /** Session-wide parquet-schema cache for IMMUTABLE directories
-    * (committed snapshot dirs, stats/delete sidecars — written once,
-    * never modified). A plain `spark.read.parquet` re-infers the
-    * schema with a one-task footer-reading Spark job on every call;
-    * statement replays re-read the same snapshot once per statement,
-    * so the inference job multiplies (measured: 81 inference jobs in
-    * one 70-statement door replay at sf0.1). Keyed by dir path;
-    * growth is bounded by the snapshots a session touches. */
-  private[graft] val dirSchemaCache = new java.util.concurrent.ConcurrentHashMap[
-    String, org.apache.spark.sql.types.StructType]()
+  /** The file inside every dir the engine writes (snapshots, sidecars,
+    * swap/promote targets) that records the dir's read schema as Spark
+    * `StructType` JSON — table metadata any reader gets, the way an
+    * Iceberg table carries its schema. Reading through it skips the
+    * one-task footer-inference job a plain `spark.read.parquet` runs on
+    * every call (measured: 81 inference jobs in one 70-statement door
+    * replay at sf0.1), and a second process gets the schema the writer
+    * wrote instead of re-guessing it. Underscore-prefixed, so scans
+    * never see it. */
+  private[graft] val SchemaFile = "_schema"
 
-  /** Seed `dirSchemaCache` at WRITE time, so even the FIRST read of a
-    * new immutable dir skips the one-task footer-inference job — in a
-    * statement replay every snapshot is read back at least once, so
-    * lazy filling still paid one inference job per snapshot written
-    * (O(snapshots) jobs per replayed table read; footer reads on an
-    * object store are tens of ms each). Callers must pass exactly the
-    * schema inference WOULD produce (data columns in written order,
-    * plus — for partitioned snapshots — the partition column at the
-    * type Spark's partition-value inference yields; writers bail to
-    * lazy inference when that type is not provably reproducible).
-    * putIfAbsent: a dir already read keeps its inferred schema. */
-  private[ops] def seedDirSchema(base: String,
-      schema: org.apache.spark.sql.types.StructType): Unit =
-    if (plainSchema(schema)) {
-      dirSchemaCache.putIfAbsent(base, schema)
-      ()
+  /** The shape parquet hands back for a written `schema`: every field
+    * nullable, char/varchar as string. */
+  private[graft] def readBackShape(schema: StructType): StructType = {
+    def loose(dt: DataType): DataType = dt match {
+      case s: StructType => StructType(s.fields.map(f =>
+        f.copy(dataType = loose(f.dataType), nullable = true)))
+      case a: ArrayType => ArrayType(loose(a.elementType), containsNull = true)
+      case m: MapType => MapType(loose(m.keyType), loose(m.valueType),
+        valueContainsNull = true)
+      case _: CharType | _: VarcharType => StringType
+      case other => other
     }
-
-  /** True when every field's parquet round-trip provably reproduces the
-    * dtype. Exotic types whose round-trip is not the identity (or is
-    * conf-dependent in ways a wrong guess could change a read dtype)
-    * fail the check — their dirs stay on the lazy-inference path. */
-  private[ops] def plainSchema(
-      schema: org.apache.spark.sql.types.StructType): Boolean = {
-    import org.apache.spark.sql.types._
-    def plain(dt: DataType): Boolean = dt match {
-      case a: ArrayType => plain(a.elementType)
-      case m: MapType => plain(m.keyType) && plain(m.valueType)
-      case s: StructType => s.fields.forall(f => plain(f.dataType))
-      case NullType | CalendarIntervalType => false
-      case _: CharType | _: VarcharType => false
-      case _ => true
-    }
-    schema.fields.forall(f => plain(f.dataType))
+    loose(schema).asInstanceOf[StructType]
   }
 
-  /** Cache key for the MUTABLE-dir entries: trailing-slash insensitive
-    * so a writer's `path` and a reader's `path/` hit the same entry. */
-  private def mutableKey(path: String): String = path.stripSuffix("/")
-
-  /** Replace-or-invalidate the cache entry for a MUTABLE dir that was
-    * just atomically REPLACED (swap targets, dynamic-overwrite promote
-    * targets): unlike immutable snapshot seeding this must PUT — the
-    * dir's previous generation may have seeded a different schema — and
-    * a schema the seeder cannot prove round-trips must REMOVE the entry
-    * (a stale one would silently serve the previous generation's
-    * schema to `readMutableDir`). */
-  private[graft] def reseedMutableDirSchema(path: String,
-      schema: org.apache.spark.sql.types.StructType): Unit =
-    if (plainSchema(schema)) { dirSchemaCache.put(mutableKey(path), schema); () }
-    else { dirSchemaCache.remove(mutableKey(path)); () }
-
-  /** Drop a MUTABLE dir's cache entry — writers that change a dir's
-    * contents WITHOUT knowing the provable read-back schema (raw
-    * appends, swap-crash recovery) must call this so the next read
-    * falls back to real inference. */
-  private[graft] def invalidateDirSchema(path: String): Unit = {
-    dirSchemaCache.remove(mutableKey(path))
-    ()
+  /** Record `schema` (in read-back shape) as `dir`'s `_schema`. Writers
+    * call this before the dir becomes visible: inside a snapshot or
+    * sidecar before its commit, inside a swap's staging dir before the
+    * renames. Partitioned dirs record the data columns in written order
+    * with the partition column last, at the type the writer wrote. */
+  private[graft] def writeSchema(fs: FileSystem, dir: HPath,
+      schema: StructType): Unit = {
+    val out = fs.create(new HPath(dir, SchemaFile), true)
+    try out.write(readBackShape(schema).json.getBytes(StandardCharsets.UTF_8))
+    finally out.close()
   }
 
-  /** Parquet read of a MUTABLE dir (mview state, swap/promote-managed
-    * plain tables) through the cache: a write-time-seeded entry serves
-    * the schema and skips the footer-inference job; a miss falls back
-    * to plain inference WITHOUT caching — only the writer, who holds
-    * the dir's monitor, may seed, so a racing read can never pin a
-    * mid-swap schema. */
-  private[graft] def readMutableDir(spark: SparkSession,
-      dir: String): DataFrame =
-    Option(dirSchemaCache.get(mutableKey(dir))) match {
-      case Some(sch) => spark.read.schema(sch).parquet(dir)
-      case None => spark.read.parquet(dir)
-    }
-
-  /** Parquet read with the schema served from `dirSchemaCache` — only
-    * safe for immutable dirs (committed snapshots / sidecars), never
-    * for a directory still being assembled. `base` keys the cache and
-    * rides the `basePath` option so partition-dir reads keep their
-    * partition column. */
-  private[graft] def readImmutable(spark: SparkSession, base: String,
-      paths: Seq[String]): DataFrame = {
-    // basePath pins partition-column recovery for sub-dir/file reads;
-    // a whole-dir (or single-file) read neither needs it nor — for a
-    // plain file — tolerates it ('basePath' must be a directory)
-    val reader0 = spark.read
-    val reader =
-      if (paths == Seq(base)) reader0 else reader0.option("basePath", base)
-    Option(dirSchemaCache.get(base)) match {
-      case Some(sch) => reader.schema(sch).parquet(paths: _*)
-      case None =>
-        val df = reader.parquet(paths: _*)
-        dirSchemaCache.put(base, df.schema)
-        df
+  /** The schema `dir` records; None when it has no (or no complete)
+    * `_schema` — a dir the engine did not write, written before schemas
+    * were recorded, or missing altogether. */
+  private[graft] def recordedSchema(spark: SparkSession,
+      dir: String): Option[StructType] = {
+    val p = new HPath(dir, SchemaFile)
+    try {
+      val in = p.getFileSystem(spark.sparkContext.hadoopConfiguration).open(p)
+      val json = try new String(in.readAllBytes(), StandardCharsets.UTF_8)
+        finally in.close()
+      Some(DataType.fromJson(json).asInstanceOf[StructType])
+    } catch {
+      // absent, or caught mid-overwrite by a concurrent writer: infer
+      case scala.util.control.NonFatal(_) => None
     }
   }
 
-  /** Single immutable-dir read (whole snapshots, sidecars). */
-  private[graft] def readImmutableDir(spark: SparkSession, dir: String): DataFrame =
-    readImmutable(spark, dir, Seq(dir))
+  /** Parquet read of `paths` (default: the whole dir) under `base`, with
+    * the schema `base` records; plain inference when it records none (a
+    * missing `base` still throws Spark's AnalysisException). A
+    * sub-dir/file read rides `base` as the `basePath` option so it
+    * keeps its partition column. */
+  private[graft] def readDir(spark: SparkSession, base: String,
+      paths: Seq[String] = Nil): DataFrame = {
+    val reader0 =
+      if (paths.isEmpty) spark.read else spark.read.option("basePath", base)
+    val reader = recordedSchema(spark, base).fold(reader0)(reader0.schema)
+    reader.parquet((if (paths.isEmpty) Seq(base) else paths): _*)
+  }
 
   /** The per-file stats table a `commit(statsCols = …)` wrote for
     * `version` (latest if None): one row per data file with
@@ -417,7 +374,7 @@ object Versioned {
     val snap = snapDir(spark, root, version)
     val (fs, _) = fsOf(spark, root)
     val p = new HPath(snap, StatsDirName)
-    if (fs.exists(p)) Some(readImmutableDir(spark, p.toString)) else None
+    if (fs.exists(p)) Some(readDir(spark, p.toString)) else None
   }
 
   /** Data-file names of `version` whose [min, max] range on `colName`
@@ -450,9 +407,9 @@ object Versioned {
     val snap = snapDir(spark, root, version).toString
     val keep = prunedFiles(spark, root, colName, lo, hi, version)
     if (keep.isEmpty)
-      readImmutableDir(spark, snap)
+      readDir(spark, snap)
         .where(org.apache.spark.sql.functions.lit(false))
-    else readImmutable(spark, snap, keep.map(f => s"$snap/$f"))
+    else readDir(spark, snap, keep.map(f => s"$snap/$f"))
   }
 
   private def snapDir(spark: SparkSession, root: String,
@@ -471,11 +428,11 @@ object Versioned {
     * the resolved snapshot dir — commits that land later do not change
     * what it scans (snapshot isolation). */
   def read(spark: SparkSession, root: String): DataFrame =
-    readImmutableDir(spark, snapDir(spark, root, None).toString)
+    readDir(spark, snapDir(spark, root, None).toString)
 
   /** Time travel: read an exact retained version. */
   def readAt(spark: SparkSession, root: String, version: Long): DataFrame =
-    readImmutableDir(spark, snapDir(spark, root, Some(version)).toString)
+    readDir(spark, snapDir(spark, root, Some(version)).toString)
 
   /** Metadata-only rollback (Iceberg `rollback_to_snapshot`): commit a
     * NEW version whose content is version `to`'s, verbatim — history
@@ -579,7 +536,7 @@ object Versioned {
     val (fs, rootPath) = fsOf(spark, root)
     val content = branchHeadRaw(fs, rootPath, branch).map(_._2).getOrElse(
       throw new IllegalArgumentException(s"no commits on branch $branch under $root"))
-    readImmutableDir(spark,
+    readDir(spark,
       new HPath(rootPath, content.linesIterator.next()).toString)
   }
 

@@ -5,6 +5,7 @@ import java.util.UUID
 import org.apache.hadoop.fs.{FileSystem, Path => HPath}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{col, input_file_name}
+import org.apache.spark.sql.types.StructType
 
 /**
  * Snapshot-isolated PARTITIONED promote — the unification of
@@ -310,7 +311,7 @@ object VersionedPartitioned {
           val statsPath = new HPath(snapPath, Versioned.StatsDirName)
           val sidecar =
             (if (fs.exists(statsPath))
-               Some(readImmutableDir(spark, statsPath.toString)) else None)
+               Some(Versioned.readDir(spark, statsPath.toString)) else None)
               .filter(st => st.columns.contains("__rows") &&
                 st.columns.contains("__file"))
           sidecar match {
@@ -431,6 +432,7 @@ object VersionedPartitioned {
       "max_value", "total_len", "table_bytes")
     val dest = analyzeDir(rootPath, cur)
     out.coalesce(1).write.mode("overwrite").parquet(dest.toString)
+    Versioned.writeSchema(fs, dest, out.schema)
   }
 
   /** Highest version with committed column stats, if any — a pure
@@ -456,10 +458,9 @@ object VersionedPartitioned {
         s"no column stats under $root — run analyzeColumns first"))
     val cur = currentVersion(spark, root).getOrElse(av)
     val (_, rootPath) = Versioned.fsOf(spark, root)
-    // cache-read is safe across re-ANALYZE overwrites of the same
-    // version dir: the stats OUTPUT schema is the fixed 8-column shape
-    // whatever columns were analyzed — contents change, schema cannot
-    Versioned.readImmutableDir(spark, analyzeDir(rootPath, av).toString)
+    // a re-ANALYZE of the same version overwrites data and `_schema`
+    // alike, and the stats OUTPUT is the fixed 8-column shape anyway
+    Versioned.readDir(spark, analyzeDir(rootPath, av).toString)
       .withColumn("analyzed_version", lit(av))
       .withColumn("current_version", lit(cur))
   }
@@ -475,17 +476,17 @@ object VersionedPartitioned {
       .map { av =>
         import org.apache.spark.sql.functions.max
         val (_, rootPath) = Versioned.fsOf(spark, root)
-        Versioned.readImmutableDir(spark, analyzeDir(rootPath, av).toString)
+        Versioned.readDir(spark, analyzeDir(rootPath, av).toString)
           .select(max(col("table_bytes"))).collect()(0).getLong(0)
       }
 
   /** The table's READ schema (evolution rules applied), resolved from
-    * a SINGLE partition's read — a one-dir listing plus one footer,
-    * never the full-manifest construction. Post-evolution physical
-    * schemas can differ per snapshot, but `readManifest`'s
-    * `unionByName` contract means every snapshot frame resolves to the
-    * same evolved column set, so any one partition answers for the
-    * table. The cheap path for callers that need column types before
+    * a SINGLE partition's read — a one-dir listing plus the snapshot's
+    * recorded `_schema`, never the full-manifest construction.
+    * Post-evolution physical schemas can differ per snapshot, but
+    * `readManifest`'s `unionByName` contract means every snapshot frame
+    * resolves to the same evolved column set, so any one partition
+    * answers for the table. The cheap path for callers that need column types before
     * planning a pruned read (`HiddenPartition` literal mapping). */
   def tableSchema(spark: SparkSession,
       root: String): org.apache.spark.sql.types.StructType = {
@@ -696,11 +697,7 @@ object VersionedPartitioned {
     // remaining floor-k tasks could only ever be empty. Measured at
     // sf0.1: a 10-day pipeline replay drops from 2114 to ~860 tasks
     // (64→1 writers per single-date promote), 15.0→11.2 s wall.
-    val pinned =
-      if (spark.conf.getOption("spark.graft.write.pinnedWriters")
-            .contains("false")) None
-      else pinnedPartitionCount(df, partitionCol).map(k => math.max(k, 1))
-    pinned match {
+    pinnedPartitionCount(df, partitionCol).map(k => math.max(k, 1)) match {
       case Some(k) if k < minWriters &&
           k < spark.sessionState.conf.numShufflePartitions =>
         df.repartition(k, col(partitionCol))
@@ -730,119 +727,26 @@ object VersionedPartitioned {
        writer.option("maxRecordsPerFile", maxRecordsPerFile)
      else writer)
       .parquet(snapPath.toString)
-    // seed BEFORE the stats pass so writeStats' read-back of the
-    // snapshot it is summarizing rides the cache too (the fold
+    // recorded BEFORE the stats pass so writeStats' read-back of the
+    // snapshot it is summarizing skips inference too (the fold
     // insertInto runs afterwards adds files to EXISTING partition
-    // dirs only, so the seeded schema stays the inference answer)
-    seedSnapshotSchema(spark, snapPath, df.schema, partitionCol)
-    writeStats(spark, snapPath, snapName, statsCols, bloomCols)
+    // dirs only, so the recorded schema still describes the dir)
+    Versioned.writeSchema(
+      snapPath.getFileSystem(spark.sparkContext.hadoopConfiguration),
+      snapPath, partitionedSchema(df.schema, partitionCol))
+    writeStats(spark, snapPath, snapName, df.schema, statsCols, bloomCols)
     snapName
   }
 
-  /** Pre-fill the immutable-dir schema cache for a freshly written
-    * snapshot so its first read-back skips the footer-inference job
-    * (`Versioned.seedDirSchema`). Only seeds when the read-back schema
-    * is provably what inference would produce: data columns are the
-    * written frame's fields minus the partition column (parquet
-    * round-trips them in order), and the partition column's type is
-    * re-derived from the written dir VALUES by `seedPartitionType` —
-    * which replicates Spark's partition-value type inference for the
-    * unambiguous cases (all-int, all-long, all-ISO-date,
-    * definitely-string) and returns None for anything else (doubles,
-    * decimals, timestamps, mixed or null values), leaving those dirs
-    * on the lazy-inference path. A wrong guess here could change a
-    * read's partition dtype, so ambiguity always bails. */
-  private def seedSnapshotSchema(spark: SparkSession, snapPath: HPath,
-      written: org.apache.spark.sql.types.StructType,
-      partitionCol: String): Unit = {
-    import org.apache.spark.sql.types._
-    try {
-      val fs = snapPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      val values = fs.listStatus(snapPath)
-        .filter(s => s.isDirectory &&
-          s.getPath.getName.startsWith(partitionCol + "="))
-        .map(s => unescapePathName(
-          s.getPath.getName.substring(partitionCol.length + 1)))
-        .toSeq
-      val dataCols = written.fields.filterNot(
-        _.name.equalsIgnoreCase(partitionCol))
-      // exotic-data-type bail lives inside seedDirSchema
-      seedPartitionType(values).foreach { pt =>
-        Versioned.seedDirSchema(snapPath.toString,
-          StructType(dataCols :+ StructField(partitionCol, pt,
-            nullable = true)))
-      }
-    } catch { case scala.util.control.NonFatal(_) => () }
-  }
-
-  /** `seedSnapshotSchema`'s rule with REPLACE semantics, for MUTABLE
-    * partitioned dirs (`Exchange.promote`/`promoteAtomic` targets —
-    * dynamic overwrites that leave untouched partitions in place, so
-    * the partition-value census lists the dir's CURRENT contents, not
-    * the written frame's). Any bail — unprovable partition type,
-    * exotic data type, listing failure — REMOVES the entry: a stale
-    * one would serve the previous generation's schema. */
-  private[ops] def reseedPartitionedDirSchema(spark: SparkSession,
-      dir: String, written: org.apache.spark.sql.types.StructType,
-      partitionCol: String): Unit = {
-    import org.apache.spark.sql.types._
-    try {
-      val p = new HPath(dir)
-      val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      val values = fs.listStatus(p)
-        .filter(s => s.isDirectory &&
-          s.getPath.getName.startsWith(partitionCol + "="))
-        .map(s => unescapePathName(
-          s.getPath.getName.substring(partitionCol.length + 1)))
-        .toSeq
-      val dataCols = written.fields.filterNot(
-        _.name.equalsIgnoreCase(partitionCol))
-      seedPartitionType(values) match {
-        case Some(pt) => Versioned.reseedMutableDirSchema(dir,
-          StructType(dataCols :+ StructField(partitionCol, pt,
-            nullable = true)))
-        case None => Versioned.invalidateDirSchema(dir)
-      }
-    } catch { case scala.util.control.NonFatal(_) =>
-      Versioned.invalidateDirSchema(dir)
-    }
-  }
-
-  /** The partition-column type Spark's partition-value inference would
-    * assign to `values`, for the PROVABLY reproducible cases only:
-    * every value parses as int → IntegerType; as long (with at least
-    * one beyond int) → LongType; as a round-tripping ISO date →
-    * DateType; as none of int/long/double/decimal/date/timestamp →
-    * StringType. Mixed, empty, null-marker, or numeric-but-fractional
-    * value sets return None (fall back to real inference). */
-  private[graft] def seedPartitionType(values: Seq[String])
-      : Option[org.apache.spark.sql.types.DataType] = {
-    import org.apache.spark.sql.types._
-    if (values.isEmpty || values.exists(v =>
-        v == "__HIVE_DEFAULT_PARTITION__" || v.isEmpty)) return None
-    def isInt(s: String) =
-      try { Integer.parseInt(s); true } catch { case _: Exception => false }
-    def isLong(s: String) =
-      try { java.lang.Long.parseLong(s); true } catch { case _: Exception => false }
-    def isNumericish(s: String) =
-      (try { java.lang.Double.parseDouble(s); true }
-       catch { case _: Exception => false }) ||
-      (try { new java.math.BigDecimal(s); true }
-       catch { case _: Exception => false })
-    val DateRe = "^\\d{4}-\\d{2}-\\d{2}$".r
-    def isIsoDate(s: String) = DateRe.findFirstIn(s).isDefined &&
-      (try { java.sql.Date.valueOf(s).toString == s }
-       catch { case _: Exception => false })
-    // anything with a time component (or other date-ish shapes Spark's
-    // formatter might accept) is ambiguous — bail
-    def timestampish(s: String) =
-      s.length > 10 && DateRe.findFirstIn(s.take(10)).isDefined
-    if (values.forall(isInt)) Some(IntegerType)
-    else if (values.forall(isLong)) Some(LongType)
-    else if (values.forall(isIsoDate)) Some(DateType)
-    else if (values.forall(v => !isNumericish(v) && !isIsoDate(v) &&
-        !timestampish(v))) Some(StringType)
-    else None
+  /** The schema a partitioned dir written from `written` records: the
+    * data columns in written order, then the partition column at the
+    * type the writer wrote (Iceberg's rule — never re-guessed from the
+    * dir names). */
+  private[ops] def partitionedSchema(written: StructType,
+      partitionCol: String): StructType = {
+    val (part, data) = written.fields.partition(
+      _.name.equalsIgnoreCase(partitionCol))
+    StructType(data ++ part)
   }
 
   /** Emit the snapshot's `_stats` sidecar over the files CURRENTLY in
@@ -853,15 +757,14 @@ object VersionedPartitioned {
     * metadata aggregation: a data file it misses would silently drop
     * from pruned reads, so it must always be written last. */
   private def writeStats(spark: SparkSession, snapPath: HPath,
-      snapName: String, statsColsIn: Seq[String],
+      snapName: String, written: StructType, statsColsIn: Seq[String],
       bloomColsIn: Seq[String]): Unit = {
     // a stats/bloom column the written frame does not physically carry
     // (renamed away, or a caller passing a superset) degrades to "no
     // stats for it" — readers treat missing coverage as keep-all/bail,
     // so dropping it here can never lose rows, while keeping it would
     // fail the whole write on an unresolvable column
-    lazy val present = spark.read.parquet(snapPath.toString)
-      .schema.fieldNames.toSet
+    val present = written.fieldNames.toSet
     val statsCols = statsColsIn.filter(present.contains)
     val bloomCols = bloomColsIn.filter(present.contains)
     if (statsCols.nonEmpty || bloomCols.nonEmpty) {
@@ -891,8 +794,7 @@ object VersionedPartitioned {
       // from metadata alone. Sidecars written before this column set
       // existed simply lack them — the metadata-agg path bails to a
       // scan on missing coverage, never guesses.
-      val snapFrame = spark.read.option("basePath", snapPath.toString)
-        .parquet(snapPath.toString)
+      val snapFrame = Versioned.readDir(spark, snapPath.toString)
       def summable(c: String): Boolean =
         snapFrame.schema.fields.find(_.name == c).map(_.dataType).exists {
           case _: ByteType | _: ShortType | _: IntegerType | _: LongType |
@@ -916,14 +818,14 @@ object VersionedPartitioned {
       val statsFrame = snapFrame
         .groupBy(diskForm.as("__file"))
         .agg(aggs.head, aggs.tail: _*)
+      val statsPath = new HPath(snapPath, Versioned.StatsDirName)
       statsFrame
         .coalesce(1)
         .write.mode("overwrite")
-        .parquet(new HPath(snapPath, Versioned.StatsDirName).toString)
-      // flat dir, no partition column: read-back schema == frame schema
-      Versioned.seedDirSchema(
-        new HPath(snapPath, Versioned.StatsDirName).toString,
-        statsFrame.schema)
+        .parquet(statsPath.toString)
+      Versioned.writeSchema(
+        statsPath.getFileSystem(spark.sparkContext.hadoopConfiguration),
+        statsPath, statsFrame.schema)
     }
   }
 
@@ -1036,7 +938,7 @@ object VersionedPartitioned {
         .write.mode("append").partitionBy(partitionCol)
         .parquet(snapPath.toString)
     }
-    writeStats(spark, snapPath, snapName, statsCols, bloomCols)
+    writeStats(spark, snapPath, snapName, df.schema, statsCols, bloomCols)
     Some(commitSnapshot(spark, fs, rootPath, root, partitionCol,
       written.map(_ -> snapName).toMap, tag))
   }
@@ -1114,7 +1016,7 @@ object VersionedPartitioned {
         .write.mode("append").partitionBy(partitionCol)
         .parquet(snapPath.toString)
     }
-    writeStats(spark, snapPath, snapName, statsCols, bloomCols)
+    writeStats(spark, snapPath, snapName, df.schema, statsCols, bloomCols)
     Some(commitSnapshot(spark, fs, rootPath, root, partitionCol,
       written.map(_ -> snapName).toMap, tag))
   }
@@ -1560,15 +1462,6 @@ object VersionedPartitioned {
     if (spark.conf.getOption(DiscoveryKey).forall(_ == "32"))
       spark.conf.set(DiscoveryKey, "1024")
 
-  /** Immutable-dir reads with schema served from the shared session
-    * cache (`Versioned.dirSchemaCache`) — see the contract there. */
-  private def readImmutable(spark: SparkSession, base: String,
-      paths: Seq[String]): DataFrame =
-    Versioned.readImmutable(spark, base, paths)
-
-  private def readImmutableDir(spark: SparkSession, dir: String): DataFrame =
-    Versioned.readImmutableDir(spark, dir)
-
   private def readManifest(spark: SparkSession, root: String,
       m: Manifest): DataFrame = {
     require(m.entries.nonEmpty,
@@ -1579,7 +1472,7 @@ object VersionedPartitioned {
       case (snap, parts) =>
         val base = new HPath(rootPath, snap).toString
         applyAddedCols(
-          readImmutable(spark, base,
+          Versioned.readDir(spark, base,
             parts.keys.toSeq.sorted.map(p => s"$base/$p")),
           m, snap)
     }
@@ -1609,7 +1502,7 @@ object VersionedPartitioned {
         .flatMap { case (p, ds) => ds.map(_ -> valueOf(p)) }
         .groupMap(_._1)(_._2)
       val keys = byDel.toSeq.sortBy(_._1).map { case (d, parts) =>
-        readImmutableDir(spark, new HPath(rootPath, d).toString)
+        Versioned.readDir(spark, new HPath(rootPath, d).toString)
           .where(col(m.partitionCol).cast("string")
             .isin(parts.distinct: _*))
       }.reduce(_.unionByName(_)).dropDuplicates()
@@ -1667,7 +1560,7 @@ object VersionedPartitioned {
       val statsPath = new HPath(snapPath, Versioned.StatsDirName)
       val sidecar =
         if (fs.exists(statsPath))
-          Some(readImmutableDir(spark, statsPath.toString)) else None
+          Some(Versioned.readDir(spark, statsPath.toString)) else None
       // only the bounds THIS snapshot's sidecar covers may skip
       val usable = sidecar.map(st => bounds.filter { case (c, lo, hi) =>
         (lo.isDefined || hi.isDefined) &&
@@ -1781,7 +1674,7 @@ object VersionedPartitioned {
       val statsPath = new HPath(new HPath(rootPath, snap),
         Versioned.StatsDirName)
       if (!fs.exists(statsPath)) Set.empty[String]
-      else readImmutableDir(spark, statsPath.toString).schema.fieldNames
+      else Versioned.readDir(spark, statsPath.toString).schema.fieldNames
         .filter(_.startsWith(prefix)).map(_.stripPrefix(prefix)).toSet
     }
   }
@@ -1950,7 +1843,7 @@ object VersionedPartitioned {
         val statsPath = new HPath(new HPath(rootPath, snap),
           Versioned.StatsDirName)
         if (!fs.exists(statsPath)) return None
-        val st = readImmutableDir(spark, statsPath.toString)
+        val st = Versioned.readDir(spark, statsPath.toString)
         if (!needCols.forall(st.columns.contains) ||
           !st.columns.contains("__rows")) return None
         st.where(substring_index(col("__file"), "/", 1)
@@ -2049,7 +1942,7 @@ object VersionedPartitioned {
       case (snap, files) =>
         val base = new HPath(rootPath, snap).toString
         applyAddedCols(
-          readImmutable(spark, base, files.map(f => s"$base/${f._2}")),
+          Versioned.readDir(spark, base, files.map(f => s"$base/${f._2}")),
           m, snap)
     }
     // merge-on-read deletes apply to the pruned view too — a key
@@ -2095,7 +1988,7 @@ object VersionedPartitioned {
         val statsPath = new HPath(snapPath, Versioned.StatsDirName)
         val sidecar =
           (if (fs.exists(statsPath))
-             Some(readImmutableDir(spark, statsPath.toString)) else None)
+             Some(Versioned.readDir(spark, statsPath.toString)) else None)
             .filter(st => Seq("__rows", s"min_$colName", s"max_$colName")
               .forall(st.columns.contains))
         sidecar match {
@@ -2117,7 +2010,7 @@ object VersionedPartitioned {
             // conservative path: scan ONLY this snapshot's referenced
             // partitions (stats-less or pre-row-count sidecar)
             val base = snapPath.toString
-            applyAddedCols(readImmutable(spark, base,
+            applyAddedCols(Versioned.readDir(spark, base,
               partDirs.sorted.map(p => s"$base/$p")), m, snap)
               .groupBy(col(m.partitionCol).cast("string").as(m.partitionCol))
               .agg(count(lit(1)).as("n_rows"),
@@ -2417,6 +2310,7 @@ object VersionedPartitioned {
       .transform(clusterForWrite(_, pcol))
       .write.mode("overwrite").partitionBy(pcol)
       .parquet(snapPath.toString)
+    Versioned.writeSchema(fs, snapPath, partitionedSchema(live.schema, pcol))
     val written = fs.listStatus(snapPath)
       .filter(s => s.isDirectory && s.getPath.getName.startsWith(pcol + "="))
       .map(_.getPath.getName -> snapName).toMap
@@ -2464,7 +2358,9 @@ object VersionedPartitioned {
     val (fs, rootPath) = Versioned.fsOf(spark, root)
     val delName = DelDirPrefix + UUID.randomUUID().toString
     val dk = keys.dropDuplicates()
-    dk.coalesce(1).write.parquet(new HPath(rootPath, delName).toString)
+    val delPath = new HPath(rootPath, delName)
+    dk.coalesce(1).write.parquet(delPath.toString)
+    Versioned.writeSchema(fs, delPath, dk.schema)
     // metadata-sized driver fetch: the distinct partition VALUES the
     // keys touch (same contract as the partition listings elsewhere)
     val touched = dk.select(col(pcol).cast("string")).distinct()
@@ -2734,6 +2630,8 @@ object VersionedPartitioned {
     clusterForWrite(frame, m0.partitionCol)
       .write.mode("overwrite").partitionBy(m0.partitionCol)
       .parquet(snapPath.toString)
+    Versioned.writeSchema(fs, snapPath,
+      partitionedSchema(frame.schema, m0.partitionCol))
     val written = fs.listStatus(snapPath)
       .filter(s => s.isDirectory &&
         s.getPath.getName.startsWith(m0.partitionCol + "="))

@@ -509,14 +509,21 @@ object Streaming {
     }
     val novel = Dedup.incrementalNearDupsIndexed(indexed, batch,
       idCol, textCol, numHashes = 128, bands = 32, threshold = threshold)
+    // raw append outside the swap protocol: the first append records
+    // the corpus schema, and every later batch must match it — a batch
+    // of another shape would make the recorded schema lie about files
+    val recorded = graft.ops.Versioned.recordedSchema(spark, corpusPath)
+    val shape = graft.ops.Versioned.readBackShape(novel.schema)
+    recorded.foreach(r => require(r == shape,
+      s"admitBatch: batch schema ${shape.simpleString} differs from the " +
+        s"schema recorded for corpus $corpusPath: ${r.simpleString}"))
     // the plan reads corpusPath while appending to it, which is safe
     // here: append never deletes or rewrites existing files, and the
     // scan's file index was fixed at planning time — new files are
     // invisible to in-flight (and retried) corpus-scan tasks
     novel.write.mode("append").parquet(corpusPath)
-    // raw append outside the swap protocol: drop any swap-seeded schema
-    // entry so the next Exchange.table read re-infers over ALL files
-    graft.ops.Versioned.invalidateDirSchema(corpusPath)
+    if (recorded.isEmpty)
+      graft.ops.Versioned.writeSchema(fs, new HPath(corpusPath), novel.schema)
     // exactly-once layer 2: stamp the ledger AFTER the append commits.
     // A crash in the append→marker window replays the batch without a
     // marker — the self-dedup backstop (every admitted doc Jaccard-1.0

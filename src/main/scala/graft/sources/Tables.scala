@@ -2,7 +2,7 @@ package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
+import org.apache.spark.sql.types.{LongType, StructType, TimestampNTZType, TimestampType}
 
 /**
  * Testdata table loaders.
@@ -36,15 +36,20 @@ object Tables {
     "supplier", "part", "orders", "lineitem", "events", "documents",
     "embeddings")
 
+  /** Inferred schema per testdata file. The files are read-only inputs
+    * the engine did not write (so they carry no `_schema`), and a plain
+    * `spark.read.parquet` re-infers with a one-task footer job on EVERY
+    * call — the bench's 278 queries call `load` 1-3 times each, so
+    * inferring once per path saves several hundred jobs per run. */
+  private val inferred =
+    new java.util.concurrent.ConcurrentHashMap[String, StructType]()
+
   def load(spark: SparkSession, sfDir: String, name: String): DataFrame = {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    // testdata files are immutable inputs: serve the parquet schema
-    // from the shared immutable-dir cache (graft.ops.Versioned) — a
-    // plain spark.read.parquet re-infers it with a one-task footer job
-    // on EVERY call, and the bench's 278 queries call load 1-3 times
-    // each (several hundred avoidable jobs per run)
-    val df = graft.ops.Versioned.readImmutableDir(spark,
-      s"$sfDir/$name.parquet")
+    val path = s"$sfDir/$name.parquet"
+    val df = spark.read
+      .schema(inferred.computeIfAbsent(path, p => spark.read.parquet(p).schema))
+      .parquet(path)
     tsCols.getOrElse(name, Nil).foldLeft(df) { (d, c) =>
       d.schema.find(_.name == c) match {
         case Some(f) if f.dataType == LongType =>

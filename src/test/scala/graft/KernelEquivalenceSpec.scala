@@ -93,44 +93,6 @@ class KernelEquivalenceSpec extends AnyFunSuite {
     assert(fused.find(_._1 == 4L).exists(_._2 == 0L))
   }
 
-  // --------------------------------------------- seedPartitionType —
-
-  test("seedPartitionType matches Spark's partition-value inference " +
-      "or bails") {
-    // for every value set the write-time seed claims a type for, Spark's
-    // own inference over a real partitioned dir must agree; ambiguous
-    // sets must return None (stay on the lazy-inference path)
-    val cases: Seq[(Seq[String], Boolean)] = Seq(
-      (Seq("0", "3", "7"), true), // hidden-bucket ints
-      (Seq("01", "002"), true), // leading zeros still parse as int
-      (Seq("3", "99999999999"), true), // int+long widen to long
-      (Seq("2024-01-01", "2024-01-02"), true), // ISO dates
-      (Seq("1995-01", "1995-02"), true), // month strings (no parse)
-      (Seq("all"), true), // centroid marker
-      (Seq("AAPL#buy", "MSFT#sell"), true), // ticker strings
-      (Seq("3.5", "4.0"), false), // fractional → bail
-      (Seq("3", "x"), false), // mixed → bail
-      (Seq("2024-01-01 10:00:00"), false), // timestampish → bail
-      (Seq("__HIVE_DEFAULT_PARTITION__"), false) // null marker → bail
-    )
-    cases.foreach { case (values, expectSeed) =>
-      val got = graft.ops.VersionedPartitioned.seedPartitionType(values)
-      if (!expectSeed) assert(got.isEmpty, s"should bail on $values")
-      else {
-        assert(got.isDefined, s"should seed $values")
-        val dir = java.nio.file.Files
-          .createTempDirectory("graft_seedspec_").toString
-        values.zipWithIndex.foreach { case (v, i) =>
-          Seq((i, v)).toDF("x", "p").write
-            .partitionBy("p").mode("append").parquet(dir)
-        }
-        val inferred = spark.read.parquet(dir).schema("p").dataType
-        assert(got.get == inferred,
-          s"$values: seed ${got.get} vs Spark-inferred $inferred")
-      }
-    }
-  }
-
   // ---------------------------------------------------- ivf_nearest —
 
   test("ivf_nearest == crossJoin + row_number window (assign and probe)") {
@@ -184,85 +146,96 @@ class KernelEquivalenceSpec extends AnyFunSuite {
     }
   }
 
-  // ------------------------------------- mutable-dir schema seeding —
+  // ------------------------------------------- recorded `_schema` —
 
-  test("swapTableWith reseeds the mutable-dir cache: cached read == " +
-      "inference, across schema-changing swaps, invalidated on recovery") {
+  test("swapTableWith records _schema: read == written across swaps") {
     val dir = java.nio.file.Files
-      .createTempDirectory("graft_swapseed_").toString + "/t"
+      .createTempDirectory("graft_swapschema_").toString + "/t"
     val a = Seq((1L, "x"), (2L, "y")).toDF("id", "s")
     graft.ops.Exchange.swapTableWith(a, dir, Map("_m" -> "1"))
-    val inferredA = spark.read.parquet(dir)
-    val cachedA = graft.ops.Versioned.readMutableDir(spark, dir)
-    assert(cachedA.schema == inferredA.schema)
-    assert(cachedA.orderBy("id").collect().toSeq ==
-      inferredA.orderBy("id").collect().toSeq)
-    // a swap that CHANGES the schema must not serve the old entry
+    val readA = graft.ops.Exchange.table(spark, dir)
+    assert(readA.schema == spark.read.parquet(dir).schema)
+    assert(readA.orderBy("id").as[(Long, String)].collect().toSeq ==
+      Seq((1L, "x"), (2L, "y")))
+    // a swap that CHANGES the schema swaps the recorded schema with it
     val b = Seq((3L, 2.5d, "z")).toDF("id", "d", "s")
     graft.ops.Exchange.swapTableWith(b, dir, Map.empty)
-    val inferredB = spark.read.parquet(dir)
-    assert(graft.ops.Versioned.readMutableDir(spark, dir).schema
-      == inferredB.schema)
-    // recoverSwap restores an unknown generation: entry must drop (the
-    // next read infers — assert equality with a fresh inference again)
+    val readB = graft.ops.Exchange.table(spark, dir)
+    assert(readB.schema == spark.read.parquet(dir).schema)
+    assert(readB.as[(Long, Double, String)].collect().toSeq ==
+      Seq((3L, 2.5d, "z")))
+    // crash inside the NEXT swap window: the live dir moved aside, the
+    // staged generation never renamed in. recoverSwap restores B's data
+    // together with B's schema (the `_schema` moved with it)
     val p = new org.apache.hadoop.fs.Path(dir)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     fs.rename(p, new org.apache.hadoop.fs.Path(
       p.getParent, "." + p.getName + ".old"))
     assert(graft.ops.Exchange.recoverSwap(spark, dir))
-    assert(graft.ops.Versioned.readMutableDir(spark, dir).schema
-      == spark.read.parquet(dir).schema)
+    val recovered = graft.ops.Exchange.table(spark, dir)
+    assert(recovered.schema == readB.schema)
+    assert(recovered.as[(Long, Double, String)].collect().toSeq ==
+      Seq((3L, 2.5d, "z")))
   }
 
-  test("reseedMutableDirSchema removes the entry on unseedable schemas") {
+  test("_schema records char/varchar as string, every field nullable") {
     import org.apache.spark.sql.types._
-    val key = "/graft/spec/unseedable"
-    graft.ops.Versioned.reseedMutableDirSchema(key,
-      StructType(Seq(StructField("x", LongType))))
-    graft.ops.Versioned.reseedMutableDirSchema(key,
-      StructType(Seq(StructField("x", NullType))))
-    assert(!graft.ops.Versioned.dirSchemaCache.containsKey(key))
+    val written = StructType(Seq(
+      StructField("c", CharType(3), nullable = false),
+      StructField("v", ArrayType(VarcharType(5), containsNull = false)),
+      StructField("m", MapType(StringType, LongType,
+        valueContainsNull = false), nullable = false)))
+    assert(graft.ops.Versioned.readBackShape(written) == StructType(Seq(
+      StructField("c", StringType),
+      StructField("v", ArrayType(StringType)),
+      StructField("m", MapType(StringType, LongType)))))
   }
 
-  test("Exchange.promote reseeds partitioned dirs: cached read == " +
-      "inference across promotes; unprovable partition values bail") {
+  test("Exchange.promote records _schema: partition type kept") {
     val dir = java.nio.file.Files
-      .createTempDirectory("graft_promseed_").toString + "/t"
+      .createTempDirectory("graft_promschema_").toString + "/t"
     val d1 = Seq((1L, "2024-01-01"), (2L, "2024-01-02"))
       .toDF("id", "date").withColumn("date", col("date").cast("date"))
     graft.ops.Exchange.promote(d1, dir, "date")
     assert(graft.ops.Exchange.table(spark, dir).schema ==
       spark.read.parquet(dir).schema)
-    // second promote adds a partition; untouched dirs stay — the
-    // reseed lists the FINAL dir set, so cached == inference still
+    // a partial promote (one new partition, the old ones untouched)
+    // keeps the recorded schema and reads every partition
     val d2 = Seq((3L, "2024-01-03")).toDF("id", "date")
       .withColumn("date", col("date").cast("date"))
     graft.ops.Exchange.promote(d2, dir, "date")
-    val inferred = spark.read.parquet(dir)
-    assert(graft.ops.Exchange.table(spark, dir).schema == inferred.schema)
-    assert(graft.ops.Exchange.table(spark, dir).orderBy("id")
-        .collect().toSeq == inferred.orderBy("id").collect().toSeq)
-    // unprovable partition-value mix (numeric-looking + not) must bail
-    // to inference, never serve a guessed type
+    val read = graft.ops.Exchange.table(spark, dir)
+    assert(read.schema == spark.read.parquet(dir).schema)
+    assert(read.orderBy("id").select("id").as[Long].collect().toSeq ==
+      Seq(1L, 2L, 3L))
+    // digit-only STRING partition values stay STRING — the writer's
+    // type, where dir-name inference would have guessed INT
     val dir2 = java.nio.file.Files
-      .createTempDirectory("graft_promseed2_").toString + "/t"
+      .createTempDirectory("graft_promschema2_").toString + "/t"
     graft.ops.Exchange.promote(
-      Seq((1L, "3"), (2L, "x")).toDF("id", "pt"), dir2, "pt")
-    assert(!graft.ops.Versioned.dirSchemaCache.containsKey(dir2))
-    assert(graft.ops.Exchange.table(spark, dir2).schema ==
-      spark.read.parquet(dir2).schema)
+      Seq((1L, "3"), (2L, "07")).toDF("id", "pt"), dir2, "pt")
+    val read2 = graft.ops.Exchange.table(spark, dir2)
+    assert(read2.schema("pt").dataType ==
+      org.apache.spark.sql.types.StringType)
+    assert(read2.orderBy("id").as[(Long, String)].collect().toSeq ==
+      Seq((1L, "3"), (2L, "07")))
   }
 
-  test("raw append invalidates the swap-seeded entry (admitBatch path)") {
+  test("raw append into a swapped dir stays readable (admitBatch path)") {
     val dir = java.nio.file.Files
-      .createTempDirectory("graft_appendinv_").toString + "/t"
+      .createTempDirectory("graft_appendschema_").toString + "/t"
     graft.ops.Exchange.swapTable(Seq((1L, "a")).toDF("id", "s"), dir)
-    assert(graft.ops.Versioned.dirSchemaCache.containsKey(dir))
     Seq((2L, "b")).toDF("id", "s").write.mode("append").parquet(dir)
-    graft.ops.Versioned.invalidateDirSchema(dir)
-    assert(!graft.ops.Versioned.dirSchemaCache.containsKey(dir))
-    assert(graft.ops.Versioned.readMutableDir(spark, dir)
+    assert(graft.ops.Exchange.table(spark, dir)
       .orderBy("id").as[(Long, String)].collect().toSeq ==
       Seq((1L, "a"), (2L, "b")))
+  }
+
+  test("Exchange.table on a missing path throws AnalysisException") {
+    // admitBatch's swap-recovery branch keys off exactly this exception
+    val missing = java.nio.file.Files
+      .createTempDirectory("graft_missing_").toString + "/absent"
+    intercept[org.apache.spark.sql.AnalysisException](
+      graft.ops.Exchange.table(spark, missing))
   }
 }

@@ -257,6 +257,30 @@ class StreamingSpec extends AnyFunSuite {
     assert(new java.io.File(s"$corpus/_epochs").isDirectory)
   }
 
+  test("admitBatch records the corpus schema: later reads run no jobs") {
+    val root = Files.createTempDirectory("graft_dedup_schema").toString
+    val corpus = s"$root/corpus"
+    def docsDf(rows: (Long, String)*) = rows.toSeq.toDF("doc_id", "text")
+    val a = (1 to 30).map(i => s"stok$i").mkString(" ")
+    val b = (100 to 130).map(i => s"sfresh$i").mkString(" ")
+    Streaming.admitBatch(spark, docsDf((1L, a)), corpus, "doc_id", "text", 0.5)
+    Streaming.admitBatch(spark, docsDf((2L, b)), corpus, "doc_id", "text", 0.5)
+    // the second admit appended under the recorded schema: reading the
+    // corpus back needs no footer-inference job
+    val (read, jobs) = Jobs.during(spark)(
+      graft.ops.Exchange.table(spark, corpus))
+    assert(jobs == 0)
+    assert(read.schema == spark.read.parquet(corpus).schema)
+    assert(read.select("doc_id").as[Long].collect().toSeq.sorted ==
+      Seq(1L, 2L))
+    // a batch of another shape is refused before it touches the corpus
+    val c = (200 to 230).map(i => s"sother$i").mkString(" ")
+    val err = intercept[IllegalArgumentException](Streaming.admitBatch(spark,
+      Seq((3, c)).toDF("doc_id", "text"), corpus, "doc_id", "text", 0.5))
+    assert(err.getMessage.contains(corpus))
+    assert(spark.read.parquet(corpus).count() == 2)
+  }
+
   test("dedupIngest migrates a pre-index corpus once, then admits against stored index") {
     import graft.ext.Dedup
     val root = Files.createTempDirectory("graft_dedup_migrate").toString
