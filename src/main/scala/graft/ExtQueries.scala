@@ -3606,7 +3606,7 @@ object ExtQueries {
   /**
    * MIN/MAX materialized view through the statement door (the
    * round-17 verdict's first ask): extremes are not subtractable, so
-   * `Mview.maintainExtended` merges inserts via least/greatest and
+   * `IncrementalAgg.fold` merges inserts via least/greatest and
    * RESCANS only the groups a delete might have de-extremed — the
    * month-02 delete removes that group's maximum (rescan path), the
    * month-01 delete removes strictly-inside values (provably no
@@ -3834,7 +3834,7 @@ object ExtQueries {
 
   /**
    * Extended (min/max/avg) materialized view over the fact ⋈ dim
-   * shape (the round-18 verdict's third ask): `Mview.maintainExtended`
+   * shape (the round-18 verdict's third ask): `IncrementalAgg.fold`
    * applied to the JOINED relation's true changed row sets — see the
    * refresh join branch in ops/Mview for the ΔJ derivation — churned
    * on EACH side: a fact insert (merge, no rescan), a fact delete that
@@ -5119,7 +5119,7 @@ object ExtQueries {
 
   /**
    * COUNT DISTINCT under delta maintenance
-   * (ops/IncrementalAgg.sketchState/maintainSketches/distinctCounts):
+   * (ops/IncrementalAgg.sketchState/replaceCells/distinctCounts):
    * distinct counts are not subtractable, so the maintained view keeps
    * one mergeable HLL sketch per (partition × group) cell and a change
    * window replaces only the touched partitions' cells — the same
@@ -5154,9 +5154,11 @@ object ExtQueries {
         .unionByName(base.where(col("month") === "1995-04")),
       root, "month", writers = Some(2))
     val (oldSide, newSide) = VersionedPartitioned.changedSides(s, root, 1L)
-    val maintained = IncrementalAgg.maintainSketches(state,
-      oldSide.select(cols.map(col): _*), newSide.select(cols.map(col): _*),
-      "month", Seq("o_orderstatus"), Seq("o_orderpriority", "month"))
+    val maintained = IncrementalAgg.replaceCells(state,
+        oldSide.select(cols.map(col): _*), newSide.select(cols.map(col): _*),
+        "month")(
+      IncrementalAgg.sketchState(_, "month", Seq("o_orderstatus"),
+        Seq("o_orderpriority", "month")))
     IncrementalAgg.distinctCounts(maintained, Seq("o_orderstatus"),
         Seq("o_orderpriority", "month"))
       .orderBy("o_orderstatus")
@@ -5164,7 +5166,7 @@ object ExtQueries {
 
   /**
    * PERCENTILES under delta maintenance
-   * (ops/IncrementalAgg.quantileState/maintainQuantiles/quantileValues):
+   * (ops/IncrementalAgg.quantileState/replaceCells/quantileValues):
    * the maintained view keeps a DDSketch-style log-bucket histogram
    * per (partition × group) cell — plain (cell, bucket, n) count rows,
    * merged by addition — and the same promote/rewrite change window as
@@ -5194,8 +5196,9 @@ object ExtQueries {
         .unionByName(base.where(col("month") === "1995-04")),
       root, "month", writers = Some(2))
     val (oldSide, newSide) = VersionedPartitioned.changedSides(s, root, 1L)
-    val maintained = IncrementalAgg.maintainQuantiles(state, oldSide, newSide,
-      "month", Seq("o_orderstatus"), "v")
+    val maintained = IncrementalAgg.replaceCells(state, oldSide, newSide,
+      "month")(
+      IncrementalAgg.quantileState(_, "month", Seq("o_orderstatus"), "v"))
     IncrementalAgg.quantileValues(maintained, Seq("o_orderstatus"),
         Seq(0.25, 0.5, 0.95))
       .select(col("o_orderstatus"), col("q"), col("bucket"))
@@ -5204,7 +5207,7 @@ object ExtQueries {
 
   /**
    * MIN/MAX under delta maintenance
-   * (ops/IncrementalAgg.minMaxState/maintainMinMax/minMaxValues):
+   * (ops/IncrementalAgg.minMaxState/replaceCells/minMaxValues):
    * extremes are not subtractable, so the maintained view keeps one
    * lossless min/max row per (partition × group) cell and the change
    * window replaces only the touched partitions' cells — the same
@@ -5233,8 +5236,9 @@ object ExtQueries {
       root, "month", writers = Some(2))
     val (oldSide, newSide) = VersionedPartitioned.changedSides(s, root, 1L)
     IncrementalAgg.minMaxValues(
-        IncrementalAgg.maintainMinMax(state, oldSide, newSide, "month",
-          Seq("o_orderstatus"), Seq("p")),
+        IncrementalAgg.replaceCells(state, oldSide, newSide, "month")(
+          IncrementalAgg.minMaxState(_, "month", Seq("o_orderstatus"),
+            Seq("p"))),
         Seq("o_orderstatus"), Seq("p"))
       .select(col("o_orderstatus"),
         col("min_p").cast("double").as("min_price"),
@@ -5244,7 +5248,7 @@ object ExtQueries {
 
   /**
    * TOP-K ROWS under delta maintenance
-   * (ops/IncrementalAgg.topKState/maintainTopK/topKValues): each
+   * (ops/IncrementalAgg.topKState/replaceCells/topKValues): each
    * (partition × group) cell keeps its own k best rows — lossless for
    * the top-k question since a group's global winners include at most
    * k rows from any one partition — and the change window replaces
@@ -5274,8 +5278,9 @@ object ExtQueries {
       root, "month", writers = Some(2))
     val (oldSide, newSide) = VersionedPartitioned.changedSides(s, root, 1L)
     IncrementalAgg.topKValues(
-        IncrementalAgg.maintainTopK(state, oldSide, newSide, "month",
-          Seq("o_orderstatus"), "p", "o_orderkey", 3),
+        IncrementalAgg.replaceCells(state, oldSide, newSide, "month")(
+          IncrementalAgg.topKState(_, "month", Seq("o_orderstatus"), "p",
+            "o_orderkey", 3)),
         Seq("o_orderstatus"), "p", "o_orderkey", 3)
       .select(col("o_orderstatus"), col("rank"), col("o_orderkey"),
         col("p").cast("double").as("total_price"))

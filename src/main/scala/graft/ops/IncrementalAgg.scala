@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /**
@@ -27,59 +27,170 @@ import org.apache.spark.sql.functions._
  * maintained count reaches 0 disappears, exactly as a recompute would
  * drop it; groups appearing in the delta only are inserted.
  *
- * Scale shape: `aggregate` is one map-combined hash aggregation;
- * `maintain` is one outer join of two group-keyed frames (both already
- * aggregate-sized, ≪ data) plus the same aggregation over the delta
- * sides. Nothing row-level ever joins.
+ * Scale shape: `buildState` is one map-combined hash aggregation;
+ * `fold` — the one delta rule every count/sum/min/max/variance view
+ * maintains by — is the same single hash aggregation over the tagged
+ * union of the state rows (aggregate-sized, ≪ data) and the RAW
+ * deleted and inserted rows, plus, for min/max only, a rescan of the
+ * groups a delete may have de-extremed. Nothing row-level ever joins
+ * the state.
  */
 object IncrementalAgg {
 
-  /** The materialized shape: groupCols, `n_rows`, and `sum_<c>` per sum
-    * column. */
+  /** The state shape of a maintained aggregate: the group columns,
+    * `n_rows`, then `sum_<c>` per sum column (each followed by its
+    * non-null count `cnt_<c>` when `counted`), `min_<c>`/`max_<c>` per
+    * extreme column and `sumsq_<c>` per variance column. */
+  final case class Shape(groups: Seq[String], sums: Seq[String] = Nil,
+      counted: Boolean = false, minMax: Seq[String] = Nil,
+      sumSq: Seq[String] = Nil) {
+    require(groups.nonEmpty, "at least one group column")
+
+    /** Each non-group state column with the aggregate that builds it,
+      * every input passed through `in` first (the fold restricts them
+      * to one tagged side). The non-null count `cnt_` keeps sum/avg
+      * NULL-exact under maintenance; the sum of squares is taken in
+      * DOUBLE — exact (hence exactly subtractable) for integer-valued
+      * columns whose squares sum below 2^53, with the same last-ulp
+      * caveat as a double SUM. */
+    private[IncrementalAgg] def aggs(in: Column => Column)
+        : Seq[(String, Column)] = {
+      def v(name: String) = in(qcol(name))
+      ("n_rows" -> count(in(lit(1)))) +:
+        (sums.flatMap(c => (s"sum_$c" -> sum(v(c))) +:
+            (if (counted) Seq(s"cnt_$c" -> count(v(c))) else Nil)) ++
+          minMax.flatMap(c =>
+            Seq(s"min_$c" -> min(v(c)), s"max_$c" -> max(v(c)))) ++
+          sumSq.map(c =>
+            s"sumsq_$c" -> sum(v(c).cast("double") * v(c).cast("double"))))
+    }
+
+    /** The state's column names, in the order `buildState` writes. */
+    def columns: Seq[String] = groups ++ aggs(identity).map(_._1)
+  }
+
+  private def qcol(name: String): Column = col(s"`$name`")
+
+  /** The state of `rows` in `shape`: one map-combined hash aggregation. */
+  def buildState(rows: DataFrame, shape: Shape): DataFrame = {
+    val aggs = shape.aggs(identity).map { case (n, a) => a.as(n) }
+    rows.groupBy(shape.groups.map(qcol): _*).agg(aggs.head, aggs.tail: _*)
+  }
+
+  /** The plain count/sum state: groupCols, `n_rows`, and `sum_<c>` per
+    * sum column. */
   def aggregate(df: DataFrame, groupCols: Seq[String],
-      sumCols: Seq[String]): DataFrame = {
-    require(groupCols.nonEmpty, "at least one group column")
-    val aggs = count(lit(1)).as("n_rows") +:
-      sumCols.map(c => sum(col(c)).as(s"sum_$c"))
-    df.groupBy(groupCols.map(col): _*).agg(aggs.head, aggs.tail: _*)
+      sumCols: Seq[String]): DataFrame =
+    buildState(df, Shape(groupCols, sumCols))
+
+  /**
+   * Fold one change window into a maintained state: `deleted` and
+   * `inserted` are the window's raw rows leaving and entering the
+   * aggregated relation (either may be empty). Returns the state equal
+   * to `buildState` over the post-change relation, every column cast
+   * to the state's own type — a fold never widens a DECIMAL sum.
+   *
+   * ONE hash aggregation over the tagged union of the state rows
+   * (≤1 per group, surfaced through `max(when(s))`) and the two raw
+   * sides (aggregated directly by `when(tag)`-filtered count/sum/min/
+   * max — an absent side yields NULL). Then per group:
+   *
+   *  - `n_rows` / `cnt_` / `sum_` / `sumsq_` are subtractable:
+   *    state + inserted − deleted. A counted `sum_` may keep a 0 where
+   *    a recompute says NULL — `cnt_` decides at projection;
+   *  - `min_`/`max_` are NOT subtractable: inserts merge for free
+   *    (least/greatest skip nulls), and only groups whose deletes MIGHT
+   *    have de-extremed a candidate — a deleted value tying or bounding
+   *    the merged extreme, or any comparison undecidable from nulls —
+   *    are RESCANNED from `source` (the relation at the window's own
+   *    end version), restricted to exactly those groups by a null-safe
+   *    broadcast semi-join. The rescan rebuilds the WHOLE cell.
+   *
+   * A group whose count reaches 0 leaves the state. Steady state:
+   * O(changed rows) + O(affected groups' rows), never O(table); a
+   * window with no affected group leaves the semi-join's build side
+   * empty and AQE's empty-relation propagation skips the source scan.
+   */
+  def fold(shape: Shape, state: DataFrame, deleted: DataFrame,
+      inserted: DataFrame, source: Option[DataFrame] = None): DataFrame = {
+    require(shape.minMax.isEmpty || source.isDefined,
+      "a min/max fold needs the source to rescan affected groups from")
+    val gcols = shape.groups.map(qcol)
+    val sCols = shape.columns.drop(shape.groups.size)
+    val sTagged = state.select((gcols :+ lit("s").as("__tag")) ++
+      sCols.map(n => qcol(n).as(s"__s_$n")): _*)
+    val valueCols = (shape.sums ++ shape.minMax ++ shape.sumSq).distinct
+    def raw(df: DataFrame, tag: String): DataFrame =
+      df.select((gcols :+ lit(tag).as("__tag")) ++ valueCols.map(qcol): _*)
+    // the state side is ≤1 row per group, so max(when(s)) surfaces it
+    // losslessly; each raw side gets buildState's own aggregates over
+    // its tagged rows — per-side values equal separate aggregations,
+    // without their two extra exchanges
+    def tagged(t: String): Column => Column = when(col("__tag") === t, _)
+    val aggs =
+      sCols.map(n => max(tagged("s")(qcol(s"__s_$n"))).as(s"__s_$n")) ++
+        Seq("i", "d").flatMap(t => shape.aggs(tagged(t))
+          .map { case (n, a) => a.as(s"__${t}_$n") })
+    val merged = sTagged
+      .unionByName(raw(inserted, "i"), allowMissingColumns = true)
+      .unionByName(raw(deleted, "d"), allowMissingColumns = true)
+      .groupBy(gcols: _*)
+      .agg(aggs.head, aggs.tail: _*)
+    def nz(x: Column) = coalesce(x, lit(0))
+    def part(side: String, n: String) = qcol(s"__${side}_$n")
+    // the next value of state column `n`: extremes merge the inserts
+    // (least/greatest skip nulls); every other column is subtractable,
+    // state + inserted − deleted, and an uncounted sum stays NULL
+    // exactly when every contributing side is
+    def next(n: String): Column = {
+      def net = nz(part("s", n)) + nz(part("i", n)) - nz(part("d", n))
+      if (n.startsWith("min_")) least(part("s", n), part("i", n))
+      else if (n.startsWith("max_")) greatest(part("s", n), part("i", n))
+      else if (n.startsWith("sum_") && !shape.counted)
+        when(Seq("s", "i", "d").map(part(_, n).isNotNull).reduce(_ || _),
+          net)
+      else net
+    }
+    // a group rescans iff it has deletes and either was never in the
+    // state (an insert+delete churn window) or a deleted value ties or
+    // bounds a candidate extreme; the outer coalesce makes an
+    // undecidable comparison rescan, never drop
+    val rescan =
+      if (shape.minMax.isEmpty) lit(false)
+      else nz(part("d", "n_rows")) > 0 &&
+        coalesce(part("s", "n_rows").isNull || shape.minMax.map(v =>
+          part("d", s"min_$v") <= next(s"min_$v") ||
+            part("d", s"max_$v") >= next(s"max_$v")).reduce(_ || _),
+          lit(true))
+    val nNext = next("n_rows")
+    val kept = merged.where(!rescan && nNext > 0)
+      .select(gcols ++ sCols.map(n => next(n).as(n)): _*)
+    val out =
+      if (shape.minMax.isEmpty) kept
+      else {
+        val src = source.get
+        val affected = merged.where(rescan).select(gcols: _*)
+        // null-safe semi-join: a NULL group key is a group too — a
+        // plain equi-join would never match it and its rescan would
+        // drop it
+        kept.unionByName(buildState(src.join(broadcast(affected),
+          shape.groups.map(g => src(g) <=> affected(g)).reduce(_ && _),
+          "left_semi"), shape))
+      }
+    val types = state.schema.fields.map(f => f.name -> f.dataType).toMap
+    out.select(shape.columns.map(n => qcol(n).cast(types(n)).as(n)): _*)
   }
 
   /**
-   * Apply one change window to a materialized aggregate: `oldChanged` /
-   * `newChanged` are the touched partitions' rows before and after
-   * (either may be empty). Returns the maintained aggregate, equal to
-   * `aggregate` over the post-change table.
+   * Apply one change window to a materialized count/sum aggregate:
+   * `oldChanged` / `newChanged` are the touched partitions' rows before
+   * and after (either may be empty). Returns the maintained aggregate,
+   * equal to `aggregate` over the post-change table.
    */
   def maintain(state: DataFrame, oldChanged: DataFrame,
       newChanged: DataFrame, groupCols: Seq[String],
       sumCols: Seq[String]): DataFrame =
-    applySigned(state,
-      minuses = Seq(aggregate(oldChanged, groupCols, sumCols)),
-      pluses = Seq(aggregate(newChanged, groupCols, sumCols)),
-      groupCols, sumCols)
-
-  /** Signed merge of a materialized aggregate with delta terms (each
-    * already in the `aggregate` shape): state + Σpluses − Σminuses per
-    * group — one aggregate-sized union + hash aggregation, the shared
-    * engine of `maintain` and `maintainJoin`. */
-  private def applySigned(state: DataFrame, minuses: Seq[DataFrame],
-      pluses: Seq[DataFrame], groupCols: Seq[String],
-      sumCols: Seq[String]): DataFrame = {
-    def signed(df: DataFrame, sign: Int): DataFrame =
-      df.select((groupCols.map(col) :+
-        (col("n_rows") * sign).as("n_rows")) ++
-        sumCols.map(c => (col(s"sum_$c") * sign).as(s"sum_$c")): _*)
-    val aggs = sum(col("n_rows")).as("n_rows") +:
-      sumCols.map(c => sum(col(s"sum_$c")).as(s"sum_$c"))
-    (signed(state, 1) +:
-      (minuses.map(signed(_, -1)) ++ pluses.map(signed(_, 1))))
-      .reduce(_.unionByName(_))
-      .groupBy(groupCols.map(col): _*)
-      .agg(aggs.head, aggs.tail: _*)
-      // a maintained count of 0 means the group left the table; a
-      // recompute would not emit it either
-      .where(col("n_rows") > 0)
-  }
+    fold(Shape(groupCols, sumCols), state, oldChanged, newChanged)
 
   // --------------------------------------------- JOIN VIEWS (delta rule) —
   //
@@ -125,9 +236,11 @@ object IncrementalAgg {
    *  - `newDim`: the full dim as of the new version.
    *  - `oldDimChanged`/`newDimChanged`: the dim's changedSides pair.
    *
-   * Returns the maintained view, equal to `joinAggregate` over the two
-   * post-change tables — the `incremental_join` gate hash-compares it
-   * against a from-scratch recompute in DuckDB.
+   * The minus terms are the fold's deleted rows and the plus terms its
+   * inserted rows — joined at row grain, aggregated once with the
+   * state. Returns the maintained view, equal to `joinAggregate` over
+   * the two post-change tables — the `incremental_join` gate
+   * hash-compares it against a from-scratch recompute in DuckDB.
    */
   def maintainJoin(state: DataFrame,
       oldFact: DataFrame, oldFactChanged: DataFrame,
@@ -135,14 +248,14 @@ object IncrementalAgg {
       oldDimChanged: DataFrame, newDimChanged: DataFrame,
       joinKeys: Seq[String], groupCols: Seq[String],
       sumCols: Seq[String]): DataFrame = {
+    val used = (groupCols ++ sumCols).distinct.map(qcol)
     def term(f: DataFrame, d: DataFrame): DataFrame =
-      aggregate(f.join(d, joinKeys), groupCols, sumCols)
-    applySigned(state,
-      minuses = Seq(term(oldFactChanged, newDim),
-        term(oldFact, oldDimChanged)),
-      pluses = Seq(term(newFactChanged, newDim),
-        term(oldFact, newDimChanged)),
-      groupCols, sumCols)
+      f.join(d, joinKeys).select(used: _*)
+    fold(Shape(groupCols, sumCols), state,
+      deleted = term(oldFactChanged, newDim)
+        .unionByName(term(oldFact, oldDimChanged)),
+      inserted = term(newFactChanged, newDim)
+        .unionByName(term(oldFact, newDimChanged)))
   }
 
   // --------------------------------------- COUNT DISTINCT via sketches —
@@ -193,21 +306,21 @@ object IncrementalAgg {
   }
 
   /**
-   * Maintain partition-grained sketch state under one partition-
-   * replacement change window: cells of the touched partitions (either
-   * side) are dropped and the NEW rows re-sketched — equal to
-   * `sketchState` over the post-change table, cell for cell. Only
-   * `newChanged` is scanned at row grain; the state join is
-   * aggregate-sized (anti-join on the partition key).
+   * Maintain partition-grained cell state — sketch, quantile, min/max
+   * or top-k cells — under one partition-replacement change window:
+   * cells of the touched partitions (either side) are dropped and
+   * `cellsOf` rebuilds them from the NEW rows — equal to `cellsOf` over
+   * the post-change table, cell for cell. Only `newChanged` is scanned
+   * at row grain; the state join is aggregate-sized (anti-join on the
+   * partition key).
    */
-  def maintainSketches(state: DataFrame, oldChanged: DataFrame,
-      newChanged: DataFrame, partitionCol: String, groupCols: Seq[String],
-      distinctCols: Seq[String], lgK: Int = DefaultLgK): DataFrame = {
+  def replaceCells(state: DataFrame, oldChanged: DataFrame,
+      newChanged: DataFrame, partitionCol: String)(
+      cellsOf: DataFrame => DataFrame): DataFrame = {
     val touched = oldChanged.select(col(partitionCol))
       .unionByName(newChanged.select(col(partitionCol))).distinct()
     state.join(touched, Seq(partitionCol), "left_anti")
-      .unionByName(
-        sketchState(newChanged, partitionCol, groupCols, distinctCols, lgK))
+      .unionByName(cellsOf(newChanged))
   }
 
   // ------------------------------------------ PERCENTILES via sketches —
@@ -220,9 +333,9 @@ object IncrementalAgg {
   // the relative error of any quantile read by α. The state is plain
   // (cell, bucket, n) count rows, so "merging sketches" is the most
   // trivially-correct operation possible — integer addition under
-  // groupBy — and maintenance reuses the partition-replacement rule of
-  // `maintainSketches` verbatim. Bucket count per cell is bounded by
-  // the DATA'S DYNAMIC RANGE, not its size: ln(10¹²)/ln(γ) ≈ 1 400
+  // groupBy — and maintenance is the same `replaceCells` step. Bucket
+  // count per cell is bounded by the DATA'S DYNAMIC RANGE, not its
+  // size: ln(10¹²)/ln(γ) ≈ 1 400
   // buckets at α = 1% for values spanning 12 decades — aggregate-sized
   // at 100 TB.
   //
@@ -275,20 +388,6 @@ object IncrementalAgg {
         bucketColumn(valueCol, alpha).as("bucket"): _*)
       .groupBy((partitionCol +: groupCols :+ "bucket").map(col): _*)
       .agg(count(lit(1)).as("n"))
-  }
-
-  /** Maintain quantile-sketch state under one partition-replacement
-    * change window — the same drop-touched-cells + re-sketch-new-rows
-    * rule as `maintainSketches`, equal to `quantileState` over the
-    * post-change table, row for row. */
-  def maintainQuantiles(state: DataFrame, oldChanged: DataFrame,
-      newChanged: DataFrame, partitionCol: String, groupCols: Seq[String],
-      valueCol: String, alpha: Double = DefaultAlpha): DataFrame = {
-    val touched = oldChanged.select(col(partitionCol))
-      .unionByName(newChanged.select(col(partitionCol))).distinct()
-    state.join(touched, Seq(partitionCol), "left_anti")
-      .unionByName(
-        quantileState(newChanged, partitionCol, groupCols, valueCol, alpha))
   }
 
   /**
@@ -367,18 +466,6 @@ object IncrementalAgg {
       .agg(aggs.head, aggs.tail: _*)
   }
 
-  /** Maintain min/max cells under one partition-replacement window —
-    * drop touched cells, re-aggregate the new rows; equals
-    * `minMaxState` over the post-change table, cell for cell. */
-  def maintainMinMax(state: DataFrame, oldChanged: DataFrame,
-      newChanged: DataFrame, partitionCol: String, groupCols: Seq[String],
-      valueCols: Seq[String]): DataFrame = {
-    val touched = oldChanged.select(col(partitionCol))
-      .unionByName(newChanged.select(col(partitionCol))).distinct()
-    state.join(touched, Seq(partitionCol), "left_anti")
-      .unionByName(minMaxState(newChanged, partitionCol, groupCols, valueCols))
-  }
-
   /** Collapse min/max cells to per-group extremes — min of mins, max
     * of maxes; the read path of the maintained view. */
   def minMaxValues(state: DataFrame, groupCols: Seq[String],
@@ -422,19 +509,6 @@ object IncrementalAgg {
       .withColumn("__rn", row_number().over(w))
       .where(col("__rn") <= k)
       .drop("__rn")
-  }
-
-  /** Maintain top-k cells under one partition-replacement window —
-    * the same drop-touched + re-rank-new rule; equals `topKState` over
-    * the post-change table, row for row. */
-  def maintainTopK(state: DataFrame, oldChanged: DataFrame,
-      newChanged: DataFrame, partitionCol: String, groupCols: Seq[String],
-      orderCol: String, idCol: String, k: Int): DataFrame = {
-    val touched = oldChanged.select(col(partitionCol))
-      .unionByName(newChanged.select(col(partitionCol))).distinct()
-    state.join(touched, Seq(partitionCol), "left_anti")
-      .unionByName(
-        topKState(newChanged, partitionCol, groupCols, orderCol, idCol, k))
   }
 
   /** Collapse top-k cells to the per-group global top-k with ranks —

@@ -12,15 +12,16 @@ import org.apache.spark.sql.functions._
  *
  * A view is `SELECT <group cols>, count(*)/sum(c)/min(c)/max(c)/avg(c)
  * /var_samp(c)/stddev(c) AS … FROM <versioned partitioned table>
- * [WHERE <pred>] GROUP BY <group cols>`. State is stored in the IncrementalAgg shape (group
- * cols + `n_rows` + `sum_<c>`) — extended with `cnt_<c>` (non-null
- * counts, for NULL-exact sums and exact averages) and `min_/max_<c>`
- * when the def carries min/max/avg — as one atomically-swapped parquet
+ * [WHERE <pred>] GROUP BY <group cols>`. State is stored in an
+ * `IncrementalAgg.Shape` (group cols + `n_rows` + `sum_<c>`) —
+ * extended with `cnt_<c>` (non-null counts, for NULL-exact sums and
+ * exact averages), `min_/max_<c>` and `sumsq_<c>` when the def carries
+ * min/max/avg/var (`Def.shape`) — as one atomically-swapped parquet
  * dir whose `_mv_cursor` marker — written INTO the swap — records the
  * source version the state equals. REFRESH reads only the partitions
  * the source touched since the cursor (`changedSides` — O(changed),
  * never O(table)) plus, for min/max views only, the rows of groups a
- * delete MIGHT have de-extremed ([[maintainExtended]]), folds the
+ * delete MIGHT have de-extremed (`IncrementalAgg.fold`), folds the
  * delta, and swaps state + new cursor in one rename:
  *   - crash before the swap: nothing moved, re-REFRESH re-does the
  *     same window;
@@ -52,12 +53,12 @@ object Mview {
     * same-named equi-keys) maintained by `IncrementalAgg.maintainJoin`
     * with a composite fact-version,dim-version cursor.
     *
-    * `mins`/`maxs`/`avgs` present = the EXTENDED state shape: the
-    * state additionally carries `min_`/`max_` per extreme column and
-    * a non-null count `cnt_` per sum/avg column, maintained by the
-    * split rule [[Mview.maintainExtended]] documents. An extended
-    * JOIN view maintains the same rule over the JOINED relation's
-    * true changed row sets (see `refresh`'s join branch). */
+    * `mins`/`maxs`/`avgs`/`vars` present = the EXTENDED state shape
+    * (`shape`): the state additionally carries `min_`/`max_` per
+    * extreme column, a non-null count `cnt_` per sum/avg/var column
+    * and `sumsq_` per var column, all maintained by
+    * `IncrementalAgg.fold`. An extended JOIN view folds the JOINED
+    * relation's true changed row sets (see `refresh`'s join branch). */
   final case class Def(source: String, groups: Seq[String],
       sums: Seq[String], where: Option[String], out: Seq[OutCol],
       dim: Option[String] = None, keys: Seq[String] = Nil,
@@ -79,6 +80,14 @@ object Mview {
       * the sum of squares is SUBTRACTABLE — variance maintenance never
       * triggers the affected-group rescan. */
     def sumSq: Seq[String] = vars.distinct
+
+    /** The state shape: counts and sums for a plain view (no `cnt_`,
+      * as every plain state on disk has it), the extended columns
+      * otherwise. */
+    def shape: IncrementalAgg.Shape =
+      if (extended)
+        IncrementalAgg.Shape(groups, sumCnt, counted = true, minMax, sumSq)
+      else IncrementalAgg.Shape(groups, sums)
 
     def render: String =
       s"source=$source\ngroups=${groups.mkString(",")}\n" +
@@ -146,44 +155,17 @@ object Mview {
     }
   }
 
-  /** The state of `rows` per `d`: the IncrementalAgg shape for plain
-    * count/sum views, the extended shape when min/max/avg are carried. */
-  private def stateOf(d: Def, rows: DataFrame): DataFrame = {
-    val filtered = d.where.map(w => rows.where(expr(w))).getOrElse(rows)
-    if (d.extended) extendedShape(d, filtered)
-    else IncrementalAgg.aggregate(filtered, d.groups, d.sums)
-  }
+  private def filtered(d: Def, rows: DataFrame): DataFrame =
+    d.where.map(w => rows.where(expr(w))).getOrElse(rows)
 
-  /** The typed state shape over an arbitrary (possibly empty) frame —
-    * the door derives the view's visible schema from it at CREATE. */
+  /** The state of the source `rows` (joined with `dimRows` for a join
+    * view) in the def's shape. Over typed empty frames this is the
+    * typed empty state the door derives the visible schema from at
+    * CREATE. */
   def stateShape(d: Def, rows: DataFrame,
-      dimRows: Option[DataFrame] = None): DataFrame = dimRows match {
-    case None => stateOf(d, rows)
-    case Some(dr) if d.extended => extendedShape(d, rows.join(dr, d.keys))
-    case Some(dr) =>
-      IncrementalAgg.joinAggregate(rows, dr, d.keys, d.groups, d.sums)
-  }
-
-  /** The extended state aggregate of pre-filtered rows: groups,
-    * `n_rows`, `sum_`/`cnt_` per sum∪avg column, `min_`/`max_` per
-    * min∪max column. The non-null count `cnt_` is what keeps sum/avg
-    * NULL-exact under maintenance: a group whose maintained non-null
-    * count reaches zero projects NULL, exactly as a recompute would. */
-  private def extendedShape(d: Def, rows: DataFrame): DataFrame = {
-    val aggs = count(lit(1)).as("n_rows") +:
-      (d.sumCnt.flatMap(c => Seq(sum(col(s"`$c`")).as(s"sum_$c"),
-          count(col(s"`$c`")).as(s"cnt_$c"))) ++
-        d.minMax.flatMap(c => Seq(min(col(s"`$c`")).as(s"min_$c"),
-          max(col(s"`$c`")).as(s"max_$c"))) ++
-        // sum of squares in DOUBLE: exact (hence exactly subtractable)
-        // for integer-valued columns whose squares sum below 2^53 —
-        // float-typed sources inherit the same last-ulp caveat plain
-        // SUM state already carries
-        d.sumSq.map(c => sum(col(s"`$c`").cast("double") *
-          col(s"`$c`").cast("double")).as(s"sumsq_$c")))
-    rows.groupBy(d.groups.map(c => col(s"`$c`")): _*)
-      .agg(aggs.head, aggs.tail: _*)
-  }
+      dimRows: Option[DataFrame] = None): DataFrame =
+    IncrementalAgg.buildState(
+      filtered(d, dimRows.fold(rows)(rows.join(_, d.keys))), d.shape)
 
   /** The visible projection of a raw state frame. */
   def project(d: Def, state: DataFrame): DataFrame =
@@ -217,136 +199,6 @@ object Mview {
       case other => throw new IllegalStateException(s"bad out col $other")
     }: _*)
 
-  /**
-   * Maintain the EXTENDED state under one partition-replacement window
-   * — the split rule:
-   *
-   *  - `n_rows` / `cnt_<c>` / `sum_<c>` / `sumsq_<c>` are
-   *    subtractable: state − old + new per group, exact (`cnt_`
-   *    decides NULL-vs-0 for the projected sum, so a window deleting
-   *    a group's last non-null value still projects NULL exactly as a
-   *    recompute); variance/stddev project from the (cnt, sum, sumsq)
-   *    triple and never contribute to the rescan predicate;
-   *  - `min_`/`max_` are NOT subtractable: inserts merge for free
-   *    (least/greatest skip nulls), and only groups whose deletes
-   *    MIGHT have de-extremed a candidate — a deleted value tying or
-   *    bounding the merged extreme, or any comparison undecidable from
-   *    nulls — are RESCANNED from `sourceAtTo` (the source at the
-   *    window's own end version), restricted to exactly those groups
-   *    by a broadcast semi-join. The rescan recomputes the WHOLE cell
-   *    (counts and sums too), so both halves stay one frame.
-   *
-   * This is `Streaming.maintainMinMax`'s affected-group rule re-hosted
-   * on `changedSides` windows and widened to carry sums/counts, with
-   * one structural change: the three inputs merge by UNION + hash
-   * aggregation (each side contributes ≤1 row per group, so `max`
-   * collapses them losslessly) instead of full-outer joins — one
-   * shuffle instead of two, and NULL group keys merge correctly
-   * (groupBy treats NULL as a group; a join would tear them apart).
-   *
-   * Steady state: O(changed partitions) + O(affected groups' rows),
-   * never O(table); a window with no affected groups leaves the
-   * semi-join's build side empty and AQE's empty-relation propagation
-   * collapses the rescan branch, so the source scan never runs.
-   */
-  private def maintainExtended(d: Def, state: DataFrame,
-      oldChanged: DataFrame, newChanged: DataFrame,
-      sourceAtTo: DataFrame): DataFrame = {
-    val gcols = d.groups.map(c => col(s"`$c`"))
-    // ONE hash aggregation over the tagged union of the state rows
-    // (pre-aggregated, ≤1 per group — surfaced through max(when(s)))
-    // and the two delta sides' RAW rows (aggregated directly with
-    // when(tag)-filtered count/sum/min/max). The former shape — a
-    // groupBy per delta side, then a 3-way merge groupBy — paid two
-    // extra exchanges (plus their AQE stage jobs, ~2 per refresh at
-    // replay grain) to establish the same ≤1-row-per-group-per-side
-    // invariant this computes in one pass (guide §2.4). Per-group
-    // values are identical: each conditional aggregate sees exactly
-    // the rows its side's separate aggregation saw, and an absent
-    // side yields NULL exactly as the union's missing columns did.
-    val valueCols = (d.sumCnt ++ d.minMax ++ d.sumSq).distinct
-    val sTagged = state.select((gcols :+ lit("s").as("__tag")) ++
-      (col("n_rows").as("__s_n") +:
-        (d.sumCnt.flatMap(c => Seq(col(s"`sum_$c`").as(s"__s_sum_$c"),
-            col(s"`cnt_$c`").as(s"__s_cnt_$c"))) ++
-          d.minMax.flatMap(c => Seq(col(s"`min_$c`").as(s"__s_min_$c"),
-            col(s"`max_$c`").as(s"__s_max_$c"))) ++
-          d.sumSq.map(c => col(s"`sumsq_$c`").as(s"__s_sumsq_$c")))): _*)
-    def raw(df: DataFrame, tag: String): DataFrame =
-      df.select((gcols :+ lit(tag).as("__tag")) ++
-        valueCols.map(c => col(s"`$c`")): _*)
-    val isS = col("__tag") === "s"
-    val isI = col("__tag") === "i"
-    val isD = col("__tag") === "d"
-    def tagged(side: org.apache.spark.sql.Column, c: String) =
-      when(side, col(s"`$c`"))
-    val merged = sTagged
-      .unionByName(raw(newChanged, "i"), allowMissingColumns = true)
-      .unionByName(raw(oldChanged, "d"), allowMissingColumns = true)
-      .groupBy(gcols: _*)
-      .agg(max(when(isS, col("__s_n"))).as("__s_n"),
-        (Seq(count(when(isI, lit(1))).as("__i_n"),
-          count(when(isD, lit(1))).as("__d_n")) ++
-          d.sumCnt.flatMap(c => Seq(
-            max(when(isS, col(s"`__s_sum_$c`"))).as(s"__s_sum_$c"),
-            max(when(isS, col(s"`__s_cnt_$c`"))).as(s"__s_cnt_$c"),
-            sum(tagged(isI, c)).as(s"__i_sum_$c"),
-            count(tagged(isI, c)).as(s"__i_cnt_$c"),
-            sum(tagged(isD, c)).as(s"__d_sum_$c"),
-            count(tagged(isD, c)).as(s"__d_cnt_$c"))) ++
-          d.minMax.flatMap(c => Seq(
-            max(when(isS, col(s"`__s_min_$c`"))).as(s"__s_min_$c"),
-            max(when(isS, col(s"`__s_max_$c`"))).as(s"__s_max_$c"),
-            min(tagged(isI, c)).as(s"__i_min_$c"),
-            max(tagged(isI, c)).as(s"__i_max_$c"),
-            min(tagged(isD, c)).as(s"__d_min_$c"),
-            max(tagged(isD, c)).as(s"__d_max_$c"))) ++
-          d.sumSq.flatMap(c => Seq(
-            max(when(isS, col(s"`__s_sumsq_$c`"))).as(s"__s_sumsq_$c"),
-            sum(tagged(isI, c).cast("double") * tagged(isI, c).cast("double"))
-              .as(s"__i_sumsq_$c"),
-            sum(tagged(isD, c).cast("double") * tagged(isD, c).cast("double"))
-              .as(s"__d_sumsq_$c")))): _*)
-    val types = state.schema.fields.map(f => f.name -> f.dataType).toMap
-    def nz(c: org.apache.spark.sql.Column) = coalesce(c, lit(0))
-    val nNext = nz(col("__s_n")) + nz(col("__i_n")) - nz(col("__d_n"))
-    def cntNext(c: String) = nz(col(s"`__s_cnt_$c`")) +
-      nz(col(s"`__i_cnt_$c`")) - nz(col(s"`__d_cnt_$c`"))
-    def sumNext(c: String) =
-      (nz(col(s"`__s_sum_$c`")) + nz(col(s"`__i_sum_$c`")) -
-        nz(col(s"`__d_sum_$c`"))).cast(types(s"sum_$c"))
-    def candMin(c: String) =
-      least(col(s"`__s_min_$c`"), col(s"`__i_min_$c`"))
-    def candMax(c: String) =
-      greatest(col(s"`__s_max_$c`"), col(s"`__i_max_$c`"))
-    // rescan-on-doubt: exactly Streaming.maintainMinMax's rule — the
-    // outer coalesce makes an undecidable comparison rescan, never drop
-    val rescan =
-      if (d.minMax.isEmpty) lit(false)
-      else nz(col("__d_n")) > 0 &&
-        coalesce(col("__s_n").isNull || d.minMax.map(c =>
-          col(s"`__d_min_$c`") <= candMin(c) ||
-            col(s"`__d_max_$c`") >= candMax(c)).reduce(_ || _), lit(true))
-    def sumSqNext(c: String) =
-      nz(col(s"`__s_sumsq_$c`")) + nz(col(s"`__i_sumsq_$c`")) -
-        nz(col(s"`__d_sumsq_$c`"))
-    val keepCols = gcols ++ (nNext.cast("long").as("n_rows") +:
-      (d.sumCnt.flatMap(c => Seq(sumNext(c).as(s"sum_$c"),
-          cntNext(c).cast("long").as(s"cnt_$c"))) ++
-        d.minMax.flatMap(c => Seq(candMin(c).as(s"min_$c"),
-          candMax(c).as(s"max_$c"))) ++
-        d.sumSq.map(c => sumSqNext(c).cast("double").as(s"sumsq_$c"))))
-    val kept = merged.where(!rescan && nNext > 0).select(keepCols: _*)
-    val affected = merged.where(rescan).select(gcols: _*)
-    // null-safe semi-join: a NULL group key is a group too — a plain
-    // equi-join would never match it and its rescan would drop it
-    val rescanned = extendedShape(d,
-      sourceAtTo.join(broadcast(affected),
-        d.groups.map(g => sourceAtTo(g) <=> affected(g)).reduce(_ && _),
-        "left_semi"))
-    kept.unionByName(rescanned)
-  }
-
   /** Build the initial state pinned at the source's CURRENT version
     * and swap it in with its cursor. Returns the cursor version. An
     * empty source table (zero live partitions) still works — the
@@ -364,7 +216,7 @@ object Mview {
     dimRoot match {
       case None =>
         writeState(spark, d, stateDir,
-          stateOf(d, VersionedPartitioned.readAt(spark, sourceRoot, v0)),
+          stateShape(d, VersionedPartitioned.readAt(spark, sourceRoot, v0)),
           v0.toString)
       case Some(dr) =>
         val vd = pin(dr)
@@ -400,7 +252,7 @@ object Mview {
             if (VersionedPartitioned
                 .partitions(spark, sourceRoot, Some(cur)).isEmpty)
               rawState(spark, stateDir).where(lit(false))
-            else stateOf(d,
+            else stateShape(d,
               VersionedPartitioned.readAt(spark, sourceRoot, cur))
           writeState(spark, d, stateDir, next, cur.toString)
           return cur
@@ -413,25 +265,20 @@ object Mview {
         val (oldSide, newSide) =
           VersionedPartitioned.changedSides(spark, sourceRoot, cursor,
             Some(cur))
-        val pred = (df: DataFrame) =>
-          d.where.map(w => df.where(expr(w))).getOrElse(df)
-        val maintained =
-          if (d.extended) {
-            // min/max need the affected-group rescan at the window's
-            // own end version; counts/sums ride the same pass. A
-            // source with ZERO live partitions at `cur` (everything
-            // retracted) has nothing to rescan — the format read
-            // refuses an empty manifest, so hand it an empty frame
-            val srcAtTo =
-              if (VersionedPartitioned
-                  .partitions(spark, sourceRoot, Some(cur)).isEmpty)
-                newSide.where(lit(false))
-              else VersionedPartitioned.readAt(spark, sourceRoot, cur)
-            maintainExtended(d, rawState(spark, stateDir),
-              pred(oldSide), pred(newSide), pred(srcAtTo))
-          }
-          else IncrementalAgg.maintain(rawState(spark, stateDir),
-            pred(oldSide), pred(newSide), d.groups, d.sums)
+        // min/max need the affected-group rescan at the window's own
+        // end version; counts/sums ride the same pass. A source with
+        // ZERO live partitions at `cur` (everything retracted) has
+        // nothing to rescan — the format read refuses an empty
+        // manifest, so hand it an empty frame
+        val srcAtTo =
+          if (d.minMax.isEmpty) None
+          else if (VersionedPartitioned
+              .partitions(spark, sourceRoot, Some(cur)).isEmpty)
+            Some(newSide.where(lit(false)))
+          else Some(VersionedPartitioned.readAt(spark, sourceRoot, cur))
+        val maintained = IncrementalAgg.fold(d.shape,
+          rawState(spark, stateDir), filtered(d, oldSide),
+          filtered(d, newSide), srcAtTo.map(filtered(d, _)))
         writeState(spark, d, stateDir, maintained, cur.toString)
         cur
       case Some(dr) =>
@@ -478,7 +325,7 @@ object Mview {
             // F_unch (fact partitions untouched in the window) is
             // identical at both versions, so each union is a disjoint
             // partition split and J_old ∖ ΔJ_old = J_new ∖ ΔJ_new —
-            // exactly maintainExtended's contract. The signed
+            // exactly the fold's deleted/inserted contract. The signed
             // cancellation counts/sums ride on would feed least/
             // greatest values that are NOT in the final join (a
             // deleted fact row joined to the new dim rides
@@ -503,9 +350,10 @@ object Mview {
               .unionByName(factUnch.join(oldD, d.keys))
             val jNew = newF.join(dimNew, d.keys)
               .unionByName(factUnch.join(newD, d.keys))
-            val srcAtTo = orEmpty(sourceRoot, cur, newF)
-              .join(dimNew, d.keys)
-            maintainExtended(d, rawState(spark, stateDir),
+            val srcAtTo =
+              if (d.minMax.isEmpty) None
+              else Some(orEmpty(sourceRoot, cur, newF).join(dimNew, d.keys))
+            IncrementalAgg.fold(d.shape, rawState(spark, stateDir),
               jOld, jNew, srcAtTo)
           }
           else IncrementalAgg.maintainJoin(

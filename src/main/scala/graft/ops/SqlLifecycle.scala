@@ -2290,15 +2290,15 @@ class SqlLifecycle(val spark: SparkSession, val root: String) {
         "from its source; REFRESH MATERIALIZED VIEW to update it")
 
   /** `CREATE MATERIALIZED VIEW mv AS SELECT <groups>, count(*)/sum(c)
-    * AS … FROM <versioned table> [WHERE <pred>] GROUP BY <groups>` —
-    * the door face of `Mview`/`IncrementalAgg` delta-rule maintenance:
-    * the view materializes ONCE at the source's current version, and
+    * /min(c)/max(c)/avg(c)/var_samp(c)/stddev(c) AS … FROM <versioned
+    * table> [WHERE <pred>] GROUP BY <groups>` (or fact JOIN dim) — the
+    * door face of `Mview`/`IncrementalAgg.fold` delta maintenance: the
+    * view materializes ONCE at the source's current version, and
     * `REFRESH MATERIALIZED VIEW` folds only the partitions the source
     * touched since (O(changed), never O(table)), exactly-once via the
-    * state+cursor atomic swap. Count/sum are the self-maintainable
-    * aggregates; anything else is rejected loudly (the Scala API's
-    * maintained min/max/top-k/quantile shapes ride the change feed —
-    * `Streaming.maintainMinMax` and friends). */
+    * state+cursor atomic swap. Any other aggregate is rejected loudly
+    * (the Scala API's maintained top-k/quantile shapes ride the change
+    * feed — `Streaming.maintainTopK` and friends). */
   private def createMview(name: String, body: String): Unit = {
     require(metaOf(name).isEmpty,
       s"CREATE MATERIALIZED VIEW $name: a table with this name exists")

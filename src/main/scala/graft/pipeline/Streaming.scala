@@ -651,7 +651,7 @@ object Streaming {
    *
    * Scale: the hop reads only the new log windows (partition-pruned on
    * `commit_version`), the state is aggregate-sized, and the fold is
-   * one hash aggregation + one aggregate-sized merge — a downstream
+   * one hash aggregation over the state and the raw window — a downstream
    * consumer's steady-state cost is O(changes), never O(source table).
    * The state table is partitioned by `groupCols.head`; a group whose
    * maintained count reaches zero leaves the table (its partition
@@ -782,9 +782,10 @@ object Streaming {
   }
 
   /**
-   * CDC-fed maintenance of an exact MIN/MAX (+ row count) view.
-   * Min/max is not subtractable — deleting the current extremum
-   * invalidates `state − old + new` — so the fold splits per group:
+   * CDC-fed maintenance of an exact MIN/MAX (+ row count) view by
+   * `IncrementalAgg.fold`. Min/max is not subtractable — deleting the
+   * current extremum invalidates `state − old + new` — so the fold
+   * splits per group:
    *
    *  - inserts merge for free (`least`/`greatest` against the state);
    *  - a group whose deletes provably cannot reach the merged extremes
@@ -794,8 +795,9 @@ object Streaming {
    *    the source — at the log's own `to` version (time travel), so
    *    the fold is exact even if the source has since advanced.
    *
-   * The rescan reads only the affected groups' rows (broadcast
-   * semi-join on the group keys — partition-pruned further when the
+   * The rescan reads only the affected groups' rows (null-safe
+   * broadcast semi-join on the group keys, so a NULL group key is a
+   * group like any other — partition-pruned further when the
    * group key is the source's partition column), so the steady-state
    * cost is O(changes) + O(affected groups' rows), never O(source
    * table). A group whose maintained count reaches zero leaves the
@@ -811,56 +813,17 @@ object Streaming {
     val (from, to, win) = pendingWindow(spark, logRoot, stateRoot)
       .getOrElse(return None)
     val ins = feedSide(win, "insert")
-    val del = feedSide(win, "delete")
+    val shape = graft.ops.IncrementalAgg.Shape(groupCols, minMax = valueCols)
     val bootstrap =
       VersionedPartitioned.currentVersion(spark, stateRoot).isEmpty
-    def shape(df: DataFrame): DataFrame = {
-      val aggs = count(lit(1)).as("n_rows") +: valueCols.flatMap(c =>
-        Seq(min(col(c)).as(s"min_$c"), max(col(c)).as(s"max_$c")))
-      df.groupBy(groupCols.map(col): _*).agg(aggs.head, aggs.tail: _*)
-    }
     val state =
-      if (bootstrap) shape(ins.where(lit(false)))
+      if (bootstrap)
+        graft.ops.IncrementalAgg.buildState(ins.where(lit(false)), shape)
       else VersionedPartitioned.read(spark, stateRoot)
-    val insAgg = ins.groupBy(groupCols.map(col): _*)
-      .agg(count(lit(1)).as("__n_ins"),
-        valueCols.flatMap(c => Seq(min(col(c)).as(s"__ins_min_$c"),
-          max(col(c)).as(s"__ins_max_$c"))): _*)
-    val delAgg = del.groupBy(groupCols.map(col): _*)
-      .agg(count(lit(1)).as("__n_del"),
-        valueCols.flatMap(c => Seq(min(col(c)).as(s"__del_min_$c"),
-          max(col(c)).as(s"__del_max_$c"))): _*)
-    val merged = state.join(insAgg, groupCols, "full_outer")
-      .join(delAgg, groupCols, "full_outer")
-    val nNext = coalesce(col("n_rows"), lit(0L)) +
-      coalesce(col("__n_ins"), lit(0L)) - coalesce(col("__n_del"), lit(0L))
-    // merged candidates: exact when no delete can reach them (least/
-    // greatest skip nulls, so an insert-only or state-only side merges
-    // correctly)
-    def candMin(c: String) = least(col(s"min_$c"), col(s"__ins_min_$c"))
-    def candMax(c: String) = greatest(col(s"max_$c"), col(s"__ins_max_$c"))
-    // a group needs the source rescan iff it HAS deletes and either
-    // was never in state (an insert+delete churn window) or some
-    // deleted value ties/bounds a candidate extreme — strictly-inside
-    // deletes provably cannot change min/max. The outer coalesce makes
-    // an UNDECIDABLE comparison (all-null values on some side) rescan
-    // rather than silently drop the group: rescan-on-doubt, never
-    // wrong, like every prune in this engine.
-    val rescan = coalesce(col("__n_del"), lit(0L)) > 0 &&
-      coalesce(col("n_rows").isNull || valueCols.map(c =>
-        col(s"__del_min_$c") <= candMin(c) ||
-          col(s"__del_max_$c") >= candMax(c)).reduce(_ || _), lit(true))
-    val keepCols = groupCols.map(col) ++ (nNext.as("n_rows") +:
-      valueCols.flatMap(c =>
-        Seq(candMin(c).as(s"min_$c"), candMax(c).as(s"max_$c"))))
-    val kept = merged.where(!rescan && nNext > 0).select(keepCols: _*)
-    val affected = merged.where(rescan).select(groupCols.map(col): _*)
-    // exact recompute of ONLY the affected groups, at the window's own
-    // source version — the broadcast semi-join keeps the scan to those
-    // groups' rows
-    val rescanned = shape(VersionedPartitioned.readAt(spark, sourceRoot, to)
-      .join(broadcast(affected), groupCols, "left_semi"))
-    val next = kept.unionByName(rescanned)
+    // the rescan reads the source at the log's own `to` version
+    val next = graft.ops.IncrementalAgg.fold(shape, state,
+      feedSide(win, "delete"), ins,
+      Some(VersionedPartitioned.readAt(spark, sourceRoot, to)))
     commitState(spark, stateRoot, next, groupCols.head, to, bootstrap)
     Some((from, to))
   }

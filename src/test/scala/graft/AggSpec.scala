@@ -186,7 +186,7 @@ class AggSpec extends AnyFunSuite {
     assert(merged == exact)
   }
 
-  test("IncrementalAgg.maintainSketches equals re-sketch after partition replacement") {
+  test("IncrementalAgg.replaceCells equals re-sketch after partition replacement") {
     import graft.ops.IncrementalAgg
     val base = (1L to 600L).map { i =>
       (s"p${i % 3}", s"g${i % 2}", s"user${i % 97}")
@@ -197,8 +197,9 @@ class AggSpec extends AnyFunSuite {
     val oldChanged = base.where(col("part").isin("p1", "p2"))
     val newChanged = (1L to 50L).map(i => ("p1", s"g${i % 2}", s"fresh${i % 13}"))
       .toDF("part", "grp", "user")
-    val maintained = IncrementalAgg.maintainSketches(state, oldChanged,
-      newChanged, "part", Seq("grp"), Seq("user"))
+    val maintained = IncrementalAgg.replaceCells(state, oldChanged,
+      newChanged, "part")(
+      IncrementalAgg.sketchState(_, "part", Seq("grp"), Seq("user")))
     val after = base.where(col("part") === "p0").unionByName(newChanged)
     val want = IncrementalAgg.distinctCounts(
       IncrementalAgg.sketchState(after, "part", Seq("grp"), Seq("user")),
@@ -229,8 +230,9 @@ class AggSpec extends AnyFunSuite {
     // ---- min/max
     val mmState = IncrementalAgg.minMaxState(base, "part", Seq("grp"), Seq("v"))
     val mm = IncrementalAgg.minMaxValues(
-      IncrementalAgg.maintainMinMax(mmState, oldChanged, newChanged,
-        "part", Seq("grp"), Seq("v")), Seq("grp"), Seq("v"))
+      IncrementalAgg.replaceCells(mmState, oldChanged, newChanged, "part")(
+        IncrementalAgg.minMaxState(_, "part", Seq("grp"), Seq("v"))),
+      Seq("grp"), Seq("v"))
       .as[(String, Double, Double)].collect()
       .map { case (g, mn, mx) => g -> (mn, mx) }.toMap
     val mmWant = after.groupBy("grp").agg(min(col("v")), max(col("v")))
@@ -249,10 +251,10 @@ class AggSpec extends AnyFunSuite {
     val cellMax = tkState.groupBy("part", "grp").count()
       .agg(max(col("count"))).as[Long].head()
     assert(cellMax <= k)
-    val got = IncrementalAgg.topKValues(
-      IncrementalAgg.maintainTopK(tkState, oldChanged, newChanged,
-        "part", Seq("grp"), "v", "id", k),
-      Seq("grp"), "v", "id", k)
+    val tkMaintained = IncrementalAgg.replaceCells(tkState, oldChanged,
+      newChanged, "part")(
+      IncrementalAgg.topKState(_, "part", Seq("grp"), "v", "id", k))
+    val got = IncrementalAgg.topKValues(tkMaintained, Seq("grp"), "v", "id", k)
       .select(col("grp"), col("rank"), col("id"), col("v"))
       .as[(String, Int, Long, Double)].collect().toSet
     val w = org.apache.spark.sql.expressions.Window
@@ -263,8 +265,7 @@ class AggSpec extends AnyFunSuite {
       .as[(String, Int, Long, Double)].collect().toSet
     assert(got == want)
     // dropped partition p2 contributes no cells after maintenance
-    assert(IncrementalAgg.maintainTopK(tkState, oldChanged, newChanged,
-      "part", Seq("grp"), "v", "id", k).where(col("part") === "p2").isEmpty)
+    assert(tkMaintained.where(col("part") === "p2").isEmpty)
 
     // ---- the documented pitfall, demonstrated: per-key SUM top-1 from
     // per-cell top-1-by-sum is WRONG (key "b" is 2nd in every cell but
@@ -367,8 +368,9 @@ class AggSpec extends AnyFunSuite {
     // maintenance ≡ re-sketch after a partition replacement
     val oldChanged = df.where(col("part") === "p1")
     val newChanged = oldChanged.withColumn("v", col("v") * 3)
-    val maintained = IncrementalAgg.maintainQuantiles(state, oldChanged,
-      newChanged, "part", Seq("grp"), "v", alpha)
+    val maintained = IncrementalAgg.replaceCells(state, oldChanged,
+      newChanged, "part")(
+      IncrementalAgg.quantileState(_, "part", Seq("grp"), "v", alpha))
     val after = df.where(col("part") =!= "p1").unionByName(newChanged)
     val want = IncrementalAgg.quantileState(after, "part", Seq("grp"), "v", alpha)
       .as[(String, String, Int, Long)].collect().toSet

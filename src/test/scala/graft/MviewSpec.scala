@@ -552,4 +552,45 @@ class MviewSpec extends AnyFunSuite {
     life.execute("REFRESH MATERIALIZED VIEW mv.v")
     assert(mvRows(life) == recompute(life))
   }
+
+  test("a plain view's SELECT schema survives INSERT + REFRESH unchanged") {
+    val (life, _) = mkLife()
+    ins(life, ("2024-01-01", "a", "10.00", 1), ("2024-01-02", "b", "5.00", 1))
+    life.execute("CREATE MATERIALIZED VIEW mv.v AS " +
+      "SELECT grp, count(*) AS n, sum(amt) AS total FROM mv.src " +
+      "WHERE flag = 1 GROUP BY grp")
+    val created = life.query("SELECT * FROM mv.v").schema
+    ins(life, ("2024-01-01", "a", "3.00", 1), ("2024-01-03", "c", "7.00", 1))
+    life.execute("REFRESH MATERIALIZED VIEW mv.v")
+    assert(life.query("SELECT * FROM mv.v").schema == created)
+    life.execute("DELETE FROM mv.src WHERE d = DATE'2024-01-02'")
+    life.execute("REFRESH MATERIALIZED VIEW mv.v")
+    assert(life.query("SELECT * FROM mv.v").schema == created)
+    assert(mvRows(life) == recompute(life))
+  }
+
+  test("a plain view's refresh job count is pinned") {
+    import graft.ops.{Mview, VersionedPartitioned}
+    val root = Files.createTempDirectory("graft_mvjobs_").toString
+    val (src, stateDir) = (s"$root/src", s"$root/state")
+    def rows(d: String, rs: (String, String)*) = rs.map { case (g, a) =>
+      (java.sql.Date.valueOf(d), g, new java.math.BigDecimal(a)) }
+      .toDF("d", "grp", "amt")
+      .withColumn("amt", col("amt").cast("decimal(10,2)"))
+    val d = Mview.Def(src, Seq("grp"), Seq("amt"), None,
+      Seq(Mview.OutCol("group", "grp", "grp"),
+        Mview.OutCol("count", "*", "n"), Mview.OutCol("sum", "amt", "total")))
+    VersionedPartitioned.promote(rows("2024-01-01", "a" -> "1.00",
+      "b" -> "2.00").unionByName(rows("2024-01-02", "a" -> "3.00")), src, "d")
+    Mview.initialize(spark, d, src, stateDir)
+    // rewrite day 1 and add day 3: a window with both sides
+    VersionedPartitioned.promote(rows("2024-01-01", "a" -> "4.00")
+      .unionByName(rows("2024-01-03", "c" -> "5.00")), src, "d")
+    val (_, jobs) = Jobs.during(spark)(Mview.refresh(spark, d, src, stateDir))
+    assert(Mview.project(d, Mview.rawState(spark, stateDir))
+      .orderBy("grp").as[(String, Long, java.math.BigDecimal)].collect()
+      .map(r => (r._1, r._2, r._3.toPlainString)).toSeq ==
+      Seq(("a", 2L, "7.00"), ("c", 1L, "5.00")))
+    assert(jobs == 3, s"one plain-view refresh ran $jobs jobs")
+  }
 }

@@ -589,6 +589,31 @@ class StreamingSpec extends AnyFunSuite {
     assert(stateRows().map(_._1) == Seq("2024-03-02", "2024-03-03"))
   }
 
+  test("maintainAggregate: one hop's job count is pinned") {
+    import graft.ops.VersionedPartitioned
+    val root = Files.createTempDirectory("graft_cdcmvajobs_").toString
+    val (src, log, state) = (s"$root/src", s"$root/log", s"$root/state")
+    val keys = Seq("date", "id", "px")
+    def rows(d: Int, ids: Range) = ids.map(i =>
+      (java.sql.Date.valueOf(f"2024-03-$d%02d"), i.toLong,
+        new java.math.BigDecimal(i).movePointLeft(1)))
+      .toDF("date", "id", "px")
+      .withColumn("px", col("px").cast("decimal(18,2)"))
+    def hop() = Streaming.maintainAggregate(spark, log, state,
+      Seq("date"), Seq("px"))
+    VersionedPartitioned.promote(
+      rows(1, 1 to 5).union(rows(2, 6 to 10)), src, "date")
+    Streaming.changeFeedHop(spark, src, keys, log)
+    assert(hop().isDefined)
+    // rewrite day 1, add day 3: one window of deletes and inserts
+    VersionedPartitioned.promote(
+      rows(1, 1 to 3).union(rows(3, 11 to 12)), src, "date")
+    Streaming.changeFeedHop(spark, src, keys, log)
+    val (folded, jobs) = Jobs.during(spark)(hop())
+    assert(folded.isDefined)
+    assert(jobs == 2, s"one maintainAggregate hop ran $jobs jobs")
+  }
+
   test("maintainMinMax: extremum deletes rescan, replays no-op, restarts resume") {
     import graft.ops.VersionedPartitioned
     val root = Files.createTempDirectory("graft_cdcmm_").toString
@@ -648,6 +673,51 @@ class StreamingSpec extends AnyFunSuite {
     }.awaitTermination()
     assert(stateRows() == batchRows())
     assert(stateRows().map(_._1) == Seq("2024-03-01", "2024-03-03"))
+  }
+
+  test("maintainMinMax: a NULL in a group column is one group through insert and rescan hops") {
+    import graft.ops.VersionedPartitioned
+    val root = Files.createTempDirectory("graft_cdcmmnull_").toString
+    val (src, log, state) = (s"$root/src", s"$root/log", s"$root/state")
+    // the source is partitioned by `part`, not by a group column, so
+    // an insert into an existing group can be a pure-insert window
+    val keys = Seq("part", "date", "sym", "id", "px")
+    def rows(part: Int, rs: (Option[String], Long, Double)*) =
+      rs.map { case (s, i, p) =>
+        (part, java.sql.Date.valueOf("2024-03-01"), s, i, p) }
+        .toDF("part", "date", "sym", "id", "px")
+    def stateRows() = VersionedPartitioned.read(spark, state)
+      .select(col("date").cast("string"), col("sym"), col("n_rows"),
+        col("min_px"), col("max_px"))
+      .as[(String, Option[String], Long, Double, Double)]
+      .collect().toSeq.sorted
+    def batchRows() = VersionedPartitioned.read(spark, src)
+      .groupBy(col("date").cast("string").as("date"), col("sym"))
+      .agg(count(lit(1)).as("n"), min("px"), max("px"))
+      .as[(String, Option[String], Long, Double, Double)]
+      .collect().toSeq.sorted
+    def hop() = {
+      Streaming.changeFeedHop(spark, src, keys, log)
+      Streaming.maintainMinMax(spark, log, state, src, Seq("date", "sym"),
+        Seq("px"))
+    }
+    val a = (Some("A"), 1L, 5.0)
+    val (n2, n3) = ((None, 2L, 3.0), (None, 3L, 7.0))
+    VersionedPartitioned.promote(rows(1, a, n2, n3), src, "part")
+    assert(hop().isDefined)
+    assert(stateRows() == batchRows())
+    // insert hop: a new partition adds a row to the (date, NULL) group
+    VersionedPartitioned.promote(rows(2, (None, 4L, 6.0)), src, "part")
+    assert(hop().isDefined)
+    assert(stateRows() == batchRows())
+    assert(stateRows().count(_._2.isEmpty) == 1)
+    // extremum-delete hop: the NULL group's max leaves, so the group
+    // is rescanned from the source
+    VersionedPartitioned.promote(rows(1, a, n2), src, "part")
+    assert(hop().isDefined)
+    assert(stateRows() == batchRows())
+    assert(stateRows().find(_._2.isEmpty).get ==
+      (("2024-03-01", None, 2L, 3.0, 6.0)))
   }
 
   test("maintainTopK: winner deletes refill from source, replays no-op") {

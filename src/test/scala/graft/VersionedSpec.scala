@@ -851,6 +851,15 @@ class VersionedSpec extends AnyFunSuite {
         "cast(sum_amt as decimal(28,2))").collect()
         .map(r => (r.getString(0), r.getLong(1), r.getDecimal(2))).toSet
     assert(canon(maintained) == canon(recomputed))
+    // a fold keeps the recompute's types: sum_amt stays DECIMAL(28,2)
+    assert(maintained.schema == recomputed.schema)
+    // a state written with a wider sum (as older folds left it) keeps
+    // its own type and values
+    val wide = IncrementalAgg.maintain(
+      state.withColumn("sum_amt", col("sum_amt").cast("decimal(38,2)")),
+      o, n, Seq("date"), Seq("amt"))
+    assert(wide.schema("sum_amt").dataType.sql == "DECIMAL(38,2)")
+    assert(canon(wide) == canon(recomputed))
     // the dropped day's group is GONE, not zeroed
     assert(!canon(maintained).exists(_._1 == "2024-01-03"))
     // untouched day 2 still present with original values
