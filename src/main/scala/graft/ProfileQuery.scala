@@ -1,14 +1,19 @@
 package graft
 
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart,
   SparkListenerJobEnd, SparkListenerStageCompleted, SparkListenerTaskEnd}
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
 
 /** Optimization-round profiling harness (round 20): run one or more
   * registered queries with a listener that counts Spark jobs, stages and
   * tasks and attributes wall time per job, so per-statement scheduling
-  * overhead separates from real compute. Not part of the driver
-  * contract; prints human-readable lines, no JSON.
+  * overhead separates from real compute. It also counts the Janino
+  * compiles of generated classes and their compile seconds, JVM-wide:
+  * the compiles mostly run inside tasks, so the listener's job time
+  * alone hides them. Not part of the driver contract; prints
+  * human-readable lines, no JSON.
   *
   *   sbt "runMain graft.ProfileQuery <sfDir> <query>[,query...]"
   */
@@ -93,6 +98,8 @@ object ProfileQuery {
       spark.sparkContext.addSparkListener(listener)
       jobs = 0; stages = 0; tasks = 0; taskMs = 0
       jobLines.clear(); stageLines.clear()
+      val compiles0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+      val compileNs0 = CodeGenerator.compileTime
       val t0 = System.nanoTime()
       val df = fn(spark, sfDir)
       val tBuilt = System.nanoTime()
@@ -104,7 +111,9 @@ object ProfileQuery {
       spark.catalog.clearCache()
       println(f"[profile] $name: total ${(t1 - t0) / 1e9}%.2f s " +
         f"(build ${(tBuilt - t0) / 1e9}%.2f s), jobs $jobs, stages $stages, " +
-        f"tasks $tasks, task-time ${taskMs / 1000.0}%.1f s")
+        f"tasks $tasks, task-time ${taskMs / 1000.0}%.1f s, " +
+        f"compiles ${CodegenMetrics.METRIC_COMPILATION_TIME.getCount - compiles0} " +
+        f"(${(CodeGenerator.compileTime - compileNs0) / 1e9}%.2f s)")
       import scala.jdk.CollectionConverters._
       if (sys.env.get("SPARK_GRAFT_PROFILE_JOBS").contains("1"))
         jobLines.asScala.toSeq.foreach(println)

@@ -17,11 +17,13 @@ import org.apache.spark.sql.functions._
  * output is change-sized, not table-sized, once `keepUnchanged=false`
  * (default) drops the matches.
  *
- * NULL semantics: presence is detected with literal flags, not key
- * nulls, so a snapshot row whose key columns contain NULL still
- * classifies correctly (same device as `Merge.upsert`); NULL-valued
- * fields compare equal to NULL via `<=>`, so NULL→NULL is unchanged and
- * NULL→value is an update.
+ * NULL semantics: the keys join null-safely (`<=>` per key column,
+ * then one coalesced column per key), so a key holding NULL matches
+ * the same NULL key on the other side — an unchanged row with a NULL
+ * key column is unchanged, not a delete plus an insert. Presence is
+ * detected with literal flags, not key nulls (same device as
+ * `Merge.upsert`). NULL-valued fields compare equal to NULL via `<=>`,
+ * so NULL→NULL is unchanged and NULL→value is an update.
  */
 object Diff {
 
@@ -32,18 +34,21 @@ object Diff {
     require(keyCols.nonEmpty && keyCols.forall(oldDf.columns.contains),
       s"key columns $keyCols must exist in both snapshots")
     val valCols = oldDf.columns.filterNot(keyCols.contains).toSeq
-    val o = oldDf.select(keyCols.map(col) ++
-      Seq(struct(valCols.map(col): _*).as("__ov"), lit(true).as("__op")): _*)
-    val n = newDf.select(keyCols.map(col) ++
-      Seq(struct(valCols.map(col): _*).as("__nv"), lit(true).as("__np")): _*)
-    val classified = o.join(n, keyCols, "full_outer")
-      .withColumn("change_type",
-        when(col("__op").isNull, lit("insert"))
-          .when(col("__np").isNull, lit("delete"))
-          .when(col("__ov") <=> col("__nv"), lit("unchanged"))
-          .otherwise(lit("update")))
-    val kept = if (keepUnchanged) classified
-               else classified.where(col("change_type") =!= "unchanged")
-    kept.select(keyCols.map(col) :+ col("change_type"): _*)
+    val ks = keyCols.indices
+    def side(df: DataFrame, tag: String) = df.select(
+      ks.map(i => col(keyCols(i)).as(s"__${tag}k$i")) ++
+        Seq(struct(valCols.map(col): _*).as(s"__${tag}v"), lit(true).as(s"__${tag}p")): _*)
+    val joined = side(oldDf, "o").join(side(newDf, "n"),
+      ks.map(i => col(s"__ok$i") <=> col(s"__nk$i")).reduce(_ && _), "full_outer")
+    val changeType =
+      when(col("__op").isNull, lit("insert"))
+        .when(col("__np").isNull, lit("delete"))
+        .when(col("__ov") <=> col("__nv"), lit("unchanged"))
+        .otherwise(lit("update"))
+    val classified = joined.select(ks.map(i =>
+      coalesce(col(s"__ok$i"), col(s"__nk$i")).as(keyCols(i))) :+
+      changeType.as("change_type"): _*)
+    if (keepUnchanged) classified
+    else classified.where(col("change_type") =!= "unchanged")
   }
 }

@@ -307,6 +307,21 @@ class OpsSpec extends AnyFunSuite {
     }
   }
 
+  test("Diff.snapshotDiff: a NULL in a key column matches the same NULL key") {
+    import graft.ops.Diff
+    val old_ = Seq((1L, None, 1L), (1L, Some("A"), 2L), (2L, None, 4L),
+      (3L, None, 6L)).toDF("p", "k", "v")
+    val new_ = Seq((1L, None, 1L), (1L, Some("A"), 2L), (1L, Some("B"), 3L),
+      (2L, None, 5L)).toDF("p", "k", "v")
+    // (1, NULL) unchanged, (2, NULL) updated, (3, NULL) deleted
+    val got = Diff.snapshotDiff(old_, new_, Seq("p", "k"))
+      .orderBy("p", "k").as[(Long, Option[String], String)].collect().toSeq
+    assert(got == Seq((1L, Some("B"), "insert"), (2L, None, "update"),
+      (3L, None, "delete")))
+    val all = Diff.snapshotDiff(old_, new_, Seq("p", "k"), keepUnchanged = true)
+    assert(all.count() == 5 && all.where($"change_type" === "unchanged").count() == 2)
+  }
+
   test("Profile.histogram: bucket math, clamping, null drop, sparse output") {
     import graft.ops.Profile
     val df = Seq(Some(-5.0), Some(0.0), Some(9.99), Some(10.0), Some(35.0),

@@ -50,6 +50,25 @@ class PlanSpec extends AnyFunSuite {
       s"nested/decimal-typed gate outputs (driver compare would die): $offenders")
   }
 
+  test("Graft.codegenReuse: a stage whose code repeats under another stage id compiles nothing") {
+    import org.apache.spark.metrics.source.CodegenMetrics
+    // the runtime half of the settings; the cache size is static and
+    // was fixed by the first session of this JVM
+    val key = "spark.sql.codegen.useIdInClassName"
+    spark.conf.set(key, Graft.codegenReuse(key))
+    try {
+      val a = spark.range(0, 1000, 1, 2).selectExpr("id * 7919 AS x").where("x % 7907 = 1")
+      val b = spark.range(0, 1000, 1, 2).selectExpr("id + 7901 AS x").where("x % 7883 = 2")
+      // UnionExec is no codegen stage: each side is its own stage, and
+      // the two queries number the same two stages 1,2 and 2,1
+      val first = a.union(b).collect().map(_.getLong(0)).sorted.toSeq
+      val before = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+      val second = b.union(a).collect().map(_.getLong(0)).sorted.toSeq
+      assert(CodegenMetrics.METRIC_COMPILATION_TIME.getCount - before == 0)
+      assert(first == second && first.nonEmpty)
+    } finally spark.conf.unset(key)
+  }
+
   test("top_parts_per_brand: rank-limit pushes below the shuffle (WindowGroupLimit)") {
     assert(plan("top_parts_per_brand").contains("WindowGroupLimit"))
   }
