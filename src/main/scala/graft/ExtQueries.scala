@@ -3189,9 +3189,9 @@ object ExtQueries {
    */
   /**
    * The approximate-percentile ROUTE through the statement door
-   * (ops/ApproxPercentileRoute): with the accuracy conf set, an exact
-   * `PERCENTILE_CONT … WITHIN GROUP` statement executes as the
-   * mergeable `approx_percentile` sketch — the 100 TB shape, where the
+   * (plans/ApproxRouting): with `spark.graft.approx.percentileAccuracy`
+   * set, an exact `PERCENTILE_CONT … WITHIN GROUP` statement executes
+   * as the mergeable `approx_percentile` sketch — the 100 TB shape, where the
    * exact ordered-set aggregate buffers every group value on one
    * reducer. Approximate values cannot hash-match a DuckDB oracle, so
    * the gate verifies the sketch's PUBLISHED rank bound against the
@@ -3217,7 +3217,7 @@ object ExtQueries {
     life.execute(
       "INSERT INTO q.li SELECT l_returnflag, l_extendedprice FROM approxpct_src")
     val acc = 100
-    s.conf.set(graft.ops.ApproxPercentileRoute.ConfKey, acc.toString)
+    s.conf.set(graft.plans.ApproxRouting.PercentileAccuracyKey, acc.toString)
     val routed = try {
       life.query("""
         SELECT l_returnflag, count(*) AS n_rows,
@@ -3228,7 +3228,7 @@ object ExtQueries {
         FROM q.li GROUP BY l_returnflag""").collect().toSeq
         .map(r => (r.getString(0), r.getLong(1), r.getDouble(2),
           r.getDouble(3)))
-    } finally s.conf.unset(graft.ops.ApproxPercentileRoute.ConfKey)
+    } finally s.conf.unset(graft.plans.ApproxRouting.PercentileAccuracyKey)
     val eps = 1.0 / acc + 1e-9
     val got = broadcast(routed.toDF("l_returnflag", "n_rows", "p50", "p90"))
     def inBound(v: String, p: Double) =
@@ -3248,7 +3248,7 @@ object ExtQueries {
   }
 
   /** The approx-DISTINCT route's driver gate: COUNT(DISTINCT) through
-    * the SQL door with `spark.graft.sql.approxDistinct.rsd` set routes
+    * the SQL door with `spark.graft.approx.distinctRsd` set routes
     * to the HLL++ sketch (single shuffle, no Expand — the 100 TB
     * distinct-count path); the gate then verifies the estimate against
     * the exact count Spark-side and emits booleans, while the oracle
@@ -3269,14 +3269,14 @@ object ExtQueries {
     life.execute(
       "INSERT INTO q.li SELECT l_returnflag, l_suppkey FROM approxdst_src")
     val rsd = 0.05
-    s.conf.set(graft.ops.ApproxDistinctRoute.ConfKey, rsd.toString)
+    s.conf.set(graft.plans.ApproxRouting.DistinctRsdKey, rsd.toString)
     val routed = try {
       life.query("""
         SELECT l_returnflag, count(*) AS n_rows,
                count(DISTINCT l_suppkey) AS est
         FROM q.li GROUP BY l_returnflag""").collect().toSeq
         .map(r => (r.getString(0), r.getLong(1), r.getLong(2)))
-    } finally s.conf.unset(graft.ops.ApproxDistinctRoute.ConfKey)
+    } finally s.conf.unset(graft.plans.ApproxRouting.DistinctRsdKey)
     val got = broadcast(routed.toDF("l_returnflag", "n_rows", "est"))
     Tables.load(s, dir, "lineitem")
       .groupBy("l_returnflag")

@@ -38,13 +38,15 @@ object Graft {
    *  - caller-sized shuffle partitions (set this to ~2-3× total
    *    executor cores on a real cluster; Spark's 200 default is wrong
    *    in both directions — too many for laptops, too few at 100 TB);
-   *  - quantile routing ON (`spark.graft.quantiles.approx=true`): exact
-   *    `percentile` aggregates are rewritten to the bounded-state
-   *    `approx_percentile` sketch by the injected optimizer rule — the
-   *    exact form buffers every group value on one reducer, which is
-   *    the wrong default for a 100 TB pipeline session. Opt back into
-   *    exact semantics per session with
-   *    `spark.conf.set("spark.graft.quantiles.approx", "false")` (the
+   *  - percentile routing ON
+   *    (`spark.graft.approx.percentileAccuracy=10000`): exact
+   *    percentile aggregates are rewritten to the bounded-state
+   *    `approx_percentile` sketch (rank error ≤ n/10000) by the
+   *    injected `plans.ApproxRouting` rule — the exact form buffers
+   *    every group value on one reducer, which is the wrong default
+   *    for a 100 TB pipeline session. Opt back into exact semantics
+   *    per session with
+   *    `spark.conf.unset("spark.graft.approx.percentileAccuracy")` (the
    *    correctness-gate harnesses build raw sessions and stay exact).
    *  - generated-class reuse (`codegenReuse`): whole-stage codegen
    *    class names carry no stage id, and the JVM-wide Janino class
@@ -70,7 +72,7 @@ object Graft {
       .appName(appName)
       .withExtensions(new functions.GraftExtensions())
       .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.graft.quantiles.approx", "true")
+      .config(plans.ApproxRouting.PercentileAccuracyKey, "10000")
       .config(codegenReuse)
     val b1 = if (master.nonEmpty) b.master(master) else b
     val b2 = if (shufflePartitions > 0)

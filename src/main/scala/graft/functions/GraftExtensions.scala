@@ -29,7 +29,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
         Subword.injections ++ graft.ops.BloomPrune.injections).foreach {
       case (id, info, builder) => ext.injectFunction((id, info, builder))
     }
-    // session-config-gated execution policies (no-ops until opted in)
-    ext.injectOptimizerRule(graft.plans.QuantileRouting)
+    // approximate routing: a no-op until a session sets its keys
+    ext.injectOptimizerRule(graft.plans.ApproxRouting)
   }
 }

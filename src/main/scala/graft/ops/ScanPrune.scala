@@ -215,14 +215,17 @@ object ScanPrune {
    * different 10 rows), so any other node on the path abandons the
    * prune — the same reachability rule Spark's own PartitionPruning
    * applies. The dim subtree must be deterministic (re-evaluating it
-   * must see the same keys) and under `spark.graft.dpp.maxDimBytes`
-   * estimated (default 64 MB — a side cheap enough to evaluate twice);
+   * must see the same keys) and under `MaxDimBytes` estimated (64 MB —
+   * a side cheap enough to evaluate twice);
    * more than `spark.graft.dpp.maxKeys` distinct keys (default 1000,
    * partition counts are metadata-sized) abandons the prune (null keys
    * are filtered BEFORE the counting limit so a sampled null can never
    * mask truncation). Everything here degrades to "no extra conjunct",
    * never to a wrong answer.
    */
+  /** Largest estimated dim side a join-derived prune evaluates. */
+  private val MaxDimBytes = 64L << 20
+
   /** Count of ACTUAL dim-probe evaluations (cache misses) — spec
     * observability for the probe-reuse cache. */
   private[graft] val probeRuns = new java.util.concurrent.atomic.AtomicLong
@@ -271,8 +274,6 @@ object ScanPrune {
       return Nil
     val maxKeys = conf.getOption("spark.graft.dpp.maxKeys")
       .map(_.toInt).getOrElse(1000)
-    val maxDimBytes = conf.getOption("spark.graft.dpp.maxDimBytes")
-      .map(_.toLong).getOrElse(64L << 20)
     val wanted: Map[ExprId, AttributeReference] = cols.flatMap(c =>
       leaf.output.collectFirst {
         case a: AttributeReference if a.name.equalsIgnoreCase(c) => a
@@ -328,7 +329,7 @@ object ScanPrune {
           val fact = if (factLeft) j.left else j.right
           val dim = if (factLeft) j.right else j.left
           val dimOk = prunable &&
-            dim.stats.sizeInBytes <= BigInt(maxDimBytes) &&
+            dim.stats.sizeInBytes <= BigInt(MaxDimBytes) &&
             dim.find(p => p.expressions.exists(e =>
               e.exists(!_.deterministic))).isEmpty &&
             safeReach(fact, fa.exprId)

@@ -461,17 +461,13 @@ class SqlLifecycle(val spark: SparkSession, val root: String) {
     // (ScanPrune has the safety argument). Time travel prunes the same
     // way: a pinned view's keep narrows its OLD manifest.
     val pruned = if (pruneScans(df, occs)) spark.sql(rewritten) else df
-    // opt-in approximate-percentile routing: exact ordered-set
-    // percentiles become the mergeable approx_percentile sketch (see
-    // ApproxPercentileRoute for the accuracy contract)
-    val routedPct = ApproxPercentileRoute.accuracyOf(spark)
-      .map(ApproxPercentileRoute.rewrite(spark, pruned, _))
-      .getOrElse(pruned)
-    // opt-in approximate-distinct routing: exact COUNT(DISTINCT)
-    // becomes the mergeable HLL++ sketch (see ApproxDistinctRoute)
-    val out = ApproxDistinctRoute.rsdOf(spark)
-      .map(ApproxDistinctRoute.rewrite(spark, routedPct, _))
-      .getOrElse(routedPct)
+    // opt-in approximate routing (see plans.ApproxRouting): applied
+    // here as well as in the optimizer, because sessions built without
+    // GraftExtensions run no injected rule
+    val analyzed = pruned.queryExecution.analyzed
+    val routed = graft.plans.ApproxRouting(spark)(analyzed)
+    val out = if (routed.fastEquals(analyzed)) pruned
+      else org.apache.spark.sql.graft.Internals.ofRows(spark, routed)
     // the per-statement occurrence views served their purpose the
     // moment `spark.sql` ANALYZED the text (analysis is eager — the
     // returned frame holds the resolved relations, not the names);

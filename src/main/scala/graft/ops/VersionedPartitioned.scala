@@ -685,11 +685,9 @@ object VersionedPartitioned {
       return df.repartition(col(partitionCol))
     if (writers.isDefined)
       return df.repartition(math.max(writers.get, 1), col(partitionCol))
-    // scale knob (default 2× executor parallelism): production layouts
-    // with many partition values per write raise it to overlap more
-    // file-creation latency; single-partition promote replays lower it
-    val minWriters = spark.conf.getOption("spark.graft.write.minWriters")
-      .map(_.toInt).getOrElse(2 * spark.sparkContext.defaultParallelism)
+    // writer floor: 2× executor parallelism overlaps file-creation
+    // latency when a write spans many partition values
+    val minWriters = 2 * spark.sparkContext.defaultParallelism
     // The floor exists to overlap per-FILE creation latency, and the
     // file lower bound is one per distinct partition value: when the
     // plan pins the column to k < floor literals (the per-day promote
@@ -707,6 +705,11 @@ object VersionedPartitioned {
         else df.repartition(col(partitionCol))
     }
   }
+
+  /** Per-file, per-column bloom sizing: 2^19 bits (64 KB serialized)
+    * hold 50k distinct values at <1% fpp. */
+  private val BloomItems = 50000L
+  private val BloomBits = 1L << 19
 
   private def writeSnapshot(df: DataFrame, rootPath: HPath,
       partitionCol: String, statsCols: Seq[String],
@@ -777,15 +780,9 @@ object VersionedPartitioned {
       // per-file bloom over xxhash64(value) — Spark's own
       // BloomFilterAggregate (the InjectRuntimeFilter build shape),
       // probed at plan time with BloomFilterMightContain over the same
-      // hash. Sizing: ~`bloomBits` bits/file/column (default 2^19 =
-      // 64 KB serialized) holds `bloomItems` (default 50k) distinct
-      // values/file at <1% fpp; both conf knobs — a 100 TB layout with
-      // bigger files raises them, or caps skipping at a higher fpp
-      // (false positives only COST, never lose rows).
-      val bloomItems = spark.conf.getOption("spark.graft.stats.bloomItems")
-        .map(_.toLong).getOrElse(50000L)
-      val bloomBits = spark.conf.getOption("spark.graft.stats.bloomBits")
-        .map(_.toLong).getOrElse(1L << 19)
+      // hash, sized by `BloomItems`/`BloomBits`. A file with more
+      // distinct values only skips less often (false positives only
+      // COST, never lose rows).
       if (bloomCols.nonEmpty) BloomPrune.register(spark)
       // Per-column non-null counts ride in the same pass (negligible
       // cost) and, for exactly-foldable types (integrals + decimals —
@@ -806,7 +803,7 @@ object VersionedPartitioned {
           count(col(c)).as(s"cnt_$c")) ++
           (if (summable(c)) Seq(sum(col(c)).as(s"sum_$c")) else Nil))) ++
         bloomCols.map(c => call_function("bloom_filter_agg",
-          xxhash64(col(c)), lit(bloomItems), lit(bloomBits))
+          xxhash64(col(c)), lit(BloomItems), lit(BloomBits))
           .as(s"bloom_$c"))
       // `__file` is stored in ON-DISK form: input_file_name() returns a
       // URI (':' Hive-escaped on disk as %3A arrives doubly encoded as

@@ -1,9 +1,11 @@
 package graft
 
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.ops.{Merge, Resample}
+import graft.plans.ApproxRouting
 
 /** Hand-computed expectations for the round-3 operators: MERGE/upsert
   * semantics and time-series resampling (forward-fill, RANGE-frame
@@ -195,29 +197,32 @@ class MergeResampleSpec extends AnyFunSuite {
     assert(n == 20)
   }
 
-  test("GraftExtensions: a builder-injected session resolves every native kernel") {
-    import org.apache.spark.sql.SparkSession
-    // getOrCreate returns the existing default session (extensions are
-    // only applied when a session is CONSTRUCTED), so detach the default
-    // first — the new session still reuses the running SparkContext —
-    // and restore it after.
+  /** A fresh session built with `GraftExtensions`. getOrCreate returns
+    * the existing default session (extensions are only applied when a
+    * session is CONSTRUCTED), so detach the default first — the new
+    * session still reuses the running SparkContext — and restore it
+    * after. */
+  private def extensionSession(): SparkSession = {
     spark // force the shared session to exist before detaching it
     val prevDefault = SparkSession.getDefaultSession
     val prevActive = SparkSession.getActiveSession
     SparkSession.clearDefaultSession()
     SparkSession.clearActiveSession()
-    val s2 =
-      try SparkSession.builder()
-        .master("local[2]")
-        .withExtensions(new graft.functions.GraftExtensions())
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-      finally {
-        SparkSession.clearDefaultSession()
-        SparkSession.clearActiveSession()
-        prevDefault.foreach(SparkSession.setDefaultSession)
-        prevActive.foreach(SparkSession.setActiveSession)
-      }
+    try SparkSession.builder()
+      .master("local[2]")
+      .withExtensions(new graft.functions.GraftExtensions())
+      .config("spark.ui.enabled", "false")
+      .getOrCreate()
+    finally {
+      SparkSession.clearDefaultSession()
+      SparkSession.clearActiveSession()
+      prevDefault.foreach(SparkSession.setDefaultSession)
+      prevActive.foreach(SparkSession.setActiveSession)
+    }
+  }
+
+  test("GraftExtensions: a builder-injected session resolves every native kernel") {
+    val s2 = extensionSession()
     import s2.implicits._
     val row = Seq("The quick brown fox").toDF("text")
       .selectExpr("size(norm_tokens(text)) AS n",
@@ -232,9 +237,9 @@ class MergeResampleSpec extends AnyFunSuite {
       .as[(Double, Int)].head()
     assert(vec == ((11.0, 2)))
 
-    // QuantileRouting: with the session flag ON, an exact percentile
+    // ApproxRouting: with the accuracy key set, an exact percentile
     // aggregate is routed to the bounded-state approx_percentile sketch
-    // by the injected optimizer rule — no query rewrite; flag OFF (the
+    // by the injected optimizer rule — no query rewrite; key unset (the
     // default) leaves the exact aggregate untouched.
     val data = (1 to 1001).map(_.toDouble).toDF("x")
     def medianPlan(): (String, Double) = {
@@ -245,20 +250,20 @@ class MergeResampleSpec extends AnyFunSuite {
     assert(exactPlan.contains("percentile") &&
       !exactPlan.contains("percentile_approx"))
     assert(exactVal == 501.0)
-    s2.conf.set("spark.graft.quantiles.approx", "true")
+    s2.conf.set(ApproxRouting.PercentileAccuracyKey, "10000")
     try {
       val (approxPlan, approxVal) = medianPlan()
       assert(approxPlan.contains("percentile_approx"),
         s"rule did not fire:\n$approxPlan")
       assert(math.abs(approxVal - 501.0) <= 1.0, s"approx p50 $approxVal")
-    } finally s2.conf.unset("spark.graft.quantiles.approx")
+    } finally s2.conf.unset(ApproxRouting.PercentileAccuracyKey)
 
     // both ANSI ordered-set forms route too: percentile_cont lowers to
     // the exact Percentile aggregate before the optimizer (first case
     // catches it); percentile_disc keeps its own aggregate and has its
     // own case
     data.createOrReplaceTempView("qr_data")
-    s2.conf.set("spark.graft.quantiles.approx", "true")
+    s2.conf.set(ApproxRouting.PercentileAccuracyKey, "10000")
     try {
       val p = s2.sql(
         """SELECT percentile_cont(0.5) WITHIN GROUP (ORDER BY x) AS c,
@@ -269,7 +274,7 @@ class MergeResampleSpec extends AnyFunSuite {
         !plan.contains("percentile_disc"), s"plan:\n$plan")
       val (c, d) = p.as[(Double, Double)].head()
       assert(math.abs(c - 501.0) <= 1.0 && math.abs(d - 501.0) <= 1.0)
-    } finally s2.conf.unset("spark.graft.quantiles.approx")
+    } finally s2.conf.unset(ApproxRouting.PercentileAccuracyKey)
 
     // Graft.session (the library/pipeline entrypoint) defaults the
     // routing ON — a naive pipeline caller gets the bounded-state
@@ -285,7 +290,7 @@ class MergeResampleSpec extends AnyFunSuite {
         SparkSession.clearDefaultSession()
         SparkSession.clearActiveSession()
       }
-    assert(s3.conf.get("spark.graft.quantiles.approx") == "true")
+    assert(s3.conf.get(ApproxRouting.PercentileAccuracyKey) == "10000")
     val routed = {
       import s3.implicits._
       (1 to 1001).map(_.toDouble).toDF("x")
@@ -294,5 +299,71 @@ class MergeResampleSpec extends AnyFunSuite {
     assert(routed.queryExecution.optimizedPlan.toString
       .contains("percentile_approx"),
       s"Graft.session did not route:\n${routed.queryExecution.optimizedPlan}")
+  }
+
+  test("ApproxRouting: an extension session's DataFrame API routes DESC, non-DOUBLE, FILTERed and windowed percentiles") {
+    val s2 = extensionSession()
+    import s2.implicits._
+    val data = (1 to 1001).map(i => (i.toDouble, i)).toDF("x", "i")
+    s2.conf.set(ApproxRouting.PercentileAccuracyKey, "10000")
+    try {
+      val df = data.agg(
+        expr("percentile_disc(0.5) WITHIN GROUP (ORDER BY x DESC)").as("d50"),
+        expr("percentile_disc(0.25) WITHIN GROUP (ORDER BY x DESC)").as("d25"),
+        expr("percentile(i, 0.5)").as("pi"),
+        expr("percentile(x, 0.5) FILTER (WHERE x <= 501)").as("pf"))
+      val plan = df.queryExecution.optimizedPlan.toString
+      assert(!plan.contains("percentile_disc(") && !plan.contains("percentile("),
+        s"an exact percentile survived:\n$plan")
+      // the INT column's sketch result is cast back to percentile's DOUBLE
+      assert(df.schema("pi").dataType == org.apache.spark.sql.types.DoubleType)
+      val r = df.head()
+      // DESC mirrors: 0.25 from the top is the ascending 0.75 rank
+      assert(math.abs(r.getDouble(0) - 501.0) <= 1.0, s"d50 ${r.getDouble(0)}")
+      assert(math.abs(r.getDouble(1) - 751.0) <= 1.0, s"d25 ${r.getDouble(1)}")
+      assert(math.abs(r.getDouble(2) - 501.0) <= 1.0, s"pi ${r.getDouble(2)}")
+      assert(math.abs(r.getDouble(3) - 251.0) <= 1.0, s"pf ${r.getDouble(3)}")
+      // in a window the type-restoring cast wraps the window expression
+      val w = data.select(expr("percentile(i, 0.5) OVER ()").as("wp"))
+      assert(!w.queryExecution.optimizedPlan.toString.contains("percentile("))
+      assert(w.schema("wp").dataType == org.apache.spark.sql.types.DoubleType)
+      assert(math.abs(w.head().getDouble(0) - 501.0) <= 1.0)
+    } finally s2.conf.unset(ApproxRouting.PercentileAccuracyKey)
+  }
+
+  test("ApproxRouting: the door on a raw session and spark.sql on an extension session route alike") {
+    val s2 = extensionSession()
+    val rows = (1 to 2000).map(i => (i % 3, i.toDouble, i % 250))
+    val q = """SELECT g,
+      percentile_cont(0.25) WITHIN GROUP (ORDER BY x) AS c,
+      percentile_disc(0.25) WITHIN GROUP (ORDER BY x DESC) AS d,
+      percentile(i, 0.5) AS p,
+      percentile(x, 0.5) FILTER (WHERE x > 100) AS f,
+      count(DISTINCT i) AS n
+      FROM approx_hooks_src GROUP BY g ORDER BY g"""
+    def answer(s: SparkSession, run: String => DataFrame) = {
+      s.createDataFrame(rows).toDF("g", "x", "i")
+        .createOrReplaceTempView("approx_hooks_src")
+      s.conf.set(ApproxRouting.PercentileAccuracyKey, "10000")
+      s.conf.set(ApproxRouting.DistinctRsdKey, "0.05")
+      try {
+        val df = run(q)
+        val plan = df.queryExecution.optimizedPlan.toString
+        assert(plan.contains("percentile_approx") &&
+          plan.contains("approx_count_distinct") &&
+          !plan.contains("percentile("), s"not routed:\n$plan")
+        (df.schema, df.collect().toSeq)
+      } finally {
+        s.conf.unset(ApproxRouting.PercentileAccuracyKey)
+        s.conf.unset(ApproxRouting.DistinctRsdKey)
+      }
+    }
+    val door = new graft.ops.SqlLifecycle(spark,
+      java.nio.file.Files.createTempDirectory("graft_approxhooks_").toString)
+    // raw session: only the door hook routes
+    val viaDoor = answer(spark, door.query)
+    // extension session: only the optimizer hook routes
+    val viaOptimizer = answer(s2, s2.sql)
+    assert(viaDoor == viaOptimizer)
   }
 }

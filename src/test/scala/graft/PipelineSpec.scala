@@ -479,7 +479,8 @@ class PipelineSpec extends AnyFunSuite {
   }
 
   test("SQL door: approx-percentile routing — sketch plan, rank bound, off-switch exact") {
-    import graft.ops.{ApproxPercentileRoute, SqlLifecycle}
+    import graft.ops.SqlLifecycle
+    import graft.plans.ApproxRouting
     val root = Files.createTempDirectory("graft_approxpct_").toString
     val life = new SqlLifecycle(spark, root)
     life.execute("CREATE SCHEMA m")
@@ -506,7 +507,7 @@ class PipelineSpec extends AnyFunSuite {
     // ON at accuracy ≥ n (rank error < 1 row): the plan swaps to the
     // sketch and CONT returns an OBSERVED value — the documented
     // semantics delta — at the exact rank's neighbors
-    spark.conf.set(ApproxPercentileRoute.ConfKey, "10000")
+    spark.conf.set(ApproxRouting.PercentileAccuracyKey, "10000")
     try {
       val routed = life.query(q)
       assert(hasApprox(routed), "route must swap in the sketch")
@@ -519,20 +520,21 @@ class PipelineSpec extends AnyFunSuite {
       // the percentile() function form routes too
       assert(math.abs(r.getDouble(3) - 1501.0) <= 2.0,
         s"function form: ${r.getDouble(3)}")
-    } finally spark.conf.unset(ApproxPercentileRoute.ConfKey)
+    } finally spark.conf.unset(ApproxRouting.PercentileAccuracyKey)
     // what the sketch cannot preserve stays EXACT under the route:
     // frequency-weighted percentile(x, p, f)
-    spark.conf.set(ApproxPercentileRoute.ConfKey, "100")
+    spark.conf.set(ApproxRouting.PercentileAccuracyKey, "100")
     try {
       val fw = life.query(
         "SELECT g, percentile(x, 0.5, 2) AS p FROM m.v GROUP BY g ORDER BY g")
       assert(!hasApprox(fw),
         "frequency-weighted percentile must not route to the sketch")
-    } finally spark.conf.unset(ApproxPercentileRoute.ConfKey)
+    } finally spark.conf.unset(ApproxRouting.PercentileAccuracyKey)
   }
 
   test("SQL door: approx-distinct routing — HLL plan, error bound, preserved semantics") {
-    import graft.ops.{ApproxDistinctRoute, SqlLifecycle}
+    import graft.ops.SqlLifecycle
+    import graft.plans.ApproxRouting
     val root = Files.createTempDirectory("graft_approxdst_").toString
     val life = new SqlLifecycle(spark, root)
     life.execute("CREATE SCHEMA d")
@@ -554,7 +556,7 @@ class PipelineSpec extends AnyFunSuite {
     assert(!planOf(exact).contains("approx_count_distinct"))
     // each parity group holds exactly 250 of the 500 residues
     assert(exact.collect().forall(r => r.getLong(2) == 250L))
-    spark.conf.set(ApproxDistinctRoute.ConfKey, "0.05")
+    spark.conf.set(ApproxRouting.DistinctRsdKey, "0.05")
     try {
       // ON: the sketch replaces the distinct — strictly fewer shuffles
       // than the exact plan, plain count(*) untouched, estimate within 3σ
@@ -576,11 +578,44 @@ class PipelineSpec extends AnyFunSuite {
       assert(!planOf(multi).contains("approx_count_distinct"))
       val m = multi.collect()
       assert(m.forall(_.getLong(2) == 21L)) // every residue mod 7 appears
-      spark.conf.unset(ApproxDistinctRoute.ConfKey)
+      spark.conf.unset(ApproxRouting.DistinctRsdKey)
       val mExact = life.query(mq).collect()
       assert(m.map(_.toSeq).toSeq == mExact.map(_.toSeq).toSeq,
         "unroutable shapes must return the exact answers under the flag")
-    } finally spark.conf.unset(ApproxDistinctRoute.ConfKey)
+    } finally spark.conf.unset(ApproxRouting.DistinctRsdKey)
+  }
+
+  test("SQL door: a malformed or retired approx key fails the statement, naming the key") {
+    import graft.ops.SqlLifecycle
+    import graft.plans.ApproxRouting
+    val life = new SqlLifecycle(spark,
+      Files.createTempDirectory("graft_approxbad_").toString)
+    (1 to 100).map(i => (i % 3, i.toLong)).toDF("g", "x")
+      .createOrReplaceTempView("approxbad_src")
+    val q = "SELECT g, count(DISTINCT x) AS d, percentile(x, 0.5) AS p " +
+      "FROM approxbad_src GROUP BY g"
+    def failure(key: String, value: String): String =
+      try {
+        spark.conf.set(key, value)
+        intercept[IllegalArgumentException](life.query(q).collect()).getMessage
+      } finally spark.conf.unset(key)
+    // out of HLL++'s valid range, or not a number: loud, never exact
+    val rsd = failure(ApproxRouting.DistinctRsdKey, "0.5")
+    assert(rsd.contains(ApproxRouting.DistinctRsdKey) &&
+      rsd.contains("(0, 0.37]"), rsd)
+    val acc = failure(ApproxRouting.PercentileAccuracyKey, "abc")
+    assert(acc.contains(ApproxRouting.PercentileAccuracyKey) &&
+      acc.contains("positive integer"), acc)
+    // a retired key names its replacement: a session that set
+    // quantiles.approx=false to stay exact must not turn approximate
+    for ((retired, now) <- Seq(
+        "spark.graft.quantiles.approx" -> ApproxRouting.PercentileAccuracyKey,
+        "spark.graft.sql.approxDistinct.rsd" -> ApproxRouting.DistinctRsdKey)) {
+      val msg = failure(retired, "false")
+      assert(msg.contains(retired) && msg.contains(now), msg)
+    }
+    // with the keys unset the statement runs exact
+    assert(life.query(q).count() == 3)
   }
 
   test("Txn: a position buried under acknowledged history acknowledges the id") {

@@ -1,8 +1,10 @@
 #!/bin/bash
-# Full local gate: compile + specs + oracle diff (+ optional bench).
+# Full local gate: knob census + compile + specs + oracle diff
+# (+ optional bench).
 # Usage: tools/check.sh [--bench]
 set -euo pipefail
 cd "$(dirname "$0")/.."
+python3 tools/knobs.py   # every spark.graft.* key documented in README
 sbt -batch compile test
 out=target/verify_out
 rm -rf "$out"
