@@ -3139,8 +3139,8 @@ object ExtQueries {
 
   /**
    * File-level stats skipping through the SQL FRONT DOOR
-   * (ops/SqlLifecycle.narrowOccurrence → VersionedPartitioned
-   * .readPrunedWhere): the same z-ordered layout as
+   * (ops/SqlLifecycle.narrowIndex → VersionedPartitioned.filesWhere →
+   * ManifestFileIndex.narrowed): the same z-ordered layout as
    * `versioned_zorder_optimized`, but the range read arrives as a
    * routed statement — `WHERE o_custkey BETWEEN …` on a cataloged
    * table. The statement's bounds on the stats-covered z column must

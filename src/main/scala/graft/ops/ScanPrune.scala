@@ -11,14 +11,15 @@ import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRela
  * is a partition-targeted SELECT — `WHERE date = DATE '{{ ds }}'`
  * (reference `dags/dag.py:211,294,436`) — and through the Scala API
  * those reads prune at the MANIFEST level (`readPartitionsWhere`,
- * `HiddenPartition.readMultiWhere`). A routed statement used to
- * resolve its table views over the FULL current manifest: correct,
- * but at 100 TB every routed SELECT would plan (and for
- * hidden-partitioned tables, SCAN) the whole table.
+ * `HiddenPartition.readMultiWhere`). A routed statement resolves its
+ * table views over the FULL current manifest; without narrowing, at
+ * 100 TB every routed SELECT would plan (and for hidden-partitioned
+ * tables, SCAN) the whole table.
  *
  * This object extracts, from an analyzed-and-OPTIMIZED Catalyst plan,
- * the filter conjuncts that sit directly above each table's scan
- * leaves. Working on the optimized plan is the safety argument: by
+ * the filter conjuncts that sit directly above each `ManifestFileIndex`
+ * scan leaf; the door then swaps that leaf's index for a narrowed one
+ * (`ManifestFileIndex.narrowed`). Working on the optimized plan is the safety argument: by
  * the time we look, Catalyst's own pushdown rules have already moved
  * every conjunct as close to its scan as is semantically legal
  * (outer-join null traps, nondeterminism, correlation — all handled
@@ -31,34 +32,24 @@ import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRela
  */
 object ScanPrune {
 
-  /** One scan of a table inside a plan: the leaf's output attributes,
-    * the filter conjuncts directly above it (empty = unfiltered), and
-    * the scan's `BaseRelation` INSTANCE — reference identity maps the
-    * leaf back to the registered view whose frame built it (each
-    * statement-occurrence view is built from its own read call, so two
-    * scans of a self-joined table resolve to different instances). */
+  /** One manifest scan inside a plan: the leaf's output attributes,
+    * the filter conjuncts directly above it (empty = unfiltered), the
+    * scan's `BaseRelation` INSTANCE — reference identity tells scans
+    * apart (the door gives every scan of its analyzed plan its own
+    * instance, so two scans of a self-joined table differ, while a CTE
+    * body inlined twice keeps one) — and the index it reads. */
   final case class Leaf(output: Seq[Attribute], conjuncts: Seq[Expression],
-      relation: AnyRef)
+      relation: HadoopFsRelation, index: ManifestFileIndex)
 
-  /** All parquet-scan leaves under `plan` whose file-index roots live
-    * under `dir` (an absolute table directory), each with the
+  /** All `ManifestFileIndex` scan leaves under `plan`, each with the
     * conjuncts of the Filter/Project chain directly above it.
     * Conjuncts crossing a Project are rewritten through pass-through
     * aliases; a conjunct referencing a COMPUTED projection is dropped
     * (it constrains a derived value, not a stored column). Only
     * deterministic conjuncts referencing the leaf's own attributes
     * survive. */
-  def leavesUnder(plan: LogicalPlan, dir: String): Seq[Leaf] = {
-    val prefix = new java.io.File(dir).getAbsolutePath + "/"
+  def leavesUnder(plan: LogicalPlan): Seq[Leaf] = {
     val acc = scala.collection.mutable.ArrayBuffer.empty[Leaf]
-    def ownedBy(rel: LogicalRelation): Boolean = rel.relation match {
-      case fs: HadoopFsRelation => fs.location.rootPaths.nonEmpty &&
-        fs.location.rootPaths.forall { p =>
-          val up = p.toUri.getPath
-          up == prefix.dropRight(1) || up.startsWith(prefix)
-        }
-      case _ => false
-    }
     def descend(p: LogicalPlan, conj: Seq[Expression]): Unit = p match {
       case f: Filter =>
         descend(f.child, conj ++ split(f.condition))
@@ -86,12 +77,11 @@ object ScanPrune {
           }
         }
         descend(pr.child, mapped)
-      case rel: LogicalRelation if ownedBy(rel) =>
+      case rel @ ManifestFileIndex.Scan(fs, ix) =>
         val outIds = rel.output.map(_.exprId).toSet
         acc += Leaf(rel.output, conj.filter(c =>
           c.deterministic && c.references.nonEmpty &&
-            c.references.forall(a => outIds.contains(a.exprId))),
-          rel.relation)
+            c.references.forall(a => outIds.contains(a.exprId))), fs, ix)
       case other =>
         // any other node breaks the direct chain: restart with no
         // carried conjuncts (the optimizer already pushed what's safe)
@@ -382,8 +372,8 @@ object ScanPrune {
         .convertToScala(l.value, l.dataType))
       .cast(l.dataType)
 
-  /** OR-combine per-leaf keeps: a partition survives if ANY scan of
-    * the table needs it (self-joins read one shared view). */
+  /** OR-combine per-leaf keeps: a partition survives if ANY leaf of
+    * the scan needs it (a CTE body inlined twice is one scan). */
   def anyOf(keeps: Seq[String => Boolean]): String => Boolean =
     v => keeps.exists(_(v))
 

@@ -3,6 +3,8 @@ package graft.ops
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+import org.apache.spark.sql.execution.datasources.HadoopFsRelation
 
 /**
  * SQL LIFECYCLE front door. The reference pipeline's entire interface
@@ -413,74 +415,75 @@ class SqlLifecycle(val spark: SparkSession, val root: String) {
     * `readAt`/`readAsOf` machinery (manifest resolution is O(1) in
     * table depth either way; `README.md:76` of the reference names the
     * capability). Timestamps accept `yyyy-MM-dd HH:mm:ss[.SSS]` or
-    * ISO-8601 instants, interpreted in the session UTC. */
+    * ISO-8601 instants, interpreted in the session UTC. The statement
+    * is parsed and analyzed once. */
   def query(sel: String): DataFrame = {
-    val referenced = registerViewsFor(sel)
-    val pinned = scala.collection.mutable.ArrayBuffer.empty[(String, String, Long)]
-    val withTravel = resolveAsOf(resolveMetadataTables(resolveBranchReads(sel)),
-      pinned, registerShared = false)
-    // every statement-text occurrence of a partitioned table (and of
-    // an AS-OF pinned read) resolves through its OWN per-statement
-    // view — so the pruner can narrow each scan independently (a
-    // self-join with one filtered side prunes that side alone), and
-    // narrowing never mutates a session-shared name a concurrent
-    // statement could resolve against
-    val (rewritten, occs) =
-      splitScanOccurrences(rewriteNames(withTravel), referenced, pinned.toSeq)
-    val df = spark.sql(rewritten)
-    // metadata-only aggregates: a statement that is exactly
-    // count/min/max/sum over ONE cataloged partitioned table —
-    // optionally filtered/grouped on its partition column — folds from
-    // the per-file `_stats` sidecars instead of scanning data
-    // (StatsAgg has the legality argument; any doubt falls through to
-    // the scan below). `SELECT count(*) FROM fact WHERE date = …`
-    // plans O(metadata) at any table size.
-    val statsAnswered: Option[DataFrame] =
-      if (spark.conf.getOption("spark.graft.sql.statsAgg")
-          .forall(_.toBoolean))
-        StatsAgg.tryAnswer(spark, df, occs.flatMap(o =>
-          o.meta.partitionCol.map(pc => StatsAgg.OccTable(
-            tableDir(o.table).toString, o.version, pc, o.rels,
-            hiddenOf(o.meta)))))
-      else None
-    statsAnswered match {
-      case Some(a) =>
-        occs.foreach(o => spark.catalog.dropTempView(o.view))
-        return a
-      case None =>
+    // the sugar first: a table named only by it (`t.history`, `t
+    // VERSION AS OF n`) needs no current read registered
+    val sugared = resolveAsOf(resolveMetadataTables(resolveBranchReads(sel)))
+    registerViewsFor(sugared)
+    val text = rewriteNames(sugared)
+    // a read the statement names twice (a self-join of one view) is
+    // one relation instance under two leaves: each such leaf becomes
+    // its own scan, so each scan narrows independently below (a
+    // self-join with one filtered side prunes that side alone). A CTE
+    // referenced twice stays one scan: its body is one leaf, inlined
+    // twice.
+    val parsed = spark.sql(text).queryExecution.withCachedData
+    val reads = parsed.collectWithSubqueries { case ManifestFileIndex.Scan(fs, _) => fs }
+    var scans = 0
+    val analyzed = parsed.transformUpWithSubqueries {
+      case l @ ManifestFileIndex.Scan(fs, ix) if reads.count(_ eq fs) > 1 =>
+        scans += 1
+        l.copy(relation = fs.copy(location = ix.asScan(scans))(fs.sparkSession))
     }
-    // statement-predicate pruning: if the OPTIMIZED plan proves a
-    // scan occurrence is filtered on its partition (or hidden-
-    // transform source) columns — by literal, or by a join to a small
-    // dim (the DPP shape) — re-register that occurrence's view as the
-    // manifest-PRUNED read and re-resolve; statement bounds on a
-    // stats-covered data column additionally skip FILES inside the
-    // surviving partitions (the readPruned / z-order path). The
-    // reference's `WHERE date = DATE '{{ ds }}'` statements then plan
-    // O(day), not O(table), exactly like the Scala API's pruned reads
-    // (ScanPrune has the safety argument). Time travel prunes the same
-    // way: a pinned view's keep narrows its OLD manifest.
-    val pruned = if (pruneScans(df, occs)) spark.sql(rewritten) else df
+    val df = org.apache.spark.sql.graft.Internals.ofAnalyzed(spark, analyzed)
+    // metadata-only aggregates: count/min/max/sum over ONE partitioned
+    // table read, filtered/grouped on its partition column at most,
+    // fold from the `_stats` sidecars (StatsAgg has the legality
+    // argument; any doubt falls through to the scan below)
+    if (spark.conf.getOption("spark.graft.sql.statsAgg")
+        .forall(_.toBoolean)) {
+      val folded = StatsAgg.tryAnswer(spark, df)
+      if (folded.isDefined) return folded.get
+    }
+    // statement-predicate pruning: a scan the OPTIMIZED plan proves
+    // constrained on its partition (or hidden-transform source)
+    // columns — by literal, or by a join to a small dim (the DPP shape)
+    // — or on a stats-covered data column gets its narrowed index
+    // swapped in under the projections, casts and hints the table's
+    // view put above it. `WHERE date = DATE '{{ ds }}'` then plans
+    // O(day), not O(table); a pinned read narrows its OLD manifest.
+    // Every other scan goes back to its plain index, so equal reads
+    // compare equal again (exchange reuse, cached data).
+    val swaps = narrowScans(df)
+    val pruned =
+      if (swaps.isEmpty && scans == 0) df
+      else org.apache.spark.sql.graft.Internals.ofAnalyzed(spark,
+        analyzed.transformUpWithSubqueries {
+          case l @ ManifestFileIndex.Scan(fs, ix) =>
+            swaps.collectFirst { case (r, narrowed) if r eq fs => narrowed }
+            match {
+              // a scan narrowed to nothing plans as the empty relation
+              case Some(n) if n.location.inputFiles.isEmpty =>
+                LocalRelation(l.output)
+              case Some(n) => l.copy(relation = n)
+              case None =>
+                l.copy(relation = fs.copy(location = ix.asScan(0))(fs.sparkSession))
+            }
+        })
     // opt-in approximate routing (see plans.ApproxRouting): applied
     // here as well as in the optimizer, because sessions built without
     // GraftExtensions run no injected rule
-    val analyzed = pruned.queryExecution.analyzed
-    val routed = graft.plans.ApproxRouting(spark)(analyzed)
-    val out = if (routed.fastEquals(analyzed)) pruned
-      else org.apache.spark.sql.graft.Internals.ofRows(spark, routed)
-    // the per-statement occurrence views served their purpose the
-    // moment `spark.sql` ANALYZED the text (analysis is eager — the
-    // returned frame holds the resolved relations, not the names);
-    // dropping them keeps a long-lived session's temp-view catalog
-    // bounded across comment-heavy scripts instead of accumulating one
-    // file-listing-holding entry per routed occurrence
-    occs.foreach(o => spark.catalog.dropTempView(o.view))
-    out
+    val before = pruned.queryExecution.analyzed
+    val routed = graft.plans.ApproxRouting(spark)(before)
+    if (routed.fastEquals(before)) pruned
+    else org.apache.spark.sql.graft.Internals.ofRows(spark, routed)
   }
 
   /** EXPLAIN [EXTENDED|FORMATTED|…] <query> through the statement
     * door: the plan text of the PRUNED plan — the one `query` actually
-    * runs after occurrence narrowing — so a user can verify a routed
+    * runs after scan narrowing — so a user can verify a routed
     * partition-filtered statement plans O(day), not O(table), without
     * leaving SQL. One row, one `plan` column (Spark's own EXPLAIN
     * output shape). The query is planned, never executed (modulo the
@@ -493,101 +496,34 @@ class SqlLifecycle(val spark: SparkSession, val root: String) {
     Seq(df.queryExecution.explainString(m)).toDF("plan")
   }
 
-  /** A manifest dir name's raw partition value (`date=2024-01-01` →
-    * `2024-01-01`, path-unescaped) — the form `readPartitionsWhere`
-    * feeds its keep function. */
-  private def unescapeDirValue(dir: String): String =
-    VersionedPartitioned.unescapePathName(
-      dir.substring(dir.indexOf('=') + 1))
-
-  /** One statement-text occurrence of a cataloged partitioned table
-    * (or of an AS-OF pinned read of one): its unique per-statement
-    * view name, table, pinned version, and the parquet relation
-    * INSTANCES its registered frame scans — reference identity is how
-    * optimized-plan leaves map back to exactly this occurrence. */
-  private final case class ScanOcc(view: String, table: String,
-      version: Option[Long], meta: TableMeta, rels: Seq[AnyRef])
-
-  /** The frame one occurrence view registers: the current read (with
-    * the stats-driven broadcast hint, like the shared registration) or
-    * the pinned-version read. */
-  private def occFrame(t: String, meta: TableMeta,
-      version: Option[Long]): DataFrame = version match {
-    case Some(v) =>
-      VersionedPartitioned.readAt(spark, tableDir(t).toString, v)
-        .select(meta.schema.fieldNames.map(c => col(s"`$c`")): _*)
-    case None =>
-      val base = readTable(t, meta)
-      if (statsSaysBroadcast(t, meta)) base.hint("broadcast") else base
-  }
-
-  private def relsOf(df: DataFrame): Seq[AnyRef] =
-    df.queryExecution.analyzed.collect {
-      case l: org.apache.spark.sql.execution.datasources.LogicalRelation =>
-        l.relation
-    }
-
-  /** Rewrite each occurrence of a partitioned table's view name (and
-    * of an AS-OF pinned name) in the statement text to a UNIQUE
-    * per-statement view, each registered from its own read call so its
-    * relation instances identify its plan leaves. Unpartitioned tables
-    * and SQL views keep their shared names (nothing narrows them). */
-  private def splitScanOccurrences(text: String, tables: Seq[String],
-      pinned: Seq[(String, String, Long)]): (String, Seq[ScanOcc]) = {
-    val sid = SqlLifecycle.stmtCounter.incrementAndGet()
-    val occs = scala.collection.mutable.ArrayBuffer.empty[ScanOcc]
-    var out = text
-    val targets: Seq[(String, String, Option[Long])] =
-      tables.flatMap(t => metaOf(t) match {
-        case Some(m) if m.partitionCol.isDefined =>
-          Some((viewName(t), t, Option.empty[Long]))
-        case _ => None
-      }) ++ pinned.map { case (vn, t, v) => (vn, t, Some(v)) }
-    for ((vn, t, version) <- targets.distinct) {
-      val meta = metaOf(t).get
-      out = mapOutsideLiterals(out, seg =>
-        nameRe(vn).replaceAllIn(seg, _ => {
-          val u = s"${vn}__s${sid}_${occs.length + 1}"
-          val frame = occFrame(t, meta, version)
-          frame.createOrReplaceTempView(u)
-          occs += ScanOcc(u, t, version, meta, relsOf(frame))
-          scala.util.matching.Regex.quoteReplacement(u)
-        }))
-    }
-    (out, occs.toSeq)
-  }
-
-  /** Narrow every occurrence view whose scans the optimized plan
-    * proves constrained; true if any re-registered. Each occurrence
-    * narrows INDEPENDENTLY — the r15 all-scans-of-the-table rule now
-    * applies only to the leaves of one occurrence (a CTE body
-    * referenced twice expands the same view into several leaves). */
-  private def pruneScans(df: DataFrame, occs: Seq[ScanOcc]): Boolean = {
-    if (occs.isEmpty) return false
+  /** The relation over the narrowed index of every manifest scan the
+    * optimized plan of `df` proves constrained, keyed by the scan's
+    * relation instance. A plan that fails to optimize narrows nothing
+    * (running it reports the error). */
+  private def narrowScans(df: DataFrame)
+      : Seq[(HadoopFsRelation, HadoopFsRelation)] = {
     val plan =
       try df.queryExecution.optimizedPlan
-      catch { case scala.util.control.NonFatal(_) => return false }
-    var any = false
-    for (occ <- occs; pcol <- occ.meta.partitionCol) {
-      val path = tableDir(occ.table).toString
-      val leaves = ScanPrune.leavesUnder(plan, path)
-        .filter(l => occ.rels.exists(_ eq l.relation))
-      if (leaves.nonEmpty && narrowOccurrence(occ, pcol, path, leaves, plan))
-        any = true
-    }
-    any
+      catch { case scala.util.control.NonFatal(_) => return Nil }
+    val leaves = ScanPrune.leavesUnder(plan)
+    leaves.foldLeft(List.empty[HadoopFsRelation])((seen, l) =>
+      if (seen.exists(_ eq l.relation)) seen else l.relation :: seen)
+      .flatMap(rel => narrowIndex(leaves.filter(_.relation eq rel), plan)
+        .map(ix => rel -> rel.copy(location = ix)(rel.sparkSession)))
   }
 
-  /** The narrowing decision for one occurrence: literal + join-derived
+  /** The narrowing decision for one scan (all its leaves — a CTE body
+    * inlined twice is one scan with two leaves): literal + join-derived
     * partition keeps, composed with file-level stats skipping when the
-    * statement bounds a stats-covered data column. Registration only
-    * happens when something provably narrows — a bound spanning every
-    * live partition (the reference's first pipeline days, where the
-    * 8-day window covers the whole young table) must not pay a second
-    * analysis pass for an identical plan. */
-  private def narrowOccurrence(occ: ScanOcc, pcol: String, path: String,
-      leaves: Seq[ScanPrune.Leaf],
-      plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan): Boolean = {
+    * statement bounds a stats-covered data column. Some only when
+    * something provably narrows: a bound spanning every live partition
+    * keeps the plan as it is. */
+  private def narrowIndex(leaves: Seq[ScanPrune.Leaf],
+      plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan)
+      : Option[ManifestFileIndex] = {
+    val index = leaves.head.index
+    val path = index.root.toString
+    val pcol = index.manifest.partitionCol
     val hidden = pcol.startsWith("hp__")
     val members: Seq[PartitionTransform] =
       if (hidden) PartitionTransform.parse(pcol) match {
@@ -618,14 +554,16 @@ class SqlLifecycle(val spark: SparkSession, val root: String) {
     val partKeep: Option[String => Boolean] =
       if (keeps.forall(_.isDefined)) Some(ScanPrune.anyOf(keeps.flatten))
       else None
-    val partNarrows = partKeep.exists(keep =>
-      VersionedPartitioned.partitions(spark, path, occ.version)
-        .exists(d => !keep(unescapeDirValue(d))))
-    // file-level skipping: single-leaf occurrences only (the common
-    // case — a multi-leaf union of ranges adds nothing but code), and
-    // only when a non-partition column is actually bounded (the
-    // stats-coverage census costs one footer read per snapshot, so the
-    // reference's partition-only statements never pay it)
+    val byPartition = index.narrowed(partKeep.getOrElse(_ => true))
+    val partNarrows = byPartition.entries.size < index.entries.size
+    // the stats/bloom coverage census: one footer read per snapshot
+    def covered(prefix: String): Set[String] =
+      try VersionedPartitioned.coveredCols(spark, path, index.entries, prefix)
+      catch { case scala.util.control.NonFatal(_) => Set.empty }
+    // file-level skipping: single-leaf scans only (the common case — a
+    // multi-leaf union of ranges adds nothing but code), and only when
+    // a non-partition column is actually bounded (so the reference's
+    // partition-only statements never pay the census)
     val fileBounds: Seq[(String, Option[Any], Option[Any])] =
       if (hidden || augmented.size != 1) Nil
       else {
@@ -635,25 +573,19 @@ class SqlLifecycle(val spark: SparkSession, val root: String) {
           .filter(c => ScanPrune.boundsFor(conjuncts, c).isDefined)
         if (boundedCols.isEmpty) Nil
         else {
-          val covered =
-            try VersionedPartitioned.statsCoveredCols(spark, path, occ.version)
-            catch { case scala.util.control.NonFatal(_) => Set.empty[String] }
-          boundedCols.flatMap(c => covered.find(_.equalsIgnoreCase(c)))
-            .flatMap { c =>
-              val (lo, hi) =
-                ScanPrune.rangeOf(ScanPrune.boundsFor(conjuncts, c).get)
-              if (lo.isEmpty && hi.isEmpty) None else Some((c, lo, hi))
-            }
+          val mins = covered("min_")
+          boundedCols.flatMap(c => mins.find(_.equalsIgnoreCase(c))).flatMap { c =>
+            val (lo, hi) =
+              ScanPrune.rangeOf(ScanPrune.boundsFor(conjuncts, c).get)
+            if (lo.isEmpty && hi.isEmpty) None else Some((c, lo, hi))
+          }
         }
       }
-    // equality/IN conjuncts on BLOOM-indexed data columns additionally
-    // probe the per-file blooms — the point-lookup skip min/max cannot
-    // make on a scattered high-cardinality id. Works for HIDDEN
-    // partitioning too (the probed column just must not be the
-    // partition key or a transform source — those prune at the
-    // manifest). The bloom-coverage census (one footer read per
-    // snapshot) is paid only when an equality conjunct exists on a
-    // probeable column.
+    // equality/IN conjuncts on BLOOM-indexed data columns (not the
+    // partition key or a transform source, which prune at the
+    // manifest) also probe the per-file blooms — the point-lookup skip
+    // min/max cannot make on a scattered high-cardinality id; the
+    // bloom-coverage census is paid only when such a conjunct exists
     val filePoints: Seq[(String, Seq[Any])] =
       if (augmented.size != 1) Nil
       else {
@@ -665,39 +597,23 @@ class SqlLifecycle(val spark: SparkSession, val root: String) {
             .flatMap(_.eqs).filter(_.nonEmpty).map(vs => (c, vs)))
         if (eqCols.isEmpty) Nil
         else {
-          val covered =
-            try VersionedPartitioned.bloomCoveredCols(spark, path, occ.version)
-            catch { case scala.util.control.NonFatal(_) => Set.empty[String] }
+          val blooms = covered("bloom_")
           eqCols.flatMap { case (c, ls) =>
-            covered.find(_.equalsIgnoreCase(c)).map(cc =>
+            blooms.find(_.equalsIgnoreCase(c)).map(cc =>
               (cc, ls.map(l => org.apache.spark.sql.catalyst
                 .CatalystTypeConverters.convertToScala(l.value, l.dataType))))
           }
         }
       }
-    def register(frame: DataFrame): Boolean = {
-      frame.select(occ.meta.schema.fieldNames.map(c => col(s"`$c`")): _*)
-        .createOrReplaceTempView(occ.view)
-      true
-    }
     if (fileBounds.nonEmpty || filePoints.nonEmpty) {
-      val keep = partKeep.getOrElse((_: String) => true)
-      val kept = VersionedPartitioned
-        .prunedFilesWhere(spark, path, fileBounds, keep, occ.version,
-          filePoints)
-      val fileNarrows = partNarrows || {
-        val census = VersionedPartitioned
-          .prunedFilesWhere(spark, path, Nil, keep, occ.version)
-        kept.size < census.size
-      }
-      if (fileNarrows)
-        register(VersionedPartitioned.readFileList(spark, path, kept,
-          occ.version))
-      else false
-    } else if (partNarrows)
-      register(VersionedPartitioned.readPartitionsWhere(spark, path,
-        partKeep.get, occ.version))
-    else false
+      val kept = VersionedPartitioned.filesWhere(spark, path,
+        byPartition.entries, fileBounds, filePoints)
+      if (partNarrows || kept.size < byPartition.inputFiles.length)
+        Some(byPartition.narrowed(_ => true,
+          Some(kept.map { case (snap, f) => s"$snap/$f" }.toSet)))
+      else None
+    } else if (partNarrows) Some(byPartition)
+    else None
   }
 
   /** Iceberg's branch read suffix in query texts: `schema.table
@@ -785,34 +701,22 @@ class SqlLifecycle(val spark: SparkSession, val root: String) {
       }
     }))
 
-  /** Resolve the time-travel sugar to pinned view names; each is
-    * reported into `pinnedOut` as (viewName, table, version) so the
-    * statement-predicate pruner can narrow pinned manifests too. With
-    * `registerShared = false` (the query-door path) only the NAME is
-    * substituted — `splitScanOccurrences` then registers every
-    * occurrence of it under a unique per-statement name, so the shared
-    * registration would be dead weight; view-body resolution (which
-    * does no occurrence splitting) keeps the shared registration.
-    * (No literal guard here, unlike branch/metadata rewriting: the
-    * timestamp form's own pattern INCLUDES a quoted literal, which a
+  /** Resolve the time-travel sugar to pinned view names, each
+    * registered as the pinned-version read (the statement-predicate
+    * pruner narrows a pinned manifest like a current one). (No literal
+    * guard here, unlike branch/metadata rewriting: the timestamp
+    * form's own pattern INCLUDES a quoted literal, which a
     * mapOutsideLiterals segment would never contain.) */
-  private def resolveAsOf(sel: String,
-      pinnedOut: scala.collection.mutable.Buffer[(String, String, Long)] =
-        scala.collection.mutable.ArrayBuffer.empty,
-      registerShared: Boolean = true): String = {
+  private def resolveAsOf(sel: String): String = {
     def pinned(tableName: String, suffix: String,
         versionOf: String => Long): Option[String] = {
       val t = tableName.toLowerCase
       metaOf(t).filter(_.partitionCol.isDefined).map { meta =>
         val vn = viewName(t) + suffix
         val path = tableDir(t).toString
-        val v = versionOf(path)
-        if (registerShared) {
-          VersionedPartitioned.readAt(spark, path, v)
-            .select(meta.schema.fieldNames.map(c => col(s"`$c`")): _*)
-            .createOrReplaceTempView(vn)
-        }
-        pinnedOut += ((vn, t, v))
+        VersionedPartitioned.readAt(spark, path, versionOf(path))
+          .select(meta.schema.fieldNames.map(c => col(s"`$c`")): _*)
+          .createOrReplaceTempView(vn)
         vn
       }
     }
@@ -2767,7 +2671,7 @@ class SqlLifecycle(val spark: SparkSession, val root: String) {
     * or a broken body among the REFERENCED views fails with the
     * unresolved names; unreferenced broken views no longer poison
     * unrelated statements). */
-  private def registerViewsFor(sql: String): Seq[String] = {
+  private def registerViewsFor(sql: String): Unit = {
     val ts = tables().toSet
     val vs = views().toSet
     val universe = (ts ++ vs).toSeq
@@ -2788,21 +2692,12 @@ class SqlLifecycle(val spark: SparkSession, val root: String) {
       needed ++= next
       frontier = next.intersect(vs)
     }
-    // shared table views exist for two readers: unpartitioned tables
-    // (never occurrence-split) and referenced SQL-view BODIES (resolved
-    // below against the shared names). A partitioned table referenced
-    // only by the statement text resolves through its occurrence views
-    // instead — skipping the shared registration here saves one
-    // manifest resolution per table on every routed statement
-    val viewsReferenced = needed.intersect(vs).nonEmpty
     needed.intersect(ts).toSeq.sorted.foreach { t =>
       val meta = metaOf(t).get
-      if (meta.partitionCol.isEmpty || viewsReferenced) {
-        val base = readTable(t, meta)
-        val hinted =
-          if (statsSaysBroadcast(t, meta)) base.hint("broadcast") else base
-        hinted.createOrReplaceTempView(viewName(t))
-      }
+      val base = readTable(t, meta)
+      val hinted =
+        if (statsSaysBroadcast(t, meta)) base.hint("broadcast") else base
+      hinted.createOrReplaceTempView(viewName(t))
     }
     var pending = needed.intersect(vs).toSeq.sorted
     var progress = true
@@ -2821,7 +2716,6 @@ class SqlLifecycle(val spark: SparkSession, val root: String) {
     }
     require(pending.isEmpty,
       s"views failed to resolve: ${pending.mkString(", ")}")
-    needed.intersect(ts).toSeq.sorted
   }
 
   /** Stats-driven broadcast decision — the CBO use of the ANALYZE
@@ -2883,11 +2777,6 @@ class SqlLifecycle(val spark: SparkSession, val root: String) {
 }
 
 object SqlLifecycle {
-  /** Per-statement id for occurrence view names — GLOBAL across
-    * SqlLifecycle instances, so two routers over different catalog
-    * roots sharing one SparkSession can never collide on a name. */
-  private val stmtCounter = new java.util.concurrent.atomic.AtomicLong(0L)
-
   private val MetaFile = "_graft_table.meta"
   private val CopyLedgerFile = "_graft_copy_ledger"
   private val DataDir = "data"

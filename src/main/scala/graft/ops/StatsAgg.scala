@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.expressions.aggregate.{AggregateExpression, Average, Count, Max, Min, Sum}
 import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Filter, LogicalPlan, Project, Union}
-import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
+import org.apache.spark.sql.execution.datasources.LogicalRelation
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types.LongType
 
@@ -44,38 +44,25 @@ import org.apache.spark.sql.types.LongType
  */
 object StatsAgg {
 
-  /** What the door knows about one statement occurrence of a
-    * cataloged partitioned table: its root dir, optional pinned
-    * version, partition column, the BaseRelation INSTANCES its
-    * registered frame scans (identity maps plan leaves back to it),
-    * and — for hidden-partitioned tables — the partition transform,
-    * which lets time-interval predicates on the SOURCE column decide
-    * partitions exactly. */
-  final case class OccTable(root: String, version: Option[Long],
-      partitionCol: String, rels: Seq[AnyRef],
-      transform: Option[PartitionTransform] = None)
-
   private final case class AggItem(func: String, inId: Option[ExprId],
       outName: String, outType: org.apache.spark.sql.types.DataType)
   private sealed trait OutItem
   private final case class GroupOut(outName: String) extends OutItem
   private final case class AggOut(item: AggItem) extends OutItem
 
-  /** One admitted leaf: its relation instance, snapshot dir name, the
-    * filter conjuncts accumulated down to it (leaf-attr terms), and
+  /** One admitted leaf: its relation, the manifest index it scans,
+    * the filter conjuncts accumulated down to it (leaf-attr terms), and
     * the needed top-level ids resolved to leaf attributes. */
-  private final case class LeafInfo(rel: LogicalRelation, snap: String,
-      conjuncts: Seq[Expression], resolve: Map[ExprId, Attribute])
+  private final case class LeafInfo(rel: LogicalRelation,
+      index: ManifestFileIndex, conjuncts: Seq[Expression],
+      resolve: Map[ExprId, Attribute])
 
   /** Try to answer `df`'s optimized plan from stats sidecars. */
-  def tryAnswer(spark: SparkSession, df: DataFrame,
-      occs: Seq[OccTable]): Option[DataFrame] =
-    try answer(spark, df, occs)
+  def tryAnswer(spark: SparkSession, df: DataFrame): Option[DataFrame] =
+    try answer(spark, df)
     catch { case scala.util.control.NonFatal(_) => None }
 
-  private def answer(spark: SparkSession, df: DataFrame,
-      occs: Seq[OccTable]): Option[DataFrame] = {
-    if (occs.isEmpty) return None
+  private def answer(spark: SparkSession, df: DataFrame): Option[DataFrame] = {
     val plan = df.queryExecution.optimizedPlan
     // a global ORDER BY over the aggregate's own outputs re-applies on
     // the folded frame — sorting O(partitions) metadata rows
@@ -185,19 +172,21 @@ object StatsAgg {
     val needIds: Set[ExprId] =
       aggItems.flatMap(_.inId).toSet ++ groupAttr.map(_.exprId)
     // strict walk of the aggregate's child
-    val leaves = walk(agg.child, Nil, needIds.map(id => id -> id).toMap,
-      occs) match {
+    val leaves = walk(agg.child, Nil, needIds.map(id => id -> id).toMap)
+      match {
       case Some(ls) if ls.nonEmpty => ls
       case _ => return None
     }
-    // exactly one occurrence owns every leaf
-    val occ = occs.find(o =>
-      leaves.forall(l => o.rels.exists(_ eq l.rel.relation))) match {
-      case Some(o) => o
-      case None => return None
-    }
-    // one leaf per snapshot (the frame unions each snapshot once)
-    if (leaves.map(_.snap).distinct.length != leaves.length) return None
+    // every leaf scans one read of one manifest (its evolution groups),
+    // each partition through exactly one leaf — a table read twice
+    // (a self-union) would count its rows twice
+    val m = leaves.head.index.manifest
+    if (!leaves.forall(_.index.manifest eq m)) return None
+    val dirs = leaves.flatMap(_.index.entries.keys)
+    if (dirs.distinct.length != dirs.length) return None
+    val partitionCol = m.partitionCol
+    val transform = Some(partitionCol).filter(_.startsWith("hp__"))
+      .map(PartitionTransform.parse)
     // conjunct exactness per leaf: deterministic, subquery-free, and
     // either referencing ONLY the partition column (identity
     // partitioning — dir-value substitution decides every predicate)
@@ -205,8 +194,9 @@ object StatsAgg {
     // transform's source column in interval-decidable comparison
     // shapes (a partition IS a time interval; a bound either contains
     // it, excludes it, or straddles it — straddling bails)
-    val keepEvals: Map[String, KeepEval] = leaves.map { l =>
-      l.snap -> keepEvalFor(l, occ).getOrElse(return None)
+    val keepEvals: Map[String, KeepEval] = leaves.flatMap { l =>
+      val ke = keepEvalFor(l, partitionCol, transform).getOrElse(return None)
+      l.index.entries.keys.map(VersionedPartitioned.partitionValue(_) -> ke)
     }.toMap
     // needed columns must resolve to the SAME stored name (and type)
     // in every leaf
@@ -232,7 +222,7 @@ object StatsAgg {
       // the distinct census only answers for the partition column
       // itself (any other column needs real data)
       if (i.func == "count_distinct_part" &&
-        !stored.exists(_._1.equalsIgnoreCase(occ.partitionCol))) return None
+        !stored.exists(_._1.equalsIgnoreCase(partitionCol))) return None
       i.func match {
         case "avg" | "avg_unscaled" =>
           val (cn, ct) = stored.get
@@ -280,7 +270,7 @@ object StatsAgg {
       groupAttr match {
         case Some(ga) =>
           storedName(ga.exprId) match {
-            case Some(n) if n.equalsIgnoreCase(occ.partitionCol) =>
+            case Some(n) if n.equalsIgnoreCase(partitionCol) =>
               val outName = items.collectFirst {
                 case GroupOut(n2) => n2
               }.getOrElse(return None)
@@ -291,14 +281,14 @@ object StatsAgg {
           if (items.exists(_.isInstanceOf[GroupOut])) return None
           None
       }
-    // per-(value, snapshot) keep: substitute the parsed partition
-    // value into the owning leaf's conjuncts and evaluate; a snapshot
-    // with no surviving leaf was optimized away as empty/contradicted
+    // per-value keep: substitute the parsed partition value into the
+    // conjuncts of the leaf that reads it and evaluate; a partition no
+    // surviving leaf reads was optimized away as empty/contradicted
     val anyFilter = leaves.exists(_.conjuncts.nonEmpty)
     val keep: Option[(String, String) => Option[Boolean]] =
-      Some { (value, snap) =>
-        keepEvals.get(snap) match {
-          // a snapshot with no surviving leaf: under a filter the
+      Some { (value, _) =>
+        keepEvals.get(value) match {
+          // a partition with no surviving leaf: under a filter the
           // optimizer contradicted it away (rows provably excluded);
           // with NO filter a missing branch is unexplained — bail
           case None => if (anyFilter) Some(false) else None
@@ -323,8 +313,9 @@ object StatsAgg {
         case (Descending, NullsLast) => c.desc_nulls_last
       }
     }
-    VersionedPartitioned.aggregateFromStats(spark, occ.root, specs,
-      keep, groupSpec, occ.version).map { folded =>
+    VersionedPartitioned.aggregateFromStats(spark,
+      leaves.head.index.root.toString, m, specs, keep, groupSpec)
+      .map { folded =>
       // reorder/rename to the statement's own output shape and cast to
       // its exact types (nullability differences are benign)
       val cols = items.map {
@@ -407,21 +398,21 @@ object StatsAgg {
       .normalized() == java.time.ZoneOffset.UTC
     catch { case scala.util.control.NonFatal(_) => false }
 
-  private def keepEvalFor(l: LeafInfo, occ: OccTable): Option[KeepEval] = {
+  private def keepEvalFor(l: LeafInfo, partitionCol: String,
+      transform: Option[PartitionTransform]): Option[KeepEval] = {
     if (l.conjuncts.isEmpty) return Some(AllRows)
     for (c <- l.conjuncts) {
       if (!c.deterministic) return None
       if (c.exists(_.isInstanceOf[PlanExpression[_]])) return None
     }
     val refIds = l.conjuncts.flatMap(_.references).map(_.exprId).toSet
-    val pAttr = l.rel.output.find(
-      _.name.equalsIgnoreCase(occ.partitionCol))
+    val pAttr = l.rel.output.find(_.name.equalsIgnoreCase(partitionCol))
     pAttr match {
       case Some(p) if refIds == Set(p.exprId) =>
         return Some(ByValue(p, l.conjuncts))
       case _ =>
     }
-    occ.transform match {
+    transform match {
       case Some(t @ (DaysOf(_) | MonthsOf(_))) =>
         val src = l.rel.output.find(
           _.name.equalsIgnoreCase(t.sourceCol)).getOrElse(return None)
@@ -675,10 +666,9 @@ object StatsAgg {
     * the moment any node could change rows or values in a way the
     * metadata fold cannot reproduce. */
   private def walk(p: LogicalPlan, conj: Seq[Expression],
-      need: Map[ExprId, ExprId],
-      occs: Seq[OccTable]): Option[Seq[LeafInfo]] = p match {
+      need: Map[ExprId, ExprId]): Option[Seq[LeafInfo]] = p match {
     case f: Filter =>
-      walk(f.child, conj ++ splitAnd(f.condition), need, occs)
+      walk(f.child, conj ++ splitAnd(f.condition), need)
     case pr: Project =>
       val passThrough: Map[ExprId, AttributeReference] =
         pr.projectList.collect {
@@ -699,7 +689,7 @@ object StatsAgg {
       })
       if (conjMapped.exists(_.references.exists(r =>
         computed.contains(r.exprId)))) return None
-      walk(pr.child, conjMapped, needMapped.flatten.toMap, occs)
+      walk(pr.child, conjMapped, needMapped.flatten.toMap)
     case u: Union =>
       val results = u.children.map { ch =>
         val pos: Map[ExprId, Attribute] =
@@ -712,7 +702,7 @@ object StatsAgg {
           case a: AttributeReference if pos.contains(a.exprId) =>
             pos(a.exprId)
         })
-        walk(ch, conjMapped, needMapped, occs)
+        walk(ch, conjMapped, needMapped)
       }
       if (results.exists(_.isEmpty)) None
       else Some(results.flatMap(_.get))
@@ -724,24 +714,13 @@ object StatsAgg {
         case (top, cur) => rel.output.find(_.exprId == cur).map(top -> _)
       }
       if (resolve.size != need.size) return None
-      // the leaf must belong to a known occurrence AND live in exactly
-      // one snapshot dir under that occurrence's root
-      val snap = rel.relation match {
-        case fs: HadoopFsRelation =>
-          val owner = occs.find(_.rels.exists(_ eq rel.relation))
-            .getOrElse(return None)
-          val rootAbs =
-            new java.io.File(owner.root).getAbsolutePath.stripSuffix("/") + "/"
-          val snaps = fs.location.rootPaths.map { rp =>
-            val up = rp.toUri.getPath
-            if (!up.startsWith(rootAbs)) return None
-            up.stripPrefix(rootAbs).split('/').headOption.getOrElse(
-              return None)
-          }.distinct
-          snaps match { case Seq(one) => one; case _ => return None }
-        case _ => return None
+      // a manifest read, not narrowed to a file list (stats cover
+      // whole partitions)
+      rel match {
+        case ManifestFileIndex.Scan(_, ix) if ix.keepFiles.isEmpty =>
+          Some(Seq(LeafInfo(rel, ix, conj, resolve)))
+        case _ => None
       }
-      Some(Seq(LeafInfo(rel, snap, conj, resolve)))
     case _ => None
   }
 }

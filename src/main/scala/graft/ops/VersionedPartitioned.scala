@@ -44,25 +44,13 @@ import org.apache.spark.sql.types.StructType
  */
 object VersionedPartitioned {
 
-  /** Decode Spark/Hive partition-path escaping (`%xx` hex sequences,
-    * e.g. `2024%3A01` → `2024:01`) — the inverse of the escaping the
-    * parquet writer applies to partition dir names. Kept local so the
-    * sidecar-backed and fallback-scan paths of `partitionStats` emit
-    * the same RAW value form without depending on Catalyst internals. */
-  private[ops] def unescapePathName(s: String): String = {
-    if (!s.contains('%')) return s
-    val sb = new StringBuilder(s.length)
-    var i = 0
-    while (i < s.length) {
-      val c = s.charAt(i)
-      if (c == '%' && i + 2 < s.length) {
-        val hex = s.substring(i + 1, i + 3)
-        try { sb.append(Integer.parseInt(hex, 16).toChar); i += 3 }
-        catch { case _: NumberFormatException => sb.append(c); i += 1 }
-      } else { sb.append(c); i += 1 }
-    }
-    sb.toString
-  }
+  /** A manifest dir name's partition VALUE (`date=2024-01-01` →
+    * `2024-01-01`), with the `%xx` escaping the parquet writer applies
+    * to dir names decoded (`2024%3A01` → `2024:01`) — what partition
+    * keeps are given. */
+  private[ops] def partitionValue(dir: String): String =
+    org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
+      .unescapePathName(dir.substring(dir.indexOf('=') + 1))
 
   private val Marker = "graft-manifest v1"
   private val TagPrefix = "tag:"
@@ -337,7 +325,7 @@ object VersionedPartitioned {
           }
       }
     rows.map { case (pd, f, n) =>
-      (unescapePathName(pd.stripPrefix(m.partitionCol + "=")), f, n)
+      (partitionValue(pd), f, n)
     }.toDF(m.partitionCol, "file_path", "record_count")
       .orderBy(m.partitionCol, "file_path")
   }
@@ -352,7 +340,7 @@ object VersionedPartitioned {
     import org.apache.spark.sql.functions.{coalesce, count, lit, sum, typedLit}
     val m = manifestAt(spark, root, None)
     val delCounts: Map[String, Int] = m.deletes.map { case (pd, ds) =>
-      unescapePathName(pd.stripPrefix(m.partitionCol + "=")) -> ds.size
+      partitionValue(pd) -> ds.size
     }
     filesDf(spark, root)
       .groupBy(col(m.partitionCol))
@@ -484,9 +472,9 @@ object VersionedPartitioned {
     * a SINGLE partition's read — a one-dir listing plus the snapshot's
     * recorded `_schema`, never the full-manifest construction.
     * Post-evolution physical schemas can differ per snapshot, but
-    * `readManifest`'s `unionByName` contract means every snapshot frame
-    * resolves to the same evolved column set, so any one partition
-    * answers for the table. The cheap path for callers that need column types before
+    * `readManifest`'s union-by-name contract means every evolution
+    * group resolves to the same evolved column set, so any one
+    * partition answers for the table. The cheap path for callers that need column types before
     * planning a pruned read (`HiddenPartition` literal mapping). */
   def tableSchema(spark: SparkSession,
       root: String): org.apache.spark.sql.types.StructType = {
@@ -927,8 +915,7 @@ object VersionedPartitioned {
       // INSERT means union: the overlapped partitions' current rows
       // (delete sidecars and metadata-evolved defaults applied by the
       // manifest read) join the new rows inside the same snapshot dirs
-      val vals = overlap.map(d =>
-        unescapePathName(d.substring(d.indexOf('=') + 1)))
+      val vals = overlap.map(partitionValue)
       readPartitionsWhere(spark, root, vals.contains)
         .select(df.columns.map(c => col(s"`$c`")): _*)
         .transform(clusterForWrite(_, partitionCol))
@@ -995,8 +982,7 @@ object VersionedPartitioned {
     val overlap = latestManifest(spark, root)
       .map(_._2.entries.keySet.intersect(written)).getOrElse(Set.empty)
     if (overlap.nonEmpty) {
-      val vals = overlap.map(d =>
-        unescapePathName(d.substring(d.indexOf('=') + 1)))
+      val vals = overlap.map(partitionValue)
       // survivors: the overlapped partitions' current rows MINUS any
       // row sharing a batch key — the upsert's delete half, applied
       // inside the same snapshot the insert half wrote
@@ -1018,10 +1004,11 @@ object VersionedPartitioned {
       written.map(_ -> snapName).toMap, tag))
   }
 
-  /** Read the latest committed state: one immutable-parquet scan per
-    * referenced snapshot dir (partition values recovered from dir
-    * names via basePath), unioned by name. A frame resolved here is
-    * pinned — later promotes do not change what it scans. */
+  /** Read the latest committed state: one parquet scan over a
+    * `ManifestFileIndex` per evolution group (normally one for the
+    * whole table), partition values typed from the recorded schema. A
+    * frame resolved here is pinned — later promotes do not change what
+    * it scans. */
   def read(spark: SparkSession, root: String): DataFrame =
     readManifest(spark, root, manifestAt(spark, root, None))
 
@@ -1031,27 +1018,18 @@ object VersionedPartitioned {
 
   /**
    * MANIFEST-level partition pruning: read only the live partitions
-   * whose (unescaped) partition VALUE satisfies `keep`. Catalyst prunes
-   * partition dirs inside each snapshot scan from a pushed filter, but
-   * the union is still built one branch per referenced snapshot — on a
-   * year-deep history a trailing-window read would carry hundreds of
-   * no-op branches just to list them. Filtering the manifest FIRST
-   * builds the union from only the surviving entries, so snapshots
-   * contributing no in-range partition never enter the plan at all
-   * (driver-side set filter over the entry map — zero I/O). ISO date
-   * values compare correctly as strings, so range keeps are plain
-   * string bounds. An empty survivor set returns an empty frame with
-   * the table schema.
+   * whose (unescaped) partition VALUE satisfies `keep` — a driver-side
+   * set filter over the entry map, so the index lists only the kept
+   * partition dirs and snapshots contributing no kept partition are
+   * never touched. ISO date values compare correctly as strings, so
+   * range keeps are plain string bounds. An empty survivor set returns
+   * an empty frame with the table schema, listing nothing.
    */
   def readPartitionsWhere(spark: SparkSession, root: String,
       keep: String => Boolean, version: Option[Long] = None): DataFrame = {
     val m = manifestAt(spark, root, version)
-    val kept = m.entries.filter { case (dir, _) =>
-      keep(unescapePathName(dir.substring(dir.indexOf('=') + 1)))
-    }
-    if (kept.isEmpty)
-      readManifest(spark, root, m)
-        .where(org.apache.spark.sql.functions.lit(false))
+    val kept = entriesWhere(m, keep)
+    if (kept.isEmpty) readNone(spark, root, m)
     else readManifest(spark, root, m.copy(entries = kept))
   }
 
@@ -1404,25 +1382,23 @@ object VersionedPartitioned {
 
   /** Fill metadata-evolved columns a snapshot's files predate: each
     * (name, default) applies only when the frame lacks the column
-    * physically. Applied per snapshot frame BEFORE the union, because
+    * physically. Applied per evolution group BEFORE the union, because
     * snapshots written before and after an evolution differ in
     * physical schema.
     *
-    * Destructive rules (DROP / RENAME) are scoped by the snapshot's
-    * recorded schema generation: a rule whose index is below `gen`
-    * was already in effect when the snapshot was written, so its
-    * physical schema reflects it — replaying it would destroy REAL
-    * data (DROP c → ADD c: a later promote's genuine c values would
-    * be dropped and refilled with the ADD default; re-adding a
-    * renamed-away name would clobber it again). Snapshots from
-    * manifests predating the gen block parse to gen 0 — full replay,
-    * the pre-scoping behavior. AddCol/WidenCol stay gen-unscoped:
-    * their contains-column guards make replay idempotent, and they
-    * keep filling defaults for post-evolution promotes that omitted
-    * the column. */
+    * Destructive rules (DROP / RENAME) are scoped by the group's
+    * schema generation `gen`: a rule whose index is below `gen` was
+    * already in effect when the snapshot was written, so its physical
+    * schema reflects it — replaying it would destroy REAL data (DROP c
+    * → ADD c: a later promote's genuine c values would be dropped and
+    * refilled with the ADD default; re-adding a renamed-away name
+    * would clobber it again). Snapshots from manifests predating the
+    * gen block parse to gen 0 — full replay, the pre-scoping behavior.
+    * AddCol/WidenCol stay gen-unscoped: their contains-column guards
+    * make replay idempotent, and they keep filling defaults for
+    * post-evolution promotes that omitted the column. */
   private def applyAddedCols(df: DataFrame, m: Manifest,
-      snap: String): DataFrame = {
-    val gen = m.snapGens.getOrElse(snap, 0)
+      gen: Int): DataFrame =
     m.evolution.zipWithIndex.foldLeft(df) {
       case (d, (AddCol(n, default), _)) =>
         if (d.columns.contains(n)) d
@@ -1441,40 +1417,39 @@ object VersionedPartitioned {
             org.apache.spark.sql.types.DataType.fromDDL(t)))
         else d
     }
-  }
 
-  /** Spark's parallel-partition-discovery threshold defaults to 32
-    * paths — above it, constructing a multi-dir read launches a Spark
-    * JOB just to list directories. Manifest reads name their partition
-    * dirs EXPLICITLY (the listing is one `listStatus` per known dir,
-    * no discovery walk), so for the few-hundred-dir reads this engine
-    * plans, driver-side listing is ~6× cheaper than the job (measured
-    * 0.84 s → 0.15 s constructing a 240-dir snapshot read). Raise the
-    * threshold once per session — but only when it still holds Spark's
-    * default, so an explicit user setting always wins; past 1024 dirs
-    * the distributed listing kicks back in (object-store listings at
-    * that width are where the job pays for itself). */
-  private val DiscoveryKey = "spark.sql.sources.parallelPartitionDiscovery.threshold"
-  private def tuneListing(spark: SparkSession): Unit =
-    if (spark.conf.getOption(DiscoveryKey).forall(_ == "32"))
-      spark.conf.set(DiscoveryKey, "1024")
-
+  /** Read manifest `m`'s entries: one `ManifestFileIndex` scan per
+    * evolution group, each with its evolution rules replayed, unioned
+    * by name, then the merge-on-read deletes. Only the `_schema` of
+    * each referenced snapshot is read here; partition dirs are listed
+    * when the plan first needs files or sizes. */
   private def readManifest(spark: SparkSession, root: String,
       m: Manifest): DataFrame = {
     require(m.entries.nonEmpty,
       s"manifest under $root has no live partitions (schema unknowable)")
-    tuneListing(spark)
-    val rootPath = new HPath(root)
-    val frames = m.entries.groupBy(_._2).toSeq.sortBy(_._1).map {
-      case (snap, parts) =>
-        val base = new HPath(rootPath, snap).toString
-        applyAddedCols(
-          Versioned.readDir(spark, base,
-            parts.keys.toSeq.sorted.map(p => s"$base/$p")),
-          m, snap)
-    }
-    val out = frames.reduce(_.unionByName(_))
-    applyMorDeletes(spark, rootPath, m, m.entries.keySet, out)
+    readIndexes(spark, root, m, ManifestFileIndex.groups(spark, root, m))
+  }
+
+  private def readIndexes(spark: SparkSession, root: String, m: Manifest,
+      indexes: Seq[ManifestFileIndex]): DataFrame =
+    applyMorDeletes(spark, new HPath(root), m,
+      indexes.flatMap(_.entries.keys).toSet,
+      indexes.map(ix => applyAddedCols(ix.frame, m, ix.gen))
+        .reduce(_.unionByName(_)))
+
+  /** The empty read of `m`: its first snapshot's group narrowed to no
+    * partition — the table schema (in the column order a full read
+    * has), no rows, no listing — under a false filter, so the optimizer
+    * plans it as the empty relation it is. */
+  private def readNone(spark: SparkSession, root: String,
+      m: Manifest): DataFrame = {
+    require(m.entries.nonEmpty,
+      s"manifest under $root has no live partitions (schema unknowable)")
+    val first = m.entries.values.min
+    readIndexes(spark, root, m, ManifestFileIndex.groups(spark, root,
+      m.copy(entries = m.entries.filter(_._2 == first)))
+      .map(_.narrowed(_ => false)))
+      .where(org.apache.spark.sql.functions.lit(false))
   }
 
   /** Merge-on-read delete resolution shared by the full manifest read
@@ -1493,10 +1468,8 @@ object VersionedPartitioned {
     if (scoped.isEmpty) out
     else {
       import org.apache.spark.sql.functions.col
-      def valueOf(dir: String) =
-        unescapePathName(dir.substring(dir.indexOf('=') + 1))
       val byDel = scoped.toSeq
-        .flatMap { case (p, ds) => ds.map(_ -> valueOf(p)) }
+        .flatMap { case (p, ds) => ds.map(_ -> partitionValue(p)) }
         .groupMap(_._1)(_._2)
       val keys = byDel.toSeq.sortBy(_._1).map { case (d, parts) =>
         Versioned.readDir(spark, new HPath(rootPath, d).toString)
@@ -1544,13 +1517,22 @@ object VersionedPartitioned {
       bounds: Seq[(String, Option[Any], Option[Any])],
       keep: String => Boolean = _ => true,
       version: Option[Long] = None,
-      points: Seq[(String, Seq[Any])] = Nil): Seq[(String, String)] = {
+      points: Seq[(String, Seq[Any])] = Nil): Seq[(String, String)] =
+    filesWhere(spark, root, entriesWhere(manifestAt(spark, root, version),
+      keep), bounds, points)
+
+  /** `m`'s entries whose unescaped partition VALUE passes `keep`. */
+  private def entriesWhere(m: Manifest,
+      keep: String => Boolean): Map[String, String] =
+    m.entries.filter(e => keep(partitionValue(e._1)))
+
+  /** `prunedFilesWhere` over already-kept manifest `entries`. */
+  private[ops] def filesWhere(spark: SparkSession, root: String,
+      entries: Map[String, String],
+      bounds: Seq[(String, Option[Any], Option[Any])],
+      points: Seq[(String, Seq[Any])]): Seq[(String, String)] = {
     import org.apache.spark.sql.functions.{lit, substring_index}
-    val m = manifestAt(spark, root, version)
     val (fs, rootPath) = Versioned.fsOf(spark, root)
-    val entries = m.entries.filter { case (dir, _) =>
-      keep(unescapePathName(dir.substring(dir.indexOf('=') + 1)))
-    }
     entries.groupBy(_._2).toSeq.sortBy(_._1).flatMap { case (snap, parts) =>
       val partDirs = parts.keys.toSeq
       val snapPath = new HPath(rootPath, snap)
@@ -1654,20 +1636,20 @@ object VersionedPartitioned {
     * statement's bounds. */
   def statsCoveredCols(spark: SparkSession, root: String,
       version: Option[Long] = None): Set[String] =
-    coveredCols(spark, root, version, "min_")
+    coveredCols(spark, root, manifestAt(spark, root, version).entries, "min_")
 
   /** Columns with a `bloom_` sidecar filter in at least one referenced
     * snapshot — the SQL door's census for deciding whether an
     * equality/IN conjunct is worth a bloom-probed file skip. */
   def bloomCoveredCols(spark: SparkSession, root: String,
       version: Option[Long] = None): Set[String] =
-    coveredCols(spark, root, version, "bloom_")
+    coveredCols(spark, root, manifestAt(spark, root, version).entries,
+      "bloom_")
 
-  private def coveredCols(spark: SparkSession, root: String,
-      version: Option[Long], prefix: String): Set[String] = {
-    val m = manifestAt(spark, root, version)
+  private[ops] def coveredCols(spark: SparkSession, root: String,
+      entries: Map[String, String], prefix: String): Set[String] = {
     val (fs, rootPath) = Versioned.fsOf(spark, root)
-    m.entries.values.toSet[String].flatMap { snap =>
+    entries.values.toSet[String].flatMap { snap =>
       val statsPath = new HPath(new HPath(rootPath, snap),
         Versioned.StatsDirName)
       if (!fs.exists(statsPath)) Set.empty[String]
@@ -1718,16 +1700,23 @@ object VersionedPartitioned {
       aggs: Seq[StatsAggSpec],
       partKeep: Option[(String, String) => Option[Boolean]] = None,
       groupBy: Option[(String, org.apache.spark.sql.types.DataType)] = None,
-      version: Option[Long] = None): Option[DataFrame] = {
+      version: Option[Long] = None): Option[DataFrame] =
+    aggregateFromStats(spark, root, manifestAt(spark, root, version), aggs,
+      partKeep, groupBy)
+
+  /** `aggregateFromStats` over an already-resolved manifest (the one a
+    * plan's `ManifestFileIndex` read). */
+  private[ops] def aggregateFromStats(spark: SparkSession, root: String,
+      m: Manifest, aggs: Seq[StatsAggSpec],
+      partKeep: Option[(String, String) => Option[Boolean]],
+      groupBy: Option[(String, org.apache.spark.sql.types.DataType)])
+      : Option[DataFrame] = {
     import org.apache.spark.sql.functions.{broadcast, coalesce, lit, substring_index, sum => fsum, min => fmin, max => fmax}
     import org.apache.spark.sql.types.LongType
-    val m = manifestAt(spark, root, version)
     val (fs, rootPath) = Versioned.fsOf(spark, root)
-    def valueOf(dir: String): String =
-      unescapePathName(dir.substring(dir.indexOf('=') + 1))
     // 1. kept entries (bail on any undecidable partition)
     val keptDecisions = m.entries.toSeq.map { case (dir, snap) =>
-      partKeep.map(f => f(valueOf(dir), snap)).getOrElse(Some(true))
+      partKeep.map(f => f(partitionValue(dir), snap)).getOrElse(Some(true))
         .map(k => (dir, snap, k))
     }
     if (keptDecisions.exists(_.isEmpty)) return None
@@ -1794,7 +1783,7 @@ object VersionedPartitioned {
     def dirVals(gType: org.apache.spark.sql.types.DataType):
         Option[Seq[(String, Any)]] = Some(kept.map(_._1).distinct.map {
       dir =>
-        val v = valueOf(dir)
+        val v = partitionValue(dir)
         if (dir.endsWith("__HIVE_DEFAULT_PARTITION__")) dir -> null
         else {
           val parsed = org.apache.spark.sql.catalyst.expressions.Cast(
@@ -1905,51 +1894,25 @@ object VersionedPartitioned {
 
   /** The generalized pruned read: `prunedFilesWhere`'s partition keep
     * + multi-column file skip, materialized as a scan of exactly the
-    * surviving files. Shares `readPruned`'s contract (surviving files
-    * still carry non-matching rows; callers apply the real predicate
-    * on top) and its merge-on-read delete scoping. */
+    * surviving files (each group's index narrowed to them). Shares
+    * `readPruned`'s contract (surviving files still carry non-matching
+    * rows; callers apply the real predicate on top). Merge-on-read
+    * deletes apply to the pruned view too — a key deleted via sidecar
+    * must not resurface because its file survived stats pruning —
+    * scoped to the kept partitions, as in the full read. */
   def readPrunedWhere(spark: SparkSession, root: String,
       bounds: Seq[(String, Option[Any], Option[Any])],
       keep: String => Boolean = _ => true,
       version: Option[Long] = None,
       points: Seq[(String, Seq[Any])] = Nil): DataFrame = {
     val m = manifestAt(spark, root, version)
-    readFileList(spark, root, m,
-      prunedFilesWhere(spark, root, bounds, keep, version, points))
-  }
-
-  /** `readFileList` resolving the manifest itself — the SQL door's
-    * entry (it computes the file census separately for its
-    * narrows-anything check, then reads exactly that list). */
-  private[ops] def readFileList(spark: SparkSession, root: String,
-      keep: Seq[(String, String)], version: Option[Long]): DataFrame =
-    readFileList(spark, root, manifestAt(spark, root, version), keep)
-
-  /** Read an explicit `(snapshot, partition-relative file)` list (the
-    * `prunedFilesWhere` shape) against manifest `m` — the shared tail
-    * of the pruned reads, also used by the SQL door after it has
-    * already paid for the file census. */
-  private def readFileList(spark: SparkSession, root: String,
-      m: Manifest, keep: Seq[(String, String)]): DataFrame = {
-    if (keep.isEmpty)
-      return readManifest(spark, root, m)
-        .where(org.apache.spark.sql.functions.lit(false))
-    val rootPath = new HPath(root)
-    val frames = keep.groupBy(_._1).toSeq.sortBy(_._1).map {
-      case (snap, files) =>
-        val base = new HPath(rootPath, snap).toString
-        applyAddedCols(
-          Versioned.readDir(spark, base, files.map(f => s"$base/${f._2}")),
-          m, snap)
-    }
-    // merge-on-read deletes apply to the pruned view too — a key
-    // deleted via sidecar must not resurface just because its file
-    // survived stats pruning. Scoped to the partitions the kept files
-    // belong to, same contract as the full read.
-    val keptDirs = keep.map(_._2.takeWhile(_ != '/')).toSet
-    applyMorDeletes(spark, rootPath, m,
-      m.entries.keySet.filter(keptDirs.contains),
-      frames.reduce(_.unionByName(_)))
+    val kept = filesWhere(spark, root, entriesWhere(m, keep), bounds, points)
+    if (kept.isEmpty) return readNone(spark, root, m)
+    val dirs = kept.map(_._2.takeWhile(_ != '/')).toSet
+    val files = kept.map { case (snap, f) => s"$snap/$f" }.toSet
+    readIndexes(spark, root, m, ManifestFileIndex.groups(spark, root,
+      m.copy(entries = m.entries.filter(e => dirs(e._1))))
+      .map(_.narrowed(_ => true, Some(files))))
   }
 
   /**
@@ -1978,44 +1941,46 @@ object VersionedPartitioned {
       s"manifest under $root has no live partitions (schema unknowable)")
     val (fs, rootPath) = Versioned.fsOf(spark, root)
     val dirExpr = substring_index(col("__file"), "/", 1)
-    val frames = m.entries.groupBy(_._2).toSeq.sortBy(_._1).map {
+    val sidecars = m.entries.groupBy(_._2).toSeq.sortBy(_._1).map {
       case (snap, parts) =>
-        val partDirs = parts.keys.toSeq
-        val snapPath = new HPath(rootPath, snap)
-        val statsPath = new HPath(snapPath, Versioned.StatsDirName)
-        val sidecar =
-          (if (fs.exists(statsPath))
+        val statsPath = new HPath(new HPath(rootPath, snap),
+          Versioned.StatsDirName)
+        parts -> (if (fs.exists(statsPath))
              Some(Versioned.readDir(spark, statsPath.toString)) else None)
-            .filter(st => Seq("__rows", s"min_$colName", s"max_$colName")
-              .forall(st.columns.contains))
-        sidecar match {
-          case Some(st) =>
-            // metadata path: dir name → UNESCAPED partition value, via
-            // a literal map (metadata-sized), so values Spark
-            // URL-escapes in dir names (e.g. ':') come out identical
-            // to the fallback path's raw column cast
-            val valueOf = org.apache.spark.sql.functions.typedLit(
-              partDirs.map(p => p -> unescapePathName(
-                p.stripPrefix(m.partitionCol + "="))).toMap)
-            st.where(dirExpr.isin(partDirs: _*))
-              .groupBy(org.apache.spark.sql.functions
-                .element_at(valueOf, dirExpr).as(m.partitionCol))
-              .agg(sum(col("__rows")).as("n_rows"),
-                min(col(s"min_$colName")).as(s"min_$colName"),
-                max(col(s"max_$colName")).as(s"max_$colName"))
-          case None =>
-            // conservative path: scan ONLY this snapshot's referenced
-            // partitions (stats-less or pre-row-count sidecar)
-            val base = snapPath.toString
-            applyAddedCols(Versioned.readDir(spark, base,
-              partDirs.sorted.map(p => s"$base/$p")), m, snap)
-              .groupBy(col(m.partitionCol).cast("string").as(m.partitionCol))
-              .agg(count(lit(1)).as("n_rows"),
-                min(col(colName)).as(s"min_$colName"),
-                max(col(colName)).as(s"max_$colName"))
-        }
+          .filter(st => Seq("__rows", s"min_$colName", s"max_$colName")
+            .forall(st.columns.contains))
     }
-    // each partition lives in exactly one snapshot group; the final
+    // metadata path: dir name → UNESCAPED partition value, via a
+    // literal map (metadata-sized), so values Spark URL-escapes in dir
+    // names (e.g. ':') come out identical to the fallback path's raw
+    // column cast
+    val fromSidecars = sidecars.collect { case (parts, Some(st)) =>
+      val partDirs = parts.keys.toSeq
+      val valueOf = org.apache.spark.sql.functions.typedLit(
+        partDirs.map(p => p -> partitionValue(p)).toMap)
+      st.where(dirExpr.isin(partDirs: _*))
+        .groupBy(org.apache.spark.sql.functions
+          .element_at(valueOf, dirExpr).as(m.partitionCol))
+        .agg(sum(col("__rows")).as("n_rows"),
+          min(col(s"min_$colName")).as(s"min_$colName"),
+          max(col(s"max_$colName")).as(s"max_$colName"))
+    }
+    // conservative path: ONE scan per evolution group over only the
+    // partitions of stats-less (or pre-row-count) snapshots
+    val uncovered = sidecars.collect { case (parts, None) => parts }
+      .flatten.toMap
+    val fromData =
+      if (uncovered.isEmpty) None
+      else Some(ManifestFileIndex.groups(spark, root,
+          m.copy(entries = uncovered))
+        .map(ix => applyAddedCols(ix.frame, m, ix.gen))
+        .reduce(_.unionByName(_))
+        .groupBy(col(m.partitionCol).cast("string").as(m.partitionCol))
+        .agg(count(lit(1)).as("n_rows"),
+          min(col(colName)).as(s"min_$colName"),
+          max(col(colName)).as(s"max_$colName")))
+    val frames = fromSidecars ++ fromData
+    // each partition comes from exactly one of the frames; the final
     // fold is metadata-sized and only normalizes the union
     frames.reduce(_.unionByName(_))
       .groupBy(col(m.partitionCol))
@@ -2046,9 +2011,7 @@ object VersionedPartitioned {
     val changed = mTo.entries.filter { case (p, snap) =>
       !mFrom.get(p).contains(snap)
     }
-    if (changed.isEmpty)
-      readManifest(spark, root, mTo)
-        .where(org.apache.spark.sql.functions.lit(false))
+    if (changed.isEmpty) readNone(spark, root, mTo)
     else
       readManifest(spark, root,
         Manifest(mTo.partitionCol, changed, mTo.tag, mTo.evolution,
@@ -2134,9 +2097,9 @@ object VersionedPartitioned {
     }
     val (oldSide, newSide) =
       (side(fromEntries, fromDeletes), side(mTo.entries, mTo.deletes))
-    val anchor = newSide.orElse(oldSide).getOrElse(
-      readManifest(spark, root, mTo)) // nothing changed: schema-only read
-    val empty = anchor.where(org.apache.spark.sql.functions.lit(false))
+    val empty = newSide.orElse(oldSide)
+      .map(_.where(org.apache.spark.sql.functions.lit(false)))
+      .getOrElse(readNone(spark, root, mTo))
     (oldSide.getOrElse(empty), newSide.getOrElse(empty))
   }
 
@@ -2181,9 +2144,7 @@ object VersionedPartitioned {
   def deletePartitionValues(spark: SparkSession, root: String,
       values: Set[String], tag: Option[String] = None): Option[Long] = {
     val m0 = manifestAt(spark, root, None)
-    val affected = m0.entries.keySet.filter { d =>
-      values.contains(unescapePathName(d.substring(d.indexOf('=') + 1)))
-    }
+    val affected = m0.entries.keySet.filter(d => values(partitionValue(d)))
     if (affected.isEmpty) return currentVersion(spark, root)
     Some(claimLoop(spark, root) { latest =>
       val (pv, m) = latest.get
@@ -2364,9 +2325,7 @@ object VersionedPartitioned {
       .collect().map(_.getString(0)).toSet
     claimLoop(spark, root) { latest =>
       val (pv, m) = latest.get
-      def valueOf(dir: String) =
-        unescapePathName(dir.substring(dir.indexOf('=') + 1))
-      val affected = m.entries.keys.filter(d => touched.contains(valueOf(d)))
+      val affected = m.entries.keys.filter(d => touched.contains(partitionValue(d)))
       val newDel = m.deletes ++ affected.map(d =>
         d -> (m.deletes.getOrElse(d, Nil) :+ delName))
       (pv + 1, render(m.copy(tag = tag, deletes = newDel)))
@@ -2406,9 +2365,7 @@ object VersionedPartitioned {
     val (fs, rootPath) = Versioned.fsOf(spark, root)
     val m0 = manifestAt(spark, root, None)
     val pcol = m0.partitionCol
-    def valueOf(dir: String) =
-      unescapePathName(dir.substring(dir.indexOf('=') + 1))
-    val affectedDirs = m0.entries.keySet.filter(d => affected(valueOf(d)))
+    val affectedDirs = m0.entries.keySet.filter(d => affected(partitionValue(d)))
     val snapName = writeSnapshot(replacement, rootPath, pcol, statsCols,
       bloomCols = bloomCols, clusterBy = clusterBy,
       maxRecordsPerFile = maxRecordsPerFile, writers = writers)
@@ -2572,8 +2529,8 @@ object VersionedPartitioned {
   }
 
   /** Distinct snapshot dirs the latest manifest references — the
-    * union fan-in every `read` pays (one parquet scan per referenced
-    * snapshot). A metadata-sized answer from one commit-file read. */
+    * fan-in every `read` pays in `_schema` reads and small files. A
+    * metadata-sized answer from one commit-file read. */
   def referencedSnapshots(spark: SparkSession, root: String): Int =
     manifestAt(spark, root, None).entries.values.toSet.size
 
@@ -2583,10 +2540,10 @@ object VersionedPartitioned {
    * than `maxSnapshots` distinct snapshot dirs, consolidate — into ONE
    * fresh snapshot — only the partitions living in the SMALLEST
    * snapshot groups, keeping the largest `maxSnapshots - 1` groups
-   * untouched. `readManifest` builds one scan per referenced snapshot,
-   * so a year of daily single-partition promotes would otherwise
-   * accumulate a ~365-way union plan; calling this after (or
-   * periodically between) promotes bounds the plan width at
+   * untouched. A year of daily single-partition promotes would
+   * otherwise reference ~365 snapshot dirs, each a `_schema` read per
+   * `read` and its own small files; calling this after (or
+   * periodically between) promotes bounds that fan-in at
    * `maxSnapshots` while leaving the common fast path — a promote that
    * did NOT widen the manifest — at one commit-file read and zero data
    * I/O. Returns the compaction's version when it ran.

@@ -17,4 +17,12 @@ object Internals {
   def ofRows(spark: SparkSession, plan: LogicalPlan): DataFrame =
     org.apache.spark.sql.classic.Dataset.ofRows(
       spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession], plan)
+
+  /** `ofRows` for a plan already resolved — a rewrite of an analyzed
+    * plan that only swaps leaves for same-schema ones — marked
+    * analyzed so the analyzer does not run over it again. */
+  def ofAnalyzed(spark: SparkSession, plan: LogicalPlan): DataFrame = {
+    plan.setAnalyzed()
+    ofRows(spark, plan)
+  }
 }

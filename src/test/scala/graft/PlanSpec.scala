@@ -417,4 +417,34 @@ class PlanSpec extends AnyFunSuite {
     val r = cs.select("analyzed_version", "current_version").head()
     assert(r.getLong(0) == r.getLong(1))
   }
+
+  test("a partition-filtered door join keeps the ANALYZE broadcast hint") {
+    import spark.implicits._
+    val root = java.nio.file.Files
+      .createTempDirectory("graft_cbo_filtered_").toString
+    val life = new graft.ops.SqlLifecycle(spark, root)
+    life.execute("CREATE SCHEMA s")
+    life.execute("""CREATE TABLE s.facts (k BIGINT, part STRING, v BIGINT)
+      USING ICEBERG PARTITIONED BY (part)""")
+    life.execute("""CREATE TABLE s.dim (k BIGINT, part STRING, name STRING)
+      USING ICEBERG PARTITIONED BY (part)""")
+    (1L to 2000L).map(i => (i, s"p${i % 4}", i * 3))
+      .toDF("k", "part", "v").createOrReplaceTempView("facts_src_f")
+    (1L to 50L).map(i => (i, s"p${i % 2}", s"n$i"))
+      .toDF("k", "part", "name").createOrReplaceTempView("dim_src_f")
+    life.execute("INSERT INTO s.facts SELECT * FROM facts_src_f")
+    life.execute("INSERT INTO s.dim SELECT * FROM dim_src_f")
+    life.execute("ANALYZE TABLE s.dim COMPUTE STATISTICS FOR COLUMNS k")
+    val q = "SELECT f.k, d.name FROM s.facts f JOIN s.dim d ON f.k = d.k"
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    try {
+      for (text <- Seq(q, q + " WHERE d.part = 'p1'")) {
+        val plan = life.query(text).queryExecution.executedPlan.toString
+        assert(plan.contains("BroadcastHashJoin"), s"$text\nplan:\n$plan")
+      }
+      // and the narrowed statement answers the filtered rows
+      val narrowed = life.query(q + " WHERE d.part = 'p1'")
+      assert(narrowed.count() == 25)
+    } finally spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
+  }
 }

@@ -1580,4 +1580,62 @@ class VersionedSpec extends AnyFunSuite {
     assert(Versioned.publish(spark, root, "b") == 4L)
     assert(Versioned.read(spark, root).as[Int].collect().toSeq == Seq(20))
   }
+
+  private def relations(frame: org.apache.spark.sql.DataFrame) =
+    frame.queryExecution.optimizedPlan.collect {
+      case l: org.apache.spark.sql.execution.datasources.LogicalRelation => l
+    }
+
+  test("a manifest read leaves the session conf alone and runs no job") {
+    val root = Files.createTempDirectory("graft_vp").toString
+    // 40 single-day promotes: 40 snapshots, 40 partitions
+    (1 to 40).foreach(d => VersionedPartitioned.promote(
+      pdf(java.time.LocalDate.of(2024, 1, 1).plusDays(d).toString -> d), root))
+    val key = "spark.sql.sources.parallelPartitionDiscovery.threshold"
+    spark.conf.set(key, "32")
+    try {
+      val (frame, jobs) =
+        Jobs.during(spark)(VersionedPartitioned.read(spark, root))
+      assert(spark.conf.get(key) == "32", "a read must not retune the session")
+      assert(jobs == 0)
+      assert(frame.count() == 40)
+    } finally spark.conf.unset(key)
+  }
+
+  test("plan width: one scan per evolution group at any history depth") {
+    val root = Files.createTempDirectory("graft_vp").toString
+    val days = (1 to 6).map(d => f"2024-01-$d%02d")
+    days.foreach(d => VersionedPartitioned.promote(pdf(d -> d.takeRight(2).toInt), root))
+    assert(relations(VersionedPartitioned.read(spark, root)).size == 1)
+    assert(relations(VersionedPartitioned.readAt(spark, root, 4L)).size == 1)
+    assert(state(VersionedPartitioned.readAt(spark, root, 4L)) ==
+      days.take(4).map(d => d -> d.takeRight(2).toInt).toSet)
+    // a metadata-only ADD COLUMN, then promotes carrying the column
+    // physically: two groups (before / after), one scan each
+    VersionedPartitioned.evolveAddColumnMetaOnly(spark, root, "src", "'old'")
+    Seq("2024-01-07", "2024-01-08").foreach(d => VersionedPartitioned.promote(
+      Seq((d, d.takeRight(2).toInt, "new")).toDF("date", "v", "src"), root))
+    val evolved = VersionedPartitioned.read(spark, root)
+    assert(relations(evolved).size == 2)
+    assert(evolved.selectExpr("cast(date as string)", "v", "src").collect()
+      .map(r => (r.getString(0), r.getInt(1), r.getString(2))).toSet ==
+      (days.map(d => (d, d.takeRight(2).toInt, "old")) ++
+        Seq(("2024-01-07", 7, "new"), ("2024-01-08", 8, "new"))).toSet)
+  }
+
+  test("readPartitionsWhere: an empty survivor set lists no partition dir") {
+    val root = Files.createTempDirectory("graft_vp").toString
+    Seq("2024-01-01", "2024-01-02", "2024-01-03").foreach(d =>
+      VersionedPartitioned.promote(pdf(d -> d.takeRight(2).toInt), root))
+    val schema = VersionedPartitioned.read(spark, root).schema
+    // take the partition dirs away: a read that lists one fails
+    val fs = new HPath(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    fs.globStatus(new HPath(root, "snap-*/date=*")).foreach(s =>
+      assert(fs.delete(s.getPath, true)))
+    val none = VersionedPartitioned.readPartitionsWhere(spark, root,
+      _ > "2025-01-01")
+    assert(none.schema == schema)
+    assert(none.inputFiles.isEmpty)
+    assert(none.count() == 0)
+  }
 }

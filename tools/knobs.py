@@ -1,7 +1,8 @@
 #!/usr/bin/env python3
 """Knob census: every "spark.graft.*" key the engine source names must be
 documented in README's Configuration section, and every documented key
-must still be in the source.
+must still be in the source. Every session conf write (`conf.set(`) must
+be one README allows.
 
 Usage: python3 tools/knobs.py
 
@@ -9,7 +10,11 @@ Lists each key string found under src/main/scala with the places it
 occurs, then compares that set with the README list: the bullets of the
 "## Configuration" section name live keys, and the bullets after its
 "Retired keys" paragraph name retired ones (still in the source, only to
-reject them). Exits 1 when the sets differ.
+reject them). Then lists every `conf.set(` call under src/main/scala
+with its key argument and checks it against the bullets after the
+section's "Session conf writes" paragraph, each naming a source file
+(relative to src/main/scala) and the key argument it may set. Exits 1
+when the key sets differ or a write is not allowed.
 """
 import pathlib
 import re
@@ -18,6 +23,8 @@ import sys
 ROOT = pathlib.Path(__file__).resolve().parent.parent
 KEY = re.compile(r'"(spark\.graft\.[A-Za-z0-9_.]+)"')
 DOC_KEY = re.compile(r"`(spark\.graft\.[A-Za-z0-9_.]+)`")
+CONF_SET = re.compile(r"conf\.set\(\s*([^,]+?)\s*,")
+SRC = ROOT / "src/main/scala"
 
 
 def source_keys():
@@ -30,17 +37,43 @@ def source_keys():
     return found
 
 
-def readme_keys():
-    """(live, retired) keys named at the head of each Configuration bullet:
-    the keys before the bullet's ' — ' separator."""
+def conf_writes():
+    """(file, key argument, line) of every `conf.set(` call."""
+    found = []
+    for path in sorted(SRC.rglob("*.scala")):
+        text = path.read_text()
+        for m in CONF_SET.finditer(text):
+            found.append((str(path.relative_to(SRC)), m.group(1),
+                          text.count("\n", 0, m.start()) + 1))
+    return found
+
+
+def readme_section():
     text = (ROOT / "README.md").read_text()
     section = re.search(r"^## Configuration\n(.*?)(?=^## )", text,
                         re.S | re.M)
     if not section:
         sys.exit("README.md has no '## Configuration' section")
+    return section.group(1)
+
+
+def allowed_writes():
+    """(file, key argument) pairs: the two code spans at the head of each
+    bullet after the "Session conf writes" paragraph."""
+    body = readme_section().split("\nSession conf writes", 1)
+    if len(body) < 2:
+        sys.exit("README.md Configuration has no 'Session conf writes' list")
+    return {tuple(re.findall(r"`([^`]+)`", line)[:2])
+            for line in body[1].splitlines() if line.startswith("- ")}
+
+
+def readme_keys():
+    """(live, retired) keys named at the head of each Configuration bullet:
+    the keys before the bullet's ' — ' separator."""
     live, retired, current = set(), set(), None
     bullets = []
-    for line in section.group(1).splitlines():
+    for line in readme_section().split("\nSession conf writes")[0] \
+            .splitlines():
         if line.startswith("Retired keys"):
             current = retired
         elif line.startswith("- "):
@@ -65,7 +98,15 @@ def main():
         print(f"UNDOCUMENTED: {key} at {', '.join(found[key])}")
     for key in unread:
         print(f"NOT IN SOURCE: {key} is listed in README's Configuration")
-    if undocumented or unread or live & retired:
+    allowed = allowed_writes()
+    writes = conf_writes()
+    print(f"session conf writes ({len(writes)}):")
+    for path, arg, n in writes:
+        print(f"  {path}:{n}  {arg}")
+    unlisted = [w for w in writes if w[:2] not in allowed]
+    for path, arg, n in unlisted:
+        print(f"UNLISTED CONF WRITE: {path}:{n} sets {arg}")
+    if undocumented or unread or live & retired or unlisted:
         sys.exit(1)
     print("knobs: OK")
 
