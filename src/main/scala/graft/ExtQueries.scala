@@ -4858,7 +4858,7 @@ object ExtQueries {
 
   /**
    * Iceberg metadata-table gate, `history` suffix
-   * (ops/SqlLifecycle.resolveMetadataTables →
+   * (ops/SqlLifecycle.metadataTable →
    * VersionedPartitioned.historyDf): a three-commit script — base
    * insert, one-month copy-on-write UPDATE, new-month INSERT — read
    * back through the query door's `sales.facts.history` suffix. The
@@ -4882,7 +4882,7 @@ object ExtQueries {
 
   /**
    * Iceberg metadata-table gate, `partitions` × `files` suffixes
-   * (ops/SqlLifecycle.resolveMetadataTables →
+   * (ops/SqlLifecycle.metadataTable →
    * VersionedPartitioned.partitionsDf/filesDf): per-partition row
    * counts from the partitions table must agree with the sum of the
    * files table's per-file `record_count` (consistent by construction

@@ -5,6 +5,7 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart,
   SparkListenerJobEnd, SparkListenerStageCompleted, SparkListenerTaskEnd}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
+import org.apache.spark.sql.catalyst.rules.RuleExecutor
 
 /** Optimization-round profiling harness (round 20): run one or more
   * registered queries with a listener that counts Spark jobs, stages and
@@ -12,7 +13,11 @@ import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
   * overhead separates from real compute. It also counts the Janino
   * compiles of generated classes and their compile seconds, JVM-wide:
   * the compiles mostly run inside tasks, so the listener's job time
-  * alone hides them. Not part of the driver contract; prints
+  * alone hides them. A second line per query gives Catalyst's share:
+  * rule runs and time over all rule executors, the time of the
+  * analyzer's rules (`catalyst.analysis`), and `ResolveRelations`'
+  * effective and total runs, all as deltas of Spark's process-wide
+  * rule metering. Not part of the driver contract; prints
   * human-readable lines, no JSON.
   *
   *   sbt "runMain graft.ProfileQuery <sfDir> <query>[,query...]"
@@ -100,6 +105,8 @@ object ProfileQuery {
       jobLines.clear(); stageLines.clear()
       val compiles0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
       val compileNs0 = CodeGenerator.compileTime
+      val meter0 = RuleExecutor.getCurrentMetrics()
+      val rules0 = ruleMeter()
       val t0 = System.nanoTime()
       val df = fn(spark, sfDir)
       val tBuilt = System.nanoTime()
@@ -114,6 +121,20 @@ object ProfileQuery {
         f"tasks $tasks, task-time ${taskMs / 1000.0}%.1f s, " +
         f"compiles ${CodegenMetrics.METRIC_COMPILATION_TIME.getCount - compiles0} " +
         f"(${(CodeGenerator.compileTime - compileNs0) / 1e9}%.2f s)")
+      val meter = RuleExecutor.getCurrentMetrics() - meter0
+      val rules = ruleMeter().map { case (r, (ns, eff, runs)) =>
+        val (ns0, eff0, runs0) = rules0.getOrElse(r, (0L, 0L, 0L))
+        r -> (ns - ns0, eff - eff0, runs - runs0)
+      }
+      val analyzerNs = rules.collect {
+        case (r, (ns, _, _)) if r.contains(".catalyst.analysis.") => ns
+      }.sum
+      val (_, rrEff, rrRuns) = rules.collectFirst {
+        case (r, m) if r.endsWith("$ResolveRelations") => m
+      }.getOrElse((0L, 0L, 0L))
+      println(f"[profile] $name: rules ${meter.numRuns} runs " +
+        f"${meter.time / 1e6}%.1f ms, analyzer ${analyzerNs / 1e6}%.1f ms, " +
+        f"ResolveRelations $rrEff effective / $rrRuns runs")
       import scala.jdk.CollectionConverters._
       if (sys.env.get("SPARK_GRAFT_PROFILE_JOBS").contains("1"))
         jobLines.asScala.toSeq.foreach(println)
@@ -122,5 +143,15 @@ object ProfileQuery {
       }
     }
     spark.stop()
+  }
+
+  /** Per rule: (total ns, effective runs, total runs), parsed from the
+    * process-wide metering table `RuleExecutor.dumpTimeSpent` prints
+    * (the per-rule counters have no other public accessor). */
+  private def ruleMeter(): Map[String, (Long, Long, Long)] = {
+    val RuleRow = """\s*(\S+)\s+\d+ / (\d+)\s+(\d+) / (\d+)\s*""".r
+    RuleExecutor.dumpTimeSpent().linesIterator.collect {
+      case RuleRow(rule, ns, eff, runs) => rule -> (ns.toLong, eff.toLong, runs.toLong)
+    }.toMap
   }
 }

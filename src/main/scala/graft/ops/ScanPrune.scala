@@ -12,7 +12,7 @@ import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRela
  * (reference `dags/dag.py:211,294,436`) — and through the Scala API
  * those reads prune at the MANIFEST level (`readPartitionsWhere`,
  * `HiddenPartition.readMultiWhere`). A routed statement resolves its
- * table views over the FULL current manifest; without narrowing, at
+ * tables to reads of the FULL current manifest; without narrowing, at
  * 100 TB every routed SELECT would plan (and for hidden-partitioned
  * tables, SCAN) the whole table.
  *

@@ -3,8 +3,12 @@ package graft.ops
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
-import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+import org.apache.spark.sql.catalyst.analysis.{AsOfTimestamp, AsOfVersion,
+  RelationTimeTravel, TimeTravelSpec, UnresolvedRelation}
+import org.apache.spark.sql.catalyst.plans.logical.{LocalRelation,
+  LogicalPlan, SubqueryAlias, UnresolvedWith}
 import org.apache.spark.sql.execution.datasources.HadoopFsRelation
+import org.apache.spark.sql.graft.Internals
 
 /**
  * SQL LIFECYCLE front door. The reference pipeline's entire interface
@@ -50,10 +54,11 @@ import org.apache.spark.sql.execution.datasources.HadoopFsRelation
  *    with partition-scoped write-back via `overwritePartitions` (see
  *    `mergeInto` for the supported clause shapes).
  *  - DROP TABLE → removes data and catalog entry.
- *  - anything else → `spark.sql` passthrough with every cataloged
- *    table registered as a temp view (qualified names rewritten to
- *    view-safe ones, longest-first, so `jakebuto.daily_stock_prices`
- *    in the reference text resolves).
+ *  - anything else → the query door (`query`): Spark parses the
+ *    statement, each cataloged name it reads (`jakebuto.daily_stock_prices`
+ *    in the reference text, time travel, branches, metadata tables,
+ *    door views) is replaced by its read in the parsed plan, and Spark
+ *    analyzes the result once.
  *
  * Catalog metadata (`_graft_table.meta`: DDL string + partition
  * column) lives inside each table directory, so a second session's
@@ -364,7 +369,6 @@ class SqlLifecycle(val spark: SparkSession, val root: String) {
     if (!"""(?is)^MERGE\s+(?:WITH\s+SCHEMA\s+EVOLUTION\s+)?INTO\s.*""".r
         .matches(rest)) return None
     // first USING outside string literals, scanned positionally
-    // (blankLiterals shortens literals, so its offsets don't map back)
     val srcStart = {
       var j = 0; var inStr = false; var at = -1
       while (at < 0 && j < rest.length - 6) {
@@ -407,29 +411,23 @@ class SqlLifecycle(val spark: SparkSession, val root: String) {
     Some(rewritten)
   }
 
-  /** The query door: `spark.sql` over the cataloged tables (each
-    * registered as a temp view under its view-safe name), with
-    * Iceberg's time-travel SQL sugar resolved first: `t VERSION AS OF
-    * n` and `t TIMESTAMP AS OF '<ts>'` on a cataloged partitioned
-    * table register a pinned-history view over the existing
-    * `readAt`/`readAsOf` machinery (manifest resolution is O(1) in
-    * table depth either way; `README.md:76` of the reference names the
-    * capability). Timestamps accept `yyyy-MM-dd HH:mm:ss[.SSS]` or
-    * ISO-8601 instants, interpreted in the session UTC. The statement
-    * is parsed and analyzed once. */
+  /** The query door: Spark's parser and analyzer over the cataloged
+    * tables. The statement is parsed once; `resolveReads` puts the read
+    * each cataloged name stands for in place of the name, including
+    * Spark's own time-travel syntax (`t VERSION AS OF n|'tag'`, `t
+    * TIMESTAMP AS OF '<ts>'`, the timestamp cast in the session time
+    * zone), Iceberg's `t.branch_<b>` and metadata-table suffixes, and
+    * door views; the plan is then analyzed once. No temp view is
+    * registered. */
   def query(sel: String): DataFrame = {
-    // the sugar first: a table named only by it (`t.history`, `t
-    // VERSION AS OF n`) needs no current read registered
-    val sugared = resolveAsOf(resolveMetadataTables(resolveBranchReads(sel)))
-    registerViewsFor(sugared)
-    val text = rewriteNames(sugared)
-    // a read the statement names twice (a self-join of one view) is
+    val parsed = Internals.ofRows(spark,
+      resolveReads(Internals.parse(spark, sel))).queryExecution.withCachedData
+    // a read the statement names twice (a self-join of one table) is
     // one relation instance under two leaves: each such leaf becomes
     // its own scan, so each scan narrows independently below (a
     // self-join with one filtered side prunes that side alone). A CTE
     // referenced twice stays one scan: its body is one leaf, inlined
     // twice.
-    val parsed = spark.sql(text).queryExecution.withCachedData
     val reads = parsed.collectWithSubqueries { case ManifestFileIndex.Scan(fs, _) => fs }
     var scans = 0
     val analyzed = parsed.transformUpWithSubqueries {
@@ -437,7 +435,7 @@ class SqlLifecycle(val spark: SparkSession, val root: String) {
         scans += 1
         l.copy(relation = fs.copy(location = ix.asScan(scans))(fs.sparkSession))
     }
-    val df = org.apache.spark.sql.graft.Internals.ofAnalyzed(spark, analyzed)
+    val df = Internals.ofAnalyzed(spark, analyzed)
     // metadata-only aggregates: count/min/max/sum over ONE partitioned
     // table read, filtered/grouped on its partition column at most,
     // fold from the `_stats` sidecars (StatsAgg has the legality
@@ -451,15 +449,15 @@ class SqlLifecycle(val spark: SparkSession, val root: String) {
     // constrained on its partition (or hidden-transform source)
     // columns — by literal, or by a join to a small dim (the DPP shape)
     // — or on a stats-covered data column gets its narrowed index
-    // swapped in under the projections, casts and hints the table's
-    // view put above it. `WHERE date = DATE '{{ ds }}'` then plans
-    // O(day), not O(table); a pinned read narrows its OLD manifest.
+    // swapped in under the projections, casts and hints its read put
+    // above it. `WHERE date = DATE '{{ ds }}'` then plans O(day), not
+    // O(table); a pinned read narrows its OLD manifest.
     // Every other scan goes back to its plain index, so equal reads
     // compare equal again (exchange reuse, cached data).
     val swaps = narrowScans(df)
     val pruned =
       if (swaps.isEmpty && scans == 0) df
-      else org.apache.spark.sql.graft.Internals.ofAnalyzed(spark,
+      else Internals.ofAnalyzed(spark,
         analyzed.transformUpWithSubqueries {
           case l @ ManifestFileIndex.Scan(fs, ix) =>
             swaps.collectFirst { case (r, narrowed) if r eq fs => narrowed }
@@ -478,7 +476,7 @@ class SqlLifecycle(val spark: SparkSession, val root: String) {
     val before = pruned.queryExecution.analyzed
     val routed = graft.plans.ApproxRouting(spark)(before)
     if (routed.fastEquals(before)) pruned
-    else org.apache.spark.sql.graft.Internals.ofRows(spark, routed)
+    else Internals.ofRows(spark, routed)
   }
 
   /** EXPLAIN [EXTENDED|FORMATTED|…] <query> through the statement
@@ -616,136 +614,137 @@ class SqlLifecycle(val spark: SparkSession, val root: String) {
     else None
   }
 
-  /** Iceberg's branch read suffix in query texts: `schema.table
-    * .branch_<b>` over a cataloged partitioned table with a live
-    * branch pointer registers the branch head's manifest read
-    * (snapshot-isolated, like every read) as a pinned view and
-    * substitutes its name — the WAP audit's `SELECT … FROM
-    * t.branch_audit` door. An unknown table or branch passes through
-    * untouched (Spark then fails resolution loudly). Substitution runs
-    * OUTSIDE string literals only (`mapOutsideLiterals`, the same
-    * contract as `rewriteNames`): a data string that happens to
-    * contain `schema.table.branch_x` ships unrewritten. */
-  private def resolveBranchReads(sel: String): String =
-    mapOutsideLiterals(sel, seg => BranchReadRe.replaceAllIn(seg, m => {
-      val t = m.group(1).toLowerCase
-      val b = m.group(2)
-      val meta = metaOf(t).filter(_.partitionCol.isDefined)
-      val ok = meta.isDefined &&
-        VersionedPartitioned.branchExists(spark, tableDir(t).toString, b)
-      if (!ok) m.matched
-      else {
-        val vn = viewName(t) + "__branch_" + b
-        VersionedPartitioned.readBranch(spark, tableDir(t).toString, b)
-          .select(meta.get.schema.fieldNames.map(c => col(s"`$c`")): _*)
-          .createOrReplaceTempView(vn)
-        scala.util.matching.Regex.quoteReplacement(vn)
+  /** Put the read each cataloged name in `plan` stands for in place of
+    * the name, under a `SubqueryAlias` of the name (so `s.t.col` and
+    * `t.col` resolve) — everywhere: subquery expressions, CTE bodies
+    * (which are not plan children) and door view bodies, parsed and
+    * resolved the same way, recursively. The forms:
+    *  - `schema.table`: the current snapshot (`readTable`, with the
+    *    ANALYZE broadcast hint);
+    *  - `… VERSION AS OF v` / `… TIMESTAMP AS OF ts` on a partitioned
+    *    table: the pinned snapshot (the statement-predicate pruner
+    *    narrows a pinned manifest like a current one). A version string
+    *    is a tag when such a tag exists, else a number, as in Iceberg;
+    *  - `schema.table.branch_<b>` with a live branch: the branch head —
+    *    the WAP audit's door;
+    *  - `schema.table.<metadata table>`: `metadataTable`;
+    *  - `schema.view`: the view body (a cycle fails, naming its views).
+    * Each (name, pin) is read once per statement, so a table named
+    * twice is one relation instance under two leaves. Anything else
+    * (an unknown table, branch or tag-less form) is left for Spark's
+    * analyzer to resolve or reject. */
+  private def resolveReads(plan: LogicalPlan): LogicalPlan = {
+    // (name, pin) → its read; a view's body fills in its own reads
+    // while its entry is being computed, which `getOrElseUpdate` allows
+    val reads = scala.collection.mutable.HashMap.empty[(String, String), LogicalPlan]
+    def alias(u: UnresolvedRelation, p: LogicalPlan) =
+      SubqueryAlias(u.multipartIdentifier.map(_.toLowerCase), p)
+    // `schema.table` spelled in plain identifiers (what the catalog root
+    // can hold), lowercased
+    def catalogName(parts: Seq[String]): Option[String] =
+      Some(parts).filter(ps => ps.size == 2 && ps.forall(_.matches("\\w+")))
+        .map(_.mkString(".").toLowerCase)
+    def partitioned(parts: Seq[String]): Option[(String, TableMeta)] =
+      catalogName(parts).flatMap(t =>
+        metaOf(t).filter(_.partitionCol.isDefined).map(t -> _))
+    def declared(df: DataFrame, meta: TableMeta) =
+      df.select(meta.schema.fieldNames.map(c => col(s"`$c`")): _*)
+        .queryExecution.analyzed
+    def walk(p: LogicalPlan, views: List[String]): LogicalPlan =
+      p.transformUpWithSubqueries {
+        case w: UnresolvedWith =>
+          w.copy(cteRelations = w.cteRelations.map { case (n, cte, depth) =>
+            (n, cte.copy(child = walk(cte.child, views)), depth)
+          })
+        case tt @ RelationTimeTravel(u: UnresolvedRelation, ts, v)
+            if ts.forall(_.resolved) =>
+          partitioned(u.multipartIdentifier).fold(tt: LogicalPlan) {
+            case (t, meta) =>
+              val path = tableDir(t).toString
+              val spec = TimeTravelSpec.create(ts, v,
+                spark.sessionState.conf.sessionLocalTimeZone).get
+              alias(u, reads.getOrElseUpdate((t, spec.toString), {
+                val version = spec match {
+                  case AsOfVersion(s) =>
+                    VersionedPartitioned.tagVersion(spark, path, s)
+                      .orElse(s.toLongOption).getOrElse(
+                        throw new IllegalArgumentException(
+                          s"$t VERSION AS OF '$s': no such tag"))
+                  case AsOfTimestamp(micros) =>
+                    VersionedPartitioned.versionAsOf(spark, path,
+                      Math.floorDiv(micros, 1000L))
+                }
+                declared(VersionedPartitioned.readAt(spark, path, version), meta)
+              }))
+          }
+        case u @ UnresolvedRelation(Seq(s, t, suffix), _, _) =>
+          partitioned(Seq(s, t)).fold(u: LogicalPlan) { case (n, meta) =>
+            val path = tableDir(n).toString
+            val branch = suffix.drop("branch_".length)
+            if (MetaTables(suffix.toLowerCase))
+              alias(u, reads.getOrElseUpdate((n, suffix.toLowerCase),
+                metadataTable(n, suffix.toLowerCase).queryExecution.analyzed))
+            else if (suffix.toLowerCase.startsWith("branch_") &&
+                VersionedPartitioned.branchExists(spark, path, branch))
+              alias(u, reads.getOrElseUpdate((n, suffix), declared(
+                VersionedPartitioned.readBranch(spark, path, branch), meta)))
+            else u
+          }
+        case u: UnresolvedRelation =>
+          catalogName(u.multipartIdentifier).fold(u: LogicalPlan) { n =>
+            metaOf(n) match {
+              case Some(meta) => alias(u, reads.getOrElseUpdate((n, ""),
+                readTable(n, meta, hinted = true).queryExecution.analyzed))
+              case None if java.nio.file.Files.exists(viewFile(n)) =>
+                if (views.contains(n))
+                  throw new IllegalArgumentException("view cycle: " +
+                    (views.reverse.dropWhile(_ != n) :+ n).mkString(" -> "))
+                alias(u, reads.getOrElseUpdate((n, "view"), walk(
+                  Internals.parse(spark, new String(
+                    java.nio.file.Files.readAllBytes(viewFile(n)), "UTF-8")),
+                  n :: views)))
+              case None => u
+            }
+          }
       }
-    }))
+    walk(plan, Nil)
+  }
 
-  /** Iceberg's metadata-table suffix syntax in the query door:
-    * `schema.table.history|snapshots|partitions|files` over a
-    * cataloged partitioned table registers the corresponding
-    * `VersionedPartitioned` metadata frame as a pinned view and
-    * substitutes its name. All four are METADATA queries — commit-log
-    * and sidecar/footer reads, zero data I/O (`filesDf` contract) —
-    * so they stay O(#versions + #files) small reads at any table
-    * size. `committed_at`/`made_current_at` are wall-clock and belong
-    * in no deterministic gate (same contract as `versionAsOf`). */
-  private def resolveMetadataTables(sel: String): String =
-    mapOutsideLiterals(sel, seg => MetaTableRe.replaceAllIn(seg, m => {
-      val t = m.group(1).toLowerCase
-      val kind = m.group(2).toLowerCase
-      val cataloged = metaOf(t).exists(_.partitionCol.isDefined)
-      val ok = cataloged &&
-        VersionedPartitioned.currentVersion(spark, tableDir(t).toString)
-          .isDefined
-      // a cataloged-but-never-written table has no commit log to
-      // answer from: fail loudly with the table named, like the other
-      // DDL routes, instead of passing through to an opaque
-      // unresolved-name error (or, worse, a bare NoSuchElementException
-      // from the head-version lookup)
-      if (cataloged && !ok)
-        throw new IllegalArgumentException(
-          s"$t.$kind: table has no committed snapshots yet")
-      if (!ok) m.matched
-      else {
-        val path = tableDir(t).toString
-        val df = kind match {
-          case "history" =>
-            val cur = VersionedPartitioned.currentVersion(spark, path).get
-            VersionedPartitioned.historyDf(spark, path)
-              .withColumn("is_current", col("version") === cur)
-          case "snapshots" =>
-            VersionedPartitioned.historyDf(spark, path)
-              .select(col("version").as("snapshot_id"),
-                col("committed_at"), col("n_partitions"), col("tag"))
-          case "partitions" => VersionedPartitioned.partitionsDf(spark, path)
-          case "files" => VersionedPartitioned.filesDf(spark, path)
-          case "column_stats" => VersionedPartitioned.columnStats(spark, path)
-          case "refs" =>
-            // Iceberg's `refs` metadata table: main + every live
-            // branch pointer with its head snapshot — one dir listing
-            import spark.implicits._
-            (("main", "BRANCH",
-              VersionedPartitioned.currentVersion(spark, path).get) +:
-              (VersionedPartitioned.branches(spark, path)
-                .map { case (b, v) => (b, "BRANCH", v) } ++
-                VersionedPartitioned.tags(spark, path)
-                  .map { case (t2, v) => (t2, "TAG", v) }))
-              .toDF("name", "type", "snapshot_id")
-        }
-        val vn = viewName(t) + "__meta_" + kind
-        df.createOrReplaceTempView(vn)
-        scala.util.matching.Regex.quoteReplacement(vn)
-      }
-    }))
-
-  /** Resolve the time-travel sugar to pinned view names, each
-    * registered as the pinned-version read (the statement-predicate
-    * pruner narrows a pinned manifest like a current one). (No literal
-    * guard here, unlike branch/metadata rewriting: the timestamp
-    * form's own pattern INCLUDES a quoted literal, which a
-    * mapOutsideLiterals segment would never contain.) */
-  private def resolveAsOf(sel: String): String = {
-    def pinned(tableName: String, suffix: String,
-        versionOf: String => Long): Option[String] = {
-      val t = tableName.toLowerCase
-      metaOf(t).filter(_.partitionCol.isDefined).map { meta =>
-        val vn = viewName(t) + suffix
-        val path = tableDir(t).toString
-        VersionedPartitioned.readAt(spark, path, versionOf(path))
-          .select(meta.schema.fieldNames.map(c => col(s"`$c`")): _*)
-          .createOrReplaceTempView(vn)
-        vn
-      }
+  /** Iceberg's metadata tables over a partitioned table's commit log:
+    * `history|snapshots|partitions|files|column_stats|refs`. All are
+    * METADATA queries — commit-log and sidecar/footer reads, zero data
+    * I/O (`filesDf` contract) — so they stay O(#versions + #files)
+    * small reads at any table size. `committed_at`/`made_current_at`
+    * are wall-clock and belong in no deterministic gate (same contract
+    * as `versionAsOf`). A cataloged-but-never-written table has no
+    * commit log to answer from: that fails loudly, naming the table. */
+  private def metadataTable(t: String, kind: String): DataFrame = {
+    val path = tableDir(t).toString
+    val cur = VersionedPartitioned.currentVersion(spark, path).getOrElse(
+      throw new IllegalArgumentException(
+        s"$t.$kind: table has no committed snapshots yet"))
+    kind match {
+      case "history" =>
+        VersionedPartitioned.historyDf(spark, path)
+          .withColumn("is_current", col("version") === cur)
+      case "snapshots" =>
+        VersionedPartitioned.historyDf(spark, path)
+          .select(col("version").as("snapshot_id"),
+            col("committed_at"), col("n_partitions"), col("tag"))
+      case "partitions" => VersionedPartitioned.partitionsDf(spark, path)
+      case "files" => VersionedPartitioned.filesDf(spark, path)
+      case "column_stats" => VersionedPartitioned.columnStats(spark, path)
+      case "refs" =>
+        // main + every live branch pointer with its head snapshot, and
+        // every tag — one dir listing each
+        import spark.implicits._
+        (("main", "BRANCH", cur) +:
+          (VersionedPartitioned.branches(spark, path)
+            .map { case (b, v) => (b, "BRANCH", v) } ++
+            VersionedPartitioned.tags(spark, path)
+              .map { case (t2, v) => (t2, "TAG", v) }))
+          .toDF("name", "type", "snapshot_id")
     }
-    val s0 = VersionAsOfRe.replaceAllIn(sel, m =>
-      scala.util.matching.Regex.quoteReplacement(
-        pinned(m.group(1), "__v" + m.group(2), _ => m.group(2).toLong)
-          .getOrElse(m.matched)))
-    // quoted form = a named TAG: resolve the ref, then pin exactly
-    // like the numeric form (pruning/metadata-agg compose for free)
-    val s1 = TagAsOfRe.replaceAllIn(s0, m =>
-      scala.util.matching.Regex.quoteReplacement(
-        // tag names allow dots; view names don't — sanitize the suffix
-        pinned(m.group(1), "__tag_" + m.group(2).replace('.', '_'), p =>
-          VersionedPartitioned.tagVersion(spark, p, m.group(2)).getOrElse(
-            throw new IllegalArgumentException(
-              s"${m.group(1)} VERSION AS OF '${m.group(2)}': no such tag")))
-          .getOrElse(m.matched)))
-    TimestampAsOfRe.replaceAllIn(s1, m => {
-      val raw = m.group(2)
-      val ms =
-        try java.time.Instant.parse(raw).toEpochMilli
-        catch { case _: java.time.format.DateTimeParseException =>
-          java.time.LocalDateTime.parse(raw.replace(' ', 'T'))
-            .toInstant(java.time.ZoneOffset.UTC).toEpochMilli }
-      scala.util.matching.Regex.quoteReplacement(
-        pinned(m.group(1), "__ts" + ms, p =>
-          VersionedPartitioned.versionAsOf(spark, p, ms))
-          .getOrElse(m.matched))
-    })
   }
 
   /** Current contents of a cataloged table. */
@@ -889,8 +888,8 @@ class SqlLifecycle(val spark: SparkSession, val root: String) {
   /** CREATE [OR REPLACE] VIEW — a named statement text in the catalog
     * (`<schema>/<view>.graft_view.sql`), resolved lazily at query time
     * against the then-current tables. Views may reference tables and
-    * other views (registration iterates to a fixpoint, so definition
-    * order does not matter; cycles fail with the unresolved names). */
+    * other views in any definition order; a cycle fails when a query
+    * reads it, naming the views in it. */
   private def createView(name: String, body: String,
       orReplace: Boolean): Unit = {
     require(metaOf(name).isEmpty,
@@ -2560,44 +2559,54 @@ class SqlLifecycle(val spark: SparkSession, val root: String) {
 
   // ---------------------------------------------------------- reading —
 
-  private def readTable(name: String, meta: TableMeta): DataFrame =
+  /** Contents of a cataloged table. A partitioned table's head comes
+    * from one listing and one commit read, and the version read is the
+    * version checked against the CACHE TABLE pin and, when `hinted`,
+    * by the ANALYZE broadcast decision. */
+  private def readTable(name: String, meta: TableMeta,
+      hinted: Boolean = false): DataFrame =
     meta.partitionCol match {
       case Some(_) =>
         val path = tableDir(name).toString
-        val cur = VersionedPartitioned.currentVersion(spark, path)
-        cachedTables.get(name) match {
-          case Some((df, v)) if cur.contains(v) => return df
-          case Some(_) =>
+        val head = VersionedPartitioned.latestManifest(spark, path)
+        val version = head.map(_._1)
+        val df = cachedTables.get(name) match {
+          case Some((df, v)) if version.contains(v) => df
+          case cached =>
             // the table advanced past the cached snapshot: drop +
             // unpersist (CACHE TABLE pins a snapshot, not a
             // subscription — re-CACHE to pin the new head)
-            uncacheTable(name)
-          case None =>
+            if (cached.isDefined) uncacheTable(name)
+            // a truncated table has a manifest with zero live
+            // partitions — the format read refuses (schema unknowable
+            // from data), but the catalog knows the declared schema
+            head.map(_._2).filter(_.entries.nonEmpty) match {
+              case Some(m) =>
+                // a snapshot without a recorded `_schema` (written
+                // before schemas were recorded) falls back to
+                // partition-value inference, which can type a dir value
+                // more eagerly than the declaration (a date-parseable
+                // STRING key reads back DATE); the CATALOG is the
+                // contract, so mismatched columns conform by cast.
+                // Matching columns — every table in the gates — select
+                // untouched, so plans (and the metadata-fold/prune
+                // walks) are unchanged there; a conformed column's
+                // statements degrade to the scan, correct-but-slower,
+                // never mistyped.
+                val raw = VersionedPartitioned.readManifest(spark, path, m)
+                val rawTypes = raw.schema.fields
+                  .map(f => f.name.toLowerCase -> f.dataType).toMap
+                raw.select(meta.schema.fields.map { f =>
+                  val c = col(s"`${f.name}`")
+                  if (rawTypes.get(f.name.toLowerCase).contains(f.dataType)) c
+                  else c.cast(f.dataType).as(f.name)
+                }: _*)
+              case None => emptyDf(meta.schema)
+            }
         }
-        // a truncated table has a manifest with zero live partitions —
-        // the format read refuses (schema unknowable from data), but
-        // the catalog knows the declared schema
-        if (cur.isDefined &&
-            VersionedPartitioned.partitions(spark, path).nonEmpty) {
-          // a snapshot without a recorded `_schema` (written before
-          // schemas were recorded) falls back to partition-value
-          // inference, which can type a dir value more eagerly than
-          // the declaration (a date-parseable STRING key reads back
-          // DATE); the CATALOG is the contract, so
-          // mismatched columns conform by cast. Matching columns —
-          // every table in the gates — select untouched, so plans
-          // (and the metadata-fold/prune walks) are unchanged there;
-          // a conformed column's statements degrade to the scan,
-          // correct-but-slower, never mistyped.
-          val raw = VersionedPartitioned.read(spark, path)
-          val rawTypes = raw.schema.fields
-            .map(f => f.name.toLowerCase -> f.dataType).toMap
-          raw.select(meta.schema.fields.map { f =>
-            val c = col(s"`${f.name}`")
-            if (rawTypes.get(f.name.toLowerCase).contains(f.dataType)) c
-            else c.cast(f.dataType).as(f.name)
-          }: _*)
-        } else emptyDf(meta.schema)
+        if (hinted && version.exists(statsSaysBroadcast(path, _)))
+          df.hint("broadcast")
+        else df
       case None =>
         mviewDefOf(name) match {
           case Some(d) =>
@@ -2656,114 +2665,26 @@ class SqlLifecycle(val spark: SparkSession, val root: String) {
     else None
   }
 
-  /** Register ONLY the cataloged tables and views the statement (or,
-    * transitively, a referenced view's body) actually names, each as a
-    * temp view under its view-safe name (dots are illegal in temp view
-    * names). A statement touching one table resolves one manifest —
-    * router overhead is O(names referenced), never O(catalog size), so
-    * per-statement cost stays flat as the catalog grows (at 100×
-    * tables the old register-everything pass made EVERY statement pay
-    * #tables manifest resolutions). Name detection uses rewriteNames'
-    * own match rule (name not followed by a word char, string literals
-    * blanked first) plus the view-safe form, so anything the rewriter
-    * would touch is guaranteed registered. Views iterate to a fixpoint
-    * so they may reference each other in any definition order (a cycle
-    * or a broken body among the REFERENCED views fails with the
-    * unresolved names; unreferenced broken views no longer poison
-    * unrelated statements). */
-  private def registerViewsFor(sql: String): Unit = {
-    val ts = tables().toSet
-    val vs = views().toSet
-    val universe = (ts ++ vs).toSeq
-    def refs(text: String): Set[String] = {
-      val t = blankLiterals(stripComments(text))
-      universe.filter { n =>
-        nameRe(n).findFirstIn(t).isDefined ||
-          nameRe(viewName(n)).findFirstIn(t).isDefined
-      }.toSet
-    }
-    var needed = refs(sql)
-    var frontier = needed.intersect(vs)
-    while (frontier.nonEmpty) {
-      val next = frontier.flatMap { v =>
-        refs(new String(
-          java.nio.file.Files.readAllBytes(viewFile(v)), "UTF-8"))
-      } -- needed
-      needed ++= next
-      frontier = next.intersect(vs)
-    }
-    needed.intersect(ts).toSeq.sorted.foreach { t =>
-      val meta = metaOf(t).get
-      val base = readTable(t, meta)
-      val hinted =
-        if (statsSaysBroadcast(t, meta)) base.hint("broadcast") else base
-      hinted.createOrReplaceTempView(viewName(t))
-    }
-    var pending = needed.intersect(vs).toSeq.sorted
-    var progress = true
-    while (pending.nonEmpty && progress) {
-      val still = pending.filter { v =>
-        val body = new String(
-          java.nio.file.Files.readAllBytes(viewFile(v)), "UTF-8")
-        try {
-          spark.sql(rewriteNames(resolveAsOf(body)))
-            .createOrReplaceTempView(viewName(v))
-          false
-        } catch { case _: Exception => true }
-      }
-      progress = still.size < pending.size
-      pending = still
-    }
-    require(pending.isEmpty,
-      s"views failed to resolve: ${pending.mkString(", ")}")
-  }
-
   /** Stats-driven broadcast decision — the CBO use of the ANALYZE
-    * surface: a cataloged partitioned table whose CURRENT version has
-    * committed stats under the size threshold registers with a
-    * broadcast hint, so any join against it in the query door plans as
-    * a broadcast join even when `spark.sql.autoBroadcastJoinThreshold`
-    * is off (size-unknown scans are exactly why users turn it off —
-    * analyzed sizes are known). Stale stats (any commit since the
+    * surface: a partitioned table whose read `version` has committed
+    * stats under the size threshold reads with a broadcast hint, so
+    * any join against it in the query door plans as a broadcast join
+    * even when `spark.sql.autoBroadcastJoinThreshold` is off
+    * (size-unknown scans are exactly why users turn it off — analyzed
+    * sizes are known). Stats of an older version (any commit since the
     * analyze) are IGNORED, never trusted: the decision degrades to
     * Spark's defaults rather than broadcasting a table that has since
     * grown. The check is file metadata only (a dir listing, then one
     * footer-sized read for analyzed tables); threshold conf
     * `spark.graft.analyze.broadcastThreshold` (bytes, ≤0 disables),
     * default 10 MB — Spark's own auto-broadcast default. */
-  private def statsSaysBroadcast(t: String, meta: TableMeta): Boolean =
-    meta.partitionCol.isDefined && {
-      val threshold = spark.conf
-        .getOption("spark.graft.analyze.broadcastThreshold")
-        .map(_.toLong).getOrElse(10L * 1024 * 1024)
-      threshold > 0 && VersionedPartitioned
-        .statsBytesIfCurrent(spark, tableDir(t).toString)
-        .exists(_ <= threshold)
-    }
-
-  // boundary on BOTH sides: without the lookbehind, one table's
-  // view-safe name matching as a word-char-adjacent suffix of another's
-  // (b.t -> b__t inside ab__t) would corrupt the longer name
-  private def nameRe(n: String) =
-    ("(?i)(?<![\\w])" + java.util.regex.Pattern.quote(n) + "(?![\\w])").r
-
-  /** Rewrite qualified table AND view names to their view-safe forms,
-    * longest name first so `s.t_stg_x` never half-matches `s.t` —
-    * outside single-quoted string literals only, so a data string that
-    * happens to contain a table name ships unrewritten. */
-  private def rewriteNames(sql: String): String = {
-    val names = (tables() ++ views()).sortBy(-_.length)
-    mapOutsideLiterals(sql, seg =>
-      names.foldLeft(seg) { (acc, t) =>
-        // leading boundary: an UNCATALOGED `ab.t` must not have a
-        // cataloged `b.t` rewritten inside it (`ab__t` would then
-        // silently bind the wrong table)
-        acc.replaceAll("(?i)(?<![\\w])" + java.util.regex.Pattern.quote(t) +
-          "(?![\\w])", viewName(t))
-      })
+  private def statsSaysBroadcast(path: String, version: Long): Boolean = {
+    val threshold = spark.conf
+      .getOption("spark.graft.analyze.broadcastThreshold")
+      .map(_.toLong).getOrElse(10L * 1024 * 1024)
+    threshold > 0 && VersionedPartitioned
+      .statsBytesIfCurrent(spark, path, version).exists(_ <= threshold)
   }
-
-  private def viewName(t: String): String = t.replace(".", "__")
 
   // WAL discipline on DOOR OPEN: roll back any cataloged table whose
   // head carries an incomplete transaction (a crash inside a COMMIT
@@ -2814,9 +2735,7 @@ object SqlLifecycle {
   private val LiteralRe = "'(?:[^']|'')*'".r
 
   /** Apply `f` to the stretches of `sql` OUTSIDE string literals,
-    * leaving literal bytes untouched — the splitter the name rewriter
-    * and the reference scanner share, so what one rewrites the other
-    * is guaranteed to have registered. */
+    * leaving literal bytes untouched. */
   private def mapOutsideLiterals(sql: String, f: String => String): String = {
     val sb = new StringBuilder
     var last = 0
@@ -2825,19 +2744,6 @@ object SqlLifecycle {
       last = m.end
     }
     sb.append(f(sql.substring(last)))
-    sb.toString
-  }
-
-  /** Collapse every string literal to `''` (for reference scanning —
-    * a table name inside a data string is data, not a reference). */
-  private def blankLiterals(sql: String): String = {
-    val sb = new StringBuilder
-    var last = 0
-    for (m <- LiteralRe.findAllMatchIn(sql)) {
-      sb.append(sql.substring(last, m.start)).append("''")
-      last = m.end
-    }
-    sb.append(sql.substring(last))
     sb.toString
   }
 
@@ -2958,14 +2864,6 @@ object SqlLifecycle {
     }
     throw new IllegalArgumentException("unbalanced parentheses in USING (…)")
   }
-  // both spellings of each travel clause: Spark/Delta's bare
-  // `VERSION AS OF` / `TIMESTAMP AS OF` and the ANSI-style
-  // `FOR SYSTEM_VERSION AS OF` / `FOR SYSTEM_TIME AS OF` Iceberg
-  // documents — one regex each, the FOR prefix optional
-  private val VersionAsOfRe =
-    """(?i)([\w.]+)\s+(?:FOR\s+SYSTEM_VERSION\s+|VERSION\s+)AS\s+OF\s+(\d+)""".r
-  private val TagAsOfRe =
-    """(?i)([\w.]+)\s+(?:FOR\s+SYSTEM_VERSION\s+|VERSION\s+)AS\s+OF\s+'([A-Za-z0-9_.]+)'""".r
   private val AlterTagRe =
     ("""(?is)^\s*ALTER\s+TABLE\s+([\w.]+)\s+""" +
       """(CREATE(?:\s+OR\s+REPLACE)?|DROP)\s+TAG\s+([A-Za-z0-9_.]+)""" +
@@ -2974,8 +2872,6 @@ object SqlLifecycle {
     ("""(?is)^\s*ALTER\s+TABLE\s+([\w.]+)\s+WRITE\s+""" +
       """(?:ORDERED\s+BY\s+\(?\s*([\w\s,]+?)\s*\)?|(UNORDERED))""" +
       """\s*;?\s*$""").r
-  private val TimestampAsOfRe =
-    """(?i)([\w.]+)\s+(?:FOR\s+SYSTEM_TIME\s+|TIMESTAMP\s+)AS\s+OF\s+'([^']+)'""".r
   private val InsertRe =
     """(?is)^\s*INSERT\s+INTO\s+([\w.]+)\s+(.*)$""".r
   // Spark's snapshot-pinning cache verbs (LAZY defers materialization
@@ -3079,9 +2975,9 @@ object SqlLifecycle {
   // one CALL argument: optional `name =>`, then a 'quoted' or bare value
   private val CallArgRe =
     """(?s)^\s*(?:(\w+)\s*=>\s*)?(?:'([^']*)'|([^\s].*?))\s*$""".r
-  // `schema.table.<metadata table>` suffix form in query texts
-  private val MetaTableRe =
-    """(?i)\b([\w]+\.[\w]+)\.(history|snapshots|partitions|files|column_stats|refs)\b""".r
+  // Iceberg's metadata tables, read as `schema.table.<name>`
+  private val MetaTables =
+    Set("history", "snapshots", "partitions", "files", "column_stats", "refs")
   private val AnalyzeRe =
     ("""(?is)^\s*ANALYZE\s+TABLE\s+([\w.]+)\s+COMPUTE\s+STATISTICS""" +
       """(?:\s+FOR\s+(ALL)\s+COLUMNS|\s+FOR\s+COLUMNS\s+(.+?))?\s*;?\s*$""").r
@@ -3093,9 +2989,6 @@ object SqlLifecycle {
   private val InsertOverwriteBranchRe =
     ("""(?is)^\s*INSERT\s+OVERWRITE\s+(?:TABLE\s+)?""" +
       """([\w]+\.[\w]+)\.branch_(\w+)\s+(.*)$""").r
-  // Iceberg's branch read suffix in query texts: `schema.table.branch_<b>`
-  private val BranchReadRe =
-    """(?i)\b([\w]+\.[\w]+)\.branch_(\w+)\b""".r
   private val DescribeRe =
     """(?is)^\s*(?:DESCRIBE|DESC)\s+(?:TABLE\s+)?([\w.]+)\s*;?\s*$""".r
   private val InsertOverwriteRe =

@@ -353,15 +353,23 @@ object Versioned {
 
   /** Parquet read of `paths` (default: the whole dir) under `base`, with
     * the schema `base` records; plain inference when it records none (a
-    * missing `base` still throws Spark's AnalysisException). A
-    * sub-dir/file read rides `base` as the `basePath` option so it
-    * keeps its partition column. */
+    * missing `base` still throws Spark's AnalysisException). A whole
+    * recorded dir is listed on the driver, so a dir with many partition
+    * dirs costs no discovery job. A sub-dir/file read rides `base` as
+    * the `basePath` option so it keeps its partition column. */
   private[graft] def readDir(spark: SparkSession, base: String,
       paths: Seq[String] = Nil): DataFrame = {
-    val reader0 =
-      if (paths.isEmpty) spark.read else spark.read.option("basePath", base)
-    val reader = recordedSchema(spark, base).fold(reader0)(reader0.schema)
-    reader.parquet((if (paths.isEmpty) Seq(base) else paths): _*)
+    val schema = recordedSchema(spark, base)
+    if (paths.isEmpty && schema.isDefined) {
+      val (fs, p) = fsOf(spark, base)
+      org.apache.spark.sql.graft.Internals.listedParquet(spark,
+        fs.makeQualified(p), schema.get)
+    } else {
+      val reader0 =
+        if (paths.isEmpty) spark.read else spark.read.option("basePath", base)
+      schema.fold(reader0)(reader0.schema)
+        .parquet((if (paths.isEmpty) Seq(base) else paths): _*)
+    }
   }
 
   /** The per-file stats table a `commit(statsCols = …)` wrote for

@@ -227,7 +227,7 @@ object VersionedPartitioned {
   /** Latest (version, manifest) with exactly one commit-file read — the
     * resolution every read/promote/merge/CDC call takes, regardless of
     * how many commits the table has accumulated. */
-  private def latestManifest(spark: SparkSession,
+  private[ops] def latestManifest(spark: SparkSession,
       root: String): Option[(Long, Manifest)] = {
     val (fs, rootPath) = Versioned.fsOf(spark, root)
     Versioned.latestRaw(fs, rootPath).map { case (v, c) => (v, parse(c)) }
@@ -455,18 +455,17 @@ object VersionedPartitioned {
 
   /** Stats-backed size estimate for broadcast planning: the analyzed
     * live-file byte count, ONLY when the stats are current (analyzed
-    * version == current version). Stale or missing stats → None — the
-    * planner falls back to Spark's own defaults rather than acting on
-    * a size that may be wrong. */
-  def statsBytesIfCurrent(spark: SparkSession, root: String): Option[Long] =
-    analyzedVersion(spark, root)
-      .filter(av => currentVersion(spark, root).contains(av))
-      .map { av =>
-        import org.apache.spark.sql.functions.max
-        val (_, rootPath) = Versioned.fsOf(spark, root)
-        Versioned.readDir(spark, analyzeDir(rootPath, av).toString)
-          .select(max(col("table_bytes"))).collect()(0).getLong(0)
-      }
+    * version == `current`, the head the caller reads). Stale or missing
+    * stats → None — the planner falls back to Spark's own defaults
+    * rather than acting on a size that may be wrong. */
+  def statsBytesIfCurrent(spark: SparkSession, root: String,
+      current: Long): Option[Long] =
+    analyzedVersion(spark, root).filter(_ == current).map { av =>
+      import org.apache.spark.sql.functions.max
+      val (_, rootPath) = Versioned.fsOf(spark, root)
+      Versioned.readDir(spark, analyzeDir(rootPath, av).toString)
+        .select(max(col("table_bytes"))).collect()(0).getLong(0)
+    }
 
   /** The table's READ schema (evolution rules applied), resolved from
     * a SINGLE partition's read — a one-dir listing plus the snapshot's
@@ -1423,7 +1422,7 @@ object VersionedPartitioned {
     * by name, then the merge-on-read deletes. Only the `_schema` of
     * each referenced snapshot is read here; partition dirs are listed
     * when the plan first needs files or sizes. */
-  private def readManifest(spark: SparkSession, root: String,
+  private[ops] def readManifest(spark: SparkSession, root: String,
       m: Manifest): DataFrame = {
     require(m.entries.nonEmpty,
       s"manifest under $root has no live partitions (schema unknowable)")

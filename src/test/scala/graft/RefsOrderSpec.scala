@@ -79,6 +79,77 @@ class RefsOrderSpec extends AnyFunSuite {
       life.execute("ALTER TABLE tg.t DROP TAG rel_1.0"))
   }
 
+  test("SQL door: names resolve on the parsed plan — literals, backticks and struct fields stay what Spark parsed") {
+    val root = Files.createTempDirectory("graft_names_").toString
+    val life = new SqlLifecycle(spark, root)
+    life.execute("CREATE SCHEMA s")
+    life.execute("CREATE TABLE s.t (d DATE, v BIGINT) " +
+      "USING ICEBERG PARTITIONED BY (d)")
+    life.execute("INSERT INTO s.t VALUES (DATE'2024-01-01', 1)")
+    // a double-quoted string is data, whatever it spells
+    assert(life.query("""SELECT "s.t" AS x""").as[String].collect().toSeq ==
+      Seq("s.t"))
+    // backticked parts name the cataloged table
+    assert(life.query("SELECT v FROM `s`.`t`").as[Long].collect().toSeq ==
+      Seq(1L))
+    // `s.t` on a struct column `s` is the field, not the table
+    assert(life.query(
+      "SELECT s.t AS f FROM (SELECT named_struct('t', 7) AS s)")
+      .as[Int].collect().toSeq == Seq(7))
+    // the read is aliased by its name: qualified columns resolve
+    assert(life.query("SELECT s.t.v, t.v FROM s.t").collect().toSeq ==
+      Seq(Row(1L, 1L)))
+  }
+
+  test("SQL door: a table read resolves the head it reads with one commit read") {
+    val root = Files.createTempDirectory("graft_headread_").toString
+    val life = new SqlLifecycle(spark, root)
+    life.execute("CREATE SCHEMA hr")
+    life.execute("CREATE TABLE hr.t (d DATE, v BIGINT) " +
+      "USING ICEBERG PARTITIONED BY (d)")
+    life.execute("INSERT INTO hr.t VALUES (DATE'2024-01-01', 1)")
+    life.execute("INSERT INTO hr.t VALUES (DATE'2024-01-02', 2)")
+    val before = graft.ops.Versioned.commitFileReads.get()
+    val df = life.query("SELECT v FROM hr.t")
+    assert(graft.ops.Versioned.commitFileReads.get() - before == 1)
+    assert(df.as[Long].collect().sorted.toSeq == Seq(1L, 2L))
+  }
+
+  test("SQL door: pinned, branch, metadata and view reads register no temp view; a view cycle names its views") {
+    val root = Files.createTempDirectory("graft_noviews_").toString
+    val life = new SqlLifecycle(spark, root)
+    life.execute("CREATE SCHEMA lk")
+    life.execute("CREATE TABLE lk.t (d DATE, v BIGINT) " +
+      "USING ICEBERG PARTITIONED BY (d)")
+    life.execute("INSERT INTO lk.t VALUES (DATE'2024-01-01', 1)")
+    life.execute("INSERT INTO lk.t VALUES (DATE'2024-01-02', 2)")
+    life.execute("ALTER TABLE lk.t CREATE TAG rel")
+    life.execute("ALTER TABLE lk.t CREATE BRANCH audit")
+    life.execute("CREATE VIEW lk.v AS SELECT v FROM lk.t WHERE v > 1")
+    val now = java.time.Instant.now().toString
+    val reads = Seq(
+      "SELECT v FROM lk.t VERSION AS OF 1" -> Seq(1L),
+      s"SELECT v FROM lk.t TIMESTAMP AS OF '$now'" -> Seq(1L, 2L),
+      "SELECT v FROM lk.t VERSION AS OF 'rel'" -> Seq(1L, 2L),
+      "SELECT v FROM lk.t.branch_audit" -> Seq(1L, 2L),
+      "SELECT version AS v FROM lk.t.history" -> Seq(1L, 2L),
+      "SELECT v FROM lk.v" -> Seq(2L))
+    reads.foreach { case (q, want) =>
+      assert(life.query(q).as[Long].collect().sorted.toSeq == want, q)
+    }
+    val views = spark.catalog.listTables().collect()
+      .filter(_.isTemporary).map(_.name).filter(_.contains("__"))
+    assert(views.isEmpty, s"temp views left behind: ${views.mkString(", ")}")
+
+    life.execute("CREATE VIEW lk.a AS SELECT * FROM lk.b")
+    life.execute("CREATE VIEW lk.b AS SELECT * FROM lk.a")
+    val cycle = intercept[IllegalArgumentException](
+      life.query("SELECT * FROM lk.a"))
+    assert(cycle.getMessage.contains("cycle") &&
+      cycle.getMessage.contains("lk.a") && cycle.getMessage.contains("lk.b"),
+      cycle.getMessage)
+  }
+
   test("WRITE ORDERED BY: ordered writes give disjoint file ranges; routed ranges skip files") {
     val root = Files.createTempDirectory("graft_worder_").toString
     val life = new SqlLifecycle(spark, root)

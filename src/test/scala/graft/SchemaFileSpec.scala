@@ -106,4 +106,24 @@ class SchemaFileSpec extends AnyFunSuite {
     assert(jobs == 4)
     assert(VersionedPartitioned.bloomCoveredCols(spark, root) == Set("id"))
   }
+
+  test("an exchange table with 40 partition dirs reads with zero jobs") {
+    val root = tmp("graft_exchange40_") + "/t"
+    val days = (0 until 40).map(d => java.sql.Date.valueOf(
+      java.time.LocalDate.of(2024, 1, 1).plusDays(d)))
+    val df = days.zipWithIndex.map { case (d, i) => (d, i.toLong) }
+      .toDF("date", "v")
+    Exchange.promote(df, root)
+    // past the discovery threshold (32 dirs) Spark's own listing is a
+    // job; the recorded dir lists on the driver instead
+    assert(spark.conf.get(
+      "spark.sql.sources.parallelPartitionDiscovery.threshold") == "32")
+    val (read, jobs) = Jobs.during(spark)(Exchange.table(spark, root))
+    assert(jobs == 0)
+    assert(read.schema.map(f => f.name -> f.dataType) ==
+      Seq("v" -> LongType, "date" -> DateType))
+    assert(read.where($"date" === java.sql.Date.valueOf("2024-01-03"))
+      .select("v").as[Long].collect().toSeq == Seq(2L))
+    assert(read.count() == 40)
+  }
 }
