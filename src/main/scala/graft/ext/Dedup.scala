@@ -1,8 +1,13 @@
 package graft.ext
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.AttributeReference
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+import org.apache.spark.sql.catalyst.util.TypeUtils
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.Internals
 
 /**
  * Document deduplication operators for large-scale corpus curation:
@@ -789,16 +794,65 @@ object Dedup {
   /** Rounds the last `components` call needed to converge (including
     * the final no-change round) — the adjudication hook for the
     * iterative-components cost: rounds × |labels| is the loop's total
-    * materialized I/O. */
+    * materialized I/O. 0 when the call took the driver path (no round
+    * ran). */
   private[graft] val lastComponentsRounds =
     new java.util.concurrent.atomic.AtomicInteger(-1)
 
+  /** Most pair rows `components` clusters on the driver; larger pair
+    * frames take the distributed rounds. Measured (local[3], 3 shuffle
+    * partitions, 4-core box; cached random pairs over 4× as many node
+    * ids, so clusters stay small as near-dup clusters do; warm JVM,
+    * median of 5 calls, each counting its result):
+    *
+    * {{{
+    *   pairs     driver path   rounds
+    *   1 000     0.13 s        1.61 s (9 rounds)
+    *   10 000    0.16 s        1.67 s (9 rounds)
+    *   100 000   0.71 s        6.59 s (12 rounds)
+    * }}}
+    *
+    * The driver path is about 10× faster at every measured size, so no
+    * break-even lies below 10⁵ pairs; the cap is the largest measured
+    * size, which bounds what the driver collects (2 × 10⁵ edge rows). */
+  private[graft] val MaxDriverPairs = 100000L
+
   /**
    * Connected components over an undirected pair list (the transitive
-   * closure step that turns near-dup PAIRS into dedup CLUSTERS): min-
-   * label propagation WITH pointer jumping, iterated to fixpoint.
+   * closure step that turns near-dup PAIRS into dedup CLUSTERS).
    * Returns (id, component) with component = the smallest id in the
-   * component — the canonical representative.
+   * component — the canonical representative. An id that only appears
+   * next to a NULL endpoint is its own singleton; NULL endpoints
+   * collapse into one (NULL, NULL) row.
+   *
+   * The path is picked by the observed size of the input, not by a
+   * setting: the pairs are symmetrized into a lazily checkpointed edge
+   * frame, which ONE counting job materializes (so `pairs` is evaluated
+   * exactly once on either path).
+   *  - At most `MaxDriverPairs` pairs (verified near-dup pairs are a
+   *    sliver of the corpus): a second job collects the edges and a
+   *    union-find on the driver labels them, returned as a local frame
+   *    with the rounds' column names, types and nullability. Two jobs
+   *    in all, where the rounds run one or more jobs per round.
+   *  - Larger: `componentsRounds` over the same checkpoint.
+   */
+  def components(pairs: DataFrame, aCol: String = "id_a",
+      bCol: String = "id_b", maxRounds: Int = 20): DataFrame = {
+    val edges = symmetrized(pairs, aCol, bCol)
+    // an RDD count: `Dataset.count`'s aggregate would run a second job
+    // for its single-partition exchange
+    val n = edges.queryExecution.toRdd.count() / 2
+    if (n > MaxDriverPairs) rounds(edges, maxRounds)
+    else {
+      lastComponentsRounds.set(0)
+      log.info(s"components: $n pairs labeled on the driver (0 rounds)")
+      componentsOnDriver(edges)
+    }
+  }
+
+  /**
+   * The distributed path of `components`: min-label propagation WITH
+   * pointer jumping, iterated to fixpoint, whatever the input size.
    *
    * Each round folds two label moves into one materialization:
    * neighbor-min hooking (component := min over adjacent labels — plain
@@ -818,27 +872,34 @@ object Dedup {
    * skewed for giant clusters, which AQE's skew-join splitting
    * handles). Lineage is cut every round with localCheckpoint so plans
    * stay O(1) deep; the driver holds only the changed-count per round,
-   * never the labels. Each round is ONE Spark job: the checkpoint is
+   * never the labels. Each round is ONE action: the checkpoint is
    * LAZY and the moved-label count is the action that materializes it,
    * so convergence detection rides the same pass that writes the
-   * checkpoint blocks (an eager checkpoint + separate isEmpty probe —
-   * the previous shape — paid a second full scheduling round-trip per
-   * iteration, which dominated wall-clock on deep graphs; at cluster
-   * scale every extra job per round is a full barrier).
+   * checkpoint blocks (an eager checkpoint + separate isEmpty probe
+   * paid a second full scheduling round-trip per iteration). Adaptive
+   * execution still submits each of the round's shuffle stages as its
+   * own job: a 5-pair graph takes 4 rounds and 30 jobs (local[4]),
+   * which is why `components` keeps small inputs off this path.
    */
-  def components(pairs: DataFrame, aCol: String = "id_a",
-      bCol: String = "id_b", maxRounds: Int = 20): DataFrame = {
-    // symmetrize with ONE pass over `pairs` (explode of both directions),
-    // not a unionAll of two references — the pair frame is typically an
-    // unpersisted LSH-verify join, and two references would execute it
-    // twice inside the edges materialization
-    val edges = pairs.select(explode(array(
+  private[graft] def componentsRounds(pairs: DataFrame, aCol: String = "id_a",
+      bCol: String = "id_b", maxRounds: Int = 20): DataFrame =
+    rounds(symmetrized(pairs, aCol, bCol), maxRounds)
+
+  /** (src, dst) in both directions, lazily checkpointed. ONE pass over
+    * `pairs` (explode of both directions), not a unionAll of two
+    * references — the pair frame is typically an unpersisted LSH-verify
+    * join, and two references would execute it twice. */
+  private def symmetrized(pairs: DataFrame, aCol: String,
+      bCol: String): DataFrame =
+    pairs.select(explode(array(
         struct(col(aCol).as("src"), col(bCol).as("dst")),
         struct(col(bCol).as("src"), col(aCol).as("dst")))).as("__e"))
       .select(col("__e.src").as("src"), col("__e.dst").as("dst"))
       .localCheckpoint(false)
+
+  private def rounds(edges: DataFrame, maxRounds: Int): DataFrame = {
     // lazy like `edges`: round 1's convergence count materializes the
-    // whole chain (pairs → edges → labels) in its single job
+    // labels, and the edges too unless `components` counted them first
     var labels = edges.select(col("src").as("id")).distinct()
       .withColumn("component", col("id")).localCheckpoint(false)
     var round = 0
@@ -875,6 +936,39 @@ object Dedup {
     lastComponentsRounds.set(round)
     log.info(s"components converged in $round rounds")
     labels
+  }
+
+  /** The rounds' labels computed by union-find over the collected
+    * `edges`. Ids are keyed and ranked by Spark's interpreted ordering
+    * of their type — the order `least`/`min` use and the equality the
+    * rounds' joins use — so the root of a set is its smallest id. */
+  private def componentsOnDriver(edges: DataFrame): DataFrame = {
+    val idField = edges.schema("src")
+    val dt = idField.dataType
+    val rows = Internals.collectInternal(edges)
+    val rank = new java.util.TreeMap[Any, Integer](
+      TypeUtils.getInterpretedOrdering(dt))
+    // every endpoint appears as a src: the edges run both ways
+    for (r <- rows if !r.isNullAt(0)) rank.put(r.get(0, dt), 0)
+    val ids = rank.keySet.toArray
+    ids.indices.foreach(i => rank.put(ids(i), i))
+    val parent = Array.range(0, ids.length)
+    def find(x: Int): Int = {
+      var i = x
+      while (parent(i) != i) { parent(i) = parent(parent(i)); i = parent(i) }
+      i
+    }
+    for (r <- rows if !r.isNullAt(0) && !r.isNullAt(1)) {
+      val a = find(rank.get(r.get(0, dt)))
+      val b = find(rank.get(r.get(1, dt)))
+      if (a < b) parent(b) = a else if (b < a) parent(a) = b
+    }
+    val labeled = ids.indices.map(i => InternalRow(ids(i), ids(find(i))))
+    val nulls =
+      if (rows.exists(_.isNullAt(0))) Seq(InternalRow(null, null)) else Nil
+    val out = Seq("id", "component").map(name =>
+      AttributeReference(name, dt, idField.nullable)())
+    Internals.ofRows(edges.sparkSession, LocalRelation(out, labeled ++ nulls))
   }
 
   /**

@@ -195,7 +195,8 @@ object StatsAgg {
     // shapes (a partition IS a time interval; a bound either contains
     // it, excludes it, or straddles it — straddling bails)
     val keepEvals: Map[String, KeepEval] = leaves.flatMap { l =>
-      val ke = keepEvalFor(l, partitionCol, transform).getOrElse(return None)
+      val ke = keepEvalFor(spark, l, partitionCol, transform)
+        .getOrElse(return None)
       l.index.entries.keys.map(VersionedPartitioned.partitionValue(_) -> ke)
     }.toMap
     // needed columns must resolve to the SAME stored name (and type)
@@ -389,16 +390,18 @@ object StatsAgg {
   private final case class ByPrefix(w: Int,
       cmps: Seq[(String, String)]) extends KeepEval
 
-  /** True iff the active session's timezone is fixed-offset UTC (any
-    * spelling: UTC, Etc/UTC, Z, +00:00); an unparseable id is treated
-    * as non-UTC — bail-on-doubt like every other gate here. */
-  private def sessionTzIsUtc: Boolean =
+  /** True iff `spark`'s timezone — the session whose plan is folded,
+    * whichever session is active on the calling thread — is fixed-offset
+    * UTC (any spelling: UTC, Etc/UTC, Z, +00:00); an unparseable id is
+    * treated as non-UTC — bail-on-doubt like every other gate here. */
+  private def sessionTzIsUtc(spark: SparkSession): Boolean =
     try java.time.ZoneId
-      .of(org.apache.spark.sql.internal.SQLConf.get.sessionLocalTimeZone)
+      .of(spark.sessionState.conf.sessionLocalTimeZone)
       .normalized() == java.time.ZoneOffset.UTC
     catch { case scala.util.control.NonFatal(_) => false }
 
-  private def keepEvalFor(l: LeafInfo, partitionCol: String,
+  private def keepEvalFor(spark: SparkSession, l: LeafInfo,
+      partitionCol: String,
       transform: Option[PartitionTransform]): Option[KeepEval] = {
     if (l.conjuncts.isEmpty) return Some(AllRows)
     for (c <- l.conjuncts) {
@@ -439,7 +442,7 @@ object StatsAgg {
             // answer WRONGLY from metadata. Dates are timezone-free;
             // timestamps fold only under a UTC session, else bail to
             // the scan.
-            if (!isDate && !sessionTzIsUtc) return None
+            if (!isDate && !sessionTzIsUtc(spark)) return None
             val cmps = l.conjuncts.map(c =>
               intervalCmpOf(src, c).getOrElse(return None))
             Some(ByInterval(kind, isDate, cmps))

@@ -2,7 +2,9 @@ package org.apache.spark.sql.graft
 
 import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.execution.SQLExecution
 import org.apache.spark.sql.execution.datasources.{FileStatusCache,
   HadoopFsRelation, InMemoryFileIndex}
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
@@ -19,7 +21,8 @@ import org.apache.spark.util.HadoopFSUtils
  * the statement level because the manifest table format resolves
  * outside the catalog — and by the query door, which parses a
  * statement, replaces its cataloged names and runs the plan. Also a
- * parquet dir read listed on the driver.
+ * parquet dir read listed on the driver, and a collect that keeps
+ * Catalyst values.
  */
 object Internals {
   def ofRows(spark: SparkSession, plan: LogicalPlan): DataFrame =
@@ -32,6 +35,14 @@ object Internals {
   def parse(spark: SparkSession, sqlText: String): LogicalPlan = {
     val classic = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
     classic.withActive(classic.sessionState.sqlParser.parsePlan(sqlText))
+  }
+
+  /** `df.collect()` as Catalyst rows (a string is a `UTF8String`),
+    * run as one SQL execution like any action. */
+  def collectInternal(df: DataFrame): Array[InternalRow] = {
+    val qe = df.queryExecution
+    SQLExecution.withNewExecutionId(qe, Some("collect"))(
+      qe.executedPlan.executeCollect())
   }
 
   /** `ofRows` for a plan already resolved — a rewrite of an analyzed

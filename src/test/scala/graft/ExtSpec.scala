@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -721,10 +722,72 @@ class ExtSpec extends AnyFunSuite {
     // would need 200 rounds (and hit the maxRounds guard); the pointer
     // jump doubles the label's reach per round, so ~log2(200)+slack
     val chain = (1L until 200L).map(i => (i, i + 1)).toDF("id_a", "id_b")
-    val comp = Dedup.components(chain).as[(Long, Long)].collect().toMap
+    val comp = Dedup.componentsRounds(chain).as[(Long, Long)].collect().toMap
     assert((1L to 200L).forall(comp(_) == 1L))
     val rounds = Dedup.lastComponentsRounds.get()
     assert(rounds <= 12, s"expected O(log d) convergence, took $rounds rounds")
+  }
+
+  test("Dedup.components: a small pair graph is labeled on the driver in at most 2 jobs") {
+    val pairs = Seq((1L, 2L), (2L, 3L), (3L, 4L), (10L, 11L), (11L, 12L))
+      .toDF("id_a", "id_b")
+    val (labels, jobs) = Jobs.during(spark)(Dedup.components(pairs))
+    assert(jobs <= 2, s"components ran $jobs jobs on 5 pairs")
+    assert(Dedup.lastComponentsRounds.get() == 0)
+    assert(labels.as[(Long, Long)].collect().toMap ==
+      Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 1L,
+        10L -> 10L, 11L -> 10L, 12L -> 10L))
+  }
+
+  test("Dedup.components: MaxDriverPairs pairs stay on the driver, one more takes the rounds") {
+    // 100 disjoint stars: centres 0..99, leaves from 1000 up
+    def stars(n: Long) = spark.range(n)
+      .select((col("id") % 100).as("id_a"), (col("id") + 1000).as("id_b"))
+    val want = when(col("id") < 1000, col("id"))
+      .otherwise((col("id") - 1000) % 100)
+    for ((n, driver) <- Seq((Dedup.MaxDriverPairs, true),
+        (Dedup.MaxDriverPairs + 1, false))) {
+      val labels = Dedup.components(stars(n))
+      assert((Dedup.lastComponentsRounds.get() == 0) == driver,
+        s"$n pairs: ${Dedup.lastComponentsRounds.get()} rounds")
+      assert(labels.count() == n + 100)
+      assert(labels.where(col("component") =!= want).isEmpty, s"$n pairs")
+    }
+  }
+
+  test("Dedup.components: driver path equals the rounds on empty, Int, String and NULL ids") {
+    def both(pairs: org.apache.spark.sql.DataFrame)
+        : (Set[org.apache.spark.sql.Row], Set[org.apache.spark.sql.Row]) = {
+      val rounds = Dedup.componentsRounds(pairs)
+      val driver = Dedup.components(pairs)
+      assert(Dedup.lastComponentsRounds.get() == 0)
+      assert(driver.schema == rounds.schema,
+        s"${driver.schema} vs ${rounds.schema}")
+      (driver.collect().toSet, rounds.collect().toSet)
+    }
+    val (emptyD, emptyR) = both(Seq.empty[(Long, Long)].toDF("id_a", "id_b"))
+    assert(emptyD.isEmpty && emptyR.isEmpty)
+
+    val (intD, intR) = both(Seq((3, 1), (1, 2), (5, 6)).toDF("id_a", "id_b"))
+    assert(intR == Set(Row(1, 1), Row(2, 1), Row(3, 1), Row(5, 5), Row(6, 5)))
+    assert(intD == intR)
+
+    val (strD, strR) = both(Seq(("b", "a"), ("c", "b"), ("y", "x"),
+      ("b2", "b10")).toDF("id_a", "id_b"))
+    assert(strR == Set(Row("a", "a"), Row("b", "a"), Row("c", "a"),
+      Row("x", "x"), Row("y", "x"), Row("b10", "b10"), Row("b2", "b10")))
+    assert(strD == strR)
+
+    // the rounds' NULL semantics: a NULL endpoint links nothing (its
+    // joins never match), its other end stays a singleton, and every
+    // NULL endpoint collapses into one (NULL, NULL) row
+    val nulls = Seq[(Option[Long], Option[Long])]((Some(1L), Some(2L)),
+      (Some(2L), None), (None, Some(3L)), (None, None), (Some(4L), None))
+      .toDF("id_a", "id_b")
+    val (nullD, nullR) = both(nulls)
+    assert(nullR == Set(Row(1L, 1L), Row(2L, 1L), Row(3L, 3L), Row(4L, 4L),
+      Row(null, null)))
+    assert(nullD == nullR)
   }
 
   test("Dedup.dedupByPairsBest keeps the preferred member, not the min id") {

@@ -210,14 +210,19 @@ class PropertySpec extends AnyFunSuite {
     // the pointer-jump optimization must not change WHAT converges, only
     // how fast: on arbitrary random graphs (star, chain, dense, sparse
     // mixes all arise across seeds) the labeling must equal a driver-side
-    // union-find ground truth computed on the same edges
-    for (seed <- 20L to 24L) {
+    // union-find ground truth computed on the same edges — for the
+    // distributed rounds and for `components` (whose driver path these
+    // small graphs take) alike
+    for (seed <- 20L to 24L;
+         (path, cc) <- Seq[(String, DataFrame => DataFrame)](
+           "rounds" -> (graft.ext.Dedup.componentsRounds(_)),
+           "components" -> (graft.ext.Dedup.components(_)))) {
       val edges = Gen.listOfN(120, for {
         a <- Gen.choose(1L, 60L)
         b <- Gen.choose(1L, 60L) if a != b
       } yield (math.min(a, b), math.max(a, b)))(
         Gen.Parameters.default, Seed(seed)).get.distinct
-      val got = graft.ext.Dedup.components(edges.toDF("id_a", "id_b"))
+      val got = cc(edges.toDF("id_a", "id_b"))
         .as[(Long, Long)].collect().toMap
       // union-find ground truth with min-id representative
       val parent = scala.collection.mutable.Map[Long, Long]()
@@ -231,7 +236,8 @@ class PropertySpec extends AnyFunSuite {
       }
       val nodes = edges.flatMap(e => Seq(e._1, e._2)).distinct
       val want = nodes.map(n => n -> find(n)).toMap
-      assert(got == want, s"seed $seed: labeling diverged from union-find")
+      assert(got == want,
+        s"seed $seed, $path: labeling diverged from union-find")
     }
   }
 

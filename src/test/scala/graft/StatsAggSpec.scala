@@ -345,6 +345,32 @@ class StatsAggSpec extends AnyFunSuite {
     assert(q6.head.getLong(0) == 2L)
   }
 
+  test("hidden partitioning: the folded session's time zone decides, not the thread's active session") {
+    // an Asia/Tokyo session writes and reads days(ts) partitions while a
+    // UTC session is active on the thread: 09:00 Tokyo is 00:00 UTC, a
+    // day-aligned bound in UTC, but the partition dirs are Tokyo days —
+    // an interval fold would keep the 08:00 Tokyo row of day 2024-01-02
+    val tokyo = spark.newSession()
+    tokyo.conf.set("spark.sql.session.timeZone", "Asia/Tokyo")
+    val root = Files.createTempDirectory("graft_statstz_").toString
+    val life = new SqlLifecycle(tokyo, root)
+    life.execute("CREATE SCHEMA tz")
+    life.execute("CREATE TABLE tz.t (ts TIMESTAMP, v BIGINT) " +
+      "USING ICEBERG PARTITIONED BY (days(ts))")
+    life.execute(
+      "ALTER TABLE tz.t SET TBLPROPERTIES ('graft.statsColumns'='v')")
+    life.execute("INSERT INTO tz.t VALUES " +
+      "(TIMESTAMP'2024-01-02 08:00:00',1)," +
+      "(TIMESTAMP'2024-01-02 12:00:00',2)," +
+      "(TIMESTAMP'2024-01-03 06:00:00',4)")
+    org.apache.spark.sql.SparkSession.setActiveSession(spark)
+    val q = life.query("SELECT count(*) AS n FROM tz.t " +
+      "WHERE ts >= TIMESTAMP'2024-01-02 09:00:00'")
+    assert(dataFilesRead(q).nonEmpty,
+      "a Tokyo session's timestamp interval fold must bail to the scan")
+    assert(q.head.getLong(0) == 2L)
+  }
+
   test("truncate(w) hidden partitioning: prefix predicates fold from metadata") {
     val root = Files.createTempDirectory("graft_statstrunc_").toString
     val life = new SqlLifecycle(spark, root)
