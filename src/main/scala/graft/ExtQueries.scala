@@ -277,8 +277,8 @@ object ExtQueries {
   }
 
   /** The persisted-index IVF serving path (`Similarity.buildIvfIndex`
-    * → `indexedIvfTopK`): the index — cell-partitioned assignments +
-    * broadcast-sized centroids — is built ONCE and published as one
+    * → `indexedIvfTopK`): the index — the cell assignments in one
+    * partition + metadata-sized centroids — is built ONCE and published as one
     * transaction; the query phase reads ONLY the index tables, never
     * the corpus (ExtSpec pins that via inputFiles). Bit-identical to
     * the one-shot path, so it replays the similarity_ivf oracle. */

@@ -6,6 +6,9 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart,
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
 import org.apache.spark.sql.catalyst.rules.RuleExecutor
+import org.apache.spark.sql.execution.{FileSourceScanExec, QueryExecution, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+import org.apache.spark.sql.util.QueryExecutionListener
 
 /** Optimization-round profiling harness (round 20): run one or more
   * registered queries with a listener that counts Spark jobs, stages and
@@ -13,7 +16,10 @@ import org.apache.spark.sql.catalyst.rules.RuleExecutor
   * overhead separates from real compute. It also counts the Janino
   * compiles of generated classes and their compile seconds, JVM-wide:
   * the compiles mostly run inside tasks, so the listener's job time
-  * alone hides them. A second line per query gives Catalyst's share:
+  * alone hides them. The first line also gives the parquet files the
+  * query's SQL executions read: the sum of their file scans' `numFiles`
+  * metric (an RDD action outside a SQL execution is not counted).
+  * A second line per query gives Catalyst's share:
   * rule runs and time over all rule executors, the time of the
   * analyzer's rules (`catalyst.analysis`), and `ResolveRelations`'
   * effective and total runs, all as deltas of Spark's process-wide
@@ -47,6 +53,7 @@ object ProfileQuery {
     @volatile var stages = 0
     @volatile var tasks = 0L
     @volatile var taskMs = 0L
+    val filesRead = new java.util.concurrent.atomic.AtomicLong
     val jobStart = new java.util.concurrent.ConcurrentHashMap[Int, (Long, String)]()
     val jobLines = new java.util.concurrent.ConcurrentLinkedQueue[String]()
     val stageLines = new java.util.concurrent.ConcurrentLinkedQueue[String]()
@@ -82,6 +89,12 @@ object ProfileQuery {
       }
     }
 
+    val scans = new QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, d: Long): Unit =
+        filesRead.addAndGet(scannedFiles(qe.executedPlan))
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+
     // warm-up identical to Bench so JIT lands outside the measurement
     graft.sources.Tables.tableNames.foreach { t =>
       try graft.sources.Tables.load(spark, sfDir, t).limit(64)
@@ -101,7 +114,8 @@ object ProfileQuery {
       } else {
       val fn = SparkEntry.queries(name)
       spark.sparkContext.addSparkListener(listener)
-      jobs = 0; stages = 0; tasks = 0; taskMs = 0
+      spark.listenerManager.register(scans)
+      jobs = 0; stages = 0; tasks = 0; taskMs = 0; filesRead.set(0)
       jobLines.clear(); stageLines.clear()
       val compiles0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
       val compileNs0 = CodeGenerator.compileTime
@@ -115,10 +129,12 @@ object ProfileQuery {
       // let straggler listener events drain
       Thread.sleep(300)
       spark.sparkContext.removeSparkListener(listener)
+      spark.listenerManager.unregister(scans)
       spark.catalog.clearCache()
       println(f"[profile] $name: total ${(t1 - t0) / 1e9}%.2f s " +
         f"(build ${(tBuilt - t0) / 1e9}%.2f s), jobs $jobs, stages $stages, " +
         f"tasks $tasks, task-time ${taskMs / 1000.0}%.1f s, " +
+        f"files read ${filesRead.get}, " +
         f"compiles ${CodegenMetrics.METRIC_COMPILATION_TIME.getCount - compiles0} " +
         f"(${(CodeGenerator.compileTime - compileNs0) / 1e9}%.2f s)")
       val meter = RuleExecutor.getCurrentMetrics() - meter0
@@ -143,6 +159,21 @@ object ProfileQuery {
       }
     }
     spark.stop()
+  }
+
+  /** Files read by `p`'s file scans, adaptive stages and subqueries
+    * included. */
+  private def scannedFiles(p: SparkPlan): Long = {
+    val kids = p match {
+      case a: AdaptiveSparkPlanExec => Seq(a.executedPlan)
+      case q: QueryStageExec => Seq(q.plan)
+      case o => o.children ++ o.subqueries
+    }
+    val own = p match {
+      case s: FileSourceScanExec => s.metrics.get("numFiles").map(_.value).getOrElse(0L)
+      case _ => 0L
+    }
+    own + kids.map(scannedFiles).sum
   }
 
   /** Per rule: (total ns, effective runs, total runs), parsed from the

@@ -837,12 +837,10 @@ object Dedup {
    *  - Larger: `componentsRounds` over the same checkpoint.
    */
   def components(pairs: DataFrame, aCol: String = "id_a",
-      bCol: String = "id_b", maxRounds: Int = 20): DataFrame = {
+      bCol: String = "id_b"): DataFrame = {
     val edges = symmetrized(pairs, aCol, bCol)
-    // an RDD count: `Dataset.count`'s aggregate would run a second job
-    // for its single-partition exchange
-    val n = edges.queryExecution.toRdd.count() / 2
-    if (n > MaxDriverPairs) rounds(edges, maxRounds)
+    val n = pairCount(edges)
+    if (n > MaxDriverPairs) rounds(edges, n)
     else {
       lastComponentsRounds.set(0)
       log.info(s"components: $n pairs labeled on the driver (0 rounds)")
@@ -857,15 +855,31 @@ object Dedup {
    * Each round folds two label moves into one materialization:
    * neighbor-min hooking (component := min over adjacent labels — plain
    * propagation) AND a pointer jump (component := component's own
-   * label). The jump composes the label function with itself, so the
-   * min label's reach roughly DOUBLES per round instead of growing by
-   * one hop: chain-shaped duplicate graphs (v1→v2→…→vN of a drifting
-   * page) converge in O(log diameter) rounds where plain propagation
-   * needs O(diameter) — and each avoided round avoids an eager
-   * materialization of the whole label frame, which is exactly the
-   * data-dependent cost that made components the bench's scale-killer
-   * on deep graphs. Shallow star-shaped graphs still finish in 2-3
-   * rounds; the jump join is a no-op for them.
+   * label). On a chain (v1→v2→…→vN of a drifting page) the jump
+   * composes the label function with itself, so the min label's reach
+   * roughly doubles per round: a 200-link chain converges in at most
+   * 12 rounds (spec-pinned) where plain propagation needs 200. That
+   * speed-up is not a bound. On branching graphs the min label mostly
+   * still travels one hop per round: random pairs over twice as many
+   * ids (mean degree 1, six seeds each) took 13–15 rounds at 1 000
+   * pairs and 18–45 at 3 000. Shallow star-shaped graphs finish in
+   * 2-3 rounds; the jump join is a no-op for them.
+   *
+   * The bound that holds: after round r every label is at most the
+   * smallest id within r hops (the neighbor-min step alone gives that)
+   * and never below its component's minimum, so all labels are final
+   * after diameter rounds and round diameter + 1 sees no change. A
+   * component's diameter is below its node count, which is at most its
+   * pair count + 1, so `pairs` + 1 rounds always suffice; more means a
+   * broken round and fails loudly.
+   *
+   * Each round's labels hold the same ids, so every round's checkpoint
+   * keeps the size estimate of round 0's labels. The estimate a
+   * checkpoint inherits from its plan would otherwise be the product of
+   * the round's join estimates, itself built on the previous round's:
+   * it grew about 2× in bits per round (820 591 bits after the 15
+   * rounds of 1 000 random pairs), and at 10 000 pairs the driver ran
+   * out of heap inside Spark's join size estimate.
    *
    * Scale notes: each round is two equi-joins + one aggregation
    * shuffled on node id (the jump join keys on the component label —
@@ -882,8 +896,17 @@ object Dedup {
    * which is why `components` keeps small inputs off this path.
    */
   private[graft] def componentsRounds(pairs: DataFrame, aCol: String = "id_a",
-      bCol: String = "id_b", maxRounds: Int = 20): DataFrame =
-    rounds(symmetrized(pairs, aCol, bCol), maxRounds)
+      bCol: String = "id_b"): DataFrame = {
+    val edges = symmetrized(pairs, aCol, bCol)
+    rounds(edges, pairCount(edges))
+  }
+
+  /** Pair rows behind symmetrized `edges`, counted in the one job that
+    * materializes their checkpoint — an RDD count: `Dataset.count`'s
+    * aggregate would run a second job for its single-partition
+    * exchange. */
+  private def pairCount(edges: DataFrame): Long =
+    edges.queryExecution.toRdd.count() / 2
 
   /** (src, dst) in both directions, lazily checkpointed. ONE pass over
     * `pairs` (explode of both directions), not a unionAll of two
@@ -897,11 +920,12 @@ object Dedup {
       .select(col("__e.src").as("src"), col("__e.dst").as("dst"))
       .localCheckpoint(false)
 
-  private def rounds(edges: DataFrame, maxRounds: Int): DataFrame = {
-    // lazy like `edges`: round 1's convergence count materializes the
-    // labels, and the edges too unless `components` counted them first
+  private def rounds(edges: DataFrame, pairs: Long): DataFrame = {
+    val maxRounds = pairs + 1
+    // lazy like `edges`: round 1's convergence count materializes it
     var labels = edges.select(col("src").as("id")).distinct()
       .withColumn("component", col("id")).localCheckpoint(false)
+    val labelsSize = labels.queryExecution.optimizedPlan.stats.sizeInBytes
     var round = 0
     var changed = true
     while (changed && round < maxRounds) {
@@ -923,6 +947,7 @@ object Dedup {
             coalesce(col("__jcomp"), col("component")))
             .as("component"))
         .localCheckpoint(false)
+        .transform(Internals.withSizeEstimate(_, labelsSize))
       // one job per round: the lazy checkpoint above is materialized BY
       // this count (the filter sits on top of the checkpointed RDD, so
       // computing it writes the checkpoint blocks as a side effect) —

@@ -197,14 +197,16 @@ object Similarity {
     * norms, vectors), sorted by centroid id so array INDEX order is id
     * order (`ivf_nearest`'s tiebreak = the old window's lowest-id
     * tiebreak). Metadata-sized by the stride-sampling construction —
-    * the same bounded-driver-state idiom as the PQ codebook. */
+    * the same bounded-driver-state idiom as the PQ codebook — so the
+    * rows are sorted on the driver: an `orderBy` would add a sampling
+    * job and a shuffle to every build, append and query batch. */
   private case class CentLits(ids: Array[Long], flat: Array[Double],
       norms: Array[Double], vecs: Seq[Seq[Double]])
 
   private def collectCents(cents: DataFrame): CentLits = {
     val rows = cents
       .select(col("__cent_id").cast("long"), col("__ev"), col("__en"))
-      .orderBy(col("__cent_id")).collect()
+      .collect().sortBy(_.getLong(0))
     val ids = rows.map(_.getLong(0))
     val vecs = rows.map(_.getSeq[Double](1)).toSeq
     val norms = rows.map(_.getDouble(2))
@@ -241,20 +243,23 @@ object Similarity {
         element_at(typedLit(cents.ids), col("__idx") + 1))
       .select(col("neighbor_id"), col("__cv"), col("__cn"), col("__cent_id"))
 
+  /** The `nProbe` nearest cells per query — a pure map against the
+    * frozen centroids, like the assignment: (query_id, __qv, __qn,
+    * __idx, __cent_id), `__idx` the cell's index in `cents`. */
+  private def probes(q: DataFrame, cents: CentLits, nProbe: Int): DataFrame =
+    q.withColumn("__idx", nearestIdx(cents, col("__qv"), col("__qn"), nProbe))
+      .withColumn("__cent_id", element_at(typedLit(cents.ids), col("__idx") + 1))
+      .select(col("query_id"), col("__qv"), col("__qn"), col("__idx"),
+        col("__cent_id"))
+
   /** The IVF probe-and-score tail shared by the one-shot and the
-    * persisted-index paths: `nProbe` nearest cells per query (a pure
-    * map against the frozen centroids, like the assignment), then exact
+    * persisted-index paths: the probed cells per query, then exact
     * cosine over ONLY the probed cells' assignments. */
   private def ivfProbeScore(q: DataFrame, cents: CentLits,
       assigned: DataFrame, k: Int, nProbe: Int): DataFrame = {
-    val probes =
-      q.withColumn("__idx", nearestIdx(cents, col("__qv"), col("__qn"), nProbe))
-        .withColumn("__cent_id",
-          element_at(typedLit(cents.ids), col("__idx") + 1))
-        .select(col("query_id"), col("__qv"), col("__qn"), col("__cent_id"))
     val w = Window.partitionBy("query_id")
       .orderBy(col("sim").desc, col("neighbor_id"))
-    probes.join(assigned, "__cent_id")
+    probes(q, cents, nProbe).drop("__idx").join(assigned, "__cent_id")
       .where(col("neighbor_id") =!= col("query_id"))
       .withColumn("sim", dot(col("__cv"), col("__qv")) / (col("__cn") * col("__qn")))
       .withColumn("rank", row_number().over(w))
@@ -276,8 +281,12 @@ object Similarity {
    * leave centroids without their cells or vice versa):
    *
    *  - `cells`: one row per corpus vector — (id, vector, norm, cell) —
-   *    PARTITIONED BY CELL, so a probe-bounded read plan can prune to
-   *    the probed cells' files alone;
+   *    in the single `__cell = 'all'` partition, like `centroids`. A
+   *    query batch probes nearly every cell, so a partition per cell
+   *    pruned nothing and cost a listing and a file open per cell;
+   *    pruning by probe waits for per-file stats in the manifest.
+   *    Indexes written one partition per cell stay readable and
+   *    appendable (no reader uses `__cell`);
    *  - `centroids`: the stride-sampled centroid vectors (corpus/stride
    *    rows — broadcast-sized by construction).
    *
@@ -294,7 +303,7 @@ object Similarity {
       corpus.where(col(idCol) % centroidStride === 0), idCol, vecCol,
       "__cent_id", "__ev", "__en")
     val cells = ivfAssign(c, collectCents(cents))
-      .withColumn("__cell", col("__cent_id").cast("string"))
+      .withColumn("__cell", lit("all"))
     graft.ops.Txn.commit(Seq(
       graft.ops.Txn.Write(cells, s"$root/$IvfCellsTable", "__cell"),
       graft.ops.Txn.Write(cents.withColumn("__cell", lit("all")),
@@ -333,7 +342,7 @@ object Similarity {
     val b = prep(batch, idCol, vecCol, "neighbor_id", "__cv", "__cn")
       .join(existing, Seq("neighbor_id"), "left_anti")
     val cells = ivfAssign(b, collectCents(cents))
-      .withColumn("__cell", col("__cent_id").cast("string"))
+      .withColumn("__cell", lit("all"))
     graft.ops.VersionedPartitioned.insertInto(cells,
         s"$root/$IvfCellsTable", "__cell", tag = tag)
       .getOrElse(graft.ops.VersionedPartitioned
@@ -342,9 +351,10 @@ object Similarity {
 
   /**
    * `ivfTopK` served from the PERSISTED index: the corpus is never
-   * read — the candidate scan is the `cells` table (cell-partitioned,
-   * so file pruning tracks the probe set) and the only broadcast is
-   * the metadata-sized `centroids` table, resolved together through
+   * read — the candidate scan is the `cells` table (one partition, a
+   * few files; see `buildIvfIndex`), joined to the probes on the cell
+   * id, and the metadata-sized `centroids` table is frozen into the
+   * probe expression; both are resolved together through
    * `Txn.readAll`'s snapshot-consistent view. Bit-identical to the
    * one-shot `ivfTopK` over the same corpus and knobs.
    */
@@ -367,9 +377,9 @@ object Similarity {
    * coarse IVF cells over RESIDUAL product-quantization codes. At rest
    * each corpus vector is (cell id, m codes, true norm) — m+12 bytes
    * instead of 8·dim, a 20–30× compression that is what lets a 100 TB
-   * embedding corpus serve from executor memory — and the floats are
-   * reconstructed only streaming through the candidate scan
-   * (`pq_decode`, one fused codegen pass, no explode/regroup).
+   * embedding corpus serve from executor memory — and the candidate
+   * scan scores the codes without reconstructing the floats
+   * (`pq_score`, one fused codegen pass over the m codes).
    *
    * Determinism/replayability contract (what lets the DuckDB oracle
    * recompute the whole index from SQL): coarse centroids and codebook
@@ -444,37 +454,25 @@ object Similarity {
     (flatD, flatD.map(graft.functions.VectorExprs.pqScaled), ksub, dim)
   }
 
-  /** The IVF-PQ probe → decode → asymmetric-shortlist → exact-rerank
-    * tail shared by the one-shot and persisted-index paths. `encoded`
+  /** The IVF-PQ probe → asymmetric-shortlist → exact-rerank tail
+    * shared by the one-shot and persisted-index paths. `encoded`
     * carries (neighbor_id, __cn, __cent_id, __codes); `rerank` is the
     * prep'd FLOAT primary store (neighbor_id, __cv, __cn) the
-    * shortlist's point lookups rerank against. */
+    * shortlist's point lookups rerank against. The approximate score
+    * is `pq_score` against the probe's own centroid index: the codes
+    * are scored where they are scanned, with no decoded vector and no
+    * centroid join — bit-identical to `vec_dot(pq_decode(…), q)`. */
   private def pqSearch(q: DataFrame, cents: CentLits, encoded: DataFrame,
       rerank: DataFrame, flatD: Array[Double], ksub: Int, k: Int,
       nProbe: Int, sl: Int): DataFrame = {
-    // nProbe nearest cells per query (same pure-map probe as ivfTopK)
-    val probes =
-      q.withColumn("__idx", nearestIdx(cents, col("__qv"), col("__qn"), nProbe))
-        .withColumn("__cent_id",
-          element_at(typedLit(cents.ids), col("__idx") + 1))
-        .select(col("query_id"), col("__qv"), col("__qn"), col("__cent_id"))
-
-    // approximate scoring: decode in the scan, asymmetric cosine; the
-    // decode join's centroid side is rebuilt from the frozen literals
-    // (k rows, driver-side — it was already broadcast-sized)
-    val spark0 = q.sparkSession
-    import spark0.implicits._
-    val centVecs = cents.ids.toSeq.zip(cents.vecs)
-      .toDF("__cent_id", "__ev")
     val wA = Window.partitionBy("query_id")
       .orderBy(col("__approx").desc, col("neighbor_id"))
-    val short = probes
-      .join(encoded.join(broadcast(centVecs), "__cent_id"), "__cent_id")
+    val short = probes(q, cents, nProbe).join(encoded, "__cent_id")
       .where(col("neighbor_id") =!= col("query_id"))
-      .withColumn("__dv", call_function("pq_decode", col("__codes"),
-        col("__ev"), typedLit(flatD), lit(ksub)))
       .withColumn("__approx",
-        dot(col("__dv"), col("__qv")) / (col("__cn") * col("__qn")))
+        call_function("pq_score", col("__codes"), col("__idx"), col("__qv"),
+          typedLit(cents.flat), typedLit(flatD), lit(ksub)) /
+          (col("__cn") * col("__qn")))
       .withColumn("__ar", row_number().over(wA))
       .where(col("__ar") <= sl)
       .select(col("query_id"), col("__qv"), col("__qn"), col("neighbor_id"))
@@ -498,10 +496,10 @@ object Similarity {
    * `Txn` transaction:
    *
    *  - `cells`: one row per corpus vector — (id, true norm, cell,
-   *    m PQ codes) — PARTITIONED BY CELL for probe-bounded file
-   *    pruning; the FLOATS ARE NOT STORED (m+12 bytes a vector is the
-   *    whole point — the primary store keeps the floats and serves
-   *    the shortlist's rerank point lookups);
+   *    m PQ codes) — in the single `__cell = 'all'` partition, as
+   *    `buildIvfIndex` explains; the FLOATS ARE NOT STORED (m+12 bytes
+   *    a vector is the whole point — the primary store keeps the
+   *    floats and serves the shortlist's rerank point lookups);
    *  - `centroids`: the stride-sampled coarse centroids;
    *  - `codebook`: the flat (j, e, t) double codebook, one row per
    *    position, with (m, ksub, dim) stamped on every row —
@@ -525,7 +523,7 @@ object Similarity {
         col("__cent_id"),
         call_function("pq_encode", col("__res"), typedLit(flatI),
           lit(m), lit(ksub)).as("__codes"))
-      .withColumn("__cell", col("__cent_id").cast("string"))
+      .withColumn("__cell", lit("all"))
     val spark = corpus.sparkSession
     import spark.implicits._
     val cb = flatD.toSeq.zipWithIndex
@@ -554,9 +552,10 @@ object Similarity {
 
   /**
    * `ivfPqTopK` served from the PERSISTED index: the shortlist phase
-   * reads only the index tables (cell-partitioned codes + broadcast
-   * centroids + metadata-sized codebook, resolved together through
-   * `Txn.readAll`'s snapshot-consistent view over all three); the
+   * reads only the index tables (the codes in one partition, plus the
+   * metadata-sized centroids and codebook, collected to the driver and
+   * frozen into `ivf_nearest` and `pq_score`; all three resolved
+   * together through `Txn.readAll`'s snapshot-consistent view); the
    * float `corpus` (the primary store) is touched only by the exact
    * rerank's shortlist-sized point-lookup join — the asymmetric-
    * distance serving shape. Bit-identical to the one-shot `ivfPqTopK`
@@ -608,7 +607,7 @@ object Similarity {
       .select(col("neighbor_id"), col("__cn"), col("__cent_id"),
         call_function("pq_encode", col("__res"), typedLit(flatI),
           lit(m), lit(ksub)).as("__codes"))
-      .withColumn("__cell", col("__cent_id").cast("string"))
+      .withColumn("__cell", lit("all"))
     graft.ops.VersionedPartitioned.insertInto(cells,
         s"$root/$IvfCellsTable", "__cell", tag = tag)
       .getOrElse(graft.ops.VersionedPartitioned

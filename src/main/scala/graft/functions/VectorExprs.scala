@@ -298,6 +298,53 @@ object VectorExprs {
     new GenericArrayData(out)
   }
 
+  /**
+   * Asymmetric PQ score (the IVF-PQ search step, Jégou et al. 2011): the
+   * dot of query `q` with the vector that `codes` decode to against
+   * centroid `centIdx` of the frozen k×dim matrix `flatCents`, computed
+   * straight from the codes. Each element is the same `centroid + codebook entry`
+   * double `pq_decode` stores, folded into the same ascending-index sum
+   * as `vec_dot`, so the result equals
+   * `vec_dot(pq_decode(codes, cent, cb, ksub), q)` bit for bit — but no
+   * decoded array is built. `cb` is the flat double codebook of
+   * `pq_decode`, so dim = |cb| / ksub. Malformed inputs throw where
+   * `pq_decode` or `vec_dot` would, plus a centroid index outside the
+   * matrix.
+   */
+  def pqScore(codes: ArrayData, centIdx: Int, q: ArrayData,
+      flatCents: Array[Double], cb: Array[Double], ksub: Int): Double = {
+    val m = codes.numElements()
+    val n = if (ksub > 0) cb.length / ksub else 0
+    if (m <= 0 || n % m != 0 || ksub * n != cb.length)
+      throw new IllegalArgumentException(
+        s"pq_score: codebook length ${cb.length} is not ksub·dim for " +
+          s"ksub=$ksub and m=$m codes")
+    if (q.numElements() != n) throw new IllegalArgumentException(
+      s"pq_score: length mismatch ($n vs ${q.numElements()})")
+    if (centIdx < 0 || (centIdx + 1) * n > flatCents.length)
+      throw new IllegalArgumentException(
+        s"pq_score: centroid index $centIdx outside the " +
+          s"${flatCents.length}-value centroid matrix (dim $n)")
+    val dsub = n / m
+    val cent = centIdx * n
+    var s = 0.0
+    var j = 0
+    while (j < m) {
+      val e = codes.getInt(j)
+      if (e < 0 || e >= ksub) throw new IllegalArgumentException(
+        s"pq_score: code $e out of range [0, $ksub)")
+      val base = (j * ksub + e) * dsub
+      val i0 = j * dsub
+      var t = 0
+      while (t < dsub) {
+        s += (flatCents(cent + i0 + t) + cb(base + t)) * q.getDouble(i0 + t)
+        t += 1
+      }
+      j += 1
+    }
+    s
+  }
+
   case class PqEncode(left: Expression, right: Expression, m: Int,
       ksub: Int) extends BinaryExpression with ExpectsInputTypes {
     override def inputTypes: Seq[DataType] =
@@ -333,6 +380,32 @@ object VectorExprs {
         s"graft.functions.VectorExprs.pqDecode($a, $b, $c, $ksub)")
     override protected def withNewChildrenInternal(newFirst: Expression,
         newSecond: Expression, newThird: Expression): PqDecode =
+      copy(first = newFirst, second = newSecond, third = newThird)
+  }
+
+  /** `pq_score(codes, cent_idx, q)` with the centroid matrix and the
+    * double codebook FROZEN into the expression like `ivf_nearest`'s
+    * centroids: codegen reads the primitive double[] references. */
+  case class PqScore(first: Expression, second: Expression,
+      third: Expression, flatCents: Array[Double], cb: Array[Double],
+      ksub: Int)
+      extends org.apache.spark.sql.catalyst.expressions.TernaryExpression
+      with ExpectsInputTypes {
+    override def inputTypes: Seq[DataType] =
+      Seq(ArrayType(IntegerType), IntegerType, ArrayType(DoubleType))
+    override def dataType: DataType = DoubleType
+    override def prettyName: String = "pq_score"
+    override def nullSafeEval(a: Any, b: Any, c: Any): Any =
+      pqScore(a.asInstanceOf[ArrayData], b.asInstanceOf[Int],
+        c.asInstanceOf[ArrayData], flatCents, cb, ksub)
+    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+      val cents = ctx.addReferenceObj("pqCents", flatCents, "double[]")
+      val book = ctx.addReferenceObj("pqBook", cb, "double[]")
+      defineCodeGen(ctx, ev, (a, b, c) =>
+        s"graft.functions.VectorExprs.pqScore($a, $b, $c, $cents, $book, $ksub)")
+    }
+    override protected def withNewChildrenInternal(newFirst: Expression,
+        newSecond: Expression, newThird: Expression): PqScore =
       copy(first = newFirst, second = newSecond, third = newThird)
   }
 
@@ -420,6 +493,17 @@ object VectorExprs {
       s"$what must be an int literal, got $other")
   }
 
+  /** A frozen matrix or codebook arrives as a foldable array literal
+    * (typedLit) and is unwrapped ONCE, at function resolution, into a
+    * primitive array. */
+  private def doubleArrayLit(e: Expression, what: String): Array[Double] =
+    e match {
+      case Literal(ad: ArrayData, ArrayType(DoubleType, _)) =>
+        ad.toDoubleArray()
+      case other => throw new IllegalArgumentException(
+        s"$what must be an array<double> literal, got $other")
+    }
+
   /** The vector-function registry entries, shared by per-session
     * `register` and the `GraftExtensions` session-builder injection. */
   val injections: Seq[(FunctionIdentifier, ExpressionInfo,
@@ -459,22 +543,24 @@ object VectorExprs {
         PqDecode(children(0), children(1), children(2),
           intLit(children(3), "pq_decode ksub"))
       }),
+    (FunctionIdentifier("pq_score"),
+      new ExpressionInfo(classOf[PqScore].getName, "pq_score"),
+      (children: Seq[Expression]) => {
+        require(children.size == 6,
+          "pq_score(codes, cent_idx, q, cents_flat, cb_flat, ksub)")
+        PqScore(children(0), children(1), children(2),
+          doubleArrayLit(children(3), "pq_score cents_flat"),
+          doubleArrayLit(children(4), "pq_score cb_flat"),
+          intLit(children(5), "pq_score ksub"))
+      }),
     (FunctionIdentifier("ivf_nearest"),
       new ExpressionInfo(classOf[IvfNearestN].getName, "ivf_nearest"),
       (children: Seq[Expression]) => {
         require(children.size == 5,
           "ivf_nearest(vec, norm, cents_flat, cent_norms, n)")
-        // the centroid matrix/norms arrive as foldable array literals
-        // (typedLit) and are unwrapped ONCE here into primitive arrays
-        def darr(e: Expression, what: String): Array[Double] = e match {
-          case Literal(ad: ArrayData, ArrayType(DoubleType, _)) =>
-            ad.toDoubleArray()
-          case other => throw new IllegalArgumentException(
-            s"$what must be an array<double> literal, got $other")
-        }
         IvfNearestN(children(0), children(1),
-          darr(children(2), "ivf_nearest cents_flat"),
-          darr(children(3), "ivf_nearest cent_norms"),
+          doubleArrayLit(children(2), "ivf_nearest cents_flat"),
+          doubleArrayLit(children(3), "ivf_nearest cent_norms"),
           intLit(children(4), "ivf_nearest n"))
       }))
 

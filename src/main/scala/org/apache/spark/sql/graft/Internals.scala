@@ -3,8 +3,8 @@ package org.apache.spark.sql.graft
 import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
-import org.apache.spark.sql.execution.SQLExecution
+import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, Statistics}
+import org.apache.spark.sql.execution.{LogicalRDD, SQLExecution}
 import org.apache.spark.sql.execution.datasources.{FileStatusCache,
   HadoopFsRelation, InMemoryFileIndex}
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
@@ -21,13 +21,28 @@ import org.apache.spark.util.HadoopFSUtils
  * the statement level because the manifest table format resolves
  * outside the catalog — and by the query door, which parses a
  * statement, replaces its cataloged names and runs the plan. Also a
- * parquet dir read listed on the driver, and a collect that keeps
- * Catalyst values.
+ * parquet dir read listed on the driver, a collect that keeps
+ * Catalyst values, and a checkpointed frame with a set size estimate.
  */
 object Internals {
   def ofRows(spark: SparkSession, plan: LogicalPlan): DataFrame =
     org.apache.spark.sql.classic.Dataset.ofRows(
       spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession], plan)
+
+  /** A checkpointed frame (`localCheckpoint`, `checkpoint`) that
+    * estimates its size as `sizeInBytes` instead of by the estimate of
+    * the plan it was cut from. A loop that checkpoints a join over its
+    * previous checkpoint otherwise multiplies the join estimates round
+    * after round. */
+  def withSizeEstimate(df: DataFrame, sizeInBytes: BigInt): DataFrame =
+    df.queryExecution.analyzed match {
+      case r: LogicalRDD =>
+        ofRows(df.sparkSession, r.copy()(
+          df.sparkSession.asInstanceOf[org.apache.spark.sql.classic.SparkSession],
+          Some(Statistics(sizeInBytes)), None))
+      case other => throw new IllegalArgumentException(
+        s"withSizeEstimate: not a checkpointed frame: ${other.nodeName}")
+    }
 
   /** Spark's parse of `sqlText` as `spark.sql` parses it: with `spark`
     * the active session, so literals read its conf (a TIMESTAMP literal

@@ -719,13 +719,47 @@ class ExtSpec extends AnyFunSuite {
 
   test("Dedup.components: pointer jumping converges a deep chain in O(log d) rounds") {
     // a 200-link chain has diameter 200 — plain min-label propagation
-    // would need 200 rounds (and hit the maxRounds guard); the pointer
-    // jump doubles the label's reach per round, so ~log2(200)+slack
+    // would need 200 rounds; on a chain the pointer jump doubles the
+    // label's reach per round, so ~log2(200)+slack
     val chain = (1L until 200L).map(i => (i, i + 1)).toDF("id_a", "id_b")
     val comp = Dedup.componentsRounds(chain).as[(Long, Long)].collect().toMap
     assert((1L to 200L).forall(comp(_) == 1L))
     val rounds = Dedup.lastComponentsRounds.get()
     assert(rounds <= 12, s"expected O(log d) convergence, took $rounds rounds")
+  }
+
+  test("Dedup.componentsRounds: sparse random graphs that need more than 20 rounds equal union-find") {
+    // random pairs over twice as many ids (mean degree 1): branching
+    // trees, where the min label mostly travels one hop a round. Both
+    // inputs once failed: past a fixed 20-round cap, and — at 10 000
+    // pairs with the cap raised — with the driver out of heap in the
+    // rounds' compounding join size estimates
+    def unionFind(pairs: Seq[(Long, Long)]): Map[Long, Long] = {
+      val parent = scala.collection.mutable.Map[Long, Long]()
+      def find(x: Long): Long = {
+        val p = parent.getOrElse(x, x)
+        if (p == x) x else { val r = find(p); parent(x) = r; r }
+      }
+      pairs.foreach { case (a, b) =>
+        val (ra, rb) = (find(a), find(b))
+        if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
+      }
+      pairs.flatMap(p => Seq(p._1, p._2)).distinct.map(n => n -> find(n)).toMap
+    }
+    // 3 000 pairs take 45 rounds, 10 000 pairs 26
+    for ((n, seed) <- Seq((3000, 5), (10000, 0))) {
+      val pairs = spark.range(n).select(
+        pmod(xxhash64(col("id"), lit(seed)), lit(2L * n)).as("id_a"),
+        pmod(xxhash64(col("id"), lit(seed + 1)), lit(2L * n)).as("id_b"))
+      val labels = Dedup.componentsRounds(pairs)
+      val estimate = labels.queryExecution.optimizedPlan.stats.sizeInBytes
+      assert(estimate.isValidLong, s"$n pairs: size estimate of " +
+        s"${estimate.bitLength} bits")
+      val got = labels.as[(Long, Long)].collect().toMap
+      assert(got == unionFind(pairs.as[(Long, Long)].collect().toSeq),
+        s"$n pairs: labeling diverged from union-find after " +
+          s"${Dedup.lastComponentsRounds.get()} rounds")
+    }
   }
 
   test("Dedup.components: a small pair graph is labeled on the driver in at most 2 jobs") {
@@ -1013,6 +1047,153 @@ class ExtSpec extends AnyFunSuite {
     assert(rows(Similarity.indexedIvfPqTopK(spark, root2, e, q,
       "vec_id", "embedding", 5, nProbe = 6, shortlist = 20)) == oneShot,
       "the incrementally grown PQ index must equal the one-shot build")
+  }
+
+  /** 500 seeded random 64-dim float embeddings, ids 0..499, held in
+    * memory: every file a plan over them scans belongs to an index. */
+  private def memEmbeddings(seed: Int): org.apache.spark.sql.DataFrame = {
+    val r = new scala.util.Random(seed)
+    (0L until 500L).map(i => (i, Seq.fill(64)(r.nextGaussian().toFloat)))
+      .toDF("vec_id", "embedding")
+  }
+
+  test("Similarity persisted IVF-PQ index: a query batch runs in at most 6 jobs over a handful of index files") {
+    val e = memEmbeddings(3)
+    val q = e.where($"vec_id" % 50 === 0)
+    val root = java.nio.file.Files
+      .createTempDirectory("graft_simidxpq_jobs_spec_").toString
+    // default stride: 25 cells
+    Similarity.buildIvfPqIndex(e, "vec_id", "embedding", root)
+    def batch() = Similarity.indexedIvfPqTopK(spark, root, e, q,
+        "vec_id", "embedding", 5)
+      .select("query_id", "neighbor_id", "rank").collect()
+    batch() // warm: the first batch compiles, later ones are measured
+    val (rows, jobs) = Jobs.during(spark)(batch())
+    assert(rows.nonEmpty)
+    assert(jobs <= 6, s"one indexed IVF-PQ batch ran $jobs jobs")
+    val indexFiles = Similarity.indexedIvfPqTopK(spark, root, e, q,
+        "vec_id", "embedding", 5).inputFiles
+    assert(indexFiles.length <= 3,
+      s"one batch reads ${indexFiles.length} index files")
+  }
+
+  test("Similarity IVF and IVF-PQ indexes written one partition per cell still serve and take appends") {
+    import graft.ops.{Txn, VersionedPartitioned}
+    val e = memEmbeddings(5)
+    val q = e.where($"vec_id" % 50 === 0)
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.select("query_id", "neighbor_id", "rank", "sim")
+        .as[(Long, Long, Int, Double)].collect().toSet
+    def tmp(p: String) = java.nio.file.Files.createTempDirectory(p).toString
+    def cellDirs(cellsRoot: String) = VersionedPartitioned
+      .read(spark, cellsRoot).inputFiles
+      .flatMap(_.split('/').find(_.startsWith("__cell="))).toSet
+    // the layout the index used to write: `cells` one partition per
+    // cell id, the other tables copied as they are
+    def legacy(root: String, tables: Seq[String]): String = {
+      val old = tmp("graft_simidx_legacy_spec_")
+      Txn.commit(tables.map { t =>
+        val df = VersionedPartitioned.read(spark, s"$root/$t")
+        Txn.Write(
+          if (t == Similarity.IvfCellsTable)
+            df.withColumn("__cell", col("__cent_id").cast("string"))
+          else df,
+          s"$old/$t", "__cell")
+      })
+      assert(cellDirs(s"$old/${Similarity.IvfCellsTable}").size == 10)
+      old
+    }
+    // bootstrap on a superset of both stride samples; the odd ids are
+    // appended, twice (the replay must be a no-op on ids)
+    val boot = e.where($"vec_id" % 2 === 0 || $"vec_id" % 17 === 0)
+    val rest = e.where($"vec_id" % 2 === 1)
+
+    val pqOneShot = rows(Similarity.ivfPqTopK(e, q, "vec_id", "embedding",
+      5, centroidStride = 50, nProbe = 6, m = 8, cbStride = 17,
+      shortlist = 20))
+    val pqRoot = tmp("graft_simidxpq_layout_spec_")
+    Similarity.buildIvfPqIndex(boot, "vec_id", "embedding", pqRoot,
+      centroidStride = 50, m = 8, cbStride = 17)
+    // the current layout: every cell in the one `all` partition
+    assert(cellDirs(s"$pqRoot/${Similarity.IvfCellsTable}") ==
+      Set("__cell=all"))
+    val pqOld = legacy(pqRoot, Seq(Similarity.IvfCellsTable,
+      Similarity.IvfCentroidsTable, Similarity.IvfPqCodebookTable))
+    (1 to 2).foreach(_ => Similarity.appendToIvfPqIndex(spark, pqOld, rest,
+      "vec_id", "embedding"))
+    assert(VersionedPartitioned.read(spark,
+      s"$pqOld/${Similarity.IvfCellsTable}").count() == e.count())
+    assert(rows(Similarity.indexedIvfPqTopK(spark, pqOld, e, q,
+      "vec_id", "embedding", 5, nProbe = 6, shortlist = 20)) == pqOneShot)
+
+    val ivfOneShot = rows(Similarity.ivfTopK(e, q, "vec_id", "embedding", 5,
+      centroidStride = 50, nProbe = 4))
+    val ivfRoot = tmp("graft_simidx_layout_spec_")
+    Similarity.buildIvfIndex(boot, "vec_id", "embedding", ivfRoot,
+      centroidStride = 50)
+    assert(cellDirs(s"$ivfRoot/${Similarity.IvfCellsTable}") ==
+      Set("__cell=all"))
+    val ivfOld = legacy(ivfRoot,
+      Seq(Similarity.IvfCellsTable, Similarity.IvfCentroidsTable))
+    (1 to 2).foreach(_ => Similarity.appendToIvfIndex(spark, ivfOld, rest,
+      "vec_id", "embedding"))
+    assert(VersionedPartitioned.read(spark,
+      s"$ivfOld/${Similarity.IvfCellsTable}").count() == e.count())
+    assert(rows(Similarity.indexedIvfTopK(spark, ivfOld, q,
+      "vec_id", "embedding", 5, nProbe = 4)) == ivfOneShot)
+  }
+
+  test("pq_score kernel equals vec_dot(pq_decode(…), q) bit for bit; bad codes throw") {
+    import graft.functions.VectorExprs
+    import org.apache.spark.sql.catalyst.util.GenericArrayData
+    val rnd = new scala.util.Random(7)
+    for ((m, dsub, ksub, k) <- Seq((8, 8, 29, 25), (4, 3, 5, 2), (1, 7, 1, 1))) {
+      val dim = m * dsub
+      val cents = Array.fill(k * dim)(rnd.nextGaussian() * 3)
+      val cb = Array.fill(ksub * dim)(rnd.nextGaussian() / 7)
+      for (_ <- 1 to 200) {
+        val codes = new GenericArrayData(Array.fill[Any](m)(rnd.nextInt(ksub)))
+        val c = rnd.nextInt(k)
+        val qv = new GenericArrayData(Array.fill(dim)(rnd.nextGaussian()))
+        val want = VectorExprs.dot(VectorExprs.pqDecode(codes,
+          new GenericArrayData(cents.slice(c * dim, (c + 1) * dim)),
+          new GenericArrayData(cb), ksub), qv)
+        val got = VectorExprs.pqScore(codes, c, qv, cents, cb, ksub)
+        assert(java.lang.Double.doubleToRawLongBits(got) ==
+          java.lang.Double.doubleToRawLongBits(want), s"$got vs $want")
+      }
+    }
+    // the registered, code-generated expression against the composed one
+    VectorExprs.register(spark)
+    val (m, dsub, ksub, k) = (4, 4, 6, 3)
+    val dim = m * dsub
+    val cents = Array.fill(k * dim)(rnd.nextGaussian())
+    val cb = Array.fill(ksub * dim)(rnd.nextGaussian() / 5)
+    val input = (0 until 50).map { i =>
+      (i, Array.fill(m)(rnd.nextInt(ksub)).toSeq, i % k,
+        Array.fill(dim)(rnd.nextGaussian()).toSeq)
+    }.toDF("id", "codes", "idx", "q")
+    val centVecs = typedLit(cents.grouped(dim).map(_.toSeq).toSeq)
+    val both = input.select(
+      call_function("pq_score", col("codes"), col("idx"), col("q"),
+        typedLit(cents), typedLit(cb), lit(ksub)).as("fused"),
+      call_function("vec_dot", call_function("pq_decode", col("codes"),
+        element_at(centVecs, col("idx") + 1), typedLit(cb), lit(ksub)),
+        col("q")).as("composed"))
+      .as[(Double, Double)].collect()
+    assert(both.length == 50 && both.forall { case (a, b) =>
+      java.lang.Double.doubleToRawLongBits(a) ==
+        java.lang.Double.doubleToRawLongBits(b) })
+    // out-of-range codes and centroid indexes fail loudly, as in pq_decode
+    val qv = new GenericArrayData(Array.fill(dim)(1.0))
+    for (bad <- Seq(-1, ksub))
+      intercept[IllegalArgumentException](VectorExprs.pqScore(
+        new GenericArrayData(Array[Any](0, bad, 0, 0)), 0, qv, cents, cb, ksub))
+    intercept[IllegalArgumentException](VectorExprs.pqScore(
+      new GenericArrayData(Array[Any](0, 0, 0, 0)), k, qv, cents, cb, ksub))
+    intercept[IllegalArgumentException](VectorExprs.pqScore(
+      new GenericArrayData(Array[Any](0, 0, 0, 0)), 0,
+      new GenericArrayData(Array.fill(dim - 1)(1.0)), cents, cb, ksub))
   }
 
   test("pq_encode/pq_decode kernels: integer argmin, lowest-index ties, exact decode") {
