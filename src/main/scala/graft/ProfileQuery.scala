@@ -18,7 +18,9 @@ import org.apache.spark.sql.util.QueryExecutionListener
   * the compiles mostly run inside tasks, so the listener's job time
   * alone hides them. The first line also gives the parquet files the
   * query's SQL executions read: the sum of their file scans' `numFiles`
-  * metric (an RDD action outside a SQL execution is not counted).
+  * metric (an RDD action outside a SQL execution is not counted), and
+  * the bytes its tasks wrote (their output metrics: data files and
+  * sidecars, not commit files).
   * A second line per query gives Catalyst's share:
   * rule runs and time over all rule executors, the time of the
   * analyzer's rules (`catalyst.analysis`), and `ResolveRelations`'
@@ -53,6 +55,7 @@ object ProfileQuery {
     @volatile var stages = 0
     @volatile var tasks = 0L
     @volatile var taskMs = 0L
+    @volatile var bytesWritten = 0L
     val filesRead = new java.util.concurrent.atomic.AtomicLong
     val jobStart = new java.util.concurrent.ConcurrentHashMap[Int, (Long, String)]()
     val jobLines = new java.util.concurrent.ConcurrentLinkedQueue[String]()
@@ -86,6 +89,8 @@ object ProfileQuery {
         tasks += 1
         if (e.taskInfo != null)
           taskMs += (e.taskInfo.finishTime - e.taskInfo.launchTime)
+        if (e.taskMetrics != null)
+          bytesWritten += e.taskMetrics.outputMetrics.bytesWritten
       }
     }
 
@@ -115,7 +120,8 @@ object ProfileQuery {
       val fn = SparkEntry.queries(name)
       spark.sparkContext.addSparkListener(listener)
       spark.listenerManager.register(scans)
-      jobs = 0; stages = 0; tasks = 0; taskMs = 0; filesRead.set(0)
+      jobs = 0; stages = 0; tasks = 0; taskMs = 0; bytesWritten = 0
+      filesRead.set(0)
       jobLines.clear(); stageLines.clear()
       val compiles0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
       val compileNs0 = CodeGenerator.compileTime
@@ -134,7 +140,7 @@ object ProfileQuery {
       println(f"[profile] $name: total ${(t1 - t0) / 1e9}%.2f s " +
         f"(build ${(tBuilt - t0) / 1e9}%.2f s), jobs $jobs, stages $stages, " +
         f"tasks $tasks, task-time ${taskMs / 1000.0}%.1f s, " +
-        f"files read ${filesRead.get}, " +
+        f"files read ${filesRead.get}, bytes written $bytesWritten, " +
         f"compiles ${CodegenMetrics.METRIC_COMPILATION_TIME.getCount - compiles0} " +
         f"(${(CodeGenerator.compileTime - compileNs0) / 1e9}%.2f s)")
       val meter = RuleExecutor.getCurrentMetrics() - meter0

@@ -272,6 +272,26 @@ object Similarity {
   val IvfCentroidsTable = "centroids"
   val IvfPqCodebookTable = "codebook"
 
+  /** `cells` rows as they are written: every row in partition `cell`,
+    * and the writers sized by AQE's rebalance from the bytes (one file
+    * for a small index, advisory-sized files, each from its own task,
+    * at scale). Written with `cluster = false`: clustering a constant
+    * partition column would route the whole write through one task. */
+  private def cellsFrame(cells: DataFrame, cell: String): DataFrame =
+    cells.withColumn("__cell", lit(cell)).hint("rebalance")
+
+  /** Commit an append's `cells` rows into a partition of their own, so
+    * the append only adds files: `insertInto` folds (rewrites) every
+    * live partition a write overlaps, and no reader uses `__cell`.
+    * Returns the cells table's version (unchanged for an empty batch). */
+  private def appendCells(spark: org.apache.spark.sql.SparkSession,
+      root: String, cells: DataFrame, tag: Option[String]): Long =
+    graft.ops.VersionedPartitioned.insertInto(
+        cellsFrame(cells, s"append-${java.util.UUID.randomUUID()}"),
+        s"$root/$IvfCellsTable", "__cell", tag = tag, cluster = false)
+      .getOrElse(graft.ops.VersionedPartitioned
+        .currentVersion(spark, s"$root/$IvfCellsTable").getOrElse(0L))
+
   /**
    * Build and PERSIST the IVF index — the 100 TB serving shape, where
    * the one-shot `ivfTopK` rebuild-per-query is wrong: assignment runs
@@ -281,12 +301,13 @@ object Similarity {
    * leave centroids without their cells or vice versa):
    *
    *  - `cells`: one row per corpus vector — (id, vector, norm, cell) —
-   *    in the single `__cell = 'all'` partition, like `centroids`. A
-   *    query batch probes nearly every cell, so a partition per cell
-   *    pruned nothing and cost a listing and a file open per cell;
-   *    pruning by probe waits for per-file stats in the manifest.
-   *    Indexes written one partition per cell stay readable and
-   *    appendable (no reader uses `__cell`);
+   *    in the single `__cell = 'all'` partition, like `centroids`, and
+   *    each later append in a partition of its own. A query batch
+   *    probes nearly every cell, so a partition per cell pruned
+   *    nothing and cost a listing and a file open per cell; pruning by
+   *    probe waits for per-file stats in the manifest. Indexes written
+   *    one partition per cell stay readable and appendable (no reader
+   *    uses `__cell`);
    *  - `centroids`: the stride-sampled centroid vectors (corpus/stride
    *    rows — broadcast-sized by construction).
    *
@@ -303,9 +324,9 @@ object Similarity {
       corpus.where(col(idCol) % centroidStride === 0), idCol, vecCol,
       "__cent_id", "__ev", "__en")
     val cells = ivfAssign(c, collectCents(cents))
-      .withColumn("__cell", lit("all"))
     graft.ops.Txn.commit(Seq(
-      graft.ops.Txn.Write(cells, s"$root/$IvfCellsTable", "__cell"),
+      graft.ops.Txn.Write(cellsFrame(cells, "all"),
+        s"$root/$IvfCellsTable", "__cell", cluster = false),
       graft.ops.Txn.Write(cents.withColumn("__cell", lit("all")),
         s"$root/$IvfCentroidsTable", "__cell")))
     ()
@@ -316,7 +337,8 @@ object Similarity {
    * flow (the `dedup_incremental_indexed` shape for ANN): assign ONLY
    * the new batch against the STORED centroids (broadcast-sized read,
    * one scoring pass over the batch — the corpus is never touched)
-   * and append the assignments to `cells` as one commit. Because
+   * and append the assignments to `cells` as one commit that adds
+   * only the batch's files, in a partition of their own. Because
    * assignment is per-vector deterministic given the centroids, an
    * index bootstrapped on any superset of the centroid sample and
    * grown batch-by-batch is BIT-IDENTICAL to a one-shot build over
@@ -341,20 +363,16 @@ object Similarity {
       .read(spark, s"$root/$IvfCellsTable").select("neighbor_id")
     val b = prep(batch, idCol, vecCol, "neighbor_id", "__cv", "__cn")
       .join(existing, Seq("neighbor_id"), "left_anti")
-    val cells = ivfAssign(b, collectCents(cents))
-      .withColumn("__cell", lit("all"))
-    graft.ops.VersionedPartitioned.insertInto(cells,
-        s"$root/$IvfCellsTable", "__cell", tag = tag)
-      .getOrElse(graft.ops.VersionedPartitioned
-        .currentVersion(spark, s"$root/$IvfCellsTable").getOrElse(0L))
+    appendCells(spark, root, ivfAssign(b, collectCents(cents)), tag)
   }
 
   /**
    * `ivfTopK` served from the PERSISTED index: the corpus is never
-   * read — the candidate scan is the `cells` table (one partition, a
-   * few files; see `buildIvfIndex`), joined to the probes on the cell
-   * id, and the metadata-sized `centroids` table is frozen into the
-   * probe expression; both are resolved together through
+   * read — the candidate scan is the `cells` table (the build's
+   * partition and one per append, a few files each; see
+   * `buildIvfIndex`), joined to the probes on the cell id, and the
+   * metadata-sized `centroids` table is frozen into the probe
+   * expression; both are resolved together through
    * `Txn.readAll`'s snapshot-consistent view. Bit-identical to the
    * one-shot `ivfTopK` over the same corpus and knobs.
    */
@@ -471,7 +489,7 @@ object Similarity {
       .where(col("neighbor_id") =!= col("query_id"))
       .withColumn("__approx",
         call_function("pq_score", col("__codes"), col("__idx"), col("__qv"),
-          typedLit(cents.flat), typedLit(flatD), lit(ksub)) /
+          typedLit(cents.vecs), typedLit(flatD), lit(ksub)) /
           (col("__cn") * col("__qn")))
       .withColumn("__ar", row_number().over(wA))
       .where(col("__ar") <= sl)
@@ -496,10 +514,11 @@ object Similarity {
    * `Txn` transaction:
    *
    *  - `cells`: one row per corpus vector — (id, true norm, cell,
-   *    m PQ codes) — in the single `__cell = 'all'` partition, as
-   *    `buildIvfIndex` explains; the FLOATS ARE NOT STORED (m+12 bytes
-   *    a vector is the whole point — the primary store keeps the
-   *    floats and serves the shortlist's rerank point lookups);
+   *    m PQ codes) — in the single `__cell = 'all'` partition plus
+   *    one per later append, as `buildIvfIndex` explains; the FLOATS
+   *    ARE NOT STORED (m+12 bytes a vector is the whole point — the
+   *    primary store keeps the floats and serves the shortlist's
+   *    rerank point lookups);
    *  - `centroids`: the stride-sampled coarse centroids;
    *  - `codebook`: the flat (j, e, t) double codebook, one row per
    *    position, with (m, ksub, dim) stamped on every row —
@@ -523,7 +542,6 @@ object Similarity {
         col("__cent_id"),
         call_function("pq_encode", col("__res"), typedLit(flatI),
           lit(m), lit(ksub)).as("__codes"))
-      .withColumn("__cell", lit("all"))
     val spark = corpus.sparkSession
     import spark.implicits._
     val cb = flatD.toSeq.zipWithIndex
@@ -531,7 +549,8 @@ object Similarity {
       .toDF("idx", "v", "m", "ksub", "dim")
       .withColumn("__cell", lit("all"))
     graft.ops.Txn.commit(Seq(
-      graft.ops.Txn.Write(cells, s"$root/$IvfCellsTable", "__cell"),
+      graft.ops.Txn.Write(cellsFrame(cells, "all"),
+        s"$root/$IvfCellsTable", "__cell", cluster = false),
       graft.ops.Txn.Write(cents.withColumn("__cell", lit("all")),
         s"$root/$IvfCentroidsTable", "__cell"),
       graft.ops.Txn.Write(cb, s"$root/$IvfPqCodebookTable", "__cell")))
@@ -552,9 +571,10 @@ object Similarity {
 
   /**
    * `ivfPqTopK` served from the PERSISTED index: the shortlist phase
-   * reads only the index tables (the codes in one partition, plus the
-   * metadata-sized centroids and codebook, collected to the driver and
-   * frozen into `ivf_nearest` and `pq_score`; all three resolved
+   * reads only the index tables (the codes, in the build's partition
+   * and one per append, plus the metadata-sized centroids and
+   * codebook, collected to the driver and frozen into `ivf_nearest`
+   * and `pq_score`; all three resolved
    * together through `Txn.readAll`'s snapshot-consistent view); the
    * float `corpus` (the primary store) is touched only by the exact
    * rerank's shortlist-sized point-lookup join — the asymmetric-
@@ -586,9 +606,10 @@ object Similarity {
    * batch against the STORED centroids and codebook (the corpus is
    * never rescanned; the codebook is frozen at build time, the
    * standard PQ serving contract — re-train by rebuilding), append as
-   * one commit. Idempotent on ids like [[appendToIvfIndex]]. An index
-   * bootstrapped on any superset of BOTH stride samples and grown
-   * batch-by-batch is bit-identical to a one-shot build.
+   * one commit that adds only the batch's files. Idempotent on ids
+   * like [[appendToIvfIndex]]. An index bootstrapped on any superset
+   * of BOTH stride samples and grown batch-by-batch is bit-identical
+   * to a one-shot build.
    */
   def appendToIvfPqIndex(spark: org.apache.spark.sql.SparkSession,
       root: String, batch: DataFrame, idCol: String,
@@ -607,11 +628,7 @@ object Similarity {
       .select(col("neighbor_id"), col("__cn"), col("__cent_id"),
         call_function("pq_encode", col("__res"), typedLit(flatI),
           lit(m), lit(ksub)).as("__codes"))
-      .withColumn("__cell", lit("all"))
-    graft.ops.VersionedPartitioned.insertInto(cells,
-        s"$root/$IvfCellsTable", "__cell", tag = tag)
-      .getOrElse(graft.ops.VersionedPartitioned
-        .currentVersion(spark, s"$root/$IvfCellsTable").getOrElse(0L))
+    appendCells(spark, root, cells, tag)
   }
 
   /**

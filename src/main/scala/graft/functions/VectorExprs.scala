@@ -308,8 +308,8 @@ object VectorExprs {
    * `vec_dot(pq_decode(codes, cent, cb, ksub), q)` bit for bit — but no
    * decoded array is built. `cb` is the flat double codebook of
    * `pq_decode`, so dim = |cb| / ksub. Malformed inputs throw where
-   * `pq_decode` or `vec_dot` would, plus a centroid index outside the
-   * matrix.
+   * `pq_decode` or `vec_dot` would, plus a centroid matrix whose rows
+   * are not dim wide and a centroid index outside the matrix.
    */
   def pqScore(codes: ArrayData, centIdx: Int, q: ArrayData,
       flatCents: Array[Double], cb: Array[Double], ksub: Int): Double = {
@@ -321,6 +321,9 @@ object VectorExprs {
           s"ksub=$ksub and m=$m codes")
     if (q.numElements() != n) throw new IllegalArgumentException(
       s"pq_score: length mismatch ($n vs ${q.numElements()})")
+    if (n > 0 && flatCents.length % n != 0) throw new IllegalArgumentException(
+      s"pq_score: centroid matrix length ${flatCents.length} is not a " +
+        s"multiple of dim $n")
     if (centIdx < 0 || (centIdx + 1) * n > flatCents.length)
       throw new IllegalArgumentException(
         s"pq_score: centroid index $centIdx outside the " +
@@ -385,7 +388,9 @@ object VectorExprs {
 
   /** `pq_score(codes, cent_idx, q)` with the centroid matrix and the
     * double codebook FROZEN into the expression like `ivf_nearest`'s
-    * centroids: codegen reads the primitive double[] references. */
+    * centroids: codegen reads the primitive double[] references. The
+    * SQL function takes the centroids as rows (`cents`, one
+    * array<double> per centroid) and checks their width once. */
   case class PqScore(first: Expression, second: Expression,
       third: Expression, flatCents: Array[Double], cb: Array[Double],
       ksub: Int)
@@ -504,6 +509,27 @@ object VectorExprs {
         s"$what must be an array<double> literal, got $other")
     }
 
+  /** `pq_score`'s centroid matrix: an array<array<double>> literal, one
+    * row per centroid, flattened once. Every row must be `dim` wide —
+    * the width `pq_decode` checks on each centroid it decodes against —
+    * since the flat matrix alone cannot tell a misaligned row. */
+  private def centroidRows(e: Expression, dim: Int): Array[Double] =
+    e match {
+      case Literal(ad: ArrayData, ArrayType(ArrayType(DoubleType, _), _)) =>
+        val rows = (0 until ad.numElements()).map { i =>
+          if (ad.isNullAt(i)) throw new IllegalArgumentException(
+            s"pq_score: centroid row $i is null")
+          ad.getArray(i).toDoubleArray()
+        }
+        rows.find(_.length != dim).foreach(r =>
+          throw new IllegalArgumentException(
+            s"pq_score: a ${r.length}-wide centroid row for a codebook " +
+              s"of dim $dim"))
+        Array.concat(rows: _*)
+      case other => throw new IllegalArgumentException(
+        s"pq_score cents must be an array<array<double>> literal, got $other")
+    }
+
   /** The vector-function registry entries, shared by per-session
     * `register` and the `GraftExtensions` session-builder injection. */
   val injections: Seq[(FunctionIdentifier, ExpressionInfo,
@@ -547,11 +573,12 @@ object VectorExprs {
       new ExpressionInfo(classOf[PqScore].getName, "pq_score"),
       (children: Seq[Expression]) => {
         require(children.size == 6,
-          "pq_score(codes, cent_idx, q, cents_flat, cb_flat, ksub)")
+          "pq_score(codes, cent_idx, q, cents, cb_flat, ksub)")
+        val cb = doubleArrayLit(children(4), "pq_score cb_flat")
+        val ksub = intLit(children(5), "pq_score ksub")
         PqScore(children(0), children(1), children(2),
-          doubleArrayLit(children(3), "pq_score cents_flat"),
-          doubleArrayLit(children(4), "pq_score cb_flat"),
-          intLit(children(5), "pq_score ksub"))
+          centroidRows(children(3), if (ksub > 0) cb.length / ksub else 0),
+          cb, ksub)
       }),
     (FunctionIdentifier("ivf_nearest"),
       new ExpressionInfo(classOf[IvfNearestN].getName, "ivf_nearest"),

@@ -48,8 +48,10 @@ object Txn {
 
   val TagPrefix = "txn:"
 
-  /** One table's write inside a transaction. */
-  final case class Write(df: DataFrame, root: String, partitionCol: String)
+  /** One table's write inside a transaction; `cluster` as in
+    * `VersionedPartitioned.promote`. */
+  final case class Write(df: DataFrame, root: String, partitionCol: String,
+      cluster: Boolean = true)
 
   private val TagRe = """txn:([0-9a-f-]+):(\d+)of(\d+)""".r
 
@@ -65,7 +67,7 @@ object Txn {
     val n = writes.size
     writes.zipWithIndex.map { case (w, i) =>
       VersionedPartitioned.promote(w.df, w.root, w.partitionCol,
-        tag = Some(s"$TagPrefix$id:${i + 1}of$n"))
+        tag = Some(s"$TagPrefix$id:${i + 1}of$n"), cluster = w.cluster)
     }
   }
 

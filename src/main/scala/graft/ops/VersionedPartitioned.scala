@@ -886,12 +886,14 @@ object VersionedPartitioned {
     * partition-discovery `distinct().collect()`, the current-partition
     * read, the write) — at a 70-statement pipeline day that is the
     * difference between O(statements) and O(3·statements) job
-    * round-trips. Returns None (no commit) for an empty insert. */
+    * round-trips. Returns None (no commit) for an empty insert.
+    * `cluster = false` writes `df` as the caller partitioned it, as in
+    * `promote`. */
   def insertInto(df: DataFrame, root: String,
       partitionCol: String, bloomCols: Seq[String] = Nil,
       statsCols: Seq[String] = Nil, clusterBy: Seq[String] = Nil,
       maxRecordsPerFile: Long = 0L,
-      tag: Option[String] = None): Option[Long] = {
+      tag: Option[String] = None, cluster: Boolean = true): Option[Long] = {
     val spark = df.sparkSession
     val (fs, rootPath) = Versioned.fsOf(spark, root)
     if (!fs.exists(rootPath)) fs.mkdirs(rootPath)
@@ -901,7 +903,8 @@ object VersionedPartitioned {
     // a sidecar written before the appended current-rows files would
     // silently drop them from pruned reads
     val snapName = writeSnapshot(df, rootPath, partitionCol, Nil,
-      clusterBy = clusterBy, maxRecordsPerFile = maxRecordsPerFile)
+      cluster = cluster, clusterBy = clusterBy,
+      maxRecordsPerFile = maxRecordsPerFile)
     val snapPath = new HPath(rootPath, snapName)
     val written = fs.listStatus(snapPath)
       .filter(s => s.isDirectory &&

@@ -1047,8 +1047,10 @@ object Streaming {
    *
    * Per-tick cost: the changed partitions of the source window (never
    * the whole table — `changedSides` is O(touched partitions)), one
-   * broadcast assignment pass over that window, and the append's
-   * column-pruned id-column scan of the index for the anti-join. An
+   * broadcast assignment pass over that window, the append's
+   * column-pruned id-column scan of the index for the anti-join, and
+   * a write of the new ids' rows alone (the append commits them in a
+   * cells partition of their own; no index file is rewritten). An
    * overlap-heavy window (e.g. upsert-style source commits re-writing
    * partitions) re-reads those partitions' rows but appends only the
    * genuinely new ids. Returns the (from, to] source window folded,

@@ -1071,10 +1071,63 @@ class ExtSpec extends AnyFunSuite {
     val (rows, jobs) = Jobs.during(spark)(batch())
     assert(rows.nonEmpty)
     assert(jobs <= 6, s"one indexed IVF-PQ batch ran $jobs jobs")
+    // centroids and codebook are one file each; the cells are at most
+    // one file per writer of their rebalanced write
     val indexFiles = Similarity.indexedIvfPqTopK(spark, root, e, q,
         "vec_id", "embedding", 5).inputFiles
-    assert(indexFiles.length <= 3,
+    assert(indexFiles.length <= 2 + spark.sparkContext.defaultParallelism,
       s"one batch reads ${indexFiles.length} index files")
+  }
+
+  test("Similarity index cells: builds write through many tasks, appends only add files") {
+    import graft.ops.VersionedPartitioned
+    val e = memEmbeddings(11)
+    def tmp(p: String) = java.nio.file.Files.createTempDirectory(p).toString
+    def files(cellsRoot: String) =
+      VersionedPartitioned.read(spark, cellsRoot).inputFiles.toSet
+    def partOf(f: String) = f.split('/').find(_.startsWith("__cell=")).get
+    // AQE sizes the rebalanced cells write by bytes; a small minimum
+    // partition size makes this 500-vector index "large", as a real
+    // corpus is under the default minimum
+    val key = "spark.sql.adaptive.coalescePartitions.minPartitionSize"
+    val before = spark.conf.getOption(key)
+    spark.conf.set(key, "1k")
+    try {
+      val boot = e.where($"vec_id" % 2 === 0 || $"vec_id" % 17 === 0)
+      val rest = e.where($"vec_id" % 2 === 1)
+      for (pq <- Seq(false, true)) {
+        val root = tmp("graft_simidx_writers_spec_")
+        val cells = s"$root/${Similarity.IvfCellsTable}"
+        if (pq) Similarity.buildIvfPqIndex(boot, "vec_id", "embedding",
+          root, centroidStride = 50, m = 8, cbStride = 17)
+        else Similarity.buildIvfIndex(boot, "vec_id", "embedding", root,
+          centroidStride = 50)
+        def append() =
+          if (pq) Similarity.appendToIvfPqIndex(spark, root, rest,
+            "vec_id", "embedding")
+          else Similarity.appendToIvfIndex(spark, root, rest,
+            "vec_id", "embedding")
+        // one file per writer task, all in the one build partition
+        val built = files(cells)
+        assert(built.map(partOf) == Set("__cell=all"))
+        assert(built.size > 1, s"pq=$pq: the build wrote ${built.size} file")
+        // the append commits its rows in a fresh partition and leaves
+        // every file of the build in place
+        append()
+        val grown = files(cells)
+        assert(built.subsetOf(grown), s"pq=$pq: the append rewrote the build")
+        val added = grown -- built
+        assert(added.nonEmpty && added.map(partOf).size == 1 &&
+          !added.map(partOf).contains("__cell=all"), added.toString)
+        assert(VersionedPartitioned.read(spark, cells).count() == e.count())
+        // a replayed append has no new ids: nothing is written
+        append()
+        assert(files(cells) == grown)
+      }
+    } finally before match {
+      case Some(v) => spark.conf.set(key, v)
+      case None => spark.conf.unset(key)
+    }
   }
 
   test("Similarity IVF and IVF-PQ indexes written one partition per cell still serve and take appends") {
@@ -1176,7 +1229,7 @@ class ExtSpec extends AnyFunSuite {
     val centVecs = typedLit(cents.grouped(dim).map(_.toSeq).toSeq)
     val both = input.select(
       call_function("pq_score", col("codes"), col("idx"), col("q"),
-        typedLit(cents), typedLit(cb), lit(ksub)).as("fused"),
+        centVecs, typedLit(cb), lit(ksub)).as("fused"),
       call_function("vec_dot", call_function("pq_decode", col("codes"),
         element_at(centVecs, col("idx") + 1), typedLit(cb), lit(ksub)),
         col("q")).as("composed"))
@@ -1194,6 +1247,23 @@ class ExtSpec extends AnyFunSuite {
     intercept[IllegalArgumentException](VectorExprs.pqScore(
       new GenericArrayData(Array[Any](0, 0, 0, 0)), 0,
       new GenericArrayData(Array.fill(dim - 1)(1.0)), cents, cb, ksub))
+    // a centroid matrix that is not dim wide: the flat kernel throws on
+    // a ragged length, and the SQL function checks every row's width,
+    // as pq_decode does per centroid (2·dim-wide rows are still a
+    // multiple of dim when flattened)
+    intercept[IllegalArgumentException](VectorExprs.pqScore(
+      new GenericArrayData(Array[Any](0, 0, 0, 0)), 0, qv,
+      cents :+ 1.0, cb, ksub))
+    val wide = intercept[Exception](input.select(call_function("pq_score",
+        col("codes"), col("idx"), col("q"),
+        typedLit(cents.grouped(2 * dim).map(_.toSeq).toSeq), typedLit(cb),
+        lit(ksub))).collect())
+    assert(Iterator.iterate[Throwable](wide)(_.getCause).takeWhile(_ != null)
+      .exists(t => String.valueOf(t.getMessage).contains("centroid row")),
+      wide.toString)
+    intercept[Exception](input.select(call_function("pq_decode",
+        col("codes"), typedLit(cents.take(2 * dim).toSeq), typedLit(cb),
+        lit(ksub))).collect())
   }
 
   test("pq_encode/pq_decode kernels: integer argmin, lowest-index ties, exact decode") {
