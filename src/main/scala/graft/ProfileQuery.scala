@@ -20,7 +20,9 @@ import org.apache.spark.sql.util.QueryExecutionListener
   * query's SQL executions read: the sum of their file scans' `numFiles`
   * metric (an RDD action outside a SQL execution is not counted), and
   * the bytes its tasks wrote (their output metrics: data files and
-  * sidecars, not commit files).
+  * sidecars, not commit files), and the driver time outside jobs: the
+  * query's wall time minus the union of its jobs' [start, end]
+  * intervals — analysis, planning and the driver work between jobs.
   * A second line per query gives Catalyst's share:
   * rule runs and time over all rule executors, the time of the
   * analyzer's rules (`catalyst.analysis`), and `ResolveRelations`'
@@ -58,6 +60,9 @@ object ProfileQuery {
     @volatile var bytesWritten = 0L
     val filesRead = new java.util.concurrent.atomic.AtomicLong
     val jobStart = new java.util.concurrent.ConcurrentHashMap[Int, (Long, String)]()
+    // (start, end) of every job in epoch ms, the clock of the events
+    val jobSpans = new java.util.concurrent.ConcurrentLinkedQueue[(Long, Long)]()
+    val jobStartMs = new java.util.concurrent.ConcurrentHashMap[Int, Long]()
     val jobLines = new java.util.concurrent.ConcurrentLinkedQueue[String]()
     val stageLines = new java.util.concurrent.ConcurrentLinkedQueue[String]()
     val listener = new SparkListener {
@@ -67,8 +72,10 @@ object ProfileQuery {
           .flatMap(p => Option(p.getProperty("spark.job.description")))
           .getOrElse("")
         jobStart.put(e.jobId, (System.nanoTime(), desc))
+        jobStartMs.put(e.jobId, e.time)
       }
       override def onJobEnd(e: SparkListenerJobEnd): Unit = {
+        Option(jobStartMs.remove(e.jobId)).foreach(s => jobSpans.add((s, e.time)))
         Option(jobStart.remove(e.jobId)).foreach { case (t0, desc) =>
           val ms = (System.nanoTime() - t0) / 1e6
           jobLines.add(f"    job ${e.jobId}%4d ${ms}%8.1f ms  $desc")
@@ -122,16 +129,18 @@ object ProfileQuery {
       spark.listenerManager.register(scans)
       jobs = 0; stages = 0; tasks = 0; taskMs = 0; bytesWritten = 0
       filesRead.set(0)
-      jobLines.clear(); stageLines.clear()
+      jobLines.clear(); stageLines.clear(); jobSpans.clear(); jobStartMs.clear()
       val compiles0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
       val compileNs0 = CodeGenerator.compileTime
       val meter0 = RuleExecutor.getCurrentMetrics()
       val rules0 = ruleMeter()
       val t0 = System.nanoTime()
+      val t0Ms = System.currentTimeMillis()
       val df = fn(spark, sfDir)
       val tBuilt = System.nanoTime()
       df.write.format("noop").mode("overwrite").save()
       val t1 = System.nanoTime()
+      val t1Ms = System.currentTimeMillis()
       // let straggler listener events drain
       Thread.sleep(300)
       spark.sparkContext.removeSparkListener(listener)
@@ -141,6 +150,7 @@ object ProfileQuery {
         f"(build ${(tBuilt - t0) / 1e9}%.2f s), jobs $jobs, stages $stages, " +
         f"tasks $tasks, task-time ${taskMs / 1000.0}%.1f s, " +
         f"files read ${filesRead.get}, bytes written $bytesWritten, " +
+        f"driver outside jobs ${outsideJobsS(t0Ms, t1Ms, jobSpans)}%.2f s, " +
         f"compiles ${CodegenMetrics.METRIC_COMPILATION_TIME.getCount - compiles0} " +
         f"(${(CodeGenerator.compileTime - compileNs0) / 1e9}%.2f s)")
       val meter = RuleExecutor.getCurrentMetrics() - meter0
@@ -165,6 +175,20 @@ object ProfileQuery {
       }
     }
     spark.stop()
+  }
+
+  /** Seconds of [t0Ms, t1Ms] that no job's [start, end] covers. */
+  private def outsideJobsS(t0Ms: Long, t1Ms: Long,
+      spans: java.lang.Iterable[(Long, Long)]): Double = {
+    import scala.jdk.CollectionConverters._
+    var covered = 0L
+    var reach = t0Ms
+    for ((s, e) <- spans.asScala.toSeq.sortBy(_._1)) {
+      val from = math.max(s, reach)
+      val to = math.min(e, t1Ms)
+      if (to > from) { covered += to - from; reach = to }
+    }
+    (t1Ms - t0Ms - covered) / 1e3
   }
 
   /** Files read by `p`'s file scans, adaptive stages and subqueries

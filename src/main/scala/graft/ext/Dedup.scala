@@ -20,16 +20,18 @@ import org.apache.spark.sql.graft.Internals
  *    formulation, whose per-element lambdas are CodegenFallback
  *    (~20 µs/element; see BASELINE.md perf notes). Tokenize/shingle
  *    kernels are native codegen expressions (functions/TextExprs).
- *  - Candidate generation is always a bucket equi-join (LSH band buckets,
+ *  - Candidate generation is always keyed on a bucket (LSH band buckets,
  *    SimHash chunks, shingle postings) — never a cross join. Shuffle keys
  *    are the bucket ids, so co-candidates land on the same partition and
- *    pair expansion happens locally.
+ *    pair expansion happens locally (LSH: one `bucket_pairs` loop per
+ *    bucket; SimHash and postings: a bucket equi-join).
  *  - Verification (exact Jaccard / Hamming) runs only on candidate pairs.
  *
  * All hashes are seeded xxhash64 — deterministic across runs/executors.
  *
- * Cache lifecycle: the near-dup joins persist their shared shingle/
- * signature frames (MEMORY_AND_DISK). Every internal persist is
+ * Cache lifecycle: the postings, SimHash and incremental joins persist
+ * their shared shingle/signature frames (MEMORY_AND_DISK); the MinHash
+ * near-dup joins persist nothing. Every internal persist is
  * TRACKED per session: long-lived sessions issuing many dedup calls
  * release them with `Dedup.releaseCaches(spark)` once the round's
  * results are materialized (unpersisting under a still-lazy result is
@@ -183,12 +185,13 @@ object Dedup {
   /**
    * LSH banding: split the signature into `bands` bands of
    * numHashes/bands rows each; docs sharing any band hash become
-   * candidate pairs. One explode (×bands), one shuffle on the band
-   * bucket, local pair expansion via self-join, distinct pairs out.
+   * candidate pairs. One narrow pass (posexplode ×bands), one shuffle on
+   * the band bucket, and within each bucket a `bucket_pairs` loop over
+   * its sorted ids (`lshCandidates`); distinct pairs out.
    *
    * Hot-bucket guard: a bucket of d docs expands to d² pairs in ONE
-   * join task (same key), so buckets above `maxBucketSize` are EXCLUDED
-   * from pair generation — enumerate what a cap dropped with
+   * task (same key), so buckets above `maxBucketSize` are EXCLUDED from
+   * pair generation — enumerate what a cap dropped with
    * `droppedLshBuckets`, and use `lshCandidateEdges` when the consumer
    * is components/clustering (a min-id star preserves the bucket's
    * connectivity at O(d)). Pass `maxBucketSize = None` for the uncapped
@@ -200,24 +203,8 @@ object Dedup {
    * sketch join; LSH then only carries the near-miss mass.
    */
   def lshCandidatePairs(sigs: DataFrame, idCol: String, bands: Int,
-      maxBucketSize: Option[Long] = Some(DefaultMaxLshBucket)): DataFrame = {
-    val banded = cachedSizedBandBuckets(sigs, idCol, bands)
-    val small = maxBucketSize match {
-      case Some(cap) => banded.where(col("__bsz") <= cap)
-      case None => banded
-    }
-    pairExpand(small, idCol).distinct()
-  }
-
-  /** Persisted `sizedBandBuckets` — the banded frame feeds BOTH sides
-    * of the pair self-join (and the edges API's star branch), so
-    * without a persist the posexplode + window subtree evaluates once
-    * per reference. The rows are 5 numeric columns (docs × bands of
-    * them) — aggregate-sized, never bodies — so caching them is the
-    * cheap side of the trade at any corpus size. */
-  private def cachedSizedBandBuckets(sigs: DataFrame, idCol: String,
-      bands: Int): DataFrame =
-    cached(sizedBandBuckets(sigs, idCol, bands))
+      maxBucketSize: Option[Long] = Some(DefaultMaxLshBucket)): DataFrame =
+    lshCandidates(sigs, idCol, bands, maxBucketSize, stars = false).distinct()
 
   /**
    * LSH candidate EDGES — the components-family variant of
@@ -231,14 +218,9 @@ object Dedup {
    * with no above-cap bucket this is IDENTICAL to `lshCandidatePairs`.
    */
   def lshCandidateEdges(sigs: DataFrame, idCol: String, bands: Int,
-      maxBucketSize: Long = DefaultMaxLshBucket): DataFrame = {
-    val banded = cachedSizedBandBuckets(sigs, idCol, bands)
-    val pairs = pairExpand(banded.where(col("__bsz") <= maxBucketSize), idCol)
-    val stars = banded.where(col("__bsz") > maxBucketSize)
-      .select(col("__bmin").as("id_a"), col(idCol).as("id_b"))
-      .where(col("id_a") < col("id_b"))
-    pairs.unionByName(stars).distinct()
-  }
+      maxBucketSize: Long = DefaultMaxLshBucket): DataFrame =
+    lshCandidates(sigs, idCol, bands, Some(maxBucketSize), stars = true)
+      .distinct()
 
   /** Audit companion to `lshCandidatePairs`' cap: the (band, bucket,
     * bucket_size) rows a given `maxBucketSize` excludes from pair
@@ -251,52 +233,75 @@ object Dedup {
       .agg(count(lit(1)).as("bucket_size"))
       .where(col("bucket_size") > maxBucketSize)
 
-  /** Band buckets annotated with per-bucket size and min id — one
-    * window pass on the (band, bucket) key, the same shuffle the
-    * candidate join needs anyway, so the guard costs no extra
-    * exchange. */
-  private def sizedBandBuckets(sigs: DataFrame, idCol: String,
-      bands: Int): DataFrame = {
-    val w = Window.partitionBy(col("__band"), col("__bucket"))
-    bandBuckets(sigs, idCol, bands)
-      .withColumn("__bsz", count(lit(1)).over(w))
-      .withColumn("__bmin", min(col(idCol)).over(w))
-  }
-
-  /** Within-bucket pair expansion (id_a < id_b) of a banded frame —
-    * shared by the pairs and edges APIs. NOT distinct'd; callers dedup
-    * after any union. */
-  private def pairExpand(banded: DataFrame, idCol: String): DataFrame = {
-    val a = banded.select(col(idCol).as("id_a"), col("__band"), col("__bucket"))
-    val b = banded.select(col(idCol).as("id_b"), col("__band"), col("__bucket"))
-    a.join(b, Seq("__band", "__bucket"))
-      .where(col("id_a") < col("id_b"))
-      .select("id_a", "id_b")
+  /**
+   * (id_a, id_b) candidates of a signature frame, NOT distinct'd (a pair
+   * sharing several buckets comes once per bucket) — the one candidate
+   * path of the pairs and edges APIs and of the near-dup joins.
+   *
+   * The band-bucket rows shuffle once, on (__band, __bucket), and are
+   * grouped on that partitioning (no second exchange); a group's ids
+   * expand through `bucket_pairs`, one loop over its sorted ids. With a
+   * cap, a window on the same partitioning first counts each bucket's
+   * rows (NULL ids included, as `count(lit(1))` counts them), and only
+   * buckets of 2 to `cap` rows are grouped whole. Above the cap the
+   * pairs API drops the bucket; with `stars` every row of it is a group
+   * of its own, keyed by its id, and yields the edge bucket-min → id —
+   * so no hot bucket is ever held as one list. Without a cap every
+   * bucket is grouped whole — the quadratic plan the caller asked for.
+   */
+  private def lshCandidates(sigs: DataFrame, idCol: String, bands: Int,
+      maxBucketSize: Option[Long], stars: Boolean): DataFrame = {
+    val banded = bandBuckets(sigs, idCol, bands)
+    def grouped(rows: DataFrame, keys: Column*): DataFrame =
+      rows.groupBy(Seq(col("__band"), col("__bucket")) ++ keys: _*)
+        .agg(collect_list(col(idCol)).as("__ids"))
+    val pairs = call_function("bucket_pairs", col("__ids"))
+    maxBucketSize match {
+      case None => grouped(banded).select(inline(pairs))
+      case Some(cap) =>
+        val w = Window.partitionBy(col("__band"), col("__bucket"))
+        val sized = banded.withColumn("__bsz", count(lit(1)).over(w))
+        if (!stars)
+          grouped(sized.where(col("__bsz").between(2L, cap))).select(inline(pairs))
+        else {
+          val hot = col("__bsz") > cap
+          val star = array(struct(col("__bmin").as("id_a"), col("__hid").as("id_b")))
+          grouped(sized.withColumn("__bmin", min(col(idCol)).over(w))
+                .where(col("__bsz") >= 2),
+              hot.as("__hot"), col("__bmin"), when(hot, col(idCol)).as("__hid"))
+            .select(inline(when(col("__hot"), star).otherwise(pairs)))
+            .where(col("id_a") < col("id_b"))
+        }
+    }
   }
 
   /** The per-row band-bucket array of a `__sig` column: element b is
-    * xxhash64 of band b's signature slice, salted by b. ONE definition
-    * shared by the in-flight path (`bandBuckets` posexplodes it) and the
-    * persistent index (`buildBandIndex` stores it), so stored and
-    * recomputed buckets are identical by construction. */
+    * xxhash64 of band b's signature slice, salted by b (the native
+    * `minhash_bands` kernel). ONE definition shared by the in-flight
+    * path (`bandBuckets` posexplodes it) and the persistent index
+    * (`buildBandIndex` stores it), so stored and recomputed buckets are
+    * identical by construction. */
   private def bucketArrayExpr(bands: Int): String =
-    s"transform(sequence(0, ${bands - 1}), " +
-      s"b -> xxhash64(concat_ws(',', slice(__sig, b * (size(__sig) div $bands) + 1, size(__sig) div $bands)), b))"
+    s"minhash_bands(__sig, $bands)"
 
   /** (id, __band, __bucket) band-hash keys of a `__sig` signature frame —
-    * the join keys of every LSH stage (self-join for corpus×corpus,
-    * broadcast for batch×corpus). */
+    * the keys of every LSH stage (grouped for corpus×corpus, joined for
+    * batch×corpus). */
   private def bandBuckets(sigs: DataFrame, idCol: String,
-      bands: Int): DataFrame =
+      bands: Int): DataFrame = {
+    graft.functions.TextExprs.register(sigs.sparkSession)
     sigs.select(col(idCol), posexplode(expr(bucketArrayExpr(bands))))
       .toDF(idCol, "__band", "__bucket")
+  }
 
   /**
    * End-to-end MinHash near-dup pairs: signature → LSH candidates →
    * exact Jaccard verification on the candidates' shingle sets, keeping
-   * pairs with jaccard ≥ threshold. Verification joins the (small)
-   * candidate set back to shingle arrays on id — sort-merge on id at
-   * scale, never a cross join.
+   * pairs with jaccard ≥ threshold. Shingles, signatures and band
+   * buckets are one narrow pass; the band-bucket shuffle expands each
+   * bucket's pairs (`lshCandidates`); the distinct candidates are
+   * verified by joining them back to shingle arrays on id — sort-merge
+   * on id at scale, never a cross join.
    *
    * Pair ENUMERATION semantics: buckets above `maxBucketSize` are
    * excluded from candidate generation (audit with `droppedLshBuckets`)
@@ -311,46 +316,57 @@ object Dedup {
   def minhashNearDups(df: DataFrame, idCol: String, textCol: String,
       numHashes: Int = 64, bands: Int = 16, shingleK: Int = 3,
       threshold: Double = 0.5,
-      maxBucketSize: Option[Long] = Some(DefaultMaxLshBucket)): DataFrame = {
-    // shingling (interpreted HOF transform) is the expensive narrow step
-    // and three consumers need it (signatures, LSH both join sides,
-    // verification) — persist ONE shingle pass instead of recomputing it
-    // per plan branch
-    val sets = shingleSets(df, idCol, textCol, shingleK)
-    val sigs = cached(sigsFromShingles(sets, idCol, numHashes))
-    val cands = lshCandidatePairs(sigs, idCol, bands, maxBucketSize)
-    verifyJaccard(cands, sets, idCol, threshold)
-  }
+      maxBucketSize: Option[Long] = Some(DefaultMaxLshBucket)): DataFrame =
+    verifiedNearDups(df, idCol, textCol, numHashes, bands, shingleK,
+      threshold, maxBucketSize, stars = false)
 
   /**
    * `minhashNearDups` for components-family consumers: identical
-   * signature/banding/verification, but candidate generation goes
-   * through `lshCandidateEdges` — hot buckets contribute a verified
-   * min-id star (O(d)) instead of being dropped by the pair cap, so
-   * cluster connectivity survives boilerplate-heavy corpora without the
-   * d² blow-up. On corpora with no above-cap bucket the output is
-   * IDENTICAL to `minhashNearDups`.
+   * signature/banding/verification, but hot buckets contribute a
+   * verified min-id star (O(d), `lshCandidateEdges`) instead of being
+   * dropped by the pair cap, so cluster connectivity survives
+   * boilerplate-heavy corpora without the d² blow-up. On corpora with
+   * no above-cap bucket the output is IDENTICAL to `minhashNearDups`.
    */
   def minhashNearDupEdges(df: DataFrame, idCol: String, textCol: String,
       numHashes: Int = 64, bands: Int = 16, shingleK: Int = 3,
       threshold: Double = 0.5,
-      maxBucketSize: Long = DefaultMaxLshBucket): DataFrame = {
-    val sets = shingleSets(df, idCol, textCol, shingleK)
-    val sigs = cached(sigsFromShingles(sets, idCol, numHashes))
-    val cands = lshCandidateEdges(sigs, idCol, bands, maxBucketSize)
-    verifyJaccard(cands, sets, idCol, threshold)
+      maxBucketSize: Long = DefaultMaxLshBucket): DataFrame =
+    verifiedNearDups(df, idCol, textCol, numHashes, bands, shingleK,
+      threshold, Some(maxBucketSize), stars = true)
+
+  /** The shared body of `minhashNearDups` and `minhashNearDupEdges`:
+    * candidates, distinct, then verification (a pair sharing several
+    * buckets is verified once). Nothing is persisted: the signatures
+    * and band buckets have one consumer, the band-bucket shuffle, and
+    * verification shingles `df` again rather than reading a persisted
+    * copy — adaptive execution runs a cached frame as a stage of its
+    * own per reference, which cost more than re-shingling. */
+  private def verifiedNearDups(df: DataFrame, idCol: String, textCol: String,
+      numHashes: Int, bands: Int, shingleK: Int, threshold: Double,
+      maxBucketSize: Option[Long], stars: Boolean): DataFrame = {
+    val sets = shingled(df, idCol, textCol, shingleK)
+    val cands = lshCandidates(sigsFromShingles(sets, idCol, numHashes),
+      idCol, bands, maxBucketSize, stars)
+    verifyJaccard(cands.distinct(), sets, idCol, threshold)
   }
 
-  /** Persisted (idCol, __shingles) frame — the shared input of every
-    * shingle-based stage. MEMORY_AND_DISK: spills, never recomputes.
-    * Uses the native codegen token_shingles expression (one JIT'd call
-    * per row) rather than the interpreted HOF pipeline. */
-  private def shingleSets(df: DataFrame, idCol: String, textCol: String,
+  /** (idCol, __shingles) of `df` — the native codegen token_shingles
+    * expression (one JIT'd call per row) rather than the interpreted HOF
+    * pipeline. */
+  private def shingled(df: DataFrame, idCol: String, textCol: String,
       shingleK: Int): DataFrame = {
     graft.functions.TextExprs.register(df.sparkSession)
-    cached(df.select(col(idCol),
-      expr(s"token_shingles(`$textCol`, $shingleK)").as("__shingles")))
+    df.select(col(idCol),
+      expr(s"token_shingles(`$textCol`, $shingleK)").as("__shingles"))
   }
+
+  /** Persisted `shingled` frame — the shared input of the postings
+    * joins and index builds, whose several consumers would otherwise
+    * re-shingle. MEMORY_AND_DISK: spills, never recomputes. */
+  private def shingleSets(df: DataFrame, idCol: String, textCol: String,
+      shingleK: Int): DataFrame =
+    cached(shingled(df, idCol, textCol, shingleK))
 
   /** Exact-Jaccard verification of candidate (id_a, id_b) pairs against
     * per-id shingle sets — the shared final stage of every sketch-blocked
@@ -1001,12 +1017,8 @@ object Dedup {
    * representative (min id) of every cluster plus all unpaired docs.
    */
   def dedupByPairs(df: DataFrame, pairs: DataFrame,
-      idCol: String): DataFrame = {
-    val comps = components(pairs)
-    val losers = comps.where(col("id") =!= col("component"))
-      .select(col("id").as(idCol))
-    df.join(losers, Seq(idCol), "left_anti")
-  }
+      idCol: String): DataFrame =
+    survivors(df, components(pairs), idCol, None)
 
   /**
    * Quality-aware variant of `dedupByPairs`: the survivor of each
@@ -1021,19 +1033,33 @@ object Dedup {
    * window; the window state is O(1) per cluster.
    */
   def dedupByPairsBest(df: DataFrame, pairs: DataFrame, idCol: String,
-      preference: Column): DataFrame = {
-    // rename the label frame's columns before joining: the caller's
-    // idCol may itself be named "id"/"component"
-    val comps = components(pairs)
-      .select(col("id").as("__comp_id"), col("component").as("__comp_label"))
-    val labeled = df.join(comps, df(idCol) === col("__comp_id"), "left")
-      .withColumn("__comp", coalesce(col("__comp_label"), col(idCol)))
-      .drop("__comp_id", "__comp_label")
-    val w = Window.partitionBy(col("__comp"))
-      .orderBy(preference.desc, col(idCol))
-    labeled.withColumn("__rk", row_number().over(w))
-      .where(col("__rk") === 1)
-      .drop("__comp", "__rk")
+      preference: Column): DataFrame =
+    survivors(df, components(pairs), idCol, Some(preference))
+
+  /** The rows of `df` that survive their cluster under the (id,
+    * component) `labels` of `components`: with no `preference` every
+    * labeled id whose label is another id drops (the min id stays);
+    * with one, the member maximizing it stays (ties to the smallest
+    * id). Ids without a label are singletons and always stay. Shared by
+    * the standalone dedups and `NearDupGraph`. */
+  private[ext] def survivors(df: DataFrame, labels: DataFrame, idCol: String,
+      preference: Option[Column]): DataFrame = preference match {
+    case None =>
+      val losers = labels.where(col("id") =!= col("component"))
+        .select(col("id").as(idCol))
+      df.join(losers, Seq(idCol), "left_anti")
+    case Some(p) =>
+      // rename the label frame's columns before joining: the caller's
+      // idCol may itself be named "id"/"component"
+      val comps = labels
+        .select(col("id").as("__comp_id"), col("component").as("__comp_label"))
+      val labeled = df.join(comps, df(idCol) === col("__comp_id"), "left")
+        .withColumn("__comp", coalesce(col("__comp_label"), col(idCol)))
+        .drop("__comp_id", "__comp_label")
+      val w = Window.partitionBy(col("__comp")).orderBy(p.desc, col(idCol))
+      labeled.withColumn("__rk", row_number().over(w))
+        .where(col("__rk") === 1)
+        .drop("__comp", "__rk")
   }
 
   /**
@@ -1161,26 +1187,12 @@ final class NearDupGraph private[ext] (df: DataFrame, idCol: String,
       .agg(count(lit(1)).as("n_clusters"))
 
   /** One survivor per cluster, min-id policy (≡ `Dedup.dedupByPairs`). */
-  def dedupMinId: DataFrame = {
-    val losers = clusters.where(col("id") =!= col("component"))
-      .select(col("id").as(idCol))
-    df.join(losers, Seq(idCol), "left_anti")
-  }
+  def dedupMinId: DataFrame = Dedup.survivors(df, clusters, idCol, None)
 
   /** One survivor per cluster, best-by-`preference` policy (ties to
     * the smallest id; ≡ `Dedup.dedupByPairsBest`). */
-  def dedupBest(preference: Column): DataFrame = {
-    val comps = clusters
-      .select(col("id").as("__comp_id"), col("component").as("__comp_label"))
-    val labeled = df.join(comps, df(idCol) === col("__comp_id"), "left")
-      .withColumn("__comp", coalesce(col("__comp_label"), col(idCol)))
-      .drop("__comp_id", "__comp_label")
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("__comp")).orderBy(preference.desc, col(idCol))
-    labeled.withColumn("__rk", row_number().over(w))
-      .where(col("__rk") === 1)
-      .drop("__comp", "__rk")
-  }
+  def dedupBest(preference: Column): DataFrame =
+    Dedup.survivors(df, clusters, idCol, Some(preference))
 
   def close(): Unit = {
     edges.unpersist(false)

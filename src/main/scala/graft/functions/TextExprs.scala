@@ -3,9 +3,10 @@ package graft.functions
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, ExpressionInfo, GenericInternalRow, Literal, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData, TypeUtils}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -337,6 +338,123 @@ object TextExprs {
       copy(child = newChild)
   }
 
+  /**
+   * The LSH band buckets of a MinHash signature: element b is
+   * `xxhash64(concat_ws(',', slice(sig, b·r + 1, r)), b)` with
+   * r = |sig| div bands — bit-identical to that SQL formulation (the
+   * same decimal text, the same XxHash64Function over the string with
+   * seed 42 and then over the int b), which evaluates an interpreted
+   * lambda per band; this is one loop per signature.
+   */
+  def minhashBands(sig: ArrayData, bands: Int): ArrayData = {
+    val r = sig.numElements() / bands
+    val out = new Array[Any](bands)
+    val sb = new java.lang.StringBuilder
+    var b = 0
+    while (b < bands) {
+      sb.setLength(0)
+      var j = 0
+      while (j < r) {
+        if (j > 0) sb.append(',')
+        sb.append(sig.getLong(b * r + j))
+        j += 1
+      }
+      val h = org.apache.spark.sql.catalyst.expressions.XxHash64Function
+        .hash(UTF8String.fromString(sb.toString), StringType, 42L)
+      out(b) = org.apache.spark.sql.catalyst.expressions.XxHash64Function
+        .hash(b, IntegerType, h)
+      b += 1
+    }
+    new GenericArrayData(out)
+  }
+
+  case class MinhashBands(child: Expression, bands: Int)
+      extends UnaryExpression with ExpectsInputTypes {
+    require(bands >= 1, "bands must be >= 1")
+    override def inputTypes: Seq[DataType] = Seq(ArrayType(LongType))
+    override def dataType: DataType = ArrayType(LongType, containsNull = false)
+    override def prettyName: String = "minhash_bands"
+    override def nullSafeEval(input: Any): Any =
+      minhashBands(input.asInstanceOf[ArrayData], bands)
+    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+      defineCodeGen(ctx, ev, c => s"graft.functions.TextExprs.minhashBands($c, $bands)")
+    override protected def withNewChildInternal(newChild: Expression): MinhashBands =
+      copy(child = newChild)
+  }
+
+  /**
+   * Every (a, b) with a < b of the non-null `ids` of one LSH band bucket
+   * — the pair expansion of a bucket self-join on the bucket key with an
+   * `id_a < id_b` filter, as one loop over the sorted ids instead of a
+   * join. `<` is the id type's interpreted ordering, the order `<` and
+   * `min` use. Equal ids pair with nothing (the self-join's filter drops
+   * them); a repeated id pairs once per copy, as the join did, and
+   * callers deduplicate. Pairs come out in ascending (a, b) order.
+   */
+  def bucketPairs(ids: ArrayData, dt: DataType): ArrayData = {
+    val n = ids.numElements()
+    val xs = new Array[AnyRef](n)
+    var m = 0
+    var i = 0
+    while (i < n) {
+      if (!ids.isNullAt(i)) {
+        xs(m) = InternalRow.copyValue(ids.get(i, dt)).asInstanceOf[AnyRef]
+        m += 1
+      }
+      i += 1
+    }
+    val ord = TypeUtils.getInterpretedOrdering(dt).asInstanceOf[Ordering[AnyRef]]
+    java.util.Arrays.sort(xs, 0, m, ord)
+    // ends(i): first index after i's run of equal ids — xs(i) pairs with
+    // every id from there on
+    val ends = new Array[Int](m)
+    var total = 0L
+    i = 0
+    while (i < m) {
+      var e = i + 1
+      while (e < m && ord.compare(xs(e), xs(i)) == 0) e += 1
+      var k = i
+      while (k < e) { ends(k) = e; total += m - e; k += 1 }
+      i = e
+    }
+    require(total <= Int.MaxValue, s"bucket of $m ids expands to $total pairs")
+    val out = new Array[Any](total.toInt)
+    var o = 0
+    i = 0
+    while (i < m) {
+      var k = ends(i)
+      while (k < m) {
+        out(o) = new GenericInternalRow(Array[Any](xs(i), xs(k)))
+        o += 1
+        k += 1
+      }
+      i += 1
+    }
+    new GenericArrayData(out)
+  }
+
+  case class BucketPairs(child: Expression) extends UnaryExpression {
+    private def elementType: DataType =
+      child.dataType.asInstanceOf[ArrayType].elementType
+    override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
+      case ArrayType(et, _) => TypeUtils.checkForOrderingExpr(et, prettyName)
+      case other => TypeCheckResult.TypeCheckFailure(
+        s"$prettyName needs an array of ids, got ${other.catalogString}")
+    }
+    override def dataType: DataType = ArrayType(StructType(Seq(
+      StructField("id_a", elementType), StructField("id_b", elementType))),
+      containsNull = false)
+    override def prettyName: String = "bucket_pairs"
+    override def nullSafeEval(input: Any): Any =
+      bucketPairs(input.asInstanceOf[ArrayData], elementType)
+    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+      val dt = ctx.addReferenceObj("elementType", elementType)
+      defineCodeGen(ctx, ev, c => s"graft.functions.TextExprs.bucketPairs($c, $dt)")
+    }
+    override protected def withNewChildInternal(newChild: Expression): BucketPairs =
+      copy(child = newChild)
+  }
+
   case class TokenStats(child: Expression)
       extends UnaryExpression with ExpectsInputTypes {
     override def inputTypes: Seq[DataType] = Seq(StringType)
@@ -427,6 +545,19 @@ object TextExprs {
         require(children.size == 2, "minhash_sig(shingles, numHashes)")
         MinhashSig(children.head,
           VectorExprs.intLit(children(1), "minhash_sig numHashes"))
+      }),
+    (FunctionIdentifier("minhash_bands"),
+      new ExpressionInfo(classOf[MinhashBands].getName, "minhash_bands"),
+      (children: Seq[Expression]) => {
+        require(children.size == 2, "minhash_bands(sig, bands)")
+        MinhashBands(children.head,
+          VectorExprs.intLit(children(1), "minhash_bands bands"))
+      }),
+    (FunctionIdentifier("bucket_pairs"),
+      new ExpressionInfo(classOf[BucketPairs].getName, "bucket_pairs"),
+      (children: Seq[Expression]) => {
+        require(children.size == 1, "bucket_pairs(ids)")
+        BucketPairs(children.head)
       }),
     (FunctionIdentifier("simhash_sig"),
       new ExpressionInfo(classOf[SimhashSig].getName, "simhash_sig"),

@@ -135,27 +135,69 @@ class ExtSpec extends AnyFunSuite {
     // All checks below are DELTA-based on RDD ids: the session is
     // shared and suites run in parallel, so the GLOBAL persistent-RDD
     // count can legitimately move under this test (another suite's
-    // cache()) — only the ids the near-dup pass ADDED are ours to pin.
+    // cache()) — only the ids the dedup calls ADDED are ours to pin.
     Dedup.releaseCaches(spark)
     val baseline = spark.sparkContext.getPersistentRDDs.keySet
+    // the MinHash near-dup join persists nothing: one band-bucket
+    // shuffle, verification re-shingles — so there is nothing to release
     val pairs = Dedup.minhashNearDups(d, "doc_id", "text",
       numHashes = 32, bands = 8)
     val before = pairs.count()
+    assert(Dedup.releaseCaches(spark) == 0,
+      "the MinHash near-dup join should track no caches")
+    // the SimHash join persists its signatures and its shingle sets
+    val sim = Dedup.simhashNearDups(d, "doc_id", "text")
+    val simBefore = sim.count()
     val added = spark.sparkContext.getPersistentRDDs.keySet -- baseline
     assert(added.nonEmpty,
-      "the near-dup pass should have materialized tracked caches")
-    // the call persisted its shingle + signature + banded frames — the
-    // registry must know about them and release them all
+      "the near-dup passes should have materialized tracked caches")
+    // the registry must know about both and release them all
     val released = Dedup.releaseCaches(spark)
-    assert(released >= 3, s"expected >=3 tracked caches, got $released")
+    assert(released == 2, s"expected 2 tracked caches, got $released")
     val remaining = spark.sparkContext.getPersistentRDDs.keySet
       .intersect(added)
     assert(remaining.isEmpty,
       s"released caches must leave no tracked RDDs behind: $remaining")
-    // a released (lazy) result recomputes, same answer
-    assert(pairs.count() == before)
+    // released (lazy) results recompute, same answers
+    assert(pairs.count() == before && sim.count() == simBefore)
     // the registry drained: a release with no new dedup calls is a no-op
     assert(Dedup.releaseCaches(spark) == 0)
+  }
+
+  /** `clusters` seeded clusters of `size` docs: each member is its
+    * cluster's random 30-word text with one word replaced, so members
+    * are near-duplicates of each other and clusters share little. */
+  private def seededCorpus(seed: Long, clusters: Int, size: Int) = {
+    val r = new scala.util.Random(seed)
+    def word() = s"w${r.nextInt(2000)}"
+    (0 until clusters).flatMap { c =>
+      val base = Vector.fill(30)(word())
+      (0 until size).map { m =>
+        ((c * size + m).toLong, base.updated(r.nextInt(30), word()).mkString(" "),
+          r.nextInt(100))
+      }
+    }.toDF("id", "text", "quality")
+  }
+
+  test("Dedup near-dup pass: minhashNearDupEdges + dedupByPairsBest run in at most 11 jobs") {
+    val d = seededCorpus(11, 60, 5).cache()
+    d.count()
+    // the shape of perfbench's corpus_dedup pass: cached edges,
+    // collected, then keep-best
+    def pass() = {
+      val edges = Dedup.minhashNearDupEdges(d, "id", "text").cache()
+      val e = edges.select("id_a", "id_b").collect()
+      val kept = Dedup.dedupByPairsBest(d, edges, "id", col("quality"))
+        .select("id").collect()
+      edges.unpersist()
+      Dedup.releaseCaches(spark)
+      (e.length, kept.length)
+    }
+    pass() // warm: the first pass compiles, later ones are measured
+    val ((edges, kept), jobs) = Jobs.during(spark)(pass())
+    d.unpersist()
+    assert(edges > 0 && kept < 300, s"$edges edges, $kept kept")
+    assert(jobs <= 11, s"one near-dup pass ran $jobs jobs")
   }
 
   test("NearDupGraph: one shared pair graph serves clusters, sizes and both dedup policies identically to the standalone functions") {

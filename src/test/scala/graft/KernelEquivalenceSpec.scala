@@ -93,6 +93,195 @@ class KernelEquivalenceSpec extends AnyFunSuite {
     assert(fused.find(_._1 == 4L).exists(_._2 == 0L))
   }
 
+  // ------------------------------------------ LSH bucket_pairs path —
+
+  /** The band-bucket array of `__sig` (Dedup.bucketArrayExpr). */
+  private def bucketExpr(bands: Int): String =
+    s"transform(sequence(0, ${bands - 1}), " +
+      s"b -> xxhash64(concat_ws(',', slice(__sig, b * (size(__sig) div $bands) + 1, size(__sig) div $bands)), b))"
+
+  /** The candidate generation `lshCandidatePairs`/`lshCandidateEdges`
+    * ran before the `bucket_pairs` path: band buckets sized and min'd by
+    * a window, sub-cap buckets pair-expanded by a bucket self-join, hot
+    * buckets starred from their min id (edges) or dropped (pairs). */
+  private def legacyCandidates(sigs: DataFrame, id: String, bands: Int,
+      cap: Option[Long], stars: Boolean): DataFrame = {
+    val w = Window.partitionBy(col("__band"), col("__bucket"))
+    val banded = sigs.select(col(id), posexplode(expr(bucketExpr(bands))))
+      .toDF(id, "__band", "__bucket")
+      .withColumn("__bsz", count(lit(1)).over(w))
+      .withColumn("__bmin", min(col(id)).over(w))
+    val small = cap.fold(banded)(c => banded.where(col("__bsz") <= c))
+    val a = small.select(col(id).as("id_a"), col("__band"), col("__bucket"))
+    val b = small.select(col(id).as("id_b"), col("__band"), col("__bucket"))
+    val pairs = a.join(b, Seq("__band", "__bucket"))
+      .where(col("id_a") < col("id_b")).select("id_a", "id_b")
+    if (!stars) pairs.distinct()
+    else pairs.unionByName(banded.where(col("__bsz") > cap.get)
+        .select(col("__bmin").as("id_a"), col(id).as("id_b"))
+        .where(col("id_a") < col("id_b")))
+      .distinct()
+  }
+
+  /** The near-dup joins before the `bucket_pairs` path: legacy
+    * candidates, then exact-Jaccard verification. */
+  private def legacyNearDups(df: DataFrame, id: String, numHashes: Int,
+      bands: Int, cap: Option[Long], stars: Boolean): DataFrame = {
+    val sets = df.select(col(id), expr("token_shingles(text, 3)").as("__sh"))
+    val sigs = sets.select(col(id),
+        call_function("minhash_sig", col("__sh"), lit(numHashes)).as("__sig"))
+      .where(col("__sig").isNotNull)
+    legacyCandidates(sigs, id, bands, cap, stars)
+      .join(sets.select(col(id).as("id_a"), col("__sh").as("__sa")), "id_a")
+      .join(sets.select(col(id).as("id_b"), col("__sh").as("__sb")), "id_b")
+      .withColumn("jaccard",
+        size(array_intersect(col("__sa"), col("__sb"))).cast("double") /
+          size(array_union(col("__sa"), col("__sb"))))
+      .where(col("jaccard") >= 0.5)
+      .select(col("id_a"), col("id_b"), round(col("jaccard"), 6).as("jaccard"))
+  }
+
+  private def sorted(df: DataFrame): Seq[org.apache.spark.sql.Row] =
+    df.orderBy(df.columns.map(col).toSeq: _*).collect().toSeq
+
+  /** `clusters` seeded clusters of `size` near-duplicate docs (one
+    * random 20-word text per cluster, 0–2 words replaced per member),
+    * with `id` cast to `idType`. A small vocabulary makes unrelated docs
+    * collide in some bands too. */
+  private def seededDocs(seed: Long, clusters: Int, size: Int,
+      idType: String): DataFrame = {
+    val r = new scala.util.Random(seed)
+    def word() = s"w${r.nextInt(300)}"
+    (0 until clusters).flatMap { c =>
+      val base = Vector.fill(20)(word())
+      (0 until size).map { m =>
+        val edits = r.nextInt(3)
+        val text = (0 until edits).foldLeft(base)((t, _) =>
+          t.updated(r.nextInt(20), word()))
+        ((c * size + m).toLong, text.mkString(" "))
+      }
+    }.toDF("id", "text").withColumn("id", col("id").cast(idType))
+  }
+
+  private def sigsOf(df: DataFrame, numHashes: Int): DataFrame =
+    df.select(col("id"), call_function("minhash_sig",
+        expr("token_shingles(text, 3)"), lit(numHashes)).as("__sig"))
+      .where(col("__sig").isNotNull)
+
+  test("minhash_bands == transform + xxhash64(concat_ws(slice)) formulation") {
+    graft.functions.TextExprs.register(spark)
+    val docs = seededDocs(9, 10, 3, "bigint")
+    // divisible, non-divisible (trailing perms unused) and more bands
+    // than perms (empty slices)
+    for ((numHashes, bands) <- Seq((64, 16), (128, 32), (20, 6), (4, 8))) {
+      val sigs = sigsOf(docs, numHashes)
+      val legacy = sigs.select(col("id"), expr(bucketExpr(bands)).as("b"))
+        .orderBy("id").as[(Long, Seq[Long])].collect().toSeq
+      val fused = sigs.select(col("id"),
+          call_function("minhash_bands", col("__sig"), lit(bands)).as("b"))
+        .orderBy("id").as[(Long, Seq[Long])].collect().toSeq
+      assert(fused == legacy, s"numHashes=$numHashes bands=$bands")
+    }
+  }
+
+  test("bucket_pairs kernel: empty, single-id, exactly-cap, NULL and repeated ids") {
+    graft.functions.TextExprs.register(spark)
+    def pairs(ids: Seq[java.lang.Long]) =
+      Seq(Tuple1(ids)).toDF("ids")
+        .select(inline(call_function("bucket_pairs", col("ids"))))
+        .as[(Long, Long)].collect().toSeq
+    assert(pairs(Nil).isEmpty)
+    assert(pairs(Seq(7L)).isEmpty)
+    assert(pairs(Seq(null, null)).isEmpty)
+    // NULLs pair with nothing, equal ids pair with nothing, a repeated
+    // id pairs once per copy (the self-join's multiplicity); ascending
+    assert(pairs(Seq(3L, null, 1L, 3L, 2L)) ==
+      Seq((1L, 2L), (1L, 3L), (1L, 3L), (2L, 3L), (2L, 3L)))
+    // a bucket of exactly the default cap: every a < b once
+    val cap = graft.ext.Dedup.DefaultMaxLshBucket.toInt
+    val ids = scala.util.Random.shuffle((1 to cap).map(i => i.toLong * 7))
+    val got = pairs(ids.map(Long.box))
+    val want = for (a <- ids.sorted; b <- ids.sorted if a < b) yield (a, b)
+    assert(got == want && got.length == cap * (cap - 1) / 2)
+    // string ids order as Spark orders strings ("10" < "9")
+    val str = Seq(Tuple1(Seq("9", "10", "b"))).toDF("ids")
+      .select(inline(call_function("bucket_pairs", col("ids"))))
+      .as[(String, String)].collect().toSeq
+    assert(str == Seq(("10", "9"), ("10", "b"), ("9", "b")))
+  }
+
+  test("LSH candidates and near-dup joins == window + bucket self-join formulation") {
+    import graft.ext.Dedup
+    graft.functions.TextExprs.register(spark)
+    // seeded corpora: few permutations and many bands make buckets
+    // collide across clusters, so expansions are not just singletons
+    for (seed <- Seq(1L, 2L, 3L); idType <- Seq("int", "bigint", "string")) {
+      val d = seededDocs(seed, 40, 4, idType)
+      val sigs = sigsOf(d, 16)
+      val tag = s"seed $seed, $idType ids"
+      assert(sorted(Dedup.lshCandidatePairs(sigs, "id", 8)) ==
+        sorted(legacyCandidates(sigs, "id", 8, Some(1000L), stars = false)), tag)
+      assert(sorted(Dedup.lshCandidatePairs(sigs, "id", 8, None)) ==
+        sorted(legacyCandidates(sigs, "id", 8, None, stars = false)), tag)
+      assert(sorted(Dedup.lshCandidateEdges(sigs, "id", 8)) ==
+        sorted(legacyCandidates(sigs, "id", 8, Some(1000L), stars = true)), tag)
+      val nd = sorted(Dedup.minhashNearDups(d, "id", "text", 16, 8))
+      assert(nd.nonEmpty, tag)
+      assert(nd == sorted(legacyNearDups(d, "id", 16, 8, Some(1000L),
+        stars = false)), tag)
+      assert(sorted(Dedup.minhashNearDupEdges(d, "id", "text", 16, 8)) ==
+        sorted(legacyNearDups(d, "id", 16, 8, Some(1000L), stars = true)), tag)
+    }
+  }
+
+  test("LSH hot buckets == window + bucket self-join formulation, NULL ids counted by the cap") {
+    import graft.ext.Dedup
+    graft.functions.TextExprs.register(spark)
+    // 30 byte-identical docs make every band bucket hot at a cap of 10;
+    // the seeded clusters stay sub-cap alongside them
+    val boiler = "the same boilerplate footer text repeated on every page"
+    for (idType <- Seq("int", "bigint", "string")) {
+      val d = seededDocs(5, 20, 4, idType).unionByName(
+        (1000 until 1030).map(i => (i.toLong, boiler)).toDF("id", "text")
+          .withColumn("id", col("id").cast(idType)))
+      val sigs = sigsOf(d, 16)
+      for (cap <- Seq(10L, 30L, 29L)) {
+        val tag = s"$idType ids, cap $cap"
+        val pairs = sorted(Dedup.lshCandidatePairs(sigs, "id", 8, Some(cap)))
+        assert(pairs == sorted(legacyCandidates(sigs, "id", 8, Some(cap),
+          stars = false)), tag)
+        val edges = sorted(Dedup.lshCandidateEdges(sigs, "id", 8, cap))
+        assert(edges == sorted(legacyCandidates(sigs, "id", 8, Some(cap),
+          stars = true)), tag)
+        // a bucket of exactly the cap expands, one more row stars
+        val boilerPairs = pairs.count(_.get(0).toString.toLong >= 1000)
+        assert(boilerPairs == (if (cap >= 30) 435 else 0), tag)
+        assert(sorted(Dedup.minhashNearDups(d, "id", "text", 16, 8,
+            maxBucketSize = Some(cap))) ==
+          sorted(legacyNearDups(d, "id", 16, 8, Some(cap), stars = false)), tag)
+        assert(sorted(Dedup.minhashNearDupEdges(d, "id", "text", 16, 8,
+            maxBucketSize = cap)) ==
+          sorted(legacyNearDups(d, "id", 16, 8, Some(cap), stars = true)), tag)
+      }
+    }
+    // 3 docs with ids and 1 NULL-id copy of the same text share every
+    // bucket: at a cap of 3 only the NULL row pushes them over it, so
+    // the pairs API drops them and the edges API stars them from id 1
+    val withNull = Seq[(Option[Long], String)]((Some(1L), boiler),
+      (Some(2L), boiler), (Some(3L), boiler), (None, boiler)).toDF("id", "text")
+    val ns = sigsOf(withNull, 16)
+    val pairs = sorted(Dedup.lshCandidatePairs(ns, "id", 8, Some(3L)))
+    assert(pairs.isEmpty)
+    assert(pairs == sorted(legacyCandidates(ns, "id", 8, Some(3L), stars = false)))
+    val edges = sorted(Dedup.lshCandidateEdges(ns, "id", 8, 3L))
+    assert(edges.map(r => (r.getLong(0), r.getLong(1))) == Seq((1L, 2L), (1L, 3L)))
+    assert(edges == sorted(legacyCandidates(ns, "id", 8, Some(3L), stars = true)))
+    // without the NULL row the same bucket is sub-cap and fully expands
+    val noNull = sigsOf(withNull.where(col("id").isNotNull), 16)
+    assert(sorted(Dedup.lshCandidatePairs(noNull, "id", 8, Some(3L)))
+      .map(r => (r.getLong(0), r.getLong(1))) == Seq((1L, 2L), (1L, 3L), (2L, 3L)))
+  }
+
   // ---------------------------------------------------- ivf_nearest —
 
   test("ivf_nearest == crossJoin + row_number window (assign and probe)") {
